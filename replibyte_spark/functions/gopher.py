@@ -123,16 +123,10 @@ def gopher_stats_sql(d: str, text: str, words: str | None = None,
 
 def gopher_flag_sqls(stats: "dict[str, str]",
                      min_words: int = MIN_WORDS,
-                     max_words: int = MAX_WORDS,
-                     min_stop_hits: int = MIN_REQUIRED_STOPWORDS
-                     ) -> "dict[str, str]":
+                     max_words: int = MAX_WORDS) -> "dict[str, str]":
     """rule name → boolean SQL over the stat refs (pass staged column
     NAMES as `stats` values on hot paths).  All integer arithmetic.
-    `min_words`/`max_words`/`min_stop_hits` default to the published
-    thresholds; overrides exist for corpora whose vocabulary makes a
-    published English-centric threshold degenerate (the synthetic test
-    fixture has exactly one of the eight required stop words in its
-    whole vocabulary)."""
+    `min_words`/`max_words` default to the published thresholds."""
     s = stats
     return {
         "word_count":
@@ -152,14 +146,13 @@ def gopher_flag_sqls(stats: "dict[str, str]",
             f"({s['n_words']} > 0 AND "
             f"5 * {s['n_alpha_words']} >= 4 * {s['n_words']})",
         "stop_words":
-            f"({s['n_stop_hits']} >= {min_stop_hits})",
+            f"({s['n_stop_hits']} >= {MIN_REQUIRED_STOPWORDS})",
     }
 
 
 def gopher_flags(df: DataFrame, text_col: str = "text",
                  min_words: int = MIN_WORDS,
                  max_words: int = MAX_WORDS,
-                 min_stop_hits: int = MIN_REQUIRED_STOPWORDS,
                  prefix: str = "gq_") -> DataFrame:
     """Append one boolean column per rule (`gq_<rule>`) plus the
     conjunction `gopher_pass`.  Staged like identify_language: the word
@@ -181,8 +174,7 @@ def gopher_flags(df: DataFrame, text_col: str = "text",
     stat_cols = {k: f"__gq_{k}" for k in stats}
     for k, expr in stats.items():
         staged = staged.withColumn(stat_cols[k], F.expr(expr))
-    flags = gopher_flag_sqls(stat_cols, min_words, max_words,
-                             min_stop_hits)
+    flags = gopher_flag_sqls(stat_cols, min_words, max_words)
     for rule, expr in flags.items():
         staged = staged.withColumn(prefix + rule, F.expr(expr))
     passed = " AND ".join(prefix + r for r in flags)

@@ -211,18 +211,6 @@ def col(sql_builder, column: str, **kw) -> Column:
     return F.expr(sql_builder(D.SPARK, column, **kw))
 
 
-def normalize_text_sql(d: str, text: str) -> str:
-    """Canonical text for dedup/fingerprint robustness: lowercase, strip
-    the punctuation set, collapse whitespace runs, trim.  Pure Catalyst /
-    DuckDB scalar — normalization feeds minhash/simhash so near-dup recall
-    stops depending on case or punctuation noise."""
-    lowered = f"lower({text})"
-    # strip punctuation via translate-to-nothing (same builtin both engines)
-    stripped = f"translate({lowered}, {D.q(PUNCT)}, '')"
-    collapsed = D.regexp_replace(d, stripped, r"\s+", " ")
-    return f"trim({collapsed})"
-
-
 def dedup_lines_sql(d: str, text: str, sep: str = "\n") -> str:
     """Remove duplicate segments within one document, keeping the first
     occurrence in order — FineWeb-style intra-document line dedup (nav

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T_
 
 from .. import dialect as D
-from ..util import fan_out
+from ..util import fan_out, hadoop_exists
 
 # ---------------------------------------------------------------------------
 # shared cross-dialect expression fragments
@@ -208,12 +208,21 @@ def upper_triangle_pairs(buckets: DataFrame, arr_col: str, a_name: str,
     element i starts at slice position i + 2.  The last element's slice
     is empty and `explode` drops it — a singleton bucket yields nothing,
     so callers' `size(arr) > 1` pre-filters remain an optimization, not
-    a correctness requirement."""
+    a correctness requirement.
+
+    Raises ValueError when `buckets` already has a column named ``__i``
+    (the internal position alias), `a_name` or `b_name`."""
+    clash = ({"__i", a_name.lower(), b_name.lower()}
+             & {c.lower() for c in buckets.columns})
+    if clash:
+        raise ValueError(
+            f"upper_triangle_pairs: buckets already has column(s) "
+            f"{sorted(clash)} that the pair expansion would shadow")
+    arr = "`" + arr_col.replace("`", "``") + "`"
     lvl1 = buckets.select(
         *[F.col(c) for c in carry], F.col(arr_col),
         F.posexplode(F.col(arr_col)).alias("__i", a_name))
-    tail = F.expr(
-        f"slice({arr_col}, __i + 2, size({arr_col}) - __i - 1)")
+    tail = F.expr(f"slice({arr}, __i + 2, size({arr}) - __i - 1)")
     return lvl1.select(*[F.col(c) for c in carry], F.col(a_name),
                        F.explode(tail).alias(b_name))
 
@@ -797,8 +806,7 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
 
 def contamination_hits(train: DataFrame, benchmark: DataFrame,
                        id_col: str = "doc_id", text_col: str = "text",
-                       n: int = 8, bench_id_col: str | None = None,
-                       bench_text_col: str | None = None) -> DataFrame:
+                       n: int = 8) -> DataFrame:
     """Per-training-doc contamination summary against a benchmark set:
     (id, n_shared_grams, n_bench_docs) for every training doc sharing at
     least one distinct word n-gram with any benchmark doc — the standard
@@ -809,26 +817,14 @@ def contamination_hits(train: DataFrame, benchmark: DataFrame,
     100 TB corpus — so its distinct gram set BROADCASTS; the train side is
     one scan + explode, and the only shuffle is the final per-doc
     aggregation.  No pairwise anything."""
-    bid = bench_id_col or id_col
-    btx = bench_text_col or text_col
     tg = shingles(train, id_col, text_col, n)
-    bg = (shingles(benchmark, bid, btx, n)
-          .select(F.col(bid).alias("__bench_id"), "gram"))
+    bg = (shingles(benchmark, id_col, text_col, n)
+          .select(F.col(id_col).alias("__bench_id"), "gram"))
     return (tg.join(F.broadcast(bg), on="gram")
             .groupBy(id_col)
             .agg(F.countDistinct("gram").alias("n_shared_grams"),
                  F.countDistinct("__bench_id").alias("n_bench_docs"))
             .orderBy(id_col))
-
-
-def decontaminate(train: DataFrame, benchmark: DataFrame,
-                  id_col: str = "doc_id", text_col: str = "text",
-                  n: int = 8, **kw) -> DataFrame:
-    """Training corpus minus every contaminated doc (one anti-join against
-    the flagged id set from :func:`contamination_hits`)."""
-    flagged = contamination_hits(train, benchmark, id_col, text_col, n,
-                                 **kw).select(id_col)
-    return train.join(flagged, on=id_col, how="left_anti")
 
 
 # ---------------------------------------------------------------------------
@@ -1387,13 +1383,7 @@ def dedup_batch_against_index(new_docs: DataFrame, path: str,
 
     spark = new_docs.sparkSession
     survivors = new_docs
-    # Hadoop FS existence check so s3a://gs:// index paths work, not just
-    # local dirs (the datastore sinks use the same idiom)
-    fp_path = spark._jvm.org.apache.hadoop.fs.Path(
-        os.path.join(path, "fingerprints"))
-    fp_exists = fp_path.getFileSystem(
-        spark._jsc.hadoopConfiguration()).exists(fp_path)
-    if fp_exists:
+    if hadoop_exists(spark, os.path.join(path, "fingerprints")):
         exact = exact_index_flagged_ids(new_docs, path, id_col, text_col)
         survivors = new_docs.join(exact, on=id_col, how="left_anti")
     flagged = (minhash_index_flagged_pairs(survivors, path, id_col,
@@ -1419,7 +1409,7 @@ def compact_minhash_index(spark, path: str,
     with no signatures at all fails loudly as a contract error."""
     import os
 
-    from ..util import compact_parquet_dir, hadoop_exists, recover_directory
+    from ..util import compact_parquet_dir, recover_directory
 
     # a previous compaction crashed mid-swap leaves a subdir missing with
     # its .bak beside it — repair BEFORE the layout check, so re-running

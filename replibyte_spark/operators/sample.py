@@ -105,8 +105,7 @@ def systematic_percent(df: DataFrame, order_key: str, pct: int) -> DataFrame:
 
 def token_budget_thresholds(docs: DataFrame, weights: dict[str, float],
                             total_budget: int, stratum_col: str = "lang",
-                            text_col: str = "text",
-                            tokens_col: str | None = None) -> dict[str, int]:
+                            text_col: str = "text") -> dict[str, int]:
     """Per-stratum keep thresholds (millionths) so the EXPECTED token mix
     approaches `weights` (normalized) × `total_budget`:
     rate_s = min(1, budget_s / tokens_s).
@@ -115,15 +114,11 @@ def token_budget_thresholds(docs: DataFrame, weights: dict[str, float],
     key) and a driver collect bounded by the number of strata — the rate
     table is config-sized metadata, like IVF centroids.  Strata absent
     from `weights`, absent from the data, or with zero tokens keep
-    nothing.  Pass `tokens_col` when the frame already carries a token
-    count (a pipeline stage upstream computed it) — skips the re-count."""
-    wsum = float(sum(weights.values()))
-    if tokens_col is None:
-        from ..functions.text import token_count_sql
+    nothing."""
+    from ..functions.text import token_count_sql
 
-        tok = f"CAST({token_count_sql(D.SPARK, text_col)} AS BIGINT)"
-    else:
-        tok = f"CAST({tokens_col} AS BIGINT)"
+    wsum = float(sum(weights.values()))
+    tok = f"CAST({token_count_sql(D.SPARK, text_col)} AS BIGINT)"
     totals = {r["s"]: r["t"] or 0 for r in (
         docs.selectExpr(f"{stratum_col} AS s", f"{tok} AS t")
         .groupBy("s").agg(F.sum("t").alias("t")).collect())}
@@ -275,8 +270,7 @@ def leakage_free_splits(docs: DataFrame, id_col: str = "doc_id",
 def temperature_mix(docs: DataFrame, total_budget: int,
                     temperature: float = 2.0, stratum_col: str = "lang",
                     key_col: str = "doc_id", text_col: str = "text",
-                    salt: str = "tmix",
-                    tokens_col: str | None = None) -> DataFrame:
+                    salt: str = "tmix") -> DataFrame:
     """Temperature-flattened corpus mixing (the mT5/unimax sampling rule,
     public knowledge): stratum budgets ∝ (token mass)^(1/T), so T=1 keeps
     raw proportions and larger T progressively flattens the head —
@@ -290,12 +284,9 @@ def temperature_mix(docs: DataFrame, total_budget: int,
     feed the shared :func:`token_budget_mix` filter."""
     if temperature <= 0:
         raise ValueError(f"temperature must be > 0, got {temperature}")
-    if tokens_col is None:
-        from ..functions.text import token_count_sql
+    from ..functions.text import token_count_sql
 
-        tok = f"CAST({token_count_sql(D.SPARK, text_col)} AS BIGINT)"
-    else:
-        tok = f"CAST({tokens_col} AS BIGINT)"
+    tok = f"CAST({token_count_sql(D.SPARK, text_col)} AS BIGINT)"
     totals = {r["s"]: int(r["t"] or 0) for r in (
         docs.selectExpr(f"{stratum_col} AS s", f"{tok} AS t")
         .groupBy("s").agg(F.sum("t").alias("t")).collect())

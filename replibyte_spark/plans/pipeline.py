@@ -102,49 +102,63 @@ class DumpPipeline:
         return {n: df for n, df in tables.items() if _wanted(n)}
 
     def run(self, spark: SparkSession, name: str | None = None) -> DumpInfo:
-        cfg = self.config
-        tables = self.load_source_tables(spark)
-        # ---- subset (reference: source/postgres.rs:156-165 → subset())
-        ss = cfg.source.database_subset
-        if ss:
-            if ss.table not in tables:
-                raise ValueError(f"subset table not in source: {ss.table}")
-            pct = int(ss.strategy_options.get("percent", 50))
-            seed = hash_percent_filter(tables[ss.table],
-                                       _first_column(tables[ss.table]), pct)
-            edges = self.fk_edges
-            if not edges:
-                # live-database sources carry their own FK graph: extract
-                # it from the JDBC catalog (reference: parsed back out of
-                # the dump DDL, subset/src/postgres.rs:583-734) instead of
-                # silently subsetting with no referential closure
-                scheme, _path = _parse_uri(cfg.source.connection_uri)
-                if scheme in ("postgres", "postgresql", "mysql", "jdbc"):
-                    from ..sources.jdbc import fk_edges_from_jdbc
+        # source readers may persist their decoded rows (the sqltext reader
+        # does) and the subset closure checkpoints its frames; nothing reads
+        # them once the datastore write has returned or raised, so release
+        # exactly what this run made persistent
+        jsc = spark.sparkContext._jsc
+        before = set(jsc.getPersistentRDDs().keys())
+        try:
+            cfg = self.config
+            tables = self.load_source_tables(spark)
+            # ---- subset (reference: source/postgres.rs:156-165 → subset())
+            ss = cfg.source.database_subset
+            if ss:
+                if ss.table not in tables:
+                    raise ValueError(
+                        f"subset table not in source: {ss.table}")
+                pct = int(ss.strategy_options.get("percent", 50))
+                seed = hash_percent_filter(
+                    tables[ss.table], _first_column(tables[ss.table]), pct)
+                edges = self.fk_edges
+                if not edges:
+                    # live-database sources carry their own FK graph: extract
+                    # it from the JDBC catalog (reference: parsed back out of
+                    # the dump DDL, subset/src/postgres.rs:583-734) instead of
+                    # silently subsetting with no referential closure
+                    scheme, _path = _parse_uri(cfg.source.connection_uri)
+                    if scheme in ("postgres", "postgresql", "mysql", "jdbc"):
+                        from ..sources.jdbc import fk_edges_from_jdbc
 
-                    edges = fk_edges_from_jdbc(
-                        spark, cfg.source.connection_uri,
-                        cfg.source.jdbc_driver)
-            res = subset_closure(tables, edges, ss.table, seed,
-                                 include_children=True,
-                                 passthrough_tables=ss.passthrough_tables)
-            tables = res.tables
-        # ---- per-column transformers (one projection per table)
-        transformed = {}
-        for t, df in tables.items():
-            rules = cfg.transformer_rules_for(t, with_options=True)
-            transformed[t] = apply_transformers(df, rules) if rules else df
-        # ---- datastore write (optional column-level at-rest encryption)
-        store = Datastore(spark, cfg.datastore.dir)
-        enc = cfg.datastore.encrypted_columns
-        if enc and not cfg.encryption_key:
-            raise ValueError("datastore.encrypted_columns requires encryption_key")
-        return store.dump(
-            transformed, name,
-            compression="zstd" if cfg.source.compression else "none",
-            encrypt_columns=enc,
-            encryption_key=cfg.encryption_key,
-        )
+                        edges = fk_edges_from_jdbc(
+                            spark, cfg.source.connection_uri,
+                            cfg.source.jdbc_driver)
+                res = subset_closure(tables, edges, ss.table, seed,
+                                     include_children=True,
+                                     passthrough_tables=ss.passthrough_tables)
+                tables = res.tables
+            # ---- per-column transformers (one projection per table)
+            transformed = {}
+            for t, df in tables.items():
+                rules = cfg.transformer_rules_for(t, with_options=True)
+                transformed[t] = (apply_transformers(df, rules) if rules
+                                  else df)
+            # ---- datastore write (optional column-level at-rest encryption)
+            store = Datastore(spark, cfg.datastore.dir)
+            enc = cfg.datastore.encrypted_columns
+            if enc and not cfg.encryption_key:
+                raise ValueError(
+                    "datastore.encrypted_columns requires encryption_key")
+            return store.dump(
+                transformed, name,
+                compression="zstd" if cfg.source.compression else "none",
+                encrypt_columns=enc,
+                encryption_key=cfg.encryption_key,
+            )
+        finally:
+            for rdd_id, jrdd in jsc.getPersistentRDDs().items():
+                if rdd_id not in before:
+                    jrdd.unpersist(False)
 
 
 class RestorePipeline:

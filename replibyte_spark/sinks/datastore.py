@@ -40,6 +40,8 @@ from dataclasses import asdict, dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..util import hadoop_read_bytes
+
 MANIFEST_VERSION = 2
 MANIFEST_NAME = "metadata.json"
 
@@ -88,13 +90,7 @@ class Datastore:
         return "/".join([self.root, *parts])
 
     def _read_bytes(self, path: str) -> bytes:
-        fs, p = self._fs(path), self._jpath(path)
-        stream = fs.open(p)
-        try:
-            return bytes(self.spark._jvm.org.apache.commons.io.IOUtils
-                         .toByteArray(stream))
-        finally:
-            stream.close()
+        return hadoop_read_bytes(self.spark, path)
 
     def _write_bytes(self, path: str, payload: bytes) -> None:
         """Write via temp file + rename, keeping the old file as `.bak`

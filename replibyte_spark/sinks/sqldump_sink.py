@@ -42,16 +42,12 @@ def to_insert_statements(df: DataFrame, table: str) -> DataFrame:
 
 
 def write_sql_dump(df: DataFrame, table: str, path: str,
-                   single_file: bool = False,
                    mode: str = "overwrite") -> None:
     """Write the INSERT stream as text chunk files (the reference's
     `{N}.dump` chunks, tasks/full_dump.rs:72-113 — here Spark part-files).
     `mode` passes through to the text writer so a pipeline with
     wipe_database=false can append instead of clobbering."""
-    stmts = to_insert_statements(df, table)
-    if single_file:
-        stmts = stmts.coalesce(1)
-    stmts.write.mode(mode).text(path)
+    to_insert_statements(df, table).write.mode(mode).text(path)
 
 
 def _copy_field_expr(field) -> F.Column:

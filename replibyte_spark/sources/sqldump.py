@@ -381,7 +381,7 @@ def parse_copy_rows(stmt: str):
 # typed rows → DataFrames (single-pass, explicit schema)
 # ---------------------------------------------------------------------------
 #
-# All three readers below produce an RDD of (table, cols_tuple, values_list)
+# Both readers below produce an RDD of (table, cols_tuple, values_list)
 # and hand it here.  Earlier rounds serialized rows to JSON and used
 # `spark.read.json`, whose schema INFERENCE is a second full pass over the
 # data; instead we fold a per-column type lattice into the same job that
@@ -511,8 +511,8 @@ def read_sql_dump(spark: SparkSession, path: str,
 
     One task per file (chunked dumps parallelize naturally); rows decode to
     typed tuples in the same pass and each table gets an explicit schema —
-    see :func:`_frames_from_typed_rdd`.  For a single monolithic file use
-    :func:`read_copy_dump_parallel` / :func:`read_insert_dump_parallel`.
+    see :func:`_frames_from_typed_rdd`.  A single monolithic COPY-format
+    file parses in parallel through :func:`read_copy_dump_parallel`.
     """
     files = spark.sparkContext.wholeTextFiles(path)
 
@@ -610,131 +610,3 @@ def read_copy_dump_parallel(spark: SparkSession, path: str,
         yield table, cols, vals
 
     return _frames_from_typed_rdd(spark, lines.flatMap(emit), tables)
-
-
-# ---------------------------------------------------------------------------
-# parallel INSERT-format reader
-# ---------------------------------------------------------------------------
-
-_QUOTE_OR_ESC = re.compile(r"\\.|'")
-
-
-def _line_quote_parity(line: str, dialect: str = "postgres") -> int:
-    """Number of effective single-quote delimiters in a line, mod 2.
-
-    A statement spans multiple lines iff a string literal contains a raw
-    newline, and exactly the first and last lines of that literal have odd
-    parity (interior lines are wholly inside the string).  `''` contributes
-    two quotes (parity even — consistent whether it means escape or
-    close+open); in the mysql dialect a backslash always escapes the next
-    character.
-    """
-    parity = 0
-    if dialect == "mysql":
-        for m in _QUOTE_OR_ESC.finditer(line):
-            if m.group(0) == "'":
-                parity ^= 1
-        return parity
-    return line.count("'") & 1
-
-
-_VALUES_RE = re.compile(r"\bVALUES\b", re.IGNORECASE)
-
-
-def read_insert_dump_parallel(spark: SparkSession, path: str,
-                              tables: list[str] | None = None,
-                              dialect: str = "postgres",
-                              min_partitions: int = 32) -> dict[str, DataFrame]:
-    """Parse a MONOLITHIC INSERT-format dump (pg_dump ``--column-inserts`` /
-    mysqldump) with full parallelism.
-
-    The reference streams these incrementally through one reader
-    (dump-parser/src/utils.rs:33-121); a 1000-executor cluster instead wants
-    the file line-split.  Dump writers emit ONE statement per line, so every
-    line parses independently — except statements whose string literals
-    contain raw newlines.  Those are found exactly (not heuristically):
-
-    1. Distributed pass collects the indices of lines with ODD quote parity
-       (:func:`_line_quote_parity`) — the opening and closing lines of any
-       newline-carrying string literal.  Data rows themselves can never
-       hide one (a quoted value contributes quotes in pairs on one line).
-    2. Consecutive odd indices pair into [start, end] spans; the (few)
-       spanned lines are collected, rejoined, and parsed on the driver.
-    3. Every line outside a span decodes in parallel; non-INSERT statements
-       (DDL, SET, comments) are skipped, but an INSERT-with-VALUES line
-       that fails to parse raises — silent row loss is never acceptable in
-       a dump reader.
-
-    Constraint: statements start at line starts and end on the line where
-    their last string literal closes (every pg_dump/mysqldump output does).
-    Dumps with unbalanced quotes outside string context (e.g. procedural
-    bodies) belong to :func:`read_sql_dump` — span validation raises rather
-    than guessing.
-    """
-    from pyspark import StorageLevel
-
-    lines = (spark.sparkContext.textFile(path, minPartitions=min_partitions)
-             .zipWithIndex().persist(StorageLevel.MEMORY_AND_DISK))
-
-    odd = sorted(lines
-                 .filter(lambda t: _line_quote_parity(t[0], dialect) == 1)
-                 .map(lambda t: t[1]).collect())
-    if len(odd) % 2:
-        raise ValueError(
-            f"unterminated string literal in {path} (line {odd[-1] + 1}); "
-            "not a line-parallel INSERT dump — use read_sql_dump")
-    spans = [(odd[i], odd[i + 1]) for i in range(0, len(odd), 2)]
-
-    spanned_rows: list[tuple] = []
-    if spans:
-        span_set = spans  # tiny; linear scan per line below uses bisect
-        import bisect as _b
-        starts = [s for s, _ in span_set]
-
-        def in_span(t):
-            i = _b.bisect_right(starts, t[1]) - 1
-            return i >= 0 and span_set[i][0] <= t[1] <= span_set[i][1]
-
-        frag_lines = sorted(lines.filter(in_span).collect(), key=lambda t: t[1])
-        by_span: dict[tuple, list[str]] = {}
-        for line, idx in frag_lines:
-            i = _b.bisect_right(starts, idx) - 1
-            by_span.setdefault(span_set[i], []).append(line)
-        for span, parts in sorted(by_span.items()):
-            stmt = "\n".join(parts)
-            parsed = parse_insert_rows(stmt, dialect)
-            if parsed is None:
-                raise ValueError(
-                    f"lines {span[0] + 1}-{span[1] + 1} of {path} span a "
-                    "statement that is not a plain INSERT — use read_sql_dump")
-            t, cols, rows = parsed
-            spanned_rows += [(t, tuple(cols), vals) for vals in rows]
-
-    bc_spans = spark.sparkContext.broadcast(([s for s, _ in spans], spans))
-
-    def emit(t):
-        import bisect as _b
-        line, idx = t
-        starts_, spans_ = bc_spans.value
-        if spans_:
-            i = _b.bisect_right(starts_, idx) - 1
-            if i >= 0 and spans_[i][0] <= idx <= spans_[i][1]:
-                return  # handled on the driver
-        s = line.strip()
-        if not s or not s[:7].upper().startswith("INSERT"):
-            return
-        parsed = parse_insert_rows(s, dialect)
-        if parsed is None:
-            if _VALUES_RE.search(s):
-                raise ValueError(
-                    f"unparseable INSERT at line {idx + 1}: {s[:80]!r}")
-            return  # INSERT ... SELECT etc. — not a data row
-        tname, cols, rows = parsed
-        cols_t = tuple(cols)
-        for vals in rows:
-            yield tname, cols_t, vals
-
-    rdd = lines.flatMap(emit)
-    if spanned_rows:
-        rdd = rdd.union(spark.sparkContext.parallelize(spanned_rows, 1))
-    return _frames_from_typed_rdd(spark, rdd, tables)

@@ -59,8 +59,7 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
 def hadoop_exists(spark: SparkSession, path: str) -> bool:
     """Hadoop-FS existence check — the shared idiom for anything that must
     work on s3a:// / gs:// / hdfs:// paths, where os.path.isdir is always
-    False (the datastore sinks and dedup_batch_against_index use the same
-    pattern)."""
+    False."""
     p = spark._jvm.org.apache.hadoop.fs.Path(path)
     return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)
 

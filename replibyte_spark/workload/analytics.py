@@ -560,8 +560,7 @@ GROUP BY event_type ORDER BY event_type
 # REGISTRY since round 13 (was EXTRA in r12): planning-time partition
 # pruning is a scan-correctness surface — a pruning bug silently drops
 # whole days from every downstream aggregate, exactly the failure class
-# only an oracle catches.  curation_pipeline_v2 moved to EXTRA to make
-# room (subsumed by the gated v4).
+# only an oracle catches.
 register(Query("partitioned_events_revenue", partitioned_events_revenue,
                PARTITIONED_EVENTS_ORACLE, tags=("layout", "agg"),
                bench=True))

@@ -123,269 +123,6 @@ register(Query("training_corpus_pipeline", training_corpus_pipeline,
                bench=True))
 
 
-# ---------------------------------------------------------------------------
-# v2: the FULL modern curation chain — quality → decontaminate (vs a held-
-# out benchmark slice) → MinHash near-dup survivors → token-budget language
-# mixing → per-source packing, still ONE declarative plan per stage with the
-# two shared frames eagerly materialized.  The oracle composes the same CTE
-# fragments the standalone gates use (decon grams, minhash nd, mix
-# thresholds, pack prefix window), so the composite is value-checked end to
-# end.  doc_id % DECON_MOD == 0 plays the benchmark set.
-# ---------------------------------------------------------------------------
-
-from ..operators.sample import token_budget_mix, token_budget_thresholds
-from .dedup_queries import DECON_MOD, DECON_N
-from .subset_queries import MIX_BUDGET, MIX_WEIGHTS
-
-
-def curation_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = D.SPARK
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
-    bench = docs.filter(F.col("doc_id") % DECON_MOD == 0)
-    scored = docs.filter(F.col("doc_id") % DECON_MOD != 0).selectExpr(
-        "doc_id", "source", "lang", "text",
-        f"round({T.quality_score_sql(d, 'text')}, 6) AS quality",
-        f"CAST({T.token_count_sql(d, 'text')} AS BIGINT) AS n_tokens",
-    ).persist()
-    # persist BEFORE the quality filter (r12, same fix as v1): lazily,
-    # Catalyst sinks the quality predicate below fan_out's exchange and
-    # the most expensive expression in the pipeline evaluates single-task
-    # on the one-split scan; cached, scoring runs once in parallel and
-    # the filter is a column compare.  The cheap doc_id % filter above
-    # MAY sink — pruning rows before the shuffle is what pushdown is for.
-    scored.write.mode("overwrite").format("noop").save()
-    kept0 = scored.filter(F.col("quality") >= QUALITY_FLOOR)
-    # decontaminated corpus feeds pair generation AND the survivor
-    # anti-join — same persist + noop-fill materialization as v1's `kept`
-    clean = DD.decontaminate(kept0, bench, n=DECON_N).persist()
-    clean.write.mode("overwrite").format("noop").save()
-    pairs = DD.minhash_near_dup_pairs(clean, "doc_id", "text",
-                                      threshold=JACCARD_T,
-                                      n_hashes=N_HASHES, bands=BANDS, n=NGRAM,
-                                      checkpoint_candidates=True)
-    surv = DD.keep_canonical(clean, pairs, "doc_id").drop("text").persist()
-    thr = token_budget_thresholds(surv, MIX_WEIGHTS, MIX_BUDGET,
-                                  stratum_col="lang", tokens_col="n_tokens")
-    mixed = token_budget_mix(surv, MIX_WEIGHTS, MIX_BUDGET,
-                             stratum_col="lang", thresholds=thr)
-    packed = pack_token_budget(mixed, "source", "doc_id", "n_tokens",
-                               PACK_BUDGET)
-    return (packed.select("doc_id", "source", "lang", "quality", "n_tokens",
-                          F.col("bin_id").cast("long").alias("bin_id"))
-            .orderBy("source", "doc_id"))
-
-
-def _curation_v2_oracle() -> str:
-    d = D.DUCK
-    g8 = DD.word_ngrams_sql(d, "text", DECON_N)
-    wsum = float(sum(MIX_WEIGHTS.values()))
-    budget_case = " ".join(
-        f"WHEN {D.q(s)} THEN {MIX_BUDGET * (w / wsum)!r}"
-        for s, w in sorted(MIX_WEIGHTS.items()))
-    combined = f"({D.to_str(d, 'doc_id')} || '|' || {D.to_str(d, 'lang')})"
-    draw = D.hash_uniform_mod(d, combined, "mix", 1_000_000)
-    return f"""
-WITH RECURSIVE bench AS (
-  SELECT doc_id, text FROM documents WHERE doc_id % {DECON_MOD} = 0
-), kept0 AS (
-  SELECT doc_id, source, lang, text,
-         round({T.quality_score_sql(d, 'text')}, 6) AS quality,
-         CAST({T.token_count_sql(d, 'text')} AS BIGINT) AS n_tokens
-  FROM documents
-  WHERE doc_id % {DECON_MOD} <> 0
-    AND round({T.quality_score_sql(d, 'text')}, 6) >= {QUALITY_FLOOR}
-), kg AS (
-  SELECT DISTINCT doc_id, unnest({g8}) AS gram FROM kept0
-), bgr AS (
-  SELECT DISTINCT unnest({g8}) AS gram FROM bench
-), flagged AS (
-  SELECT DISTINCT kg.doc_id FROM kg JOIN bgr USING (gram)
-), kept AS (
-  SELECT * FROM kept0 WHERE doc_id NOT IN (SELECT doc_id FROM flagged)
-), {_minhash_ctes(src='kept')}, nodes AS (
-  SELECT id_a AS n FROM nd UNION SELECT id_b FROM nd
-), edges AS (
-  SELECT id_a AS src, id_b AS dst FROM nd UNION ALL SELECT id_b, id_a FROM nd
-), reach(node, root) AS (
-  SELECT n, n FROM nodes
-  UNION
-  SELECT e.dst, r.root FROM reach r JOIN edges e ON e.src = r.node
-  WHERE r.root < e.dst
-), labels AS (
-  SELECT node, min(root) AS cluster_id FROM reach GROUP BY node
-), surv AS (
-  SELECT doc_id, source, lang, quality, n_tokens FROM kept
-  WHERE doc_id NOT IN (SELECT node FROM labels WHERE node <> cluster_id)
-), tot AS (
-  SELECT lang, sum(n_tokens) AS t FROM surv GROUP BY lang
-), thr AS (
-  SELECT lang, CASE WHEN coalesce(t, 0) > 0 THEN
-    CAST(floor(least(1.0, (CASE lang {budget_case} ELSE 0 END) / t)
-               * 1000000) AS BIGINT) ELSE 0 END AS thr
-  FROM tot
-), mixed AS (
-  SELECT s.* FROM surv s JOIN thr USING (lang) WHERE {draw} < thr
-), p AS (
-  SELECT doc_id, source, lang, quality, n_tokens,
-         coalesce(sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         AS prefix
-  FROM mixed
-)
-SELECT doc_id, source, lang, quality, n_tokens,
-       CAST(floor(prefix / {PACK_BUDGET}.0) AS BIGINT) AS bin_id
-FROM p ORDER BY source, doc_id
-"""
-
-
-# EXTRA since round 13 (still oracle-checked by pytest): its REGISTRY
-# slot went to partitioned_events_revenue — v2's decontamination/mixing/
-# near-dup chain is subsumed by the gated curation_pipeline_v4 (same
-# stages plus the r9/r10 operators), while the time-partitioned layout's
-# planning-time pruning is a scan-correctness surface only an oracle
-# catches (was driver-visible round 7-12).
-register(Query("curation_pipeline_v2", curation_pipeline_v2,
-               _curation_v2_oracle(), tags=("text", "dedup", "pipeline")),
-         extra=True)
-
-
-# ---------------------------------------------------------------------------
-# v3 (round 10): the same chain with the r9/r10 operators swapped into
-# their slots — the PUBLISHED Gopher rule set (functions/gopher.py)
-# replaces the heuristic quality floor, and temperature-flattened mixing
-# (the mT5/unimax rule, operators/sample.py) replaces hand-written
-# per-language weights; decontamination, MinHash near-dup survivors and
-# per-source packing are unchanged.  One declarative plan per stage, the
-# two shared frames eagerly materialized exactly like v2; the oracle
-# composes the same CTE fragments the standalone gates already proved.
-# ---------------------------------------------------------------------------
-
-TMIX3_BUDGET, TMIX3_T = 1000, 3.0
-# the synthetic fixture's whole vocabulary contains exactly ONE of the
-# eight Gopher required stop words ('the'), so the published >= 2 bar
-# empties the corpus — the pipeline runs the rule at >= 1 here (the
-# BM25 max_df_ratio precedent); the published default stays the library
-# default and its drop-everything edge is unit-tested directly
-GQ3_MIN_STOP = 1
-
-
-def curation_pipeline_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.gopher import gopher_flags
-    from ..operators.sample import temperature_mix
-
-    d = D.SPARK
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
-    bench = docs.filter(F.col("doc_id") % DECON_MOD == 0)
-    # persist the flagged frame, filter from cache (the v4/r12 pattern):
-    # lazily, Catalyst inlines the gopher_pass conjunction into one
-    # predicate and sinks it below fan_out's exchange — the whole rule
-    # set single-task on the one-split scan
-    flagged3 = (gopher_flags(docs.filter(F.col("doc_id") % DECON_MOD != 0),
-                             min_stop_hits=GQ3_MIN_STOP)
-                .select("doc_id", "source", "lang", "text", "gopher_pass")
-                .persist())
-    flagged3.write.mode("overwrite").format("noop").save()
-    kept0 = (flagged3.filter(F.col("gopher_pass"))
-             .selectExpr(
-                 "doc_id", "source", "lang", "text",
-                 f"CAST({T.token_count_sql(d, 'text')} AS BIGINT)"
-                 f" AS n_tokens"))
-    clean = DD.decontaminate(kept0, bench, n=DECON_N).persist()
-    clean.write.mode("overwrite").format("noop").save()
-    pairs = DD.minhash_near_dup_pairs(clean, "doc_id", "text",
-                                      threshold=JACCARD_T,
-                                      n_hashes=N_HASHES, bands=BANDS,
-                                      n=NGRAM, checkpoint_candidates=True)
-    # survivors feed the temperature totals collect AND the mix filter;
-    # the collect inside temperature_mix fills this persist (v2's
-    # thresholds-collect pattern)
-    surv = DD.keep_canonical(clean, pairs, "doc_id").drop("text").persist()
-    mixed = temperature_mix(surv, TMIX3_BUDGET, temperature=TMIX3_T,
-                            stratum_col="lang", tokens_col="n_tokens")
-    packed = pack_token_budget(mixed, "source", "doc_id", "n_tokens",
-                               PACK_BUDGET)
-    return (packed.select("doc_id", "source", "lang", "n_tokens",
-                          F.col("bin_id").cast("long").alias("bin_id"))
-            .orderBy("source", "doc_id"))
-
-
-def _curation_v3_oracle() -> str:
-    from ..functions.gopher import gopher_flag_sqls, gopher_stats_sql
-
-    d = D.DUCK
-    g8 = DD.word_ngrams_sql(d, "text", DECON_N)
-    gq = " AND ".join(
-        gopher_flag_sqls(gopher_stats_sql(d, "text"),
-                         min_stop_hits=GQ3_MIN_STOP).values())
-    alpha = 1.0 / TMIX3_T
-    combined = f"({D.to_str(d, 'doc_id')} || '|' || {D.to_str(d, 'lang')})"
-    draw = D.hash_uniform_mod(d, combined, "tmix", 1_000_000)
-    return f"""
-WITH RECURSIVE bench AS (
-  SELECT doc_id, text FROM documents WHERE doc_id % {DECON_MOD} = 0
-), kept0 AS (
-  SELECT doc_id, source, lang, text,
-         CAST({T.token_count_sql(d, 'text')} AS BIGINT) AS n_tokens
-  FROM documents
-  WHERE doc_id % {DECON_MOD} <> 0 AND ({gq})
-), kg AS (
-  SELECT DISTINCT doc_id, unnest({g8}) AS gram FROM kept0
-), bgr AS (
-  SELECT DISTINCT unnest({g8}) AS gram FROM bench
-), flagged AS (
-  SELECT DISTINCT kg.doc_id FROM kg JOIN bgr USING (gram)
-), kept AS (
-  SELECT * FROM kept0 WHERE doc_id NOT IN (SELECT doc_id FROM flagged)
-), {_minhash_ctes(src='kept')}, nodes AS (
-  SELECT id_a AS n FROM nd UNION SELECT id_b FROM nd
-), edges AS (
-  SELECT id_a AS src, id_b AS dst FROM nd UNION ALL SELECT id_b, id_a FROM nd
-), reach(node, root) AS (
-  SELECT n, n FROM nodes
-  UNION
-  SELECT e.dst, r.root FROM reach r JOIN edges e ON e.src = r.node
-  WHERE r.root < e.dst
-), labels AS (
-  SELECT node, min(root) AS cluster_id FROM reach GROUP BY node
-), surv AS (
-  SELECT doc_id, source, lang, n_tokens FROM kept
-  WHERE doc_id NOT IN (SELECT node FROM labels WHERE node <> cluster_id)
-), tot AS (
-  SELECT lang, sum(n_tokens) AS t FROM surv
-  WHERE lang IS NOT NULL GROUP BY lang
-), wsum AS (
-  SELECT list_reduce(list_prepend(CAST(0 AS DOUBLE),
-             list(pow(t, {D.dlit(d, alpha)}) ORDER BY lang)),
-             (a, x) -> a + x) AS w
-  FROM tot WHERE t > 0
-), thr AS (
-  SELECT lang,
-         CAST(floor(least(1.0,
-              ({TMIX3_BUDGET} * (pow(t, {D.dlit(d, alpha)}) / wsum.w)) / t)
-              * 1000000) AS BIGINT) AS thr
-  FROM tot, wsum WHERE t > 0
-), mixed AS (
-  SELECT s.* FROM surv s JOIN thr USING (lang) WHERE {draw} < thr
-), p AS (
-  SELECT doc_id, source, lang, n_tokens,
-         coalesce(sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         AS prefix
-  FROM mixed
-)
-SELECT doc_id, source, lang, n_tokens,
-       CAST(floor(prefix / {PACK_BUDGET}.0) AS BIGINT) AS bin_id
-FROM p ORDER BY source, doc_id
-"""
-
-
-# EXTRA (r10): the v2 composite stays driver-gated; v3 swaps in the
-# published Gopher rules + temperature mixing and is pytest-oracle-checked
-register(Query("curation_pipeline_v3", curation_pipeline_v3,
-               _curation_v3_oracle(), tags=("text", "dedup", "pipeline")),
-         extra=True)
-
-
 # --- v4 (late r10): published filters → model-based selection ---------------
 # repetition rules ∧ C4 page rules gate the corpus, then DSIR picks the
 # documents whose hashed-n-gram profile matches a target domain — the

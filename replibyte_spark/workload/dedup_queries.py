@@ -101,39 +101,6 @@ register(Query("minhash_near_dup", minhash_near_dup, _minhash_oracle(),
 
 # --- near-dup clustering + canonical survivors ------------------------------
 
-def near_dup_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components over the verified minhash pairs: every paired
-    doc labeled with its cluster's minimum doc_id."""
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = DD.minhash_near_dup_pairs(docs, "doc_id", "text",
-                                      threshold=JACCARD_T,
-                                      n_hashes=N_HASHES, bands=BANDS, n=NGRAM)
-    return DD.near_dup_clusters(pairs).orderBy("node")
-
-
-def _cluster_oracle() -> str:
-    """Independent clustering oracle: DuckDB recursive CTE reachability
-    (min root propagates along descending-id paths) over the same pairs."""
-    return f"""
-WITH RECURSIVE {_minhash_ctes()}, nodes AS (
-  SELECT id_a AS n FROM nd UNION SELECT id_b FROM nd
-), edges AS (
-  SELECT id_a AS src, id_b AS dst FROM nd UNION ALL SELECT id_b, id_a FROM nd
-), reach(node, root) AS (
-  SELECT n, n FROM nodes
-  UNION
-  SELECT e.dst, r.root FROM reach r JOIN edges e ON e.src = r.node
-  WHERE r.root < e.dst
-)
-SELECT node, CAST(min(root) AS BIGINT) AS cluster_id
-FROM reach GROUP BY node ORDER BY node
-"""
-
-
-register(Query("near_dup_cluster_labels", near_dup_cluster_labels,
-               _cluster_oracle(), tags=("dedup", "cluster")), extra=True)
-
-
 def near_dup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The end-to-end corpus dedup: keep one canonical doc per near-dup
     cluster, pass unpaired docs through."""
@@ -872,10 +839,8 @@ SELECT doc_id, decision FROM (
 """
 
 
-# driver-visible (r9): the capstone composition takes the REGISTRY slot of
-# the redundant insert_parallel_roundtrip (third of three parser-path
-# roundtrips, now EXTRA).  bench=True: the headline ingest number — one
-# batch admitted against both prebuilt sidecars, cold-time attributed.
+# bench=True: the headline ingest number — one batch admitted against
+# both prebuilt sidecars, cold-time attributed.
 register(Query("full_incremental_admit", full_incremental_admit_q,
                _fa_oracle(), tags=("dedup", "similarity", "index",
                                    "pipeline"), bench=True))

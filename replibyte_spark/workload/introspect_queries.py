@@ -57,36 +57,6 @@ register(Query("retention_dump_list", retention_dump_list, RETENTION_ORACLE,
                tags=("datastore", "introspect")), extra=True)
 
 
-# --- C7 + I4: v1 manifest migration ------------------------------------------
-
-
-def migrated_manifest_dump_list(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Write a v1 manifest (`backups` key) by hand; init() must migrate it
-    to v2 `dumps` and the listing must surface the legacy entry."""
-    root = tempfile.mkdtemp(prefix="rs_gate_migrate_")
-    os.makedirs(root, exist_ok=True)
-    v1 = {"v": 1, "backups": [
-        {"directory_name": "legacy-dump", "size": 123, "created_at": 1.0,
-         "compressed": True, "encrypted": False, "tables": ["region"]},
-    ]}
-    with open(os.path.join(root, "metadata.json"), "w") as f:
-        json.dump(v1, f)
-    store = Datastore(spark, root)
-    store.init()  # runs the migration
-    assert store._read_manifest()["v"] == 2
-    return (dump_list(spark, root)
-            .select("name", "n_tables", "compressed", "encrypted"))
-
-
-MIGRATION_ORACLE = """
-SELECT 'legacy-dump' AS name, CAST(1 AS INTEGER) AS n_tables,
-       true AS compressed, false AS encrypted
-"""
-
-register(Query("migrated_manifest_dump_list", migrated_manifest_dump_list,
-               MIGRATION_ORACLE, tags=("datastore", "introspect")), extra=True)
-
-
 # --- combined lifecycle gate: C5 + C7 + F1 + I4 in one driver-visible row ----
 
 
@@ -95,8 +65,8 @@ def dump_lifecycle_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     v1 manifest (`backups` key) is migrated by init() (C7), two real dumps
     are written with skip-table resolution (F1), retention keep_last=2
     deletes the legacy entry (C5), and the final listing (I4) must show
-    exactly the two survivors.  The fine-grained single-concern variants
-    live in EXTRA (pytest-only) — this row is what the driver records."""
+    exactly the two survivors.  The retention-only variant stays in
+    EXTRA (pytest-only); this row is the gated one."""
     from .pipeline import resolve_tables
 
     root = tempfile.mkdtemp(prefix="rs_gate_lifecycle_")

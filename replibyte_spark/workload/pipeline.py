@@ -230,38 +230,6 @@ register(Query("copy_parallel_roundtrip", copy_parallel_roundtrip,
                tags=("pipeline", "parser")))
 
 
-def insert_parallel_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ONE monolithic INSERT-format file (pg_dump --column-inserts shape)
-    read back through the line-splitting parallel reader
-    (read_insert_dump_parallel) — kills the last single-task ingestion
-    path (the reference streams these serially, dump-parser/src/utils.rs:33)."""
-    import tempfile
-
-    from ..sinks.sqldump_sink import write_sql_dump
-    from ..sources.sqldump import read_insert_dump_parallel
-
-    supplier = load_table(spark, sf_dir, "supplier")
-    path = tempfile.mkdtemp(prefix="rs_gate_inspar_") + "/supplier"
-    write_sql_dump(supplier, "public.supplier", path, single_file=True)
-    back = read_insert_dump_parallel(spark, path)["supplier"]
-    return back.select(
-        F.col("s_suppkey").cast("long").alias("s_suppkey"),
-        F.col("s_name").alias("s_name"),
-        F.col("s_nationkey").cast("int").alias("s_nationkey"),
-        F.col("s_acctbal").cast("double").alias("s_acctbal"),
-    ).orderBy("s_suppkey")
-
-
-# EXTRA since r9 (slot went to full_incremental_admit): third of three
-# parser-path roundtrips — sqldump_roundtrip gates INSERT parsing and
-# copy_parallel_roundtrip gates the parallel reader; still oracle-checked
-# by pytest
-register(Query("insert_parallel_roundtrip", insert_parallel_roundtrip,
-               "SELECT s_suppkey, s_name, s_nationkey, s_acctbal "
-               "FROM supplier ORDER BY s_suppkey",
-               tags=("pipeline", "parser")), extra=True)
-
-
 def _dataset_fingerprint(sf_dir: str, table: str) -> str:
     """Cheap content key for a parquet table: file names + sizes + mtimes.
     Keys the fixture cache so a regenerated dataset at the same path never

@@ -17,54 +17,13 @@ from . import Query, register
 FACTOR = 8
 
 
-def salted_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """orders ⋈ customer through the salted join, then revenue per market
-    segment — identical to the plain join by construction."""
-    orders = load_table(spark, sf_dir, "orders")
-    cust = (load_table(spark, sf_dir, "customer")
-            .select(F.col("c_custkey").alias("o_custkey"), "c_mktsegment"))
-    joined = salted_join(orders, cust, on="o_custkey", factor=FACTOR)
-    return (joined.groupBy("c_mktsegment")
-            .agg(F.count(F.lit(1)).alias("n_orders"),
-                 F.round(F.sum("o_totalprice"), 2).alias("revenue"))
-            .orderBy("c_mktsegment"))
-
-
-SALTED_JOIN_ORACLE = """
-SELECT c_mktsegment, count(*) AS n_orders,
-       round(sum(o_totalprice), 2) AS revenue
-FROM orders JOIN customer ON o_custkey = c_custkey
-GROUP BY c_mktsegment ORDER BY c_mktsegment
-"""
-
-register(Query("salted_join_revenue", salted_join_revenue, SALTED_JOIN_ORACLE,
-               tags=("skew",)), extra=True)
-
-
-def salted_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-phase salted distinct count (hot event_type safe) ≡ plain
-    count(DISTINCT user_id)."""
-    ev = load_table(spark, sf_dir, "events")
-    return (salted_count_distinct(ev, "event_type", "user_id", factor=FACTOR)
-            .orderBy("event_type"))
-
-
-SALTED_DISTINCT_ORACLE = """
-SELECT event_type, CAST(count(DISTINCT user_id) AS BIGINT) AS n_distinct
-FROM events GROUP BY event_type ORDER BY event_type
-"""
-
-register(Query("salted_distinct_users", salted_distinct_users,
-               SALTED_DISTINCT_ORACLE, tags=("skew",)), extra=True)
-
-
 def salted_skew_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BOTH skew mitigations in one driver gate (frees a registry slot for
     the corpus pipeline): the salted orders⋈customer revenue rollup and the
     two-phase salted distinct-count, unioned under a uniform
     (grp, n, metric) schema.  Each half must equal its UNSALTED oracle —
     any salting leak (lost rows, double-counted replicas, salt escaping)
-    hash-fails.  The standalone variants stay oracle-checked in EXTRA."""
+    hash-fails."""
     orders = load_table(spark, sf_dir, "orders")
     cust = (load_table(spark, sf_dir, "customer")
             .select(F.col("c_custkey").alias("o_custkey"), "c_mktsegment"))

@@ -282,8 +282,7 @@ register(Query("repetition_filter_summary", repetition_filter_summary,
 
 # fixture-driven C4 parameterization (the synthetic corpus has NO
 # sentence punctuation, so the published terminal-punct line rule and
-# 5-sentence floor are vacuously all-fail on it — the same degeneracy
-# the gopher gate documents for min_stop_hits): terminal punct disabled,
+# 5-sentence floor are vacuously all-fail on it): terminal punct disabled,
 # kept lines = lines of >= 50 words (differential: 277/500 docs at
 # sf0.01), bad-word list seeded with the corpus-rare token 'dup'.
 # The published defaults are exercised per-rule in tests/test_c4.py.
@@ -600,44 +599,6 @@ FROM p ORDER BY source, doc_id
 
 register(Query("doc_pack_bins", doc_pack_bins, _pack_oracle(),
                tags=("text", "packing")))
-
-
-# --- normalization ----------------------------------------------------------
-
-def normalized_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Canonicalized-text fingerprints: lowercase / punctuation-stripped /
-    whitespace-collapsed text hashed per doc (the robustness pre-pass for
-    near-dup pipelines), plus the normalized token count."""
-    from ..functions.text import normalize_text_sql, token_count_sql
-    from ..util import fan_out
-
-    # r13 fan_out sweep: normalize+md5+token_count is a heavy
-    # zero-shuffle projection — the r12 one-split trap shape
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
-    norm = normalize_text_sql(D.SPARK, "text")
-    return (docs.select(
-        "doc_id",
-        F.expr(f"md5({norm})").alias("norm_md5"),
-        F.expr(token_count_sql(D.SPARK, norm)).cast("long").alias("n_tokens"))
-        .orderBy("doc_id"))
-
-
-def _normalized_oracle() -> str:
-    from ..functions.text import normalize_text_sql, token_count_sql
-
-    norm = normalize_text_sql(D.DUCK, "text")
-    return f"""
-SELECT doc_id, md5({norm}) AS norm_md5,
-       CAST({token_count_sql(D.DUCK, norm)} AS BIGINT) AS n_tokens
-FROM documents ORDER BY doc_id
-"""
-
-
-# EXTRA since round 7: subsumed by doc_text_metrics (same text functions)
-# + dedup_exact_events (same hash-groupBy risk surface); its driver slot
-# went to curation_pipeline_v2.  Still oracle-checked by pytest.
-register(Query("normalized_fingerprints", normalized_fingerprints,
-               _normalized_oracle(), tags=("text",)), extra=True)
 
 
 # --- training-order shuffle + corpus report (round 7) -----------------------

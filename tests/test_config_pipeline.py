@@ -291,3 +291,30 @@ def test_jsonl_source_round_trip(spark, sf_dir, tmp_path):
     want = sorted((int(r.r_regionkey), r.r_name) for r in
                   load_table(spark, sf_dir, "region").collect())
     assert got == want
+
+
+def test_dump_run_releases_only_what_it_persisted(spark, sf_dir, tmp_path):
+    """Two sqltext dumps leave the persistent-RDD registry where it
+    started: the reader's persisted decode is released once each write
+    returns, while an RDD persisted before the runs stays pinned."""
+    from replibyte_spark.catalog import load_table
+    from replibyte_spark.sinks.sqldump_sink import write_sql_dump
+
+    write_sql_dump(load_table(spark, sf_dir, "nation"), "nation",
+                   str(tmp_path / "sql"))
+    cfg = Config.from_dict({
+        "source": {"connection_uri": f"sqltext://{tmp_path / 'sql'}"},
+        "datastore": {"dir": str(tmp_path / "store")},
+    })
+    jsc = spark.sparkContext._jsc
+    pinned = spark.sparkContext.parallelize(range(3)).cache()
+    pinned.count()
+    try:
+        start = set(jsc.getPersistentRDDs().keys())
+        assert pinned.id() in start
+        for name in ("a", "b"):
+            info = DumpPipeline(cfg).run(spark, name)
+            assert info.tables == ["nation"]
+            assert set(jsc.getPersistentRDDs().keys()) == start, name
+    finally:
+        pinned.unpersist()

@@ -27,8 +27,6 @@ def test_registry_fits_driver_cap():
 
 def test_high_risk_gates_are_driver_visible():
     names = list(REGISTRY)
-    # curation_pipeline_v4 replaced v2 here in r13 (v2 → EXTRA, subsumed
-    # by the gated v4 — same stages plus the r9/r10 operators)
     for must in ("subset_parent_closure", "subset_full_closure",
                  "stratified_doc_sample", "doc_text_metrics",
                  "minhash_near_dup", "simhash_near_dup",
@@ -51,21 +49,7 @@ def _rows(seq):
     return sorted(rows, key=lambda r: tuple((v is None, str(v)) for v in r))
 
 
-# The two LEGACY curation pipelines are the suite's slowest parity rows
-# (their DuckDB oracles alone run 35-85 s at sf0.001 — recursive near-dup
-# CTEs plus repeated scrub/quality expressions, DuckDB-bound, not Spark)
-# and every operator they compose is independently parity-gated (c4,
-# gopher, repetition, dsir, nb, dedup) with the SUPERSEDING v4 pipeline
-# driver-gated.  Opt-in via SPARK_GRAFT_SLOW_TESTS=1 like the other
-# multi-minute tests (r14 verdict #2: the default suite must finish
-# inside the driver's verification window).
-_SLOW_PARITY = {"curation_pipeline_v2", "curation_pipeline_v3"}
-
-
-@pytest.mark.parametrize(
-    "name",
-    [pytest.param(n, marks=pytest.mark.slow) if n in _SLOW_PARITY
-     else n for n in sorted(ALL)])
+@pytest.mark.parametrize("name", sorted(ALL))
 def test_query_matches_oracle(spark, duck, sf_dir, name):
     q = ALL[name]
     df = q.spark_fn(spark, sf_dir)

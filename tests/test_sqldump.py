@@ -264,84 +264,6 @@ def test_copy_parallel_keeps_copy_prefixed_data_rows(spark, tmp_path):
     assert [r.c for r in out["u"].collect()] == [7]
 
 
-def test_insert_parallel_roundtrip_many_partitions(spark, sf_dir, tmp_path):
-    """A monolithic --column-inserts dump reads back correct AND split
-    across >1 task (the single-task wholeTextFiles path is the scale
-    killer this reader exists to remove)."""
-    from replibyte_spark.catalog import load_table
-    from replibyte_spark.sinks.sqldump_sink import write_sql_dump
-    from replibyte_spark.sources.sqldump import read_insert_dump_parallel
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
-    path = str(tmp_path / "orders_dump")
-    write_sql_dump(orders, "public.orders", path, single_file=True)
-
-    n_parts = (spark.sparkContext
-               .textFile(path, minPartitions=8).getNumPartitions())
-    assert n_parts > 1, "scan must not serialize on one task"
-
-    back = read_insert_dump_parallel(spark, path, min_partitions=8)["orders"]
-    got = sorted((r[0], r[1], r[2], r[3]) for r in back.collect())
-    want = sorted(tuple(r) for r in orders.collect())
-    assert got == want
-
-
-def test_insert_parallel_multiline_strings(spark, tmp_path):
-    """Statements whose string literals contain raw newlines are detected
-    by quote parity, reassembled, and parsed exactly — including two
-    multiline literals in ONE statement, amid DDL/comment noise."""
-    from replibyte_spark.sources.sqldump import read_insert_dump_parallel
-
-    text = (
-        "-- pg_dump header comment\n"
-        "CREATE TABLE t (\n    a int,\n    b text\n);\n"
-        "INSERT INTO t (a, b) VALUES (1, 'one\ntwo\nthree');\n"
-        "INSERT INTO t (a, b) VALUES (2, 'plain');\n"
-        "INSERT INTO t (a, b) VALUES (3, 'x\ny');\n"
-        "SET search_path = public;\n"
-    )
-    f = tmp_path / "ml.sql"
-    f.write_text(text)
-    out = read_insert_dump_parallel(spark, str(f), min_partitions=4)
-    got = {r.a: r.b for r in out["t"].collect()}
-    assert got == {1: "one\ntwo\nthree", 2: "plain", 3: "x\ny"}
-
-    # two newline-carrying literals in one statement: interior boundary
-    # lines have EVEN parity, so the span covers the whole statement
-    f2 = tmp_path / "ml2.sql"
-    f2.write_text("INSERT INTO t (a, b) VALUES (4, 'p\nq');\n"
-                  "INSERT INTO u (x, y) VALUES ('a\nb', 'c\nd');\n")
-    out2 = read_insert_dump_parallel(spark, str(f2))
-    assert {r.x: r.y for r in out2["u"].collect()} == {"a\nb": "c\nd"}
-    assert {r.a: r.b for r in out2["t"].collect()} == {4: "p\nq"}
-
-
-def test_insert_parallel_mysql_escapes(spark, tmp_path):
-    from replibyte_spark.sources.sqldump import read_insert_dump_parallel
-
-    f = tmp_path / "my.sql"
-    f.write_text("INSERT INTO t (a, b) VALUES (1, 'it\\'s');\n"
-                 "INSERT INTO t (a, b) VALUES (2, 'back\\\\slash');\n")
-    out = read_insert_dump_parallel(spark, str(f), dialect="mysql")
-    assert {r.a: r.b for r in out["t"].collect()} == {
-        1: "it's", 2: "back\\slash"}
-
-
-def test_insert_parallel_malformed_insert_raises(spark, tmp_path):
-    """Silent row loss is never acceptable: an INSERT-with-VALUES line the
-    parser cannot decode must fail the read, not vanish."""
-    import pytest
-
-    from replibyte_spark.sources.sqldump import read_insert_dump_parallel
-
-    f = tmp_path / "bad.sql"
-    f.write_text("INSERT INTO t (a) VALUES (1);\n"
-                 "INSERT INTO t (a) VALUES (2;\n")
-    with pytest.raises(Exception, match="(?i)unparseable insert"):
-        read_insert_dump_parallel(spark, str(f))
-
-
 def test_read_sql_dump_is_single_pass(spark, sf_dir, tmp_path):
     """The decode runs as ONE Spark job (no schema-inference second pass):
     typed tuples fold the per-column type lattice into the same job that

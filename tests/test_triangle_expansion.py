@@ -56,6 +56,27 @@ def test_carry_columns_and_struct_elements(spark):
     assert got == [(0, 1, 2, 10, 20), (0, 1, 3, 10, 30), (0, 2, 3, 20, 30)]
 
 
+def test_quotes_array_column_and_rejects_shadowed_names(spark):
+    """An array column whose name needs quoting expands like any other;
+    a frame that already carries the internal ``__i`` alias or an output
+    pair name fails loudly instead of resolving ambiguously."""
+    import pytest
+
+    buckets = spark.createDataFrame([([1, 2, 3],)], "`doc ids` array<bigint>")
+    got = sorted(tuple(r) for r in
+                 upper_triangle_pairs(buckets, "doc ids", "id_a", "id_b")
+                 .collect())
+    assert got == [(1, 2), (1, 3), (2, 3)]
+
+    for cols in ("__i int, ids array<bigint>", "id_a int, ids array<bigint>",
+                 "ids array<bigint>, ID_B int"):
+        clashing = spark.createDataFrame([], cols)
+        with pytest.raises(ValueError, match="shadow"):
+            upper_triangle_pairs(clashing, "ids", "id_a", "id_b",
+                                 carry=tuple(c for c in clashing.columns
+                                             if c != "ids"))
+
+
 def test_hot_bucket_streams_within_small_executor_memory():
     """One deliberately hot bucket (1e4 ids -> ~5e7 pairs) must pass under
     a 512 MB driver/executor JVM.  The r14 flatten shape allocated the
