@@ -76,9 +76,3 @@ def load_tables(
     spark: SparkSession, sf_dir: str, names: list[str] | None = None
 ) -> dict[str, DataFrame]:
     return {n: load_table(spark, sf_dir, n) for n in (names or TABLES)}
-
-
-def register_temp_views(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> None:
-    """Register each table as a temp view so plans can be written in SQL."""
-    for name, df in load_tables(spark, sf_dir, names).items():
-        df.createOrReplaceTempView(name)

@@ -300,14 +300,6 @@ def _build_parser() -> argparse.ArgumentParser:
                       help="also store int8 SQ8 code columns (q, qscale) "
                            "so quantized query paths read 1-byte codes "
                            "off the layout")
-    eidx.add_argument("--pq", action="store_true",
-                      help="also store PQ codes (pq_codes) plus the "
-                           "trained codebook sidecar (pq_books) — the "
-                           "IVF-PQ deployment layout; requires --dim")
-    eidx.add_argument("--pq-m", type=int, default=8,
-                      help="PQ subspace count (default 8)")
-    eidx.add_argument("--pq-ks", type=int, default=16,
-                      help="PQ codebook entries per subspace (default 16)")
     eidx.add_argument("--target-recall", type=float, default=None,
                       help="measure the IVF recall curve at build time "
                            "and record the smallest n_probe reaching "
@@ -429,20 +421,19 @@ def _build_parser() -> argparse.ArgumentParser:
     ese.add_argument("--id-col", default="vec_id")
     ese.add_argument("--vec-col", default="embedding")
     ese.add_argument("--k", type=int, default=5)
-    ese.add_argument("--method", choices=("ivf", "lsh", "qivf", "pq"),
+    ese.add_argument("--method", choices=("ivf", "lsh", "qivf"),
                      default="ivf",
                      help="ivf: exact scoring in probed cells; lsh: "
                           "bucket probes; qivf: int8 SQ8 codes off the "
                           "layout + exact re-rank (index built with "
-                          "--quantize); pq: ADC over stored PQ codes + "
-                          "exact re-rank (index built with --pq)")
+                          "--quantize)")
     ese.add_argument("--n-probe", type=int, default=None,
                      help="IVF cells per query (default: the tuned value "
                           "from the index meta sidecar, else 2)")
     ese.add_argument("--multi-probe", type=int, default=0,
                      help="LSH neighbor buckets per query (method=lsh)")
     ese.add_argument("--expand", type=int, default=4,
-                     help="qivf/pq exact re-rank width (top k*expand "
+                     help="qivf exact re-rank width (top k*expand "
                           "candidates re-scored on full vectors)")
     part = csub.add_parser(
         "partition", help="rewrite a parquet corpus as a time-partitioned "
@@ -917,13 +908,9 @@ def _cmd_corpus(spark, args) -> int:
         from .operators.similarity import build_ann_index
 
         df = spark.read.parquet(args.input)
-        if args.pq and args.dim is None:
-            raise ValueError("--pq requires --dim (PQ subspace slicing "
-                             "needs the vector width)")
         build_ann_index(df, args.output, bits=args.bits, id_col=args.id_col,
                         vec_col=args.vec_col, dim=args.dim,
-                        quantize=args.quantize, pq=args.pq,
-                        pq_m=args.pq_m, pq_ks=args.pq_ks,
+                        quantize=args.quantize,
                         target_recall=args.target_recall)
         tuned = ""
         if args.target_recall is not None:
@@ -934,8 +921,7 @@ def _cmd_corpus(spark, args) -> int:
         print(f"indexed {df.count()} vectors -> {args.output} "
               f"(bits={args.bits}"
               + (", int8 codes stored" if args.quantize else "")
-              + (f", pq codes stored (m={args.pq_m}, ks={args.pq_ks})"
-                 if args.pq else "") + tuned + ")")
+              + tuned + ")")
         return 0
     if args.corpus_cmd == "eadmit":
         from .operators.similarity import (append_ann_index,
@@ -1088,7 +1074,7 @@ def _cmd_corpus(spark, args) -> int:
             print(f"error: column(s) not in queries: {', '.join(missing)}",
                   file=sys.stderr)
             return 2
-        if args.method in ("ivf", "qivf", "pq"):
+        if args.method in ("ivf", "qivf"):
             n_probe = (args.n_probe if args.n_probe is not None
                        else sidecar_n_probe(spark, args.index, 2))
             tuned = (" (sidecar-tuned)" if args.n_probe is None and
@@ -1098,7 +1084,7 @@ def _cmd_corpus(spark, args) -> int:
                 out = ivf_topk(corpus, queries, k=args.k,
                                id_col=args.id_col, vec_col=args.vec_col,
                                n_probe=n_probe, centroids=cents)
-            elif args.method == "qivf":
+            else:
                 from .operators.quantize import ivf_topk_quantized
 
                 if "q" not in corpus.columns:
@@ -1110,20 +1096,6 @@ def _cmd_corpus(spark, args) -> int:
                     corpus, queries, cents, k=args.k, n_probe=n_probe,
                     expand=args.expand, id_col=args.id_col,
                     vec_col=args.vec_col)
-            else:
-                from .operators.quantize import ivf_topk_pq
-                from .operators.similarity import load_pq_books
-
-                if "pq_codes" not in corpus.columns:
-                    raise ValueError(
-                        f"index at {args.index} carries no PQ codes — "
-                        f"build it with `corpus eindex --pq --dim N` to "
-                        f"use --method pq")
-                out = ivf_topk_pq(
-                    corpus, queries, cents,
-                    load_pq_books(spark, args.index), k=args.k,
-                    n_probe=n_probe, expand=args.expand,
-                    id_col=args.id_col, vec_col=args.vec_col)
             how = f"{args.method} n_probe={n_probe}{tuned}"
         else:
             meta = load_ann_index_meta(spark, args.index)

@@ -7,7 +7,7 @@ float `scale = max|x|/127` per vector — 4× smaller, and the candidate
 scan's dot products become integer arithmetic.  The standard deployment
 (FAISS SQ8, public knowledge) is two-phase: score candidates on the
 quantized representation, then RE-RANK the survivors exactly — which is
-how :func:`quantized_brute_topk` is built, so the approximation can only
+how :func:`ivf_topk_quantized` is built, so the approximation can only
 affect which candidates are considered, never the reported cosine.
 
 Everything is deterministic and dialect-shared: rounding is an explicit
@@ -84,60 +84,6 @@ def quantize_vectors(vectors: DataFrame, vec_col: str = "embedding"
             .withColumn("norm", F.expr(norm_sql(D.SPARK, vec_col))))
 
 
-def quantized_brute_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
-                         expand: int = 4, id_col: str = "vec_id",
-                         vec_col: str = "embedding") -> DataFrame:
-    """Exact-rescored top-k via an int8 candidate scan: score all pairs on
-    quantized codes (integer dot × the two scales, over stored norms),
-    keep the top k·expand candidates per query, then re-rank ONLY those
-    exactly.  Returns (query_id, neighbor_id, cosine, rank) with the same
-    contract as :func:`~.similarity.brute_force_topk` — reported cosines
-    are exact; `expand` dials the recall/bandwidth trade (the unit tests
-    measure recall vs the exact path on the fixture).
-
-    A corpus already carrying (q, qscale, norm) — e.g. persisted by
-    :func:`quantize_vectors` at ingest — is consumed as-is; the fp
-    embedding is touched only in the candidate re-rank join.  Zero-norm
-    rows are excluded on both sides (the family-wide policy)."""
-    need = {"q", "qscale", "norm"}
-    v = vectors if need <= set(vectors.columns) \
-        else quantize_vectors(vectors, vec_col)
-    # the candidate scan reads CODES ONLY — the fp column enters the plan
-    # exclusively through the candidate re-rank join below (with a
-    # materialized (q, qscale, norm) layout, parquet column pruning makes
-    # this the 4× bandwidth win; asserted by the plan-shape test)
-    v = (v.select(F.col(id_col).alias("neighbor_id"), "q", "qscale",
-                  F.col("norm").alias("nn"))
-         .filter(F.col("nn") > 0))
-    q = (quantize_vectors(queries, vec_col)
-         .select(F.col(id_col).alias("query_id"),
-                 F.col(vec_col).alias("qv"),
-                 F.col("q").alias("qq"), F.col("qscale").alias("qs"),
-                 F.col("norm").alias("qn"))
-         .filter(F.col("qn") > 0))
-    approx = (F.broadcast(q).crossJoin(v)
-              .filter(F.col("query_id") != F.col("neighbor_id"))
-              .withColumn("approx", F.expr(
-                  f"qs * qscale * CAST({int_dot_sql(D.SPARK, 'qq', 'q')} "
-                  f"AS DOUBLE) / (qn * nn)")))
-    wa = Window.partitionBy("query_id").orderBy(F.desc("approx"),
-                                                F.asc("neighbor_id"))
-    cand = (approx.withColumn("arn", F.row_number().over(wa))
-            .filter(F.col("arn") <= k * expand)
-            .select("query_id", "neighbor_id", "qv", "qn", "nn"))
-    nvs = vectors.select(F.col(id_col).alias("neighbor_id"),
-                         F.col(vec_col).alias("nv"))
-    rescored = cand.join(nvs, on="neighbor_id").withColumn(
-        "cosine", F.expr(
-            f"round({dot_sql(D.SPARK, 'qv', 'nv')} / (qn * nn), 6)"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
-                                               F.asc("neighbor_id"))
-    return (rescored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "cosine", "rank")
-            .orderBy("query_id", "rank"))
-
-
 def ivf_topk_quantized(vectors: DataFrame, queries: DataFrame,
                        centroids, k: int = 5, n_probe: int = 2,
                        expand: int = 4, id_col: str = "vec_id",
@@ -193,333 +139,6 @@ def ivf_topk_quantized(vectors: DataFrame, queries: DataFrame,
               .withColumn("approx", F.expr(
                   f"qs * qscale * CAST({int_dot_sql(D.SPARK, 'qq', 'q')} "
                   f"AS DOUBLE) / (qn * nn)")))
-    wa = Window.partitionBy("query_id").orderBy(F.desc("approx"),
-                                                F.asc("neighbor_id"))
-    cand = (approx.withColumn("arn", F.row_number().over(wa))
-            .filter(F.col("arn") <= k * expand)
-            .select("query_id", "neighbor_id", "qv", "qn", "nn"))
-    nvs = vectors.select(F.col(id_col).alias("neighbor_id"),
-                         F.col(vec_col).alias("nv"))
-    rescored = cand.join(nvs, on="neighbor_id").withColumn(
-        "cosine", F.expr(
-            f"round({dot_sql(D.SPARK, 'qv', 'nv')} / (qn * nn), 6)"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
-                                               F.asc("neighbor_id"))
-    return (rescored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "cosine", "rank")
-            .orderBy("query_id", "rank"))
-
-
-# ---------------------------------------------------------------------------
-# product quantization + ADC (round 9) — the compression step beyond SQ8
-# ---------------------------------------------------------------------------
-
-def pq_codebooks(vectors, m: int = 8, ks: int = 16,
-                 id_col: str = "vec_id", vec_col: str = "embedding",
-                 dim: int = 64) -> "list[list[list[float]]]":
-    """Deterministic PQ codebooks: the md5-ordered `ks`-row sample of the
-    corpus (the :func:`~.similarity.default_centroids` trick), sliced
-    into `m` subvectors — codebooks[sub][code] = that code's subvector.
-    Bounded by contract (m × ks × dim/m doubles), collected once and
-    inlined as literals everywhere downstream; at 100 TB the codebooks
-    are offline-trained corpus metadata exactly like IVF centroids
-    (swap in Lloyd-refined books without changing any query path).
-    `dim` must be divisible by `m`."""
-    if dim % m:
-        raise ValueError(f"dim={dim} not divisible by m={m} subspaces")
-    d = dim // m
-    rows = (vectors
-            .select(F.md5(F.col(id_col).cast("string")).alias("h"),
-                    F.col(vec_col).alias("v"))
-            .orderBy("h").limit(ks).collect())
-    if not rows:
-        raise ValueError("cannot train PQ codebooks on an empty corpus")
-    return [[[float(x) for x in r["v"][s * d:(s + 1) * d]] for r in rows]
-            for s in range(m)]
-
-
-def _pq_sub(vec: str, s: int, d: int) -> str:
-    return f"slice({vec}, {s * d + 1}, {d})"
-
-
-def pq_encode_expr(vec_col: str, books: "list[list[list[float]]]") -> str:
-    """codes array<int> (one code per subspace): per subspace, the
-    L2-nearest codebook entry — argmin via the shared array_max trick
-    (−2⟨x,c⟩+‖c‖² core; ‖x‖² is constant per row and drops out; ties
-    break to the LARGEST code, the :func:`~.similarity._assign_expr`
-    policy).  One codegen projection riding the scan."""
-    from .similarity import _lit_dot_sql
-
-    d = len(books[0][0])
-    subs = []
-    for s, book in enumerate(books):
-        sub = _pq_sub(vec_col, s, d)
-        entries = ", ".join(
-            f"struct(-((-2.0D * ({_lit_dot_sql(sub, c)})) + "
-            f"{sum(x * x for x in c)!r}D) AS nd, {j} AS cid)"
-            for j, c in enumerate(book))
-        subs.append(f"array_max(array({entries})).cid")
-    return "array(" + ", ".join(subs) + ")"
-
-
-def pq_lut_expr(vec_col: str, books: "list[list[list[float]]]",
-                d_engine: str | None = None) -> str:
-    """The query-side ADC lookup table: lut[sub·ks + code] = ⟨q_sub, c⟩ —
-    computed ONCE per query row as a projection, so the candidate join
-    pays m element_at lookups per pair instead of a dim-wide fold (the
-    whole point of ADC).  FLAT layout (one primitive double array, not
-    array-of-arrays): each ADC step is a single primitive element_at;
-    the nested form paid a per-step inner-ArrayData extraction in every
-    candidate pair (r10 measurement: the nested IVF-PQ scale row ran
-    ~1.9 s where IVF-SQ8's plain integer fold ran ~1.0 s on the same
-    candidates).  Cross-dialect: pass d_engine=D.DUCK for the oracle
-    rendering."""
-    from .similarity import _lit_dot_sql
-
-    eng = d_engine or D.SPARK
-    d = len(books[0][0])
-    dots = []
-    for s, book in enumerate(books):
-        sub = _pq_sub(vec_col, s, d)
-        if eng == D.SPARK:
-            dots.extend(_lit_dot_sql(sub, c) for c in book)
-        else:
-            sub_d = f"{vec_col}[{s * d + 1}:{(s + 1) * d}]"
-            dots.extend(
-                "list_sum(list_transform(generate_series(1, %d), "
-                "i -> CAST(%s[i] AS DOUBLE) * (%s)[i]))"
-                % (d, sub_d,
-                   # D.dlit, not bare repr: a bare decimal literal goes
-                   # DECIMAL→DOUBLE in DuckDB, off by one ulp from the
-                   # doubles the Spark side inlines
-                   "[" + ", ".join(D.dlit(eng, x) for x in c) + "]")
-                for c in book)
-    if eng == D.SPARK:
-        return "array(" + ", ".join(dots) + ")"
-    return "[" + ", ".join(dots) + "]"
-
-
-def pq_lut_col(vec_col: str, books: "list[list[list[float]]]"):
-    """Query-side ADC lookup table as a DSL Column whose codebook is ONE
-    array-literal NODE (``F.lit`` of the nested list) instead of
-    ~ks·dim inlined literal expressions: the inlined form
-    (:func:`pq_lut_expr`) costs ~0.7 s of Catalyst analysis per CALL —
-    constant, but the whole per-query overhead the r10 verdict flagged
-    on ann_scale_pq_topk.  Numerics are bit-identical to the inlined
-    form: ``zip_with`` + ``aggregate`` walk the same index order with
-    the same CAST(float AS DOUBLE) · double products and the same 0.0D
-    init as :func:`~.similarity._lit_dot_sql`, so the DuckDB oracle's
-    literal rendering still hash-matches."""
-    m, ks = len(books), len(books[0])
-    d = len(books[0][0])
-    flat = [[float(x) for x in c] for book in books for c in book]
-    bl = F.lit(flat)  # one Literal(array<array<double>>) node
-
-    def dot(sc):
-        start = ((sc - F.lit(1)) / F.lit(ks)).cast("int") * F.lit(d) \
-            + F.lit(1)
-        sub = F.slice(F.col(vec_col), start, F.lit(d))
-        return F.aggregate(
-            F.zip_with(sub, F.element_at(bl, sc),
-                       lambda a, b: a.cast("double") * b),
-            F.lit(0.0), lambda acc, x: acc + x)
-
-    return F.transform(F.sequence(F.lit(1), F.lit(m * ks)), dot)
-
-
-def pq_adc_sql(d_engine: str, lut: str, codes: str, m: int,
-               ks: int) -> str:
-    """ADC dot estimate: Σ_sub lut[(sub−1)·ks + codes[sub] + 1] — m flat
-    primitive lookups, no per-pair vector math."""
-    if d_engine == D.SPARK:
-        return (f"aggregate(transform(sequence(1, {m}), "
-                f"s -> element_at({lut}, (s - 1) * {ks} + "
-                f"element_at({codes}, s) + 1)), "
-                f"CAST(0 AS DOUBLE), (acc, x) -> acc + x)")
-    return (f"list_sum(list_transform(generate_series(1, {m}), "
-            f"s -> ({lut})[(s - 1) * {ks} + ({codes})[s] + 1]))")
-
-
-def pq_encode_vectors(vectors, books, vec_col: str = "embedding"):
-    """vectors + (`pq_codes` array<int>, `norm`) — the PQ encoding
-    projection: dim floats become m small ints (dim/m fewer ELEMENTS; the
-    stored layout additionally narrows them to TINYINT via
-    build_ann_index(pq=True), so the materialized scan column is m bytes
-    vs dim×8 — 64× at dim 64 / m 8)."""
-    return (fan_out(vectors)
-            .withColumn("pq_codes", F.expr(pq_encode_expr(vec_col, books)))
-            .withColumn("norm", F.expr(norm_sql(D.SPARK, vec_col))))
-
-
-def pq_topk(vectors, queries, k: int = 5, m: int = 8, ks: int = 16,
-            expand: int = 4, id_col: str = "vec_id",
-            vec_col: str = "embedding", dim: int = 64,
-            books: "list | None" = None):
-    """PQ/ADC top-k with exact re-rank: candidates scored as
-    adc(q, codes)/(qn·nn) — the approximate cosine whose per-pair cost is
-    m integer lookups — then the top k·expand re-ranked exactly (reported
-    cosines bit-equal to brute force).  Pass precomputed `books` (and a
-    corpus already carrying `pq_codes`/`norm` from
-    :func:`pq_encode_vectors`) to amortize across queries."""
-    if books is None:
-        books = pq_codebooks(vectors, m, ks, id_col, vec_col, dim)
-    m = len(books)
-    corpus = vectors if {"pq_codes", "norm"} <= set(vectors.columns) \
-        else pq_encode_vectors(vectors, books, vec_col)
-    v = (corpus.select(F.col(id_col).alias("neighbor_id"), "pq_codes",
-                       F.col("norm").alias("nn"))
-         .filter(F.col("nn") > 0))
-    q = (fan_out(queries)
-         .select(F.col(id_col).alias("query_id"),
-                 F.col(vec_col).alias("qv"),
-                 pq_lut_col(vec_col, books).alias("lut"),
-                 F.expr(norm_sql(D.SPARK, vec_col)).alias("qn"))
-         .filter(F.col("qn") > 0))
-    approx = (F.broadcast(q).crossJoin(v)
-              .filter(F.col("query_id") != F.col("neighbor_id"))
-              .withColumn("approx", F.expr(
-                  f"{pq_adc_sql(D.SPARK, 'lut', 'pq_codes', m, len(books[0]))} "
-                  f"/ (qn * nn)")))
-    wa = Window.partitionBy("query_id").orderBy(F.desc("approx"),
-                                                F.asc("neighbor_id"))
-    cand = (approx.withColumn("arn", F.row_number().over(wa))
-            .filter(F.col("arn") <= k * expand)
-            .select("query_id", "neighbor_id", "qv", "qn", "nn"))
-    nvs = vectors.select(F.col(id_col).alias("neighbor_id"),
-                         F.col(vec_col).alias("nv"))
-    rescored = cand.join(nvs, on="neighbor_id").withColumn(
-        "cosine", F.expr(
-            f"round({dot_sql(D.SPARK, 'qv', 'nv')} / (qn * nn), 6)"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
-                                               F.asc("neighbor_id"))
-    return (rescored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "cosine", "rank")
-            .orderBy("query_id", "rank"))
-
-
-def pq_refine_books(vectors, books: "list[list[list[float]]]",
-                    iterations: int = 2,
-                    vec_col: str = "embedding",
-                    id_col: str = "vec_id",
-                    deterministic: bool = False
-                    ) -> "list[list[list[float]]]":
-    """Per-subspace Lloyd refinement of PQ codebooks — the offline
-    training step that closes most of the sample-codebook recall gap
-    (unit-tested; at 100 TB this runs once at index-build time, the
-    :func:`~.similarity.refine_centroids` story applied per subspace).
-    Each iteration: encode (one projection), per-(subspace, code,
-    dimension) mean (one aggregation — the shuffle unit is m·ks·(dim/m)
-    cells, codebook-sized), collect and rebuild.  Empty cells keep their
-    previous entry (stable ks, no NaNs).
-
-    `deterministic=True` computes each cell mean as a SEQUENTIAL fold
-    over the cell's values sorted by `id_col` instead of `F.avg` —
-    bit-identical across engines and runs (the
-    :func:`~.similarity.refine_centroids` trick), so a DuckDB oracle can
-    replay the refinement exactly.  Collect-list per (sub, code, pos)
-    group → verification/fixture builds; the default `F.avg` (partial
-    aggregation) is the 100 TB path."""
-    m, ks = len(books), len(books[0])
-    d = len(books[0][0])
-    for _ in range(iterations):
-        # `id_col` exists only for the deterministic fold's sort key —
-        # the default F.avg path must not require it (external frames
-        # carry no id; selecting it unconditionally was an r10 API
-        # regression flagged in ADVICE)
-        sel = [F.posexplode(F.expr(pq_encode_expr(vec_col, books)))
-               .alias("sub", "code"),
-               F.col(vec_col).alias("v")]
-        if deterministic:
-            sel.append(F.col(id_col).alias("__rid"))
-        enc = fan_out(vectors).select(*sel)
-        dims = enc.select(
-            *(["sub", "code"] + (["__rid"] if deterministic else [])),
-            F.posexplode(F.expr(f"slice(v, sub * {d} + 1, {d})"))
-            .alias("pos", "x"))
-        if deterministic:
-            mean = F.expr(
-                "aggregate(transform(array_sort(collect_list("
-                "struct(__rid AS r, CAST(x AS DOUBLE) AS x))), "
-                "s -> s.x), CAST(0 AS DOUBLE), (acc, v) -> acc + v) "
-                "/ CAST(count(1) AS DOUBLE)")
-        else:
-            mean = F.avg("x")
-        means = (dims.groupBy("sub", "code", "pos")
-                 .agg(mean.alias("mn")).collect())
-        cell: dict = {}
-        for r in means:
-            cell.setdefault((r["sub"], r["code"]), {})[r["pos"]] = r["mn"]
-        books = [[([cell[(s, c)][p] for p in range(d)]
-                   if (s, c) in cell else books[s][c])
-                  for c in range(ks)] for s in range(m)]
-    return books
-
-
-def ivf_topk_pq(vectors, queries, centroids,
-                books: "list[list[list[float]]]", k: int = 5,
-                n_probe: int = 2, expand: int = 4,
-                id_col: str = "vec_id", vec_col: str = "embedding"):
-    """IVF-PQ/ADC — the composition FAISS deploys at billion-vector
-    scale, as one Catalyst plan: probe the query's `n_probe` cells, score
-    THEIR members by the ADC lookup table (m integer-indexed lookups per
-    pair — never per-pair vector math), then re-rank the top k·expand
-    exactly (reported cosines bit-equal to :func:`~.similarity.ivf_topk`
-    whenever candidate sets agree).
-
-    Cell probing bounds WHICH rows are touched; PQ codes bound the BYTES
-    per touched row (m 1-byte codes instead of dim floats — the deepest
-    compression tier the layout offers).  `vectors` is ideally a
-    :func:`~.similarity.build_ann_index(pq=True)` layout already carrying
-    (centroid_id, norm, pq_codes) so the candidate scan is codes-only
-    column-pruned parquet; missing columns are computed on the fly.
-    `books` is the codebook list (:func:`~.similarity.load_pq_books` for
-    a stored layout; the index sidecar is corpus metadata exactly like
-    the IVF centroid set)."""
-    from .similarity import (_assign_expr, _collect_centroids,
-                             ivf_probe_col)
-
-    m = len(books)
-    cents = _collect_centroids(centroids)
-    if not cents:
-        id_type = vectors.schema[id_col].dataType
-        return (queries.select(
-            F.col(id_col).alias("query_id"),
-            F.lit(None).cast(id_type).alias("neighbor_id"),
-            F.lit(None).cast("double").alias("cosine"),
-            F.lit(None).cast("int").alias("rank")).filter(F.lit(False)))
-    corpus = vectors
-    if "centroid_id" not in corpus.columns:
-        corpus = fan_out(corpus).withColumn(
-            "centroid_id", F.expr(_assign_expr(vec_col, cents)))
-    if "norm" not in corpus.columns:
-        corpus = corpus.withColumn(
-            "norm", F.expr(norm_sql(D.SPARK, vec_col)))
-    if "pq_codes" not in corpus.columns:
-        corpus = corpus.withColumn(
-            "pq_codes", F.expr(pq_encode_expr(vec_col, books)))
-    v = (corpus.select(F.col(id_col).alias("neighbor_id"), "pq_codes",
-                       F.col("norm").alias("nn"), "centroid_id")
-         .filter(F.col("nn") > 0))
-    # the ADC lookup table is staged BEFORE the probe explode: one
-    # m×ks-dot projection per query row, duplicated (not recomputed) into
-    # the n_probe cell rows — at a production n_probe of 16-32 recomputing
-    # it per probe row would multiply the only per-query vector math
-    qb = (fan_out(queries)
-          .select(F.col(id_col).alias("query_id"),
-                  F.col(vec_col).alias("qv"),
-                  pq_lut_col(vec_col, books).alias("lut"),
-                  F.expr(norm_sql(D.SPARK, vec_col)).alias("qn"),
-                  ivf_probe_col(vec_col, cents, n_probe).alias("__cells"))
-          .withColumn("centroid_id", F.explode("__cells"))
-          .drop("__cells")
-          .filter(F.col("qn") > 0))
-    approx = (F.broadcast(qb).join(v, "centroid_id")
-              .filter(F.col("query_id") != F.col("neighbor_id"))
-              .withColumn("approx", F.expr(
-                  f"{pq_adc_sql(D.SPARK, 'lut', 'pq_codes', m, len(books[0]))} "
-                  f"/ (qn * nn)")))
     wa = Window.partitionBy("query_id").orderBy(F.desc("approx"),
                                                 F.asc("neighbor_id"))
     cand = (approx.withColumn("arn", F.row_number().over(wa))

@@ -474,23 +474,20 @@ def ivf_probe_expr(vec_col: str, cents, n_probe: int) -> str:
 
 def ivf_probe_col(vec_col: str, cents, n_probe: int):
     """:func:`ivf_probe_expr` as a DSL Column — the single probe entry
-    point shared by :func:`ivf_topk`, the quantized variants
+    point shared by :func:`ivf_topk`, the quantized variant
     (operators/quantize.py) and the recall audit.
 
     r12 A/B note: the r11 rewrite carried the centroid set in two
     ``F.lit`` literal NODES with ``zip_with``/``aggregate`` lambda dots
-    (the :func:`~.quantize.pq_lut_col` plan-size lever).  A one-session
-    interleaved min-of-5 A/B at sf0.1 showed that form loses 1.3-1.7×
+    (a plan-size lever).  A one-session interleaved min-of-5 A/B at
+    sf0.1 showed that form loses 1.3-1.7×
     (ivf_topk 2.57 s lambda vs 1.54 s inlined; ann_scale_ivf 1.66 vs
     1.27): higher-order-function lambda bodies evaluate INTERPRETED
     (same finding as functions/lid.py's staged-script notes), and the
     probe's sort comparator re-evaluates them, so even a
     handful-of-query-rows projection pays.  A 16-centroid × dim inlined
     expression is small enough for codegen (~16·dim literals, far under
-    the 64 KB method limit at dim≤64), so the probe stays inlined; the
-    literal-node lever remains only where it pays — the ~25 KB PQ LUT,
-    which is built ONCE per query as a column and only indexed, never
-    re-folded, inside the comparator."""
+    the 64 KB method limit at dim≤64), so the probe stays inlined."""
     return F.expr(ivf_probe_expr(vec_col, cents, n_probe))
 
 
@@ -570,8 +567,6 @@ def build_ann_index(vectors: DataFrame, path: str, bits: int = 8,
                     refine_iterations: int = 0,
                     refine_deterministic: bool = False,
                     quantize: bool = False,
-                    pq: bool = False, pq_m: int = 8,
-                    pq_ks: int = 16,
                     target_recall: "float | None" = None,
                     tune_k: int = 5) -> "list":
     """Materialize the ANN index AS A STORAGE LAYOUT: the corpus written to
@@ -607,25 +602,12 @@ def build_ann_index(vectors: DataFrame, path: str, bits: int = 8,
 
     `quantize=True` additionally stores the int8 SQ8 columns (`q` codes +
     `qscale`, operators/quantize.py) so quantized query paths
-    (ivf_topk_quantized / quantized_brute_topk) read 1-byte codes off the
-    layout instead of requantizing the fp column per query — the
-    bandwidth half of the IVF-SQ8 deployment point.
-
-    `pq=True` (r10) stores the deeper compression tier: PQ codes
-    (`pq_codes`, m codes per vector) in the corpus plus a `pq_books`
-    sidecar holding the trained codebooks — exactly the FAISS IVF-PQ
-    deployment shape, where codebooks are corpus metadata like the
-    centroid set.  :func:`~.quantize.ivf_topk_pq` then runs
-    codes-off-storage; requires `dim`.  Codebooks are the md5-sample of
-    :func:`~.quantize.pq_codebooks` (swap in Lloyd-refined books by
-    rebuilding with different pq params — the refinement is offline
-    build-time work, :func:`~.quantize.pq_refine_books`)."""
+    (ivf_topk_quantized) read 1-byte codes off the layout instead of
+    requantizing the fp column per query — the bandwidth half of the
+    IVF-SQ8 deployment point."""
     import os
 
     spark = vectors.sparkSession
-    if pq and dim is None:
-        raise ValueError("build_ann_index(pq=True) requires dim "
-                         "(PQ subspace slicing needs the vector width)")
     cents = _collect_centroids(
         default_centroids(vectors, n_centroids, id_col, vec_col))
     if refine_iterations and cents:
@@ -650,14 +632,6 @@ def build_ann_index(vectors: DataFrame, path: str, bits: int = 8,
                    .withColumn("qscale", F.expr(qscale_sql(D.SPARK, vec_col)))
                    .withColumn("q", F.expr(
                        quantize_sql(D.SPARK, vec_col, "qscale"))))
-    books = None
-    if pq:
-        from .quantize import pq_codebooks
-
-        books = pq_codebooks(vectors, m=pq_m, ks=pq_ks, id_col=id_col,
-                             vec_col=vec_col, dim=dim)
-        indexed = indexed.withColumn(
-            "pq_codes", F.expr(_pq_codes_storage_expr(vec_col, books)))
     writer_df = indexed
     writer = writer_df.write.mode("overwrite")
     if partition_by_bucket:
@@ -668,14 +642,6 @@ def build_ann_index(vectors: DataFrame, path: str, bits: int = 8,
     (spark.createDataFrame(cents, "centroid_id string, cv array<double>")
      .coalesce(1).write.mode("overwrite")
      .parquet(os.path.join(path, "centroids")))
-    if books is not None:
-        (spark.createDataFrame(
-            [(s, c, [float(x) for x in cv])
-             for s, book in enumerate(books)
-             for c, cv in enumerate(book)],
-            "sub int, code int, cv array<double>")
-         .coalesce(1).write.mode("overwrite")
-         .parquet(os.path.join(path, "pq_books")))
     # build-time mean assignment cosine — the reference point for the
     # centroid-drift metric (:func:`ann_index_drift`): append batches are
     # assigned against the FROZEN build centroids forever, so a drifted
@@ -701,11 +667,10 @@ def build_ann_index(vectors: DataFrame, path: str, bits: int = 8,
             target_recall=target_recall, id_col=id_col, vec_col=vec_col)
     (spark.createDataFrame(
         [(bits, seed, n_centroids, dim, refine_iterations, mean_cos,
-          quantize, pq_m if pq else None, pq_ks if pq else None,
-          n_probe)],
+          quantize, n_probe)],
         "bits int, seed string, n_centroids int, dim int, "
         "refine_iterations int, mean_assign_cos double, quantized boolean, "
-        "pq_m int, pq_ks int, n_probe int")
+        "n_probe int")
      .coalesce(1).write.mode("overwrite")
      .parquet(os.path.join(path, "meta")))
     # write-through: a rebuild at the same path in one process must not
@@ -717,23 +682,8 @@ def build_ann_index(vectors: DataFrame, path: str, bits: int = 8,
                          "refine_iterations": refine_iterations,
                          "mean_assign_cos": mean_cos,
                          "quantized": quantize,
-                         "pq_m": pq_m if pq else None,
-                         "pq_ks": pq_ks if pq else None,
                          "n_probe": n_probe}
     return cents
-
-
-def _pq_codes_storage_expr(vec_col: str, books) -> str:
-    """The pq_codes STORAGE projection: encode, then narrow the element
-    type to TINYINT when the code range allows (ks ≤ 128 — the default
-    and the FAISS-typical 8-bit regime), so the persisted layout holds
-    true 1-byte codes like the SQ8 `q` column."""
-    from .quantize import pq_encode_expr
-
-    enc = pq_encode_expr(vec_col, books)
-    if len(books[0]) <= 128:
-        return f"transform({enc}, x -> CAST(x AS TINYINT))"
-    return enc
 
 
 def sidecar_n_probe(spark, path: str, default: int) -> int:
@@ -750,24 +700,6 @@ def sidecar_n_probe(spark, path: str, default: int) -> int:
     of the layout, exactly like bits/seed/dim)."""
     n_probe = load_ann_index_meta(spark, path).get("n_probe")
     return int(n_probe) if n_probe is not None else default
-
-
-def load_pq_books(spark, path: str) -> "list[list[list[float]]]":
-    """The PQ codebooks recorded by :func:`build_ann_index(pq=True)` —
-    books[sub][code] = subvector, the shape every operators/quantize.py
-    consumer takes.  Codebook size is meta-bounded (pq_m × pq_ks rows),
-    so the collect is sidecar-sized like the centroid list."""
-    import os
-
-    rows = spark.read.parquet(os.path.join(path, "pq_books")).collect()
-    if not rows:
-        raise ValueError(f"empty pq_books sidecar at {path}")
-    by: dict = {}
-    for r in rows:
-        by[(r["sub"], r["code"])] = [float(x) for x in r["cv"]]
-    m = 1 + max(s for s, _ in by)
-    ks = 1 + max(c for _, c in by)
-    return [[by[(s, c)] for c in range(ks)] for s in range(m)]
 
 
 def _assign_cos_expr(vec_col: str, cents) -> str:
@@ -1234,9 +1166,18 @@ def append_ann_index(new_vecs: DataFrame, path: str,
     spark = new_vecs.sparkSession
     meta = load_ann_index_meta(spark, path)
     bits, seed, dim = meta["bits"], meta["seed"], meta["dim"]
+    corpus_dir = os.path.join(path, "corpus")
+    # the corpus SCHEMA decides the layout (robust even against a
+    # pre-quantize meta sidecar) — an appended batch missing a stored
+    # column would silently fracture the parquet schema
+    existing = spark.read.parquet(corpus_dir)
+    if "pq_codes" in existing.columns:
+        raise ValueError(
+            f"index at {path} stores product-quantization codes "
+            f"(pq_codes), a layout this version no longer maintains — "
+            f"rebuild it with `corpus eindex` / build_ann_index")
     if verify:
-        stored = spark.read.parquet(os.path.join(path, "corpus")) \
-            .select(id_col)
+        stored = existing.select(id_col)
         clash = (stored.join(new_vecs.select(id_col), on=id_col,
                              how="left_semi").limit(5).collect())
         if clash:
@@ -1255,12 +1196,8 @@ def append_ann_index(new_vecs: DataFrame, path: str,
     else:
         indexed = indexed.withColumn(
             "centroid_id", F.lit(None).cast("string"))
-    corpus_dir = os.path.join(path, "corpus")
-    # honor a partitioned/quantized build: the corpus SCHEMA decides the
-    # layout (robust even against a pre-quantize meta sidecar) — an
-    # appended batch missing the code columns would silently fracture the
-    # parquet schema and break every later codes-only scan
-    existing = spark.read.parquet(corpus_dir)
+    # honor a partitioned/quantized build: a batch missing the code
+    # columns would break every later codes-only scan
     if "q" in existing.columns:
         from .quantize import qscale_sql, quantize_sql
 
@@ -1268,14 +1205,6 @@ def append_ann_index(new_vecs: DataFrame, path: str,
                    .withColumn("qscale", F.expr(qscale_sql(D.SPARK, vec_col)))
                    .withColumn("q", F.expr(
                        quantize_sql(D.SPARK, vec_col, "qscale"))))
-    if "pq_codes" in existing.columns:
-        # encode against the FROZEN build codebooks (the sidecar), with
-        # the same element-type rule as the build — a batch stored as
-        # array<int> against an array<tinyint> corpus would fracture the
-        # parquet schema for every later codes-only scan
-        books = load_pq_books(spark, path)
-        indexed = indexed.withColumn(
-            "pq_codes", F.expr(_pq_codes_storage_expr(vec_col, books)))
     if "bucket_part" in existing.columns:
         (indexed.withColumn("bucket_part",
                             F.concat(F.lit("b"), F.col("bucket")))

@@ -499,13 +499,9 @@ SCALE_MULT = 25
 SCALE_QUERY_MOD = SCALE_MULT * 100
 # Lloyd iterations baked into the scale index at build time (r6)
 IVF_REFINE = 1
-# PQ storage params baked into the scale index (r10): m subspaces of
-# dim/m, ks codebook entries — codes + books ride the same layout
-SCALE_PQ_M, SCALE_PQ_KS = 8, 16
 
 _SCALE_PATHS: dict[str, str] = {}
 _SCALE_CENTROIDS: dict[str, list] = {}
-_SCALE_BOOKS: dict[str, list] = {}
 
 
 def _ann_scale_fixture(spark: SparkSession, sf_dir: str) -> "tuple[str, list]":
@@ -516,8 +512,7 @@ def _ann_scale_fixture(spark: SparkSession, sf_dir: str) -> "tuple[str, list]":
 
     key = (sf_dir.strip("/").replace("/", "_") + "_"
            + _dataset_fingerprint(sf_dir, "embeddings")
-           + f"_x{SCALE_MULT}b{BITS}c{IVF_CENTROIDS}r{IVF_REFINE}q1"
-           + f"p{SCALE_PQ_M}.{SCALE_PQ_KS}w")
+           + f"_x{SCALE_MULT}b{BITS}c{IVF_CENTROIDS}r{IVF_REFINE}q1w")
     base = _SCALE_PATHS.get(key)
     if base is None:
         base = os.path.join(tempfile.gettempdir(), f"rs_ann_scale_{key}")
@@ -535,7 +530,7 @@ def _ann_scale_fixture(spark: SparkSession, sf_dir: str) -> "tuple[str, list]":
             # reshuffle before any scoring started (fan_out exchange),
             # and the indexed paths a serial probe scan.  Written wide,
             # fan_out is a no-op and the exchange disappears from all
-            # six readers.  (Key above carries a layout tag so stale
+            # five readers.  (Key above carries a layout tag so stale
             # one-file fixture dirs are not reused.)
             amp = amp.repartition(spark.sparkContext.defaultParallelism)
             amp.write.mode("overwrite").parquet(amp_path)
@@ -547,16 +542,11 @@ def _ann_scale_fixture(spark: SparkSession, sf_dir: str) -> "tuple[str, list]":
             # quantize=True: the SQ8 code columns ride the same layout so
             # the quantized scale path (ann_scale_qivf_topk) measures the
             # codes-off-storage configuration; the fp paths prune them
-            # pq=True: the PQ codes + codebook sidecar ride the same
-            # layout (the FAISS IVF-PQ deployment shape) so
-            # ann_scale_pq_topk measures codes-off-storage; fp and SQ8
-            # paths prune the pq column like they prune each other's
             S.build_ann_index(spark.read.parquet(amp_path),
                               os.path.join(tmp, "index"), bits=BITS,
                               n_centroids=IVF_CENTROIDS, dim=EMB_DIM,
                               refine_iterations=IVF_REFINE,
-                              refine_deterministic=True, quantize=True,
-                              pq=True, pq_m=SCALE_PQ_M, pq_ks=SCALE_PQ_KS)
+                              refine_deterministic=True, quantize=True)
 
         _build_cached_dir(base, build)
         _SCALE_PATHS[key] = base
@@ -564,16 +554,6 @@ def _ann_scale_fixture(spark: SparkSession, sf_dir: str) -> "tuple[str, list]":
         _, cents = S.load_ann_index(spark, os.path.join(base, "index"))
         _SCALE_CENTROIDS[key] = cents
     return base, _SCALE_CENTROIDS[key]
-
-
-def _scale_books(spark: SparkSession, base: str) -> list:
-    """The scale index's PQ codebook sidecar, cached per fixture dir so
-    the (tiny) sidecar collect stays out of bench timing loops."""
-    import os
-    if base not in _SCALE_BOOKS:
-        _SCALE_BOOKS[base] = S.load_pq_books(
-            spark, os.path.join(base, "index"))
-    return _SCALE_BOOKS[base]
 
 
 def _scale_queries(spark: SparkSession, base: str) -> DataFrame:
@@ -761,8 +741,7 @@ from . import register_fixture_preparer  # noqa: E402
 @register_fixture_preparer
 def _prepare_ann_fixtures(spark: SparkSession, sf_dir: str) -> None:
     _ann_index(spark, sf_dir)
-    base, _ = _ann_scale_fixture(spark, sf_dir)
-    _scale_books(spark, base)   # warm the PQ sidecar cache too
+    _ann_scale_fixture(spark, sf_dir)
 
 
 # --- RAG ingestion composition: chunk → embed → top-k (round 7) -------------
@@ -961,61 +940,9 @@ def _prepare_ann_admit_index(spark: SparkSession, sf_dir: str) -> None:
 # the ANN storage/bandwidth lever (operators/quantize.py): candidates are
 # scored on int8 codes (integer dot × two scales over stored norms), the
 # top k·QEXPAND re-ranked exactly — reported cosines are bit-equal to the
-# brute-force gate's, only candidate CHOICE is approximate.
+# exact ivf_topk gate's, only candidate CHOICE is approximate.
 
 QEXPAND = 4
-
-
-def quantized_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.quantize import quantized_brute_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % QUERY_MOD == 0)
-    return quantized_brute_topk(emb, queries, k=K, expand=QEXPAND)
-
-
-def _quantized_oracle() -> str:
-    from ..operators.quantize import int_dot_sql, qscale_sql, quantize_sql
-
-    d = D.DUCK
-    return f"""
-WITH s AS (
-  SELECT vec_id, embedding,
-         {qscale_sql(d, 'embedding')} AS qscale,
-         {S.norm_sql(d, 'embedding')} AS nrm
-  FROM embeddings
-), vq AS (
-  SELECT vec_id, embedding, qscale, nrm,
-         {quantize_sql(d, 'embedding', 'qscale')} AS q
-  FROM s
-), approx AS (
-  SELECT a.vec_id AS query_id, v.vec_id AS neighbor_id,
-         a.embedding AS qv, v.embedding AS nv, a.nrm AS qn, v.nrm AS nn,
-         a.qscale * v.qscale * CAST({int_dot_sql(d, 'a.q', 'v.q')}
-           AS DOUBLE) / (a.nrm * v.nrm) AS approx
-  FROM vq a JOIN vq v ON v.vec_id <> a.vec_id AND v.nrm > 0
-  WHERE a.vec_id % {QUERY_MOD} = 0 AND a.nrm > 0
-), cand AS (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY approx DESC, neighbor_id ASC) AS arn
-  FROM approx
-), resc AS (
-  SELECT query_id, neighbor_id,
-         round({S.dot_sql(d, 'qv', 'nv')} / (qn * nn), 6) AS cosine
-  FROM cand WHERE arn <= {K * QEXPAND}
-), ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM resc
-)
-SELECT query_id, neighbor_id, cosine, rank
-FROM ranked WHERE rank <= {K} ORDER BY query_id, rank
-"""
-
-
-register(Query("quantized_ann_topk", quantized_ann, _quantized_oracle(),
-               tags=("similarity", "quantize")), extra=True)
 
 
 def quantized_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1182,343 +1109,3 @@ register(Query("ann_scale_qivf_topk", ann_scale_qivf,
                _ann_scale_qivf_oracle(),
                tags=("similarity", "bench", "quantize"), bench=True),
          extra=True)
-
-
-def ann_scale_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ at scale through the materialized layout (r10): cells bound
-    WHICH rows are touched, stored PQ codes bound the BYTES per touched
-    row (m 1-byte codes instead of dim floats — the deepest compression
-    tier), ADC scores candidates with m lookups per pair, exact re-rank
-    of the top k·QEXPAND.  Codebooks come from the index's pq_books
-    sidecar — corpus metadata exactly like the centroid set."""
-    import os
-
-    from ..operators.quantize import ivf_topk_pq
-
-    base, cents = _ann_scale_fixture(spark, sf_dir)
-    idx = os.path.join(base, "index")
-    corpus, _ = S.load_ann_index(spark, idx, with_centroids=False)
-    return ivf_topk_pq(corpus, _scale_queries(spark, base), cents,
-                       _scale_books(spark, base), k=K,
-                       n_probe=S.sidecar_n_probe(spark, idx, IVF_PROBE),
-                       expand=QEXPAND)
-
-
-def _ann_scale_pq_oracle() -> str:
-    """Relational replay of the ENTIRE stored IVF-PQ path: codebook
-    training (md5 sample of the amplified corpus), per-subspace argmin
-    encoding, refined-centroid IVF assignment/probing, ADC candidate
-    scoring, exact re-rank — the composition of _pq_oracle's codebook
-    CTEs with _ann_scale_qivf_oracle's cell CTEs."""
-    d = D.DUCK
-    sd = EMB_DIM // SCALE_PQ_M
-    dot_ec = S.dot_sql(d, "e.embedding", "c.cv")
-
-    def sub(col: str, sub_ref: str = "sub") -> str:
-        return f"{col}[({sub_ref} * {sd}) + 1:({sub_ref} + 1) * {sd}]"
-
-    def subdot(a: str, b: str, sub_ref: str = "sub") -> str:
-        return (f"list_sum(list_transform(generate_series(1, {sd}), "
-                f"i -> CAST(({sub(a, sub_ref)})[i] AS DOUBLE) * "
-                f"CAST(({sub(b, sub_ref)})[i] AS DOUBLE)))")
-    return f"""
-WITH {_AMP_CTE}, {_scale_cent_cte()}, samp AS (
-  SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR))) - 1
-           AS cid,
-         embedding AS cv
-  FROM amp
-  QUALIFY row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)))
-            <= {SCALE_PQ_KS}
-), base AS (
-  SELECT vec_id, embedding AS v,
-         {S.norm_sql(d, 'embedding')} AS nrm
-  FROM amp
-), dists AS (
-  SELECT b.vec_id, t.sub, s.cid,
-         ((-2.0 * ({subdot('b.v', 's.cv')}))
-           + ({subdot('s.cv', 's.cv')})) AS dist
-  FROM base b, range(0, {SCALE_PQ_M}) t(sub), samp s
-), codes AS (
-  SELECT vec_id, sub, cid FROM (
-    SELECT vec_id, sub, cid,
-           row_number() OVER (PARTITION BY vec_id, sub
-                              ORDER BY dist ASC, cid DESC) AS rn
-    FROM dists
-  ) WHERE rn = 1
-), assign AS (
-  SELECT vec_id, centroid_id FROM (
-    SELECT e.vec_id, c.centroid_id,
-           row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY {dot_ec} DESC, c.centroid_id DESC) AS rn
-    FROM amp e CROSS JOIN cent c
-  ) WHERE rn = 1
-), qprobe AS (
-  SELECT query_id, qv, qn, centroid_id FROM (
-    SELECT e.vec_id AS query_id, e.embedding AS qv,
-           {S.norm_sql(d, 'e.embedding')} AS qn, c.centroid_id,
-           row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY {dot_ec} DESC, c.centroid_id ASC) AS rn
-    FROM amp e CROSS JOIN cent c
-    WHERE e.vec_id % {SCALE_QUERY_MOD} = 0
-  ) WHERE rn <= {IVF_PROBE} AND qn > 0
-), approx AS (
-  SELECT p.query_id, x.vec_id AS neighbor_id,
-         p.qv, p.qn, x.nrm AS nn,
-         list_reduce(
-           list(({subdot('p.qv', 's.cv', 'c2.sub')}) ORDER BY c2.sub),
-           (a, b2) -> a + b2) / (p.qn * x.nrm) AS approx
-  FROM qprobe p
-  JOIN assign av ON av.centroid_id = p.centroid_id
-  JOIN base x ON x.vec_id = av.vec_id AND x.vec_id <> p.query_id
-             AND x.nrm > 0
-  JOIN codes c2 ON c2.vec_id = x.vec_id
-  JOIN samp s ON s.cid = c2.cid
-  GROUP BY p.query_id, x.vec_id, p.qv, p.qn, x.nrm
-), cand AS (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY approx DESC, neighbor_id ASC) AS arn
-  FROM approx
-), resc AS (
-  SELECT c.query_id, c.neighbor_id,
-         round({S.dot_sql(d, 'c.qv', 'e.embedding')} / (c.qn * c.nn), 6)
-           AS cosine
-  FROM cand c JOIN amp e ON e.vec_id = c.neighbor_id
-  WHERE c.arn <= {K * QEXPAND}
-), ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM resc
-)
-SELECT query_id, neighbor_id, cosine, rank
-FROM ranked WHERE rank <= {K} ORDER BY query_id, rank
-"""
-
-
-register(Query("ann_scale_pq_topk", ann_scale_pq,
-               _ann_scale_pq_oracle(),
-               tags=("similarity", "bench", "quantize"), bench=True),
-         extra=True)
-
-
-# --- product quantization + ADC (round 9) ------------------------------------
-# codes are m small ints per vector (8× storage cut at dim 64 / m 8); the
-# candidate join pays m LUT lookups per pair (the ADC trick: the lookup
-# table is a per-QUERY projection, never per-pair vector math); exact
-# re-rank of the top k·PQ_EXPAND.  The oracle derives the codebooks
-# RELATIONALLY (md5-sample + argmin join against the sample rows) — the
-# same books the Spark side inlines as literals — so the gate checks
-# training, encoding, ADC and re-rank end to end with a compact oracle.
-
-PQ_M, PQ_KS, PQ_EXPAND = 8, 64, 8
-
-
-def pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.quantize import pq_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % QUERY_MOD == 0)
-    return pq_topk(emb, queries, k=K, m=PQ_M, ks=PQ_KS, expand=PQ_EXPAND,
-                   dim=EMB_DIM)
-
-
-def _pq_oracle() -> str:
-    d = D.DUCK
-    sd = EMB_DIM // PQ_M
-
-    def sub(col: str, sub_ref: str = "sub") -> str:
-        """1-based DuckDB slice of the 0-based subspace `sub_ref`."""
-        return f"{col}[({sub_ref} * {sd}) + 1:({sub_ref} + 1) * {sd}]"
-
-    def subdot(a: str, b: str, sub_ref: str = "sub") -> str:
-        return (f"list_sum(list_transform(generate_series(1, {sd}), "
-                f"i -> CAST(({sub(a, sub_ref)})[i] AS DOUBLE) * "
-                f"CAST(({sub(b, sub_ref)})[i] AS DOUBLE)))")
-    return f"""
-WITH samp AS (
-  SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR))) - 1
-           AS cid,
-         embedding AS cv
-  FROM embeddings
-  QUALIFY row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)))
-            <= {PQ_KS}
-), base AS (
-  SELECT vec_id, embedding AS v,
-         {S.norm_sql(d, 'embedding')} AS nrm
-  FROM embeddings
-), dists AS (
-  SELECT b.vec_id, t.sub, s.cid,
-         ((-2.0 * ({subdot('b.v', 's.cv')}))
-           + ({subdot('s.cv', 's.cv')})) AS dist
-  FROM base b, range(0, {PQ_M}) t(sub), samp s
-), codes AS (
-  SELECT vec_id, sub, cid FROM (
-    SELECT vec_id, sub, cid,
-           row_number() OVER (PARTITION BY vec_id, sub
-                              ORDER BY dist ASC, cid DESC) AS rn
-    FROM dists
-  ) WHERE rn = 1
-), approx AS (
-  SELECT q.vec_id AS query_id, x.vec_id AS neighbor_id,
-         q.v AS qv, x.v AS nv, q.nrm AS qn, x.nrm AS nn,
-         list_reduce(
-           list(({subdot('q.v', 's.cv', 'c.sub')}) ORDER BY c.sub),
-           (a, b2) -> a + b2) / (q.nrm * x.nrm) AS approx
-  FROM base q
-  JOIN base x ON x.vec_id <> q.vec_id AND x.nrm > 0
-  JOIN codes c ON c.vec_id = x.vec_id
-  JOIN samp s ON s.cid = c.cid
-  WHERE q.vec_id % {QUERY_MOD} = 0 AND q.nrm > 0
-  GROUP BY q.vec_id, x.vec_id, q.v, x.v, q.nrm, x.nrm
-), cand AS (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY approx DESC, neighbor_id ASC) AS arn
-  FROM approx
-), resc AS (
-  SELECT query_id, neighbor_id,
-         round({S.dot_sql(d, 'qv', 'nv')} / (qn * nn), 6) AS cosine
-  FROM cand WHERE arn <= {K * PQ_EXPAND}
-), ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM resc
-)
-SELECT query_id, neighbor_id, cosine, rank
-FROM ranked WHERE rank <= {K} ORDER BY query_id, rank
-"""
-
-
-register(Query("pq_ann_topk", pq_ann, _pq_oracle(),
-               tags=("similarity", "quantize")), extra=True)
-
-
-def pq_refined_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ with one deterministic Lloyd refinement iteration over the
-    sample codebooks (r10 — closes the last no-oracle gap): train →
-    refine (per-(subspace, code, dim) mean as an id-ordered sequential
-    fold, pq_refine_books deterministic mode) → encode against the
-    refined books → ADC → exact re-rank."""
-    from ..operators.quantize import (pq_codebooks, pq_refine_books,
-                                      pq_topk)
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % QUERY_MOD == 0)
-    books = pq_codebooks(emb, m=PQ_M, ks=PQ_KS, dim=EMB_DIM)
-    refined = pq_refine_books(emb, books, iterations=1,
-                              deterministic=True)
-    return pq_topk(emb, queries, k=K, m=PQ_M, expand=PQ_EXPAND,
-                   dim=EMB_DIM, books=refined)
-
-
-def _pq_refined_oracle() -> str:
-    """Replays the refinement EXACTLY: codes0 under the sample books,
-    per-(sub, code, pos) means as vec_id-ordered sequential folds (the
-    _scale_cent_cte trick per subspace), empty cells keep their sample
-    entry, then the full encode/ADC/re-rank chain against the refined
-    books."""
-    d = D.DUCK
-    sd = EMB_DIM // PQ_M
-
-    def sub(col: str, sub_ref: str = "sub") -> str:
-        return f"{col}[({sub_ref} * {sd}) + 1:({sub_ref} + 1) * {sd}]"
-
-    def subdot(a: str, b: str, sub_ref: str = "sub") -> str:
-        return (f"list_sum(list_transform(generate_series(1, {sd}), "
-                f"i -> CAST(({sub(a, sub_ref)})[i] AS DOUBLE) * "
-                f"CAST(({sub(b, sub_ref)})[i] AS DOUBLE)))")
-
-    # refined-book forms: rb.cv is already the sd-wide subvector, so the
-    # dot/ssq fold over it directly (same ascending-pos order as the
-    # Python-literal sums the Spark side inlines)
-    def rdot(a: str, rb: str, sub_ref: str = "sub") -> str:
-        return (f"list_sum(list_transform(generate_series(1, {sd}), "
-                f"i -> CAST(({sub(a, sub_ref)})[i] AS DOUBLE) * "
-                f"CAST({rb}[i] AS DOUBLE)))")
-    return f"""
-WITH samp AS (
-  SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR))) - 1
-           AS cid,
-         embedding AS cv
-  FROM embeddings
-  QUALIFY row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)))
-            <= {PQ_KS}
-), base AS (
-  SELECT vec_id, embedding AS v,
-         {S.norm_sql(d, 'embedding')} AS nrm
-  FROM embeddings
-), dists0 AS (
-  SELECT b.vec_id, t.sub, s.cid,
-         ((-2.0 * ({subdot('b.v', 's.cv')}))
-           + ({subdot('s.cv', 's.cv')})) AS dist
-  FROM base b, range(0, {PQ_M}) t(sub), samp s
-), codes0 AS (
-  SELECT vec_id, sub, cid FROM (
-    SELECT vec_id, sub, cid,
-           row_number() OVER (PARTITION BY vec_id, sub
-                              ORDER BY dist ASC, cid DESC) AS rn
-    FROM dists0
-  ) WHERE rn = 1
-), mean1 AS (
-  SELECT c.sub, c.cid, t.pos,
-         list_sum(list(CAST(b.v[c.sub * {sd} + t.pos] AS DOUBLE)
-                       ORDER BY b.vec_id))
-           / CAST(count(*) AS DOUBLE) AS m
-  FROM codes0 c JOIN base b USING (vec_id), range(1, {sd} + 1) t(pos)
-  GROUP BY c.sub, c.cid, t.pos
-), rbook AS (
-  SELECT t.sub, s.cid,
-         coalesce(m.cv,
-                  list_transform({sub('s.cv', 't.sub')},
-                                 x -> CAST(x AS DOUBLE))) AS cv
-  FROM samp s CROSS JOIN range(0, {PQ_M}) t(sub)
-  LEFT JOIN (
-    SELECT sub, cid, list(m ORDER BY pos) AS cv FROM mean1
-    GROUP BY sub, cid
-  ) m ON m.sub = t.sub AND m.cid = s.cid
-), dists1 AS (
-  SELECT b.vec_id, r.sub, r.cid,
-         ((-2.0 * ({rdot('b.v', 'r.cv', 'r.sub')}))
-           + (list_sum(list_transform(r.cv,
-                x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS dist
-  FROM base b CROSS JOIN rbook r
-), codes1 AS (
-  SELECT vec_id, sub, cid FROM (
-    SELECT vec_id, sub, cid,
-           row_number() OVER (PARTITION BY vec_id, sub
-                              ORDER BY dist ASC, cid DESC) AS rn
-    FROM dists1
-  ) WHERE rn = 1
-), approx AS (
-  SELECT q.vec_id AS query_id, x.vec_id AS neighbor_id,
-         q.v AS qv, x.v AS nv, q.nrm AS qn, x.nrm AS nn,
-         list_reduce(
-           list(({rdot('q.v', 'r.cv', 'c.sub')}) ORDER BY c.sub),
-           (a, b2) -> a + b2) / (q.nrm * x.nrm) AS approx
-  FROM base q
-  JOIN base x ON x.vec_id <> q.vec_id AND x.nrm > 0
-  JOIN codes1 c ON c.vec_id = x.vec_id
-  JOIN rbook r ON r.sub = c.sub AND r.cid = c.cid
-  WHERE q.vec_id % {QUERY_MOD} = 0 AND q.nrm > 0
-  GROUP BY q.vec_id, x.vec_id, q.v, x.v, q.nrm, x.nrm
-), cand AS (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY approx DESC, neighbor_id ASC) AS arn
-  FROM approx
-), resc AS (
-  SELECT query_id, neighbor_id,
-         round({S.dot_sql(d, 'qv', 'nv')} / (qn * nn), 6) AS cosine
-  FROM cand WHERE arn <= {K * PQ_EXPAND}
-), ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM resc
-)
-SELECT query_id, neighbor_id, cosine, rank
-FROM ranked WHERE rank <= {K} ORDER BY query_id, rank
-"""
-
-
-register(Query("pq_refined_ann_topk", pq_refined_ann, _pq_refined_oracle(),
-               tags=("similarity", "quantize")), extra=True)

@@ -1070,7 +1070,7 @@ def test_cli_corpus_partition_then_compact(spark, tmp_path, capsys, sf_dir):
 
 def test_cli_corpus_esearch_quantized_methods(spark, tmp_path, capsys,
                                               sf_dir):
-    """`corpus esearch --method qivf/pq` search the stored code columns;
+    """`corpus esearch --method qivf` searches the stored code columns;
     an index built without them is a contract error, not a traceback."""
     vecs = str(tmp_path / "esq_vecs.parquet")
     (spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -1082,26 +1082,22 @@ def test_cli_corpus_esearch_quantized_methods(spark, tmp_path, capsys,
     assert main(["corpus", "eindex", "-i", vecs, "-o", plain,
                  "--dim", "64"], spark=spark) == 0
     out = str(tmp_path / "esq_out.parquet")
-    # plain layout: quantized methods refuse cleanly
+    # plain layout: the quantized method refuses cleanly
     assert main(["corpus", "esearch", "--index", plain, "-q", queries,
                  "-o", out, "--method", "qivf"], spark=spark) == 2
     assert "no SQ8 codes" in capsys.readouterr().err
-    assert main(["corpus", "esearch", "--index", plain, "-q", queries,
-                 "-o", out, "--method", "pq"], spark=spark) == 2
-    assert "no PQ codes" in capsys.readouterr().err
-    # full layout: both methods produce k-bounded neighbor sets
+    # quantized layout: k-bounded neighbor sets
     full = str(tmp_path / "esq_full")
     assert main(["corpus", "eindex", "-i", vecs, "-o", full,
-                 "--dim", "64", "--quantize", "--pq"], spark=spark) == 0
+                 "--dim", "64", "--quantize"], spark=spark) == 0
     capsys.readouterr()
-    for method in ("qivf", "pq"):
-        assert main(["corpus", "esearch", "--index", full, "-q", queries,
-                     "-o", out, "--method", method, "--n-probe", "4"],
-                    spark=spark) == 0
-        assert f"{method} n_probe=4" in capsys.readouterr().out
-        res = spark.read.parquet(out)
-        assert res.groupBy("query_id").count().agg(
-            {"count": "max"}).first()[0] <= 5
+    assert main(["corpus", "esearch", "--index", full, "-q", queries,
+                 "-o", out, "--method", "qivf", "--n-probe", "4"],
+                spark=spark) == 0
+    assert "qivf n_probe=4" in capsys.readouterr().out
+    res = spark.read.parquet(out)
+    assert res.groupBy("query_id").count().agg(
+        {"count": "max"}).first()[0] <= 5
 
 
 def test_cli_corpus_compact_recovers_crashed_swap(spark, tmp_path, capsys,

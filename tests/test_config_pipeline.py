@@ -294,9 +294,10 @@ def test_jsonl_source_round_trip(spark, sf_dir, tmp_path):
 
 
 def test_dump_run_releases_only_what_it_persisted(spark, sf_dir, tmp_path):
-    """Two sqltext dumps leave the persistent-RDD registry where it
-    started: the reader's persisted decode is released once each write
-    returns, while an RDD persisted before the runs stays pinned."""
+    """Two sqltext dumps, each followed by a sqltext restore, leave the
+    persistent-RDD registry where it started: the reader's persisted
+    decode is released once each write returns, while an RDD persisted
+    before the runs stays pinned."""
     from replibyte_spark.catalog import load_table
     from replibyte_spark.sinks.sqldump_sink import write_sql_dump
 
@@ -305,6 +306,8 @@ def test_dump_run_releases_only_what_it_persisted(spark, sf_dir, tmp_path):
     cfg = Config.from_dict({
         "source": {"connection_uri": f"sqltext://{tmp_path / 'sql'}"},
         "datastore": {"dir": str(tmp_path / "store")},
+        "destination": {"connection_uri":
+                        f"sqltext://{tmp_path / 'restored'}"},
     })
     jsc = spark.sparkContext._jsc
     pinned = spark.sparkContext.parallelize(range(3)).cache()
@@ -315,6 +318,8 @@ def test_dump_run_releases_only_what_it_persisted(spark, sf_dir, tmp_path):
         for name in ("a", "b"):
             info = DumpPipeline(cfg).run(spark, name)
             assert info.tables == ["nation"]
+            assert set(jsc.getPersistentRDDs().keys()) == start, name
+            assert list(RestorePipeline(cfg).run(spark)) == ["nation"]
             assert set(jsc.getPersistentRDDs().keys()) == start, name
     finally:
         pinned.unpersist()

@@ -914,6 +914,18 @@ def test_append_ann_index_closes_ingest_loop(spark, tmp_path):
     r11 = rows[11]
     assert len(r11.bucket) == 6 and set(r11.bucket) <= {"0", "1"}
     assert r11.norm > 0 and r11.centroid_id is not None
+    # a layout carrying product-quantization codes (written by an older
+    # build) is refused before anything is appended
+    import shutil
+
+    import pytest
+    legacy = str(tmp_path / "ann_pq_legacy")
+    shutil.copytree(path, legacy)
+    (corpus_now.withColumn("pq_codes", F.array(F.lit(0).cast("tinyint")))
+     .write.mode("overwrite").parquet(os.path.join(legacy, "corpus")))
+    with pytest.raises(ValueError, match="rebuild"):
+        S.append_ann_index(batch, legacy)
+    assert spark.read.parquet(os.path.join(legacy, "corpus")).count() == 3
 
 
 def test_compact_minhash_index(spark, tmp_path):

@@ -138,41 +138,6 @@ def test_fuzz_quantize_builders_cross_dialect(spark):
     assert not bad, f"{len(bad)} divergent, first: {next(iter(bad.items()))}"
 
 
-def test_fuzz_pq_lut_adc_cross_dialect(spark):
-    """PQ LUT + ADC builders over random vectors and a fixed random
-    codebook: per-subspace dots and the m-lookup sum must agree
-    bit-for-bit across engines (ranking happens on the UNROUNDED ADC
-    value, so a last-ulp divergence would reorder candidates)."""
-    import duckdb as _duck
-
-    from replibyte_spark.operators.quantize import pq_adc_sql, pq_lut_expr
-
-    prng = random.Random(20260816)
-    m, ks, sd = 4, 6, 3           # dim 12
-    books = [[[prng.uniform(-2, 2) for _ in range(sd)] for _ in range(ks)]
-             for _ in range(m)]
-    rows = [(i,
-             [prng.uniform(-5, 5) for _ in range(m * sd)],
-             [prng.randrange(ks) for _ in range(m)])
-            for i in range(150)]
-    df = spark.createDataFrame(rows, "i long, v array<double>, c array<int>")
-    lut_s = pq_lut_expr("v", books)
-    got = {r.i: (r.l, r.a) for r in df.selectExpr(
-        "i", f"{lut_s} AS l",
-        f"{pq_adc_sql(D.SPARK, lut_s, 'c', m, ks)} AS a").collect()}
-    con = _duck.connect()
-    con.execute("CREATE TABLE t (i BIGINT, v DOUBLE[], c INTEGER[])")
-    con.executemany("INSERT INTO t VALUES (?, ?, ?)", rows)
-    lut_d = pq_lut_expr("v", books, d_engine=D.DUCK)
-    want = {i: (l, a) for i, l, a in con.execute(
-        f"SELECT i, {lut_d}, {pq_adc_sql(D.DUCK, lut_d, 'c', m, ks)} "
-        f"FROM t").fetchall()}
-    bad = {i: (got[i], want[i]) for i in got
-           if got[i][1] != want[i][1]
-           or list(got[i][0]) != list(want[i][0])}
-    assert not bad, f"{len(bad)} divergent, first: {next(iter(bad.items()))}"
-
-
 @pytest.mark.parametrize("sep", ["\n", " ", "'"])
 def test_fuzz_dedup_lines_cross_dialect(spark, sep):
     """Intra-document first-occurrence segment dedup: identical output

@@ -1,14 +1,22 @@
 """int8 scalar quantization (operators/quantize.py): reconstruction bound,
 zero-vector edge, recall + exact-cosine agreement vs brute force, and the
-column-pruning plan shape on a materialized code layout."""
+column-pruning plan shape on a materialized code layout.
+
+With ONE centroid and n_probe=1, :func:`ivf_topk_quantized` scores every
+vector, i.e. it is the SQ8 brute-force scan; the tests that compare
+against a full-corpus oracle use that configuration."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from replibyte_spark.operators.quantize import (Q_MAX, quantize_vectors,
-                                                quantized_brute_topk)
+from replibyte_spark.operators.quantize import (Q_MAX, ivf_topk_quantized,
+                                                quantize_vectors)
 from replibyte_spark.operators.similarity import brute_force_topk
+
+
+def _one_cell(dim: int) -> list:
+    return [("c0", [1.0] * dim)]
 
 
 def test_reconstruction_error_within_half_step(spark):
@@ -34,7 +42,8 @@ def test_recall_and_exact_cosines_vs_brute_force(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") % 20 == 0)
     exact = brute_force_topk(emb, queries, k=5)
-    quant = quantized_brute_topk(emb, queries, k=5, expand=4)
+    quant = ivf_topk_quantized(emb, queries, _one_cell(64), k=5, n_probe=1,
+                               expand=4)
     ex = {(r["query_id"], r["neighbor_id"]): r["cosine"]
           for r in exact.collect()}
     qu = {(r["query_id"], r["neighbor_id"]): r["cosine"]
@@ -56,20 +65,26 @@ def test_precomputed_codes_are_consumed(spark):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     pre = quantize_vectors(emb)
     queries = emb.filter(F.col("vec_id") % 10 == 0)
-    a = sorted(map(tuple, quantized_brute_topk(emb, queries, 3).collect()))
-    b = sorted(map(tuple, quantized_brute_topk(pre, queries, 3).collect()))
+    a = sorted(map(tuple, ivf_topk_quantized(
+        emb, queries, _one_cell(8), k=3, n_probe=1).collect()))
+    b = sorted(map(tuple, ivf_topk_quantized(
+        pre, queries, _one_cell(8), k=3, n_probe=1).collect()))
     assert a == b
 
 
 def test_materialized_layout_prunes_fp_column(spark, tmp_path, sf_dir):
-    """With codes persisted, the candidate scan's parquet read must NOT
-    include the fp embedding column — the 4× bandwidth claim, in the plan."""
+    """With codes persisted by build_ann_index(quantize=True), the IVF-SQ8
+    candidate scan's parquet read must NOT include the fp embedding
+    column — the 4× bandwidth claim, in the plan."""
+    from replibyte_spark.operators.similarity import (build_ann_index,
+                                                      load_ann_index)
+
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    path = str(tmp_path / "qcorpus.parquet")
-    quantize_vectors(emb).write.parquet(path)
-    corpus = spark.read.parquet(path)
+    path = str(tmp_path / "qidx")
+    cents = build_ann_index(emb, path, bits=4, dim=64, quantize=True)
+    corpus, _ = load_ann_index(spark, path, with_centroids=False)
     queries = emb.filter(F.col("vec_id") % 20 == 0)
-    plan = quantized_brute_topk(corpus, queries, k=5) \
+    plan = ivf_topk_quantized(corpus, queries, cents, k=5) \
         ._jdf.queryExecution().executedPlan().toString()
     # identify the corpus scans by exclusion (toString truncates long tmp
     # paths, so matching the qcorpus filename is unreliable)
@@ -88,7 +103,6 @@ def test_ivf_quantized_matches_ivf_exact_on_fixture(spark, sf_dir):
     """IVF-SQ8 probes the same cells as ivf_topk; with expand=4 on the
     fixture the final top-k should agree with the exact IVF path almost
     everywhere, and every agreeing pair reports the identical cosine."""
-    from replibyte_spark.operators.quantize import ivf_topk_quantized
     from replibyte_spark.operators.similarity import (default_centroids,
                                                       ivf_topk)
 
@@ -110,8 +124,6 @@ def test_ivf_quantized_matches_ivf_exact_on_fixture(spark, sf_dir):
 
 
 def test_ivf_quantized_empty_centroids(spark):
-    from replibyte_spark.operators.quantize import ivf_topk_quantized
-
     emb = spark.createDataFrame([(1, [1.0, 0.0])],
                                 "vec_id long, embedding array<double>")
     out = ivf_topk_quantized(emb, emb, [], k=3)
@@ -123,7 +135,6 @@ def test_quantized_index_layout_roundtrip(spark, tmp_path, sf_dir):
     """build_ann_index(quantize=True) stores codes; the loaded corpus is
     consumed as-is by ivf_topk_quantized (identical results to on-the-fly
     quantization), appends mirror the layout, meta records the flag."""
-    from replibyte_spark.operators.quantize import ivf_topk_quantized
     from replibyte_spark.operators.similarity import (append_ann_index,
                                                       build_ann_index,
                                                       load_ann_index,
@@ -157,7 +168,8 @@ def test_quantized_topk_matches_numpy_ground_truth(spark):
     (scale, codes, integer dot, approx ranking, expand cut, exact
     re-rank) in pure NumPy/Python and compare to the Spark result —
     catches a bug mirrored into the SQL oracle by the shared dialect
-    builder, which oracle parity by construction cannot."""
+    builder, which oracle parity by construction cannot.  One cell probed
+    by every query makes the IVF candidate set the whole corpus."""
     import math
 
     import numpy as np
@@ -168,10 +180,9 @@ def test_quantized_topk_matches_numpy_ground_truth(spark):
     queries = emb.filter(F.col("vec_id") % 8 == 0)
     k, expand = 4, 3
 
-    from replibyte_spark.operators.quantize import quantized_brute_topk
     got = [(r["query_id"], r["neighbor_id"], r["cosine"], r["rank"])
-           for r in quantized_brute_topk(emb, queries, k=k,
-                                         expand=expand).collect()]
+           for r in ivf_topk_quantized(emb, queries, _one_cell(12), k=k,
+                                       n_probe=1, expand=expand).collect()]
 
     def quant(x):
         x = np.asarray(x, float)
@@ -247,174 +258,3 @@ def test_nb_scores_match_python_reference(spark):
                     s += f * (math.log(n + 0.5) - math.log(0.5))
             assert abs(got[(did, lab)] - round(s, 6)) < 1e-9, \
                 (did, lab, got[(did, lab)], s)
-
-def test_pq_recall_floor_and_exact_cosines(spark, sf_dir):
-    from pyspark.sql import functions as F
-    from replibyte_spark.operators.quantize import pq_topk
-    from replibyte_spark.operators.similarity import brute_force_topk
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") % 20 == 0)
-    exact = {(r["query_id"], r["neighbor_id"]): r["cosine"]
-             for r in brute_force_topk(emb, queries, k=5).collect()}
-    got = {(r["query_id"], r["neighbor_id"]): r["cosine"]
-           for r in pq_topk(emb, queries, k=5, m=8, ks=64,
-                            expand=8).collect()}
-    recall = sum(1 for p in got if p in exact) / len(exact)
-    assert recall >= 0.7, recall
-    for p in got:
-        if p in exact:
-            assert got[p] == exact[p]      # re-rank is exact
-
-
-def test_pq_codes_shape_and_range(spark):
-    from replibyte_spark.operators.quantize import (pq_codebooks,
-                                                    pq_encode_vectors)
-
-    rows = [(i, [((i * 11 + j * 5) % 13 - 6) / 2.0 for j in range(16)])
-            for i in range(50)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    books = pq_codebooks(emb, m=4, ks=8, dim=16)
-    assert len(books) == 4 and len(books[0]) == 8 and len(books[0][0]) == 4
-    enc = pq_encode_vectors(emb, books).collect()
-    for r in enc:
-        assert len(r["pq_codes"]) == 4
-        assert all(0 <= c < 8 for c in r["pq_codes"])
-
-
-def test_pq_refined_books_do_not_hurt_recall(spark, sf_dir):
-    """Lloyd-refined codebooks must match or beat the raw sample books'
-    candidate recall (they minimize exactly the quantization error ADC
-    ranking suffers from)."""
-    from pyspark.sql import functions as F
-    from replibyte_spark.operators.quantize import (pq_codebooks,
-                                                    pq_refine_books,
-                                                    pq_topk)
-    from replibyte_spark.operators.similarity import brute_force_topk
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") % 20 == 0)
-    exact = {(r["query_id"], r["neighbor_id"])
-             for r in brute_force_topk(emb, queries, k=5).collect()}
-    raw = pq_codebooks(emb, m=8, ks=16, dim=64)
-    refined = pq_refine_books(emb, raw, iterations=2)
-
-    def recall(books):
-        got = {(r["query_id"], r["neighbor_id"])
-               for r in pq_topk(emb, queries, k=5, m=8, ks=16, expand=8,
-                                books=books).collect()}
-        return len(got & exact) / len(exact)
-
-    r_raw, r_ref = recall(raw), recall(refined)
-    assert r_ref >= r_raw, (r_raw, r_ref)
-
-
-def test_pq_refine_books_default_needs_no_id_column(spark):
-    """r11 ADVICE fix: the default (deterministic=False) refinement path
-    must not require `id_col` — it exists only as the deterministic
-    fold's sort key, and an external frame of bare embeddings has no
-    vec_id."""
-    from replibyte_spark.operators.quantize import (pq_codebooks,
-                                                    pq_refine_books)
-
-    df = spark.createDataFrame(
-        [([float(i % 3), float(i % 5), float(i), 1.0],)
-         for i in range(32)], "embedding array<float>")
-    books = pq_codebooks(df.withColumn("vec_id", F.monotonically_increasing_id()),
-                         m=2, ks=4, dim=4)
-    refined = pq_refine_books(df, books, iterations=1)
-    assert len(refined) == 2 and len(refined[0]) == 4
-
-
-def test_pq_parameter_errors(spark):
-    import pytest as _pytest
-
-    from replibyte_spark.operators.quantize import pq_codebooks
-
-    emb = spark.createDataFrame([(1, [1.0] * 10)],
-                                "vec_id long, embedding array<double>")
-    with _pytest.raises(ValueError, match="not divisible"):
-        pq_codebooks(emb, m=3, ks=4, dim=10)
-    empty = emb.filter("vec_id < 0")
-    with _pytest.raises(ValueError, match="empty corpus"):
-        pq_codebooks(empty, m=2, ks=4, dim=10)
-
-
-def test_pq_index_layout_roundtrip(spark, tmp_path, sf_dir):
-    """build_ann_index(pq=True) stores pq_codes as TINYINT arrays plus
-    the pq_books sidecar; ivf_topk_pq over the loaded layout matches
-    on-the-fly encoding with the same books; appends encode against the
-    frozen sidecar books with the same element type; meta records the
-    PQ params."""
-    from replibyte_spark.operators.quantize import ivf_topk_pq
-    from replibyte_spark.operators.similarity import (append_ann_index,
-                                                      build_ann_index,
-                                                      load_ann_index,
-                                                      load_ann_index_meta,
-                                                      load_pq_books)
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    head = emb.filter(F.col("vec_id") < 400)
-    tail = emb.filter(F.col("vec_id") >= 400)
-    path = str(tmp_path / "pqidx")
-    cents = build_ann_index(head, path, bits=4, dim=64, pq=True,
-                            pq_m=8, pq_ks=16)
-    meta = load_ann_index_meta(spark, path, use_cache=False)
-    assert meta["pq_m"] == 8 and meta["pq_ks"] == 16
-    books = load_pq_books(spark, path)
-    assert len(books) == 8 and len(books[0]) == 16
-    assert len(books[0][0]) == 8  # dim 64 / m 8
-    corpus, _ = load_ann_index(spark, path, with_centroids=False)
-    assert {"pq_codes", "norm", "centroid_id"} <= set(corpus.columns)
-    assert dict(corpus.dtypes)["pq_codes"] == "array<tinyint>"
-    queries = emb.filter(F.col("vec_id") % 50 == 0)
-    from_layout = sorted(map(tuple, ivf_topk_pq(
-        corpus, queries, cents, books, k=3, n_probe=2).collect()))
-    on_the_fly = sorted(map(tuple, ivf_topk_pq(
-        head.select("vec_id", "embedding"), queries, cents, books, k=3,
-        n_probe=2).collect()))
-    assert from_layout == on_the_fly
-    assert len(from_layout) > 0
-    # append encodes against the frozen sidecar books — reload is clean
-    # and the element type does not fracture
-    append_ann_index(tail, path)
-    corpus2, _ = load_ann_index(spark, path, with_centroids=False)
-    assert corpus2.count() == emb.count()
-    assert corpus2.filter(F.col("pq_codes").isNull()).count() == 0
-    assert dict(corpus2.dtypes)["pq_codes"] == "array<tinyint>"
-
-
-def test_pq_build_requires_dim(spark):
-    import pytest
-
-    from replibyte_spark.operators.similarity import build_ann_index
-
-    emb = spark.createDataFrame([(1, [1.0] * 8)],
-                                "vec_id long, embedding array<double>")
-    with pytest.raises(ValueError, match="requires dim"):
-        build_ann_index(emb, "/tmp/never_written_pq", pq=True)
-
-
-def test_ivf_pq_matches_ivf_exact_on_fixture(spark, sf_dir):
-    """Recall sanity: with a generous expand, IVF-PQ's final top-k should
-    agree with the exact IVF path on most (query, rank) slots, and all
-    reported cosines are exact (bit-equal on the agreeing slots)."""
-    from replibyte_spark.operators.quantize import (ivf_topk_pq,
-                                                    pq_codebooks)
-    from replibyte_spark.operators.similarity import (default_centroids,
-                                                      ivf_topk)
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") % 50 == 0)
-    cents = default_centroids(emb, 8)
-    books = pq_codebooks(emb, m=8, ks=32, dim=64)
-    exact = {(r["query_id"], r["neighbor_id"]): r["cosine"]
-             for r in ivf_topk(emb, queries, k=3, n_probe=2,
-                               centroids=cents).collect()}
-    pq = {(r["query_id"], r["neighbor_id"]): r["cosine"]
-          for r in ivf_topk_pq(emb, queries, cents, books, k=3,
-                               n_probe=2, expand=8).collect()}
-    agree = set(exact) & set(pq)
-    assert len(agree) >= 0.7 * len(exact), (len(agree), len(exact))
-    for key in agree:
-        assert exact[key] == pq[key]
