@@ -10,11 +10,12 @@ Reference analogues:
 - P4-P7 row classifier / projections / typed-cell decoder
   (replibyte/src/source/postgres.rs:245-431).
 
-Distribution model: one task per dump file.  This is exactly the unit the
-reference's own datastore produces (`{dump}/{N}.dump` chunks,
-tasks/full_dump.rs:72-113) — chunk boundaries are statement boundaries, so
-per-file parallelism is correct by construction.  A single monolithic .sql
-file parses in one task (fine for ingest; at scale dumps arrive chunked).
+Distribution model: whole files per task — the unit the reference's own
+datastore produces (`{dump}/{N}.dump` chunks, tasks/full_dump.rs:72-113),
+whose boundaries are statement boundaries.  `wholeTextFiles`' default
+`minPartitions` is 2, so a 12-file dump parses in 2 tasks; a monolithic
+COPY file has the line-parallel reader.  Python splits, tokenizes and
+decodes each file once; typing and the per-table split run in the JVM.
 
 The typed decoder follows the reference's literal-syntax inference
 (postgres.rs:375-412): quoted → string, bare number with `.`/exponent →
@@ -26,6 +27,7 @@ from __future__ import annotations
 import re
 from collections.abc import Iterator
 
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -166,6 +168,16 @@ def _unquote_ident(s: str) -> str:
     return s
 
 
+def _column_list(table: str, names: list[str]) -> list[str]:
+    """Unquoted column names; a name listed twice raises."""
+    cols = [_unquote_ident(c) for c in names]
+    dup = [c for i, c in enumerate(cols) if c in cols[:i]]
+    if dup:
+        raise ValueError(
+            f"duplicate column {dup[0]!r} in the column list of {table}")
+    return cols
+
+
 def _split_csv(s: str, dialect: str = "postgres") -> list[str]:
     """Split on top-level commas, respecting quotes and parens."""
     backslash_escapes = dialect == "mysql"
@@ -271,7 +283,7 @@ def parse_insert_rows(stmt: str, dialect: str = "postgres"):
     if not m:
         return None
     table = _unquote_ident(m.group("table").split(".")[-1])
-    cols = [_unquote_ident(c) for c in _split_csv(m.group("cols"), dialect)]
+    cols = _column_list(table, _split_csv(m.group("cols"), dialect))
     rows = []
     for tup in _split_csv(m.group("vals"), dialect):
         tup = tup.strip()
@@ -349,60 +361,70 @@ def _decode_copy_field(tok: str):
     return _unescape_copy(tok)
 
 
+def _copy_header(line: str):
+    """(table, columns) of a `COPY t (cols) FROM stdin` header, else None."""
+    m = _COPY_HDR_RE.match(line)
+    if m is None:
+        return None
+    table = _unquote_ident(m.group("table").split(".")[-1])
+    return table, _column_list(table, m.group("cols").split(","))
+
+
 def parse_copy_rows(stmt: str):
     """(table, columns, [row, ...]) for a `COPY ... FROM stdin;` pseudo-
     statement (header + tab-separated data lines + `\\.`, as yielded by
     :func:`split_statements`), else None.
 
-    The reference ingests this via its statement stream
-    (dump-parser/src/utils.rs:33-121); data lines are split on literal tabs
-    — escaped tabs appear as the 2-char sequence `\\t`, so a raw tab is
-    always a field separator.
+    Data lines split on literal tabs: an escaped tab is the 2-char
+    sequence `\\t`, so a raw tab is always a field separator.
     """
     header, _, body = stmt.partition(";")
-    m = _COPY_HDR_RE.match(header.strip())
-    if m is None:
+    hdr = _copy_header(header.strip())
+    if hdr is None:
         return None
-    table = _unquote_ident(m.group("table").split(".")[-1])
-    cols = [_unquote_ident(c) for c in m.group("cols").split(",")]
+    table, cols = hdr
     body = body.removeprefix("\n").removesuffix("\\.").removesuffix("\n")
-    rows = []
-    for line in (body.split("\n") if body else []):
-        vals = [_decode_copy_field(f) for f in line.split("\t")]
-        if len(cols) != len(vals):
-            raise ValueError(
-                f"column/value arity mismatch in COPY {table}: "
-                f"{len(cols)} cols vs {len(vals)} values")
-        rows.append(vals)
+    rows = [_copy_row(table, cols, line)
+            for line in (body.split("\n") if body else [])]
     return table, cols, rows
 
 
+def _copy_row(table: str, cols, line: str) -> list:
+    """Decoded values of one COPY data line."""
+    vals = [_decode_copy_field(f) for f in line.split("\t")]
+    if len(cols) != len(vals):
+        raise ValueError(
+            f"column/value arity mismatch in COPY {table}: "
+            f"{len(cols)} cols vs {len(vals)} values")
+    return vals
+
+
 # ---------------------------------------------------------------------------
-# typed rows → DataFrames (single-pass, explicit schema)
+# decoded rows → DataFrames (typed and split per table in the JVM)
 # ---------------------------------------------------------------------------
-#
-# Both readers below produce an RDD of (table, cols_tuple, values_list)
-# and hand it here.  Earlier rounds serialized rows to JSON and used
-# `spark.read.json`, whose schema INFERENCE is a second full pass over the
-# data; instead we fold a per-column type lattice into the same job that
-# materializes the persisted decode (one scan of the dump), then build each
-# table's DataFrame with an explicit schema — no inference job, no
-# per-table `first()`.
+# The last Python step: each decoded value becomes text, and the rows
+# become ONE cached relation `(t, cols, vals)` that the read's single job
+# fills while folding per-column type masks into an accumulator.  Each
+# table is a JVM filter + select of casts over that cache, so no plan built
+# on the returned frames runs a Python worker again.
 
 _T_BOOL, _T_INT, _T_FLOAT, _T_STR, _T_BIGNUM = 1, 2, 4, 8, 16
 _INT64_MAX = (1 << 63) - 1
 
 
-def _type_bit(v) -> int:
+def _typed_text(v) -> tuple[int, str | None]:
+    """(type bit, text) of a decoded value.  The text is ``str(v)``, with
+    bools as ``true``/``false``: what a string column keeps, and what a
+    long, double or bool column casts back to ``v``."""
     if v is None:
-        return 0
+        return 0, None
     if isinstance(v, bool):
-        return _T_BOOL
+        return _T_BOOL, "true" if v else "false"
     if isinstance(v, int):
-        return _T_INT | (_T_BIGNUM if abs(v) > _INT64_MAX else 0)
+        return _T_INT | (_T_BIGNUM if abs(v) > _INT64_MAX else 0), str(v)
     if isinstance(v, float):
-        return _T_FLOAT
-    return _T_STR
+        return _T_FLOAT, str(v)
+    return _T_STR, v
 
 
 def _mask_to_type(mask: int):
@@ -417,87 +439,79 @@ def _mask_to_type(mask: int):
     return StringType()  # all-null, strings, or mixed/oversized → string
 
 
-def _coerce(v, mask: int):
-    """Align a decoded python value with its column's resolved type."""
-    if v is None:
-        return None
-    if mask in (_T_FLOAT, _T_INT | _T_FLOAT):
-        return float(v)
-    if mask in (_T_BOOL, _T_INT):
-        return v
-    # string column: render non-strings the way JSON would
-    if isinstance(v, bool):
-        return "true" if v else "false"
-    if not isinstance(v, str):
-        return str(v)
-    return v
+class _LayoutMasks(AccumulatorParam):
+    """``{(table, cols): (first seen, column type masks)}``; min and OR
+    merge, so a retried task's second update changes nothing."""
+
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, acc, more):
+        for key, (first, masks) in more.items():
+            first0, masks0 = acc.get(key, (first, masks))
+            acc[key] = (min(first, first0),
+                        [a | b for a, b in zip(masks, masks0)])
+        return acc
 
 
-def _frames_from_typed_rdd(spark: SparkSession, rdd,
-                           tables: list[str] | None) -> dict[str, DataFrame]:
-    """rdd of (table, cols_tuple, values_list) → {table: DataFrame}.
+class DumpTables(dict):
+    """``{table: DataFrame}`` of one dump read.  Every frame projects the
+    same cached relation; :meth:`unpersist` releases it."""
 
-    One job computes per-(table, column-list) type masks AND materializes
-    the persisted decode; each table's DataFrame then reads from cache with
-    an explicit schema.
-    """
-    from pyspark.sql.types import StructField, StructType
-    from pyspark import StorageLevel
+    def __init__(self, frames: dict[str, DataFrame], cached: DataFrame):
+        super().__init__(frames)
+        self.cached = cached
 
-    rdd = rdd.persist(StorageLevel.MEMORY_AND_DISK)
+    def unpersist(self) -> None:
+        self.cached.unpersist()
 
-    def part_stats(it):
-        acc: dict = {}
-        for t, cols, vals in it:
-            key = (t, cols)
-            masks = acc.get(key)
-            if masks is None:
-                masks = acc[key] = [0] * len(cols)
+
+def _frames_from_rows(spark: SparkSession, rows, tables: list[str] | None,
+                      description: str) -> DumpTables:
+    """RDD of (table, cols_tuple, values_list) → {table: DataFrame}, from one
+    job named ``description``.  A table dumped with several column lists
+    selects by name, columns in first-seen order, nulls where absent."""
+    sc = spark.sparkContext
+    layouts = sc.accumulator({}, _LayoutMasks())
+
+    def encode(part, it):
+        seen: dict = {}
+        for n, (t, cols, vals) in enumerate(it):
+            if tables and t not in tables:
+                continue
+            masks = seen.setdefault((t, cols), ((part, n), [0] * len(cols)))[1]
+            texts = []
             for j, v in enumerate(vals):
-                masks[j] |= _type_bit(v)
-        yield from acc.items()
+                bit, text = _typed_text(v)
+                masks[j] |= bit
+                texts.append(text)
+            yield t, cols, texts
+        layouts.add(seen)
 
-    def merge(a, b):
-        return [x | y for x, y in zip(a, b)]
+    cached = spark.createDataFrame(
+        rows.mapPartitionsWithIndex(encode),
+        "t string, cols array<string>, vals array<string>",
+        verifySchema=False).cache()
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(description)
+    try:
+        cached.write.format("noop").mode("overwrite").save()
+    except BaseException:
+        cached.unpersist()
+        raise
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
 
-    stats = rdd.mapPartitions(part_stats).reduceByKey(merge).collect()
-
-    # group by table; a table dumped with several column lists (legal in
-    # hand-written dumps) unions by name with nulls for absent columns
-    per_table: dict[str, dict] = {}
-    for (t, cols), masks in stats:
-        info = per_table.setdefault(t, {"order": list(cols), "mask": {}})
-        for c in cols:
-            if c not in info["order"]:
-                info["order"].append(c)
+    types: dict[str, dict] = {}
+    for (t, cols), (_, masks) in sorted(layouts.value.items(),
+                                        key=lambda kv: kv[1][0]):
+        ty = types.setdefault(t, {})
         for c, m in zip(cols, masks):
-            info["mask"][c] = info["mask"].get(c, 0) | m
-
-    out: dict[str, DataFrame] = {}
-    for t in sorted(per_table):
-        if tables and t not in tables:
-            continue
-        order = per_table[t]["order"]
-        cmask = per_table[t]["mask"]
-        schema = StructType([StructField(c, _mask_to_type(cmask[c]), True)
-                             for c in order])
-        masks_in_order = [cmask[c] for c in order]
-        pos = {c: i for i, c in enumerate(order)}
-        tname = t
-
-        def build(rec, _m=masks_in_order, _pos=pos, _n=len(order), _t=tname):
-            rt, cols, vals = rec
-            if list(cols) == list(_pos):  # common case: exact order match
-                return tuple(_coerce(v, m) for v, m in zip(vals, _m))
-            row = [None] * _n
-            for c, v in zip(cols, vals):
-                j = _pos[c]
-                row[j] = _coerce(v, _m[j])
-            return tuple(row)
-
-        data = rdd.filter(lambda r, _t=tname: r[0] == _t).map(build)
-        out[t] = spark.createDataFrame(data, schema, verifySchema=False)
-    return out
+            ty[c] = ty.get(c, 0) | m
+    by_name = F.map_from_arrays("cols", "vals")
+    return DumpTables({t: cached.where(F.col("t") == t).select(*[
+        by_name[c].cast(_mask_to_type(m)).alias(c) for c, m in ty.items()])
+        for t, ty in sorted(types.items())}, cached)
 
 
 # ---------------------------------------------------------------------------
@@ -506,66 +520,58 @@ def _frames_from_typed_rdd(spark: SparkSession, rdd,
 
 def read_sql_dump(spark: SparkSession, path: str,
                   tables: list[str] | None = None,
-                  dialect: str = "postgres") -> dict[str, DataFrame]:
+                  dialect: str = "postgres") -> DumpTables:
     """Parse .sql dump file(s) into per-table DataFrames.
 
-    One task per file (chunked dumps parallelize naturally); rows decode to
-    typed tuples in the same pass and each table gets an explicit schema —
-    see :func:`_frames_from_typed_rdd`.  A single monolithic COPY-format
-    file parses in parallel through :func:`read_copy_dump_parallel`.
+    Tasks get whole files: ``wholeTextFiles``' default ``minPartitions`` is
+    2, so a 12-file dump parses in 2 tasks.  The read's one job parses each
+    file once into a cache that every returned frame projects; the caller
+    releases it with ``unpersist()`` on the returned :class:`DumpTables`
+    (``DumpPipeline.run`` does so once its write returns or raises).
     """
     files = spark.sparkContext.wholeTextFiles(path)
+    n_files = sum(p.serializableHadoopSplit().value().getNumPaths()
+                  for p in files._jrdd.rdd().partitions())
 
     def emit(kv):
-        _fname, text = kv
-        for stmt in split_statements(text, dialect):
-            parsed = parse_insert_rows(stmt, dialect)
-            if parsed is None:
-                parsed = parse_copy_rows(stmt)
-            if parsed is None:
-                continue
-            t, cols, rows = parsed
-            cols_t = tuple(cols)
-            for vals in rows:
-                yield t, cols_t, vals
+        for stmt in split_statements(kv[1], dialect):
+            parsed = parse_insert_rows(stmt, dialect) or parse_copy_rows(stmt)
+            if parsed:
+                t, cols, rows = parsed
+                cols_t = tuple(cols)
+                for vals in rows:
+                    yield t, cols_t, vals
 
-    return _frames_from_typed_rdd(spark, files.flatMap(emit), tables)
+    return _frames_from_rows(spark, files.flatMap(emit), tables,
+                             f"read_sql_dump: {n_files} files")
 
 
 def read_copy_dump_parallel(spark: SparkSession, path: str,
                             tables: list[str] | None = None,
-                            min_partitions: int = 32) -> dict[str, DataFrame]:
+                            min_partitions: int = 32) -> DumpTables:
     """Parse a MONOLITHIC COPY-format dump with full parallelism.
 
-    `read_sql_dump`'s one-task-per-file model is right for chunked dumps but
-    serializes on a single multi-GB pg_dump file.  COPY data lines are
-    line-structured, so this reader splits the file by lines instead:
-
-    1. `textFile(minPartitions=N).zipWithIndex` — distributed read with a
-       global line index.
-    2. The (tiny) set of `COPY ... FROM stdin;` headers and `\\.`
-       terminators is collected to the driver and paired into
-       (start, end, table, columns) block ranges.
-    3. Every data line maps to its block by index range (broadcast ranges,
-       binary-search per line) and decodes in parallel.
+    `read_sql_dump` gives each task whole files, which serializes on one
+    multi-GB pg_dump file, so this reader splits by lines instead:
+    `textFile(minPartitions=N).zipWithIndex` indexes every line; the few
+    `COPY ... FROM stdin;` headers and `\\.` terminators are collected and
+    paired into (start, end, table, columns) block ranges; every data line
+    finds its block by binary search over the broadcast ranges.
 
     Block membership is decided by LINE INDEX alone: a data row whose first
-    field begins with ``COPY `` is legal COPY text (only \\t \\n \\r \\\\ are
-    escaped) and must survive — header-looking lines are only treated as
-    headers when no block is open (a real header cannot appear before the
-    previous ``\\.`` terminator), and interior lines are never re-matched
-    against marker patterns.  A line of exactly ``\\.`` IS always a
-    terminator: a literal backslash in data is escaped to ``\\\\``, so no
-    data row can render as ``\\.``.
-
-    Constraint: the COPY header must sit on one line (pg_dump's output
-    shape).  INSERT statements in the same file are ignored here — mixed
-    dumps go through `read_sql_dump`.
+    field begins with ``COPY `` is legal COPY text and must survive, so a
+    header-looking line is a header only when no block is open.  A line of
+    exactly ``\\.`` is always a terminator: data escapes a backslash to
+    ``\\\\``.  The header must sit on one line (pg_dump's output shape);
+    INSERT statements are ignored here.  The frames share one cache,
+    released as in :func:`read_sql_dump`.
     """
     import bisect
 
-    lines = spark.sparkContext.textFile(path, minPartitions=min_partitions) \
-        .zipWithIndex()
+    lines = spark.sparkContext.textFile(path, minPartitions=min_partitions)
+    n_files = len({p.inputSplit().value().getPath().toString()
+                   for p in lines._jrdd.rdd().partitions()})
+    lines = lines.zipWithIndex()
 
     def is_marker(t):
         line, _idx = t
@@ -582,11 +588,9 @@ def read_copy_dump_parallel(spark: SparkSession, path: str,
             continue
         if open_hdr is not None:
             continue  # 'COPY '-prefixed DATA line inside an open block
-        m = _COPY_HDR_RE.match(line.rstrip().rstrip(";"))
-        if m:
-            open_hdr = (idx, _unquote_ident(m.group("table").split(".")[-1]),
-                        tuple(_unquote_ident(c)
-                              for c in m.group("cols").split(",")))
+        hdr = _copy_header(line.rstrip().rstrip(";"))
+        if hdr:
+            open_hdr = (idx, hdr[0], tuple(hdr[1]))
     if open_hdr is not None:  # unterminated final block: data to EOF
         blocks.append((open_hdr[0], float("inf"), open_hdr[1], open_hdr[2]))
 
@@ -600,13 +604,8 @@ def read_copy_dump_parallel(spark: SparkSession, path: str,
         if i < 0:
             return
         start, end, table, cols = blocks_[i]
-        if not (start < idx < end):  # header/terminator/outside → not data
-            return
-        vals = [_decode_copy_field(f) for f in line.split("\t")]
-        if len(cols) != len(vals):
-            raise ValueError(
-                f"column/value arity mismatch in COPY {table}: "
-                f"{len(cols)} cols vs {len(vals)} values")
-        yield table, cols, vals
+        if start < idx < end:  # strictly inside a block: a data line
+            yield table, cols, _copy_row(table, cols, line)
 
-    return _frames_from_typed_rdd(spark, lines.flatMap(emit), tables)
+    return _frames_from_rows(spark, lines.flatMap(emit), tables,
+                             f"read_copy_dump_parallel: {n_files} files")

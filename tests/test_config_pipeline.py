@@ -295,9 +295,9 @@ def test_jsonl_source_round_trip(spark, sf_dir, tmp_path):
 
 def test_dump_run_releases_only_what_it_persisted(spark, sf_dir, tmp_path):
     """Two sqltext dumps, each followed by a sqltext restore, leave the
-    persistent-RDD registry where it started: the reader's persisted
-    decode is released once each write returns, while an RDD persisted
-    before the runs stays pinned."""
+    persistent-RDD registry where it started and the cache manager empty:
+    the reader's cached parse is released once each write returns, while
+    an RDD persisted before the runs stays pinned."""
     from replibyte_spark.catalog import load_table
     from replibyte_spark.sinks.sqldump_sink import write_sql_dump
 
@@ -310,16 +310,21 @@ def test_dump_run_releases_only_what_it_persisted(spark, sf_dir, tmp_path):
                         f"sqltext://{tmp_path / 'restored'}"},
     })
     jsc = spark.sparkContext._jsc
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()      # frames cached by earlier tests
     pinned = spark.sparkContext.parallelize(range(3)).cache()
     pinned.count()
     try:
         start = set(jsc.getPersistentRDDs().keys())
         assert pinned.id() in start
+        assert cache_manager.isEmpty()
         for name in ("a", "b"):
             info = DumpPipeline(cfg).run(spark, name)
             assert info.tables == ["nation"]
             assert set(jsc.getPersistentRDDs().keys()) == start, name
+            assert cache_manager.isEmpty(), name
             assert list(RestorePipeline(cfg).run(spark)) == ["nation"]
             assert set(jsc.getPersistentRDDs().keys()) == start, name
+            assert cache_manager.isEmpty(), name
     finally:
         pinned.unpersist()

@@ -4,6 +4,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from replibyte_spark.sources.sqldump import parse_insert, split_statements
 
 
@@ -266,8 +268,8 @@ def test_copy_parallel_keeps_copy_prefixed_data_rows(spark, tmp_path):
 
 def test_read_sql_dump_is_single_pass(spark, sf_dir, tmp_path):
     """The decode runs as ONE Spark job (no schema-inference second pass):
-    typed tuples fold the per-column type lattice into the same job that
-    materializes the persisted parse."""
+    the per-column type masks fold into the same job that fills the cached
+    parse, and every returned frame reads only that cache."""
     from replibyte_spark.catalog import load_table
     from replibyte_spark.sinks.sqldump_sink import write_sql_dump
     from replibyte_spark.sources.sqldump import read_sql_dump
@@ -284,3 +286,144 @@ def test_read_sql_dump_is_single_pass(spark, sf_dir, tmp_path):
     jobs = sc.statusTracker().getJobIdsForGroup("sqldump-single-pass")
     assert len(jobs) == 1, f"expected 1 job during read, got {len(jobs)}"
     assert out["nation"].count() == nation.count()
+
+    # the job is named after the reader and its file count, and the
+    # caller's own description comes back after the read
+    files = [f for f in (tmp_path / "dump1").iterdir()
+             if not f.name.startswith(("_", "."))]
+    job = sc._jsc.sc().statusStore().job(jobs[0])
+    assert job.description().get() == f"read_sql_dump: {len(files)} files"
+    assert sc.getLocalProperty("spark.job.description") == "read_sql_dump"
+
+    # later plans read the parse from the JVM cache: every executed plan's
+    # only leaf is InMemoryTableScan and no node evaluates Python
+    def nodes(plan):
+        yield plan
+        kids = plan.children()
+        for i in range(kids.size()):
+            yield from nodes(kids.apply(i))
+
+    for t, df in out.items():
+        plan = list(nodes(df._jdf.queryExecution().executedPlan()))
+        assert {p.nodeName() for p in plan if p.children().isEmpty()} \
+            == {"InMemoryTableScan"}, t
+        assert not [p for p in plan if p.getClass().getName().startswith(
+            "org.apache.spark.sql.execution.python.")], t
+    out.unpersist()
+
+
+def test_duplicate_column_names_raise(spark, tmp_path):
+    """A column listed twice fails loudly, naming the table and the column,
+    in INSERT, COPY and the line-parallel COPY reader's header parse."""
+    from replibyte_spark.sources.sqldump import (parse_copy_rows,
+                                                 parse_insert_rows,
+                                                 read_copy_dump_parallel)
+
+    msg = "duplicate column 'a' in the column list of t"
+    with pytest.raises(ValueError, match=msg):
+        parse_insert_rows("INSERT INTO t (a, b, a) VALUES (1, 2, 3);")
+    with pytest.raises(ValueError, match=msg):
+        parse_copy_rows('COPY public.t (a, "a") FROM stdin;\n1\t2\n\\.')
+    f = tmp_path / "dup.sql"
+    f.write_text("COPY t (a, a) FROM stdin;\n1\t2\n\\.\n")
+    with pytest.raises(ValueError, match=msg):
+        read_copy_dump_parallel(spark, str(f), min_partitions=2)
+
+
+def test_read_sql_dump_matches_row_model(spark, tmp_path):
+    """Differential check of the reader's JVM typing against a row-at-a-time
+    model: each cell decoded by `_decode_value` / `_decode_copy_field`, each
+    column typed by the OR of its cells' type bits, each value coerced to
+    that type.  One seeded dump mixes int, float, int+float, bool, NULL and
+    >int64 cells, quoted numerals, an all-NULL column, a COPY block, and
+    one table written with two column lists."""
+    import random
+
+    from replibyte_spark.sources.sqldump import (_decode_copy_field,
+                                                 _decode_value, read_sql_dump)
+
+    # the model's typing rules
+    T_BOOL, T_INT, T_FLOAT, T_STR, T_BIGNUM = 1, 2, 4, 8, 16
+
+    def type_bit(v):
+        if v is None:
+            return 0
+        if isinstance(v, bool):
+            return T_BOOL
+        if isinstance(v, int):
+            return T_INT | (T_BIGNUM if abs(v) > (1 << 63) - 1 else 0)
+        return T_FLOAT if isinstance(v, float) else T_STR
+
+    def mask_to_type(mask):
+        return {T_BOOL: "boolean", T_INT: "bigint", T_FLOAT: "double",
+                T_INT | T_FLOAT: "double"}.get(mask, "string")
+
+    def coerce(v, mask):
+        if v is None:
+            return None
+        if mask in (T_FLOAT, T_INT | T_FLOAT):
+            return float(v)
+        if mask in (T_BOOL, T_INT):
+            return v
+        if isinstance(v, bool):
+            return "true" if v else "false"
+        return v if isinstance(v, str) else str(v)
+
+    rng = random.Random(21)
+    big = str(1 << 63)
+    cells = {
+        "i": lambda: str(rng.randint(-10**6, 10**6)),
+        "f": lambda: rng.choice([repr(rng.uniform(-1e3, 1e3)), "1e300",
+                                 "2.5e-8", ".5"]),
+        "n": lambda: rng.choice([str(rng.randint(-99, 99)), "1E5", "-0.0",
+                                 f"{rng.uniform(0, 9):.3f}"]),
+        "b": lambda: rng.choice(["TRUE", "FALSE", "true"]),
+        "edge": lambda: rng.choice([str((1 << 63) - 1), str(1 - (1 << 63))]),
+        "big": lambda: rng.choice([big, f"-{big}1", "12"]),
+        "q": lambda: rng.choice(["'42'", "'1.5'", "'true'", "'it''s'"]),
+        "mixed": lambda: rng.choice(["1", "TRUE", "2.5", "'x'"]),
+        "z": lambda: "NULL",
+    }
+    sql, records = [], []        # records: (table, cols, decoded values)
+
+    def insert(table, cols, gens, n):
+        rows = [[g() if rng.random() > 0.15 else "NULL" for g in gens]
+                for _ in range(n)]
+        sql.append(f"INSERT INTO {table} ({', '.join(cols)}) VALUES "
+                   + ", ".join(f"({', '.join(r)})" for r in rows) + ";")
+        records.extend((table, cols, [_decode_value(c) for c in r])
+                       for r in rows)
+
+    for _ in range(6):
+        insert("mix", list(cells), list(cells.values()), 5)
+    insert("two", ["a", "b"], [cells["i"], cells["q"]], 6)
+    insert("two", ["c", "a"], [cells["b"], cells["f"]], 6)
+    copy = [[str(rng.randint(0, 9)), rng.choice(["\\N", "3.25", "7"]),
+             rng.choice(["a\\tb", "\\N", "12", "x y"])] for _ in range(8)]
+    sql.append("COPY public.cp (x, y, s) FROM stdin;\n"
+               + "".join("\t".join(r) + "\n" for r in copy) + "\\.")
+    records.extend(("cp", ["x", "y", "s"], [_decode_copy_field(f) for f in r])
+                   for r in copy)
+    d = tmp_path / "typed"
+    d.mkdir()
+    (d / "dump.sql").write_text("\n".join(sql) + "\n")
+
+    out = read_sql_dump(spark, str(d))
+    try:
+        assert sorted(out) == ["cp", "mix", "two"]
+        for t, df in out.items():
+            order, masks = [], {}
+            for rt, cols, vals in records:
+                if rt == t:
+                    for c, v in zip(cols, vals):
+                        if c not in masks:
+                            order.append(c)
+                        masks[c] = masks.get(c, 0) | type_bit(v)
+            assert df.dtypes == [(c, mask_to_type(masks[c])) for c in order], t
+            want = [tuple(coerce(dict(zip(cols, vals)).get(c), masks[c])
+                          for c in order)
+                    for rt, cols, vals in records if rt == t]
+            got = [tuple(r) for r in df.collect()]
+            assert sorted(got, key=repr) == sorted(want, key=repr), t
+    finally:
+        out.unpersist()
