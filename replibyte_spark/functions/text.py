@@ -48,70 +48,6 @@ def char_count_sql(d: str, text: str) -> str:
     return f"length({text})"
 
 
-#: scripts written WITHOUT inter-word spaces (kana, CJK ideographs,
-#: Thai) — whitespace tokenization sees a whole sentence as one "token"
-#: there, silently destroying token budgets, packing and mixing ratios
-#: on multilingual corpora.  Same \x{...} class syntax as functions/lid.py
-#: (identical in Java regex and RE2).
-NOSPACE_SCRIPT_RE = r"[\x{3040}-\x{30FF}\x{4E00}-\x{9FFF}\x{0E00}-\x{0E7F}]"
-
-
-def nospace_char_count_sql(d: str, text: str) -> str:
-    """Exact count of no-space-script chars (strip-and-diff, one regexp
-    scan)."""
-    t = f"coalesce({text}, '')"
-    stripped = D.regexp_replace(d, t, NOSPACE_SCRIPT_RE + "+", "")
-    return f"(length({t}) - length({stripped}))"
-
-
-def token_count_multiscript_sql(d: str, text: str,
-                                toks: str | None = None) -> str:
-    """Script-aware token estimate for mixed-script corpora (pinned
-    definition, identical both engines):
-
-        n = (# whitespace tokens containing >= 1 spaced-script char)
-          + (# no-space-script chars in the text)
-
-    A pure-Latin text gives exactly the whitespace count; a pure-CJK
-    sentence counts one token per character (the standard char-level
-    estimate for unsegmented scripts); a mixed token ("漢字abc") counts
-    its Latin remainder once plus each CJK char.  NULL → NULL, '' → 0,
-    same contract as token_count_sql."""
-    toks = toks or D.split_ws(d, text)
-    spaced_pred = (f"x -> length({D.regexp_replace(d, 'x', NOSPACE_SCRIPT_RE + '+', '')}) > 0")
-    spaced = D.array_len(d, D.array_filter(d, toks, spaced_pred))
-    return (f"CASE WHEN {text} IS NULL THEN NULL "
-            f"WHEN length(trim({text})) = 0 THEN 0 "
-            f"ELSE {spaced} + {nospace_char_count_sql(d, text)} END")
-
-
-def subword_token_count_sql(d: str, text: str) -> str:
-    """BPE-ish subword token count: the GPT-2-style pre-tokenization
-    restated without lookahead so ONE pattern means the same thing in
-    Java regex (Spark) and RE2 (DuckDB) — contraction suffixes ('s 't
-    're 've 'm 'll 'd), unicode letter runs, digit runs, and punctuation
-    runs each count as one token ("don't stop!" → don / 't / stop / ! =
-    4; "3.14" → 3 / . / 14 = 3).  A deterministic stand-in for a real
-    BPE vocabulary's token count — the budget/packing operators need a
-    tokens-per-doc number whose ORDER matches what a trained tokenizer
-    would produce, not its exact ids.
-
-    The whitespace class is explicit ([ \\t\\n\\x0B\\f\\r]) for the same
-    reason split_ws's is: Java's \\s includes vertical tab, RE2's does
-    not — the one char the engines disagree on.  NULL → NULL, empty/
-    blank → 0 (token_count_sql's contract)."""
-    if d == D.SPARK:
-        pat = ("''(s|t|re|ve|m|ll|d)|\\\\p{L}+|\\\\p{N}+"
-               "|[^ \\\\t\\\\n\\\\x0B\\\\f\\\\r\\\\p{L}\\\\p{N}]+")
-        n = f"size(regexp_extract_all({text}, '{pat}', 0))"
-    else:
-        pat = ("''(s|t|re|ve|m|ll|d)|\\p{L}+|\\p{N}+"
-               "|[^ \\t\\n\\x0B\\f\\r\\p{L}\\p{N}]+")
-        n = f"len(regexp_extract_all({text}, '{pat}'))"
-    return (f"CASE WHEN {text} IS NULL THEN NULL "
-            f"ELSE {D.to_long(d, n)} END")
-
-
 def punct_ratio_sql(d: str, text: str) -> str:
     """Fraction of characters that are punctuation."""
     # translate() deletes chars with no replacement in both dialects
@@ -210,36 +146,3 @@ def col(sql_builder, column: str, **kw) -> Column:
     """Spark Column from any builder in this module."""
     return F.expr(sql_builder(D.SPARK, column, **kw))
 
-
-def dedup_lines_sql(d: str, text: str, sep: str = "\n") -> str:
-    """Remove duplicate segments within one document, keeping the first
-    occurrence in order — FineWeb-style intra-document line dedup (nav
-    menus, repeated footers, boilerplate chrome repeat WITHIN a page
-    long before they repeat across pages).  `sep` picks the segment
-    unit: the newline default is the published line-dedup; ' ' gives
-    token-level first-occurrence dedup (what the single-line synthetic
-    fixture can exercise).  Pure per-row array ops riding the scan:
-    index-filtered first-occurrence selection (position(l, l[i]) = i —
-    both engines' position builtins return the FIRST index, which is
-    also why the obvious array_distinct/list_distinct is NOT used: only
-    Spark documents order preservation) re-joined with `sep`.  O(L²) in
-    the SEGMENT count of one document, independent of corpus size."""
-    import re as _re
-
-    if d == D.SPARK:
-        # Spark's split takes a REGEX — escape the literal separator;
-        # re.escape leaves ' alone, so double it for the SQL literal too
-        pat = _re.escape(sep).replace("\\", "\\\\").replace("'", "''")
-        ln = f"split(coalesce({text}, ''), '{pat}')"
-        idx = (f"filter(sequence(1, size({ln})), "
-               f"i -> array_position({ln}, element_at({ln}, i)) = i)")
-        joiner = (sep.replace("\\", "\\\\").replace("\n", "\\n")
-                  .replace("'", "''"))
-        return (f"array_join(transform({idx}, "
-                f"i -> element_at({ln}, i)), '{joiner}')")
-    sep_d = "chr(10)" if sep == "\n" else D.q(sep)
-    ln = f"string_split(coalesce({text}, ''), {sep_d})"
-    idx = (f"list_filter(generate_series(1, len({ln})), "
-           f"i -> list_position({ln}, ({ln})[i]) = i)")
-    return (f"array_to_string(list_transform({idx}, "
-            f"i -> ({ln})[i]), {sep_d})")

@@ -22,7 +22,7 @@ oracle replicates signatures and candidate sets bit-for-bit.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T_
 
@@ -825,209 +825,6 @@ def contamination_hits(train: DataFrame, benchmark: DataFrame,
             .agg(F.countDistinct("gram").alias("n_shared_grams"),
                  F.countDistinct("__bench_id").alias("n_bench_docs"))
             .orderBy(id_col))
-
-
-# ---------------------------------------------------------------------------
-# boilerplate removal (CCNet-style repeated-chunk suppression)
-# ---------------------------------------------------------------------------
-
-
-def text_chunks(docs: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text", chunk_tokens: int = 10) -> DataFrame:
-    """(id, idx, chunk): the text split into ALIGNED fixed-width token
-    windows (last window partial).  Tokenized once into a column, same
-    split-materialization move as :func:`_exploded_grams`.
-
-    `greatest(..., 0)` guards the sequence bound: Spark's sequence(0, -1)
-    counts DOWN (two spurious chunks), unlike DuckDB's empty series."""
-    w = chunk_tokens
-    toks = D.split_ws(D.SPARK, text_col)
-    with_toks = fan_out(docs.select(F.col(id_col), F.col(text_col))).select(
-        F.col(id_col), F.expr(toks).alias("__toks"))
-    e = (f"transform(sequence(0, greatest(CAST(floor((size(__toks) - 1) "
-         f"/ {w}) AS INT), 0)), "
-         f"i -> struct(i AS idx, "
-         f"array_join(slice(__toks, i * {w} + 1, {w}), ' ') AS chunk))")
-    return (with_toks.select(F.col(id_col), F.explode(F.expr(e)).alias("c"))
-            .select(F.col(id_col), F.col("c.idx").alias("idx"),
-                    F.col("c.chunk").alias("chunk")))
-
-
-def remove_boilerplate(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text", chunk_tokens: int = 10,
-                       min_docs: int = 2) -> DataFrame:
-    """CCNet-style boilerplate suppression: drop every text chunk whose
-    exact content appears in ≥ `min_docs` DISTINCT documents (headers,
-    footers, nav bars, license blurbs — content repeated verbatim across
-    a crawl), then rebuild each document from its surviving chunks in
-    order.  Returns `docs` with `text_col` replaced ('' when everything
-    was boilerplate).
-
-    Scale shape: one explode + one (chunk → distinct-doc-count) aggregation
-    + one anti-join + one per-doc rebuild aggregation — chunk frequency is
-    the classic hot-key aggregation and shuffles on the chunk hash, never
-    pairwise."""
-    chunks = text_chunks(docs, id_col, text_col, chunk_tokens)
-    boiler = (chunks.groupBy("chunk")
-              .agg(F.countDistinct(F.col(id_col)).alias("__f"))
-              .filter(F.col("__f") >= min_docs).select("chunk"))
-    kept = chunks.join(boiler, on="chunk", how="left_anti")
-    rebuilt = (kept.groupBy(id_col)
-               .agg(F.array_join(F.transform(
-                   F.array_sort(F.collect_list(F.struct("idx", "chunk"))),
-                   lambda s: s["chunk"]), " ").alias("__clean")))
-    return (docs.join(rebuilt, on=id_col, how="left")
-            .withColumn(text_col, F.coalesce(F.col("__clean"), F.lit("")))
-            .drop("__clean"))
-
-
-# ---------------------------------------------------------------------------
-# repetition metrics (Gopher-style quality signals)
-# ---------------------------------------------------------------------------
-
-
-def repetition_metrics(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text", top_n: int = 2,
-                       dup_n: int = 5) -> DataFrame:
-    """Per-doc repetition signals in the Gopher-rules family:
-
-    - `top_ngram_frac`: characters covered by occurrences of the single
-      most frequent `top_n`-gram, over total text characters
-      (count × gram length / char length; deterministic count-then-gram
-      tie-break).
-    - `dup_ngram_frac`: characters covered by occurrences of every
-      `dup_n`-gram appearing more than once in the doc, over total text
-      characters (overlapping occurrences counted per occurrence — a
-      repetition SIGNAL, not a partition of the text).
-
-    Both are per-document functions of the text, so (r11, the
-    operators/repetition.py precedent) they are PURE PROJECTIONS riding
-    one scan — the doc's sorted gram array is let-bound, counts fall out
-    of run-length boundaries in the sorted order, and nothing shuffles
-    (the previous form exploded the gram stream twice and aggregated on
-    the doc id).  Tie-break and arithmetic are unchanged (array_max over
-    (cnt, gram) = the old max(struct(c, gram))); filter on the fractions
-    to drop the gibberish/repetition tail of a crawl."""
-    from .repetition import _let
-
-    d = D.SPARK
-    toks = D.split_ws(d, text_col)
-
-    def runs_parts(sp: str) -> "tuple[str, str]":
-        b = (f"CASE WHEN size({sp}) >= 1 THEN "
-             f"filter(sequence(1, size({sp})), j -> j = 1 "
-             f"OR element_at({sp}, j) != element_at({sp}, j - 1)) "
-             f"ELSE CAST(array() AS array<int>) END")
-        runs = (f"transform(sequence(1, size(b0)), k -> named_struct("
-                f"'cnt', CAST((CASE WHEN k < size(b0) "
-                f"THEN element_at(b0, k + 1) "
-                f"ELSE size({sp}) + 1 END) - element_at(b0, k) AS BIGINT), "
-                f"'gram', element_at({sp}, element_at(b0, k))))")
-        return b, runs
-
-    def sorted_grams(n: int) -> str:
-        return _let(toks, "tk",
-                    f"array_sort({word_ngrams_from_tokens_sql(d, 'tk', n)})")
-
-    b, runs = runs_parts("sp")
-    top_body = ("CASE WHEN size(sp) >= 1 THEN "
-                + _let(f"array_max({runs})", "mx",
-                       "mx.cnt * length(mx.gram)")
-                + " ELSE 0L END")
-    dup_body = (f"CASE WHEN size(sp) >= 2 THEN "
-                f"aggregate({runs}, 0L, (acc, r) -> acc + "
-                f"CASE WHEN r.cnt >= 2 THEN r.cnt * length(r.gram) "
-                f"ELSE 0L END) ELSE 0L END")
-    top = _let(sorted_grams(top_n), "sp", _let(b, "b0", top_body))
-    dup = _let(sorted_grams(dup_n), "sp", _let(b, "b0", dup_body))
-    chars = f"length({text_col})"
-    return (fan_out(docs.select(F.col(id_col), F.col(text_col)))
-            .select(
-                F.col(id_col),
-                F.expr(f"CASE WHEN {chars} > 0 THEN "
-                       f"round(({top}) / {chars}, 6) "
-                       f"ELSE 0.0D END").alias("top_ngram_frac"),
-                F.expr(f"CASE WHEN {chars} > 0 THEN "
-                       f"round(({dup}) / {chars}, 6) "
-                       f"ELSE 0.0D END").alias("dup_ngram_frac"))
-            .orderBy(id_col))
-
-
-# ---------------------------------------------------------------------------
-# exact duplicate-span removal (Lee et al., "Deduplicating Training Data
-# Makes Language Models Better" — substring-granularity dedup)
-# ---------------------------------------------------------------------------
-
-
-def positioned_grams(docs: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text",
-                     span_tokens: int = 8) -> DataFrame:
-    """(id, pos, gram): every SLIDING window of `span_tokens` consecutive
-    tokens with its 1-based start position — unaligned, unlike
-    :func:`text_chunks`.  Docs shorter than the span produce no rows.
-
-    The short-doc guard is a CASE inside the projection (empty array →
-    explode drops the doc), NOT a `.filter(size(__toks) >= n)`: Catalyst
-    substitutes the alias when pushing a filter below fan_out's
-    exchange, so the guard used to re-inline the whole regex
-    tokenization into a predicate evaluated single-task on the one-split
-    scan (the r13 sunk-filter sweep; same fix shape as
-    chunk_documents).  sequence(1, 0) would count DOWN, hence the
-    explicit CASE rather than a clamped upper bound."""
-    n = span_tokens
-    toks = D.split_ws(D.SPARK, text_col)
-    with_toks = (fan_out(docs.select(F.col(id_col), F.col(text_col)))
-                 .select(F.col(id_col), F.expr(toks).alias("__toks")))
-    e = (f"CASE WHEN __toks IS NULL OR size(__toks) < {n} THEN "
-         f"array() ELSE "
-         f"transform(sequence(1, size(__toks) - {n} + 1), "
-         f"i -> struct(i AS pos, "
-         f"array_join(slice(__toks, i, {n}), ' ') AS gram)) END")
-    return (with_toks.select(F.col(id_col), F.explode(F.expr(e)).alias("g"))
-            .select(F.col(id_col), F.col("g.pos").alias("pos"),
-                    F.col("g.gram").alias("gram")))
-
-
-def remove_duplicate_spans(docs: DataFrame, id_col: str = "doc_id",
-                           text_col: str = "text", span_tokens: int = 8,
-                           min_count: int = 2) -> DataFrame:
-    """Substring-granularity exact dedup: delete every token covered by a
-    `span_tokens`-long window whose exact text occurs ≥ `min_count` times
-    in the whole corpus (across docs OR repeated within one doc), then
-    rebuild each text from its surviving tokens in order.  The
-    set-at-a-time restatement of the suffix-array dedup: shared windows
-    play the role of duplicated suffixes.
-
-    Scale shape: one gram explode + a gram-frequency aggregation (hot-key
-    agg on the gram hash) + a semi-join back to positions + one covered-
-    position explode + a per-doc rebuild — no suffix array, no pairwise
-    comparison, every step a shuffle on (id) or (gram)."""
-    n = span_tokens
-    grams = positioned_grams(docs, id_col, text_col, n)
-    dup = (grams.groupBy("gram").agg(F.count(F.lit(1)).alias("__c"))
-           .filter(F.col("__c") >= min_count).select("gram"))
-    covered = (grams.join(dup, on="gram", how="leftsemi")
-               .select(F.col(id_col),
-                       F.explode(F.expr(
-                           f"sequence(pos, pos + {n} - 1)")).alias("pos"))
-               .distinct())
-    toks = D.split_ws(D.SPARK, text_col)
-    positions = (fan_out(docs.select(F.col(id_col), F.col(text_col)))
-                 .select(F.col(id_col), F.expr(toks).alias("__toks"))
-                 .select(F.col(id_col), F.explode(F.expr(
-                     "transform(sequence(1, size(__toks)), "
-                     "i -> struct(i AS pos, element_at(__toks, i) AS tok))"))
-                     .alias("p"))
-                 .select(F.col(id_col), F.col("p.pos").alias("pos"),
-                         F.col("p.tok").alias("tok")))
-    kept = positions.join(covered, on=[id_col, "pos"], how="left_anti")
-    rebuilt = (kept.groupBy(id_col)
-               .agg(F.array_join(F.transform(
-                   F.array_sort(F.collect_list(F.struct("pos", "tok"))),
-                   lambda s: s["tok"]), " ").alias("__clean")))
-    return (docs.join(rebuilt, on=id_col, how="left")
-            .withColumn(text_col, F.coalesce(F.col("__clean"), F.lit("")))
-            .drop("__clean"))
 
 
 # ---------------------------------------------------------------------------

@@ -76,44 +76,6 @@ def pack_token_budget(df, group_col: str, order_col: str, token_col,
     return df.withColumn(bin_alias, F.floor(prefix / budget))
 
 
-def assemble_packed_sequences(df, group_col: str, order_col: str,
-                              token_col: str, text_col: str, budget: int,
-                              sep: str = "\n"):
-    """Turn token-budget bins into actual training sequences: per
-    (group, bin), concatenate the member docs' text in `order_col` order
-    and carry per-doc token OFFSETS, so a reader can mask attention at
-    document boundaries without re-tokenizing.
-
-    Two windows, both partitioned by (group) then (group, bin) — never a
-    global sort; sequence text is built by one ordered collect_list per
-    bin, whose size is budget-bounded by construction (a bin holds
-    ~`budget` tokens, so the concatenated string is bounded regardless of
-    corpus size — the property that makes this safe at 100 TB where an
-    unbounded per-group collect would not be)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    packed = pack_token_budget(df, group_col, order_col, token_col, budget)
-    wb = (Window.partitionBy(group_col, "bin_id").orderBy(order_col)
-          .rowsBetween(Window.unboundedPreceding, -1))
-    with_off = packed.withColumn(
-        "tok_offset", F.coalesce(F.sum(token_col).over(wb), F.lit(0)))
-    entry = F.struct(F.col(order_col), F.col(text_col).alias("__t"),
-                     F.col("tok_offset").alias("__o"),
-                     F.col(token_col).alias("__n"))
-    return (with_off.groupBy(group_col, "bin_id")
-            .agg(F.count(F.lit(1)).alias("n_docs"),
-                 F.sum(token_col).cast("long").alias("seq_tokens"),
-                 F.array_join(
-                     F.transform(F.array_sort(F.collect_list(entry)),
-                                 lambda s: s["__t"]), sep).alias("seq_text"),
-                 F.transform(F.array_sort(F.collect_list(entry)),
-                             lambda s: F.struct(
-                                 s["__o"].cast("long").alias("start"),
-                                 (s["__o"] + s["__n"]).cast("long")
-                                 .alias("end"))).alias("doc_offsets")))
-
-
 def chunk_documents(df, id_col: str = "doc_id", text_col: str = "text",
                     chunk_tokens: int = 128, overlap: int = 32):
     """Fixed-stride overlapping token windows per document — the

@@ -9,14 +9,14 @@ Design:
   (`mime`, `n_bytes`, plus per-modality fields) — scans prune the binary
   column away unless a stage actually touches it (column pruning is the
   whole ballgame when rows carry megabytes).
-- decode / feature-extract / resize / frame-sample run as Arrow-batched
-  `mapInPandas` stages: one Python worker per partition, whole record
-  batches, binary never round-trips through per-row pickling.
-- The real codecs (PIL / torchaudio / av) are NOT in this container, so the
-  decode body is gated behind an import-try and falls back to a
-  clearly-marked DETERMINISTIC FAKE (derived from md5 of the bytes) — the
-  schema, partitioning, UDF signature and batch shape are real and tested;
-  swap `_fake_decode` for the library call in production.
+- decode runs as an Arrow-batched `mapInPandas` stage: one Python worker
+  per partition, whole record batches, binary never round-trips through
+  per-row pickling.
+- The real codec (PIL) may be absent, so the decode body is gated behind
+  an import-try and falls back to a clearly-marked DETERMINISTIC FAKE
+  (derived from md5 of the bytes) — the schema, partitioning, UDF
+  signature and batch shape are real and tested; swap `_fake_decode` for
+  the library call in production.
 - Partition sizing: `repartition_for_binary` targets a bytes-per-partition
   budget instead of row counts — at 100 TB row-count-based partitioning
   makes multi-GB tasks.
@@ -35,7 +35,6 @@ from ..util import fan_out
 
 DECODE_SCHEMA = ("doc_id long, mime string, width int, height int, "
                  "n_channels int, n_pixels long")
-FRAME_SCHEMA = "doc_id long, frame_idx int, frame_md5 string"
 
 
 def attach_binary_content(df: DataFrame, text_col: str = "text",
@@ -135,119 +134,3 @@ def decode_images(df: DataFrame, content_col: str = "content",
     return (fan_out(df.select(id_col, content_col))
             .mapInPandas(batches, schema=DECODE_SCHEMA))
 
-
-AUDIO_SCHEMA = ("doc_id long, codec string, sample_rate int, n_channels int, "
-                "n_frames long, duration_ms long")
-
-
-def _wav_decode(raw: bytes) -> tuple[str, int, int, int, int] | None:
-    """REAL audio decode for WAV/RIFF payloads via the stdlib `wave` module
-    (no external codec needed): (codec, rate, channels, frames, ms).
-    Returns None when the payload is not a parseable WAV."""
-    import io
-    import wave
-
-    try:
-        with wave.open(io.BytesIO(raw)) as w:
-            rate = w.getframerate()
-            frames = w.getnframes()
-            ms = int(frames * 1000 // rate) if rate else 0
-            return "audio/wav", rate, w.getnchannels(), frames, ms
-    except Exception:
-        return None
-
-
-def _fake_audio_decode(raw: bytes) -> tuple[str, int, int, int, int]:
-    """DETERMINISTIC FAKE for non-WAV payloads (md5-derived, same translate
-    scheme as the SQL dialect so a DuckDB oracle reproduces it)."""
-    hx = hashlib.md5(raw).hexdigest()
-    tr = str.maketrans("abcdef", "123456")
-    rate = 8000 + int(hx[0:4].translate(tr)) % 40000
-    channels = 1 + int(hx[4:6].translate(tr)) % 2
-    frames = 1 + int(hx[6:12].translate(tr)) % 1_000_000
-    return "audio/fake", rate, channels, frames, frames * 1000 // rate
-
-
-def decode_audio(df: DataFrame, content_col: str = "content",
-                 id_col: str = "doc_id") -> DataFrame:
-    """Decode stage: (id, content) → typed audio metadata.
-
-    Arrow-batched mapInPandas.  Real WAV payloads decode through the stdlib
-    `wave` module (a genuinely live path — no container dependency); other
-    payloads get the deterministic fake, which is the oracle path for the
-    text-derived fixture bytes."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for doc_id, payload in zip(pdf[id_col], pdf[content_col]):
-                raw = bytes(payload)
-                meta = _wav_decode(raw) or _fake_audio_decode(raw)
-                out.append((int(doc_id), *meta))
-            yield pd.DataFrame(out, columns=["doc_id", "codec", "sample_rate",
-                                             "n_channels", "n_frames",
-                                             "duration_ms"])
-
-    return (fan_out(df.select(id_col, content_col))
-            .mapInPandas(batches, schema=AUDIO_SCHEMA))
-
-
-def payload_fingerprints(df: DataFrame, content_col: str = "content",
-                         ) -> DataFrame:
-    """Append ``payload_md5`` + ``payload_bytes`` for a binary column —
-    a pure projection (JVM md5 over the bytes, no Python), the universal
-    first index of any multimodal corpus: exact-duplicate detection,
-    shard-stable addressing, cache keys.  Scans still prune the binary
-    column wherever only the fingerprint is consumed downstream."""
-    c = F.col(content_col)
-    return (df.withColumn("payload_md5", F.md5(c))
-            .withColumn("payload_bytes", F.octet_length(c).cast("long")))
-
-
-def dedup_binary_exact(df: DataFrame, content_col: str = "content",
-                       id_col: str = "doc_id") -> DataFrame:
-    """Exact-duplicate removal over a binary payload column: one
-    canonical row (minimum id) survives per distinct payload — the
-    byte-level first tier every image/audio pipeline runs before any
-    perceptual matching (which needs real codecs; see decode_images).
-
-    Scale shape: one md5 projection + one (digest → min id) aggregation
-    + one semi-join — the exact-dedup shape of operators/dedup.py lifted
-    to binary.  A viral payload repeated millions of times is absorbed
-    by map-side partial min() before the shuffle, so hot payloads cost
-    one partial per map task, not one shuffled row per copy.
-
-    Rows whose payload is NULL are kept unconditionally (no content, so
-    nothing to be a duplicate OF — md5(NULL) is NULL, and the null-
-    unsafe semi-join used to drop them silently, the r10 ADVICE
-    finding); they ride a filter+union around the dedup subtree."""
-    fp = payload_fingerprints(df, content_col)
-    nn = fp.filter(F.col("payload_md5").isNotNull())
-    keep = (nn.groupBy("payload_md5")
-            .agg(F.min(id_col).alias(id_col)))
-    return (nn.join(keep, [id_col, "payload_md5"], "left_semi")
-            .unionByName(fp.filter(F.col("payload_md5").isNull()))
-            .drop("payload_md5", "payload_bytes"))
-
-
-def sample_frames(df: DataFrame, every_n_bytes: int = 64,
-                  content_col: str = "content", id_col: str = "doc_id",
-                  max_frames: int = 8) -> DataFrame:
-    """Frame-sampling stage shape: one input row → N frame rows ("frames"
-    are byte windows here; a real video path swaps the windowing for
-    av.decode).  Demonstrates the 1→N mapInPandas fan-out with bounded
-    output batches."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for doc_id, payload in zip(pdf[id_col], pdf[content_col]):
-                raw = bytes(payload)
-                for idx in range(min(max_frames, max(1, len(raw) // every_n_bytes))):
-                    window = raw[idx * every_n_bytes:(idx + 1) * every_n_bytes]
-                    out.append((int(doc_id), idx,
-                                hashlib.md5(window).hexdigest()))
-            yield pd.DataFrame(out, columns=["doc_id", "frame_idx", "frame_md5"])
-
-    return (fan_out(df.select(id_col, content_col))
-            .mapInPandas(batches, schema=FRAME_SCHEMA))

@@ -228,8 +228,7 @@ def repetition_flags(df: DataFrame, text_col: str = "text",
     join anywhere (the r10 plan shuffled the corpus gram stream and
     joined stats back by id).  ``line_sep``/``para_sep`` parameterize
     the segment granularity (published: newline / blank line) for
-    corpora whose segmenting differs — same precedent as
-    functions/text.py::dedup_lines_sql."""
+    corpora whose segmenting differs."""
     d = D.SPARK
 
     # zero-shuffle does NOT mean zero-exchange-when-narrow: these

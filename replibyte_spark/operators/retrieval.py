@@ -1,11 +1,9 @@
-"""Lexical retrieval (BM25) and hybrid rank fusion (RRF).
+"""Lexical retrieval (BM25).
 
 The semantic half of retrieval lives in operators/similarity.py (ANN over
-embeddings); this module adds the LEXICAL half and the standard way to
-combine them — both public knowledge (Robertson's BM25 as shipped by
-Lucene; Cormack et al.'s reciprocal-rank fusion), both restated as pure
-Catalyst plans with deterministic folds so the DuckDB oracle replays
-scores exactly.
+embeddings); this module adds the LEXICAL half — public knowledge
+(Robertson's BM25 as shipped by Lucene), restated as a pure Catalyst plan
+with deterministic folds so the DuckDB oracle replays scores exactly.
 
 BM25 at 100 TB is an inverted-index join: the corpus side is the
 (term, doc, tf) posting aggregation (word-count shape, one shuffle), the
@@ -22,13 +20,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .. import dialect as D
-from ..util import fan_out
 from .lm import _tokens
 
 BM25_K1 = 1.2
 BM25_B = 0.75
-RRF_K = 60          # Cormack et al.'s constant
 
 
 def bm25_scores(docs: DataFrame, queries: DataFrame, k1: float = BM25_K1,
@@ -144,34 +139,3 @@ def bm25_topk(docs: DataFrame, queries: DataFrame, k: int = 5,
             .filter(F.col("rank") <= k)
             .orderBy("query_id", "rank"))
 
-
-def rrf_fuse(rankings: "list[DataFrame]", k: int = 5,
-             rrf_k: int = RRF_K, id_col: str = "doc_id") -> DataFrame:
-    """Reciprocal-rank fusion of ranked lists: rrf = Σ_lists 1/(K + rank)
-    over the lists where the document appears (Cormack et al. 2009 — the
-    standard lexical×semantic combiner).  Each input carries (query_id,
-    `id_col`, rank); ranks are INTEGERS, so the fused score is a sum of
-    exact-input reciprocals computed identically by any engine — fusion
-    adds no float-divergence surface beyond the division itself.
-    Returns (query_id, id, rrf_score, rank) — top-k per query, score
-    rounded to 6dp, ties broken by ascending id."""
-    if not rankings:
-        raise ValueError("rrf_fuse needs at least one ranking")
-    parts = [r.select("query_id", F.col(id_col),
-                      F.expr(f"1.0D / ({rrf_k} + rank)").alias("c"))
-             for r in rankings]
-    allc = parts[0]
-    for p in parts[1:]:
-        allc = allc.unionByName(p)
-    # the fold is over the (tiny, <= len(rankings)) contribution list per
-    # (query, doc) — sorted for the usual cross-engine bit-stability
-    fused = (allc.groupBy("query_id", id_col)
-             .agg(F.round(
-                 F.aggregate(F.array_sort(F.collect_list("c")),
-                             F.lit(0.0), lambda a, x: a + x),
-                 6).alias("rrf_score")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("rrf_score"),
-                                               F.asc(id_col))
-    return (fused.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .orderBy("query_id", "rank"))

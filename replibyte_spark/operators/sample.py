@@ -15,10 +15,9 @@ Strategies:
 - :func:`stratified_percent_filter` — per-stratum rates (training-data
   curation: downsample the dominant language/source, keep the tail) — still
   a pure per-row predicate, zero shuffles.
-- :func:`stratified_sample_n` — EXACTLY n rows per stratum, chosen by
-  deterministic hash rank (the distributed analogue of per-group reservoir
-  sampling).  One shuffle on the stratum key; the window is per-group, never
-  global.
+- :func:`per_group_cap` — EXACTLY min(cap, |group|) rows per group, chosen
+  by deterministic hash rank (the distributed analogue of per-group
+  reservoir sampling); only over-cap groups pay the sort shuffle.
 - :func:`systematic_percent` — reference-faithful every-k-th-row selection.
   Needs a global row_number (single-partition sort bottleneck), so it is the
   small-data/compat path only.
@@ -26,7 +25,7 @@ Strategies:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -66,20 +65,6 @@ def stratified_percent_filter(df: DataFrame, key: str, stratum: str,
                               salt: str = "strata") -> DataFrame:
     return df.filter(F.expr(
         stratified_percent_sql(D.SPARK, key, stratum, rates, default_pct, salt)))
-
-
-def stratified_sample_n(df: DataFrame, stratum: str, key: str, n: int,
-                        salt: str = "strata-n") -> DataFrame:
-    """Exactly min(n, |stratum|) rows per stratum, deterministically: rank
-    rows inside each stratum by a hash of the key and keep the first n.
-
-    r12: delegates to :func:`per_group_cap` — same ordering convention
-    ((md5(salt||key), key)), so the kept SET is identical to the
-    original single-window rendering, but under-cap strata now bypass
-    the sort entirely and only the over-cap head is ranked (the skew
-    lesson per_group_cap learned in r11, VERDICT item 7: one code path
-    for capped-group selection instead of a naive global-window twin)."""
-    return per_group_cap(df, stratum, key, n, salt=salt)
 
 
 def systematic_percent(df: DataFrame, order_key: str, pct: int) -> DataFrame:
@@ -158,33 +143,6 @@ def token_budget_mix(docs: DataFrame, weights: dict[str, float],
         f"{draw} < (CASE {stratum_col} {branches} ELSE 0 END)"))
 
 
-def shard_shuffle(df: DataFrame, id_col: str, seed: str = "shuffle",
-                  n_shards: int = 64) -> DataFrame:
-    """Deterministic global training-order shuffle, sharded for scale.
-
-    A literal global shuffle (ORDER BY random key) funnels 100 TB through
-    one total-order sort; training readers don't need that — they need (a)
-    a reproducible order and (b) no locality between neighboring input
-    docs.  Both come from two hash draws: `shard = md5(seed||id) mod
-    n_shards` spreads any input clustering across shards, and `pos` orders
-    WITHIN a shard by an independent second draw.  One shuffle on the
-    shard key, per-shard windows run in parallel, and the (shard, pos)
-    addressing is stable under retries and engine changes — the property
-    a resumable multi-epoch reader needs.  Different `seed` = a fresh
-    epoch permutation.  Both draws are the UNIFORM hash family
-    (hash_uniform_*): the biased translate-trick hash would skew shard
-    sizes (digits 1-6 twice as likely), and unequal shards are straggler
-    partitions at scale."""
-    shard = D.hash_uniform_mod(D.SPARK, id_col, f"{seed}-shard", n_shards)
-    draw = D.hash_uniform_long(D.SPARK, id_col, f"{seed}-pos")
-    w = (Window.partitionBy("shard")
-         .orderBy(F.col("__draw").asc(), F.col(id_col).asc()))
-    return (df.withColumn("shard", F.expr(shard).cast("int"))
-            .withColumn("__draw", F.expr(draw))
-            .withColumn("pos", F.row_number().over(w).cast("long"))
-            .drop("__draw"))
-
-
 def corpus_quality_report(docs: DataFrame, group_col: str = "source",
                           tokens_col: str = "n_tokens",
                           quality_col: str = "quality",
@@ -210,61 +168,6 @@ def corpus_quality_report(docs: DataFrame, group_col: str = "source",
                  *pcts,
                  F.round(F.avg(quality_col), 6).alias("avg_quality"))
             .orderBy(group_col))
-
-
-def leakage_free_splits(docs: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text", val_permille: int = 100,
-                        seed: str = "split", threshold: float = 0.8,
-                        n_hashes: int = 12, bands: int = 4,
-                        n: int = 3) -> DataFrame:
-    """Train/val split with NEAR-DUP leakage control: assign each doc by
-    a deterministic uniform hash (val_permille/1000 to 'val'), then
-    DEMOTE to 'train' every val doc that is a MinHash near-dup of a
-    train doc — a heldout set sharing near-duplicates with train
-    measures memorization, not generalization (the dedup-side sibling of
-    benchmark decontamination, which protects external eval suites; this
-    protects the pipeline's own split).
-
-    Only DIRECT cross-split pairs demote (the standard operating point);
-    val–val duplicates stay val, and a val doc connected to train only
-    through another val doc is not treated as leaked.  Deterministic:
-    the hash assignment and the demotion set are pure functions of the
-    corpus, stable under retries — a resumed run reproduces the split.
-
-    Scale shape: one uniform-hash projection + the banded-LSH near-dup
-    pass this repo already runs for dedup (never pairwise) + one
-    semi-join to demote."""
-    from ..operators.dedup import minhash_near_dup_pairs
-
-    if not 0 <= val_permille <= 1000:
-        # a typo'd rate would silently produce an all-val or all-train
-        # split with exit code 0 (same failure class the chunk_documents
-        # guard closes)
-        raise ValueError(
-            f"val_permille must be in [0, 1000], got {val_permille}")
-    draw = D.hash_uniform_mod(D.SPARK, id_col, seed, 1000)
-    assigned = docs.withColumn(
-        "split", F.when(F.expr(draw) < val_permille,
-                        F.lit("val")).otherwise(F.lit("train")))
-    pairs = minhash_near_dup_pairs(docs, id_col, text_col,
-                                   threshold=threshold, n_hashes=n_hashes,
-                                   bands=bands, n=n)
-    sp = assigned.select(F.col(id_col), "split")
-    pa = sp.select(F.col(id_col).alias("id_a"),
-                   F.col("split").alias("split_a"))
-    pb = sp.select(F.col(id_col).alias("id_b"),
-                   F.col("split").alias("split_b"))
-    crossed = (pairs.join(pa, "id_a").join(pb, "id_b")
-               .filter(F.col("split_a") != F.col("split_b")))
-    leaky = (crossed.selectExpr(
-        f"CASE WHEN split_a = 'val' THEN id_a ELSE id_b END AS {id_col}")
-        .distinct())
-    return (assigned.join(leaky.withColumn("__leak", F.lit(True)),
-                          on=id_col, how="left")
-            .withColumn("split",
-                        F.when(F.col("__leak").isNotNull(), F.lit("train"))
-                        .otherwise(F.col("split")))
-            .drop("__leak"))
 
 
 def temperature_mix(docs: DataFrame, total_budget: int,
@@ -318,11 +221,11 @@ def per_group_cap(df: DataFrame, group_col: str, key_col: str, cap: int,
     pipeline), keeping a DETERMINISTIC hash-ranked subset so reruns,
     retries and the oracle all pick the same rows.
 
-    :func:`stratified_sample_n` is the naive rendering: ONE window over
-    the whole corpus partitioned by group — every row pays the sort
-    shuffle, and at a 100 TB crawl with per-domain caps the overwhelming
-    majority of domains are already under cap and need no ranking at
-    all.  This is the two-phase scale path:
+    The naive rendering is ONE window over the whole corpus partitioned
+    by group — every row pays the sort shuffle, and at a 100 TB crawl
+    with per-domain caps the overwhelming majority of domains are
+    already under cap and need no ranking at all.  This is the
+    two-phase scale path:
 
     1. one group-keyed count aggregation (map-side partial) finds the
        OVER-cap groups — at realistic caps a tiny fraction of groups;
@@ -341,8 +244,8 @@ def per_group_cap(df: DataFrame, group_col: str, key_col: str, cap: int,
     read costs is bought back many times over by the sort shuffle
     shrinking from |corpus| to |head| (persist the input first if the
     scan itself dominates).  Ordering inside a group is
-    (md5(salt||key), key) — the stratified_sample_n convention — so the
-    DuckDB oracle reproduces the exact kept set.
+    (md5(salt||key), key), so the DuckDB oracle reproduces the exact
+    kept set.
 
     `head_prefilter_margin` (e.g. 4.0) adds the MONSTER-group lever: a
     single spam domain with 10^8 pages would still funnel through one

@@ -878,36 +878,6 @@ def embedding_near_dup_pairs_bucketed(vectors: DataFrame,
             .orderBy("id_a", "id_b"))
 
 
-def hash_embedding_from_md5_sql(d: str, h: str, dim: int = 16) -> str:
-    """Deterministic pseudo-embedding from a precomputed md5-hex column:
-    hex pair k → ((value in [0,255]) − 127.5) / 127.5 ∈ [−1, 1].
-
-    NOT a semantic embedder — the cross-engine TEST-VECTOR generator for
-    pipelines whose real embedder is an external model (the multimodal
-    deterministic-fake pattern applied to text): the Spark plumbing —
-    schema, chunk addressing, bucketing, top-k — is real and
-    oracle-checked, only the vector values are a stand-in.  Pass the md5
-    as a materialized COLUMN (`h`), not an inline call, or it would be
-    re-evaluated once per dimension.  Never zero-norm: each component is
-    an odd multiple of 1/255, so the [-1,1] grid excludes exact 0."""
-    if not 1 <= dim <= 16:
-        raise ValueError(f"dim must be in [1, 16] (one md5 = 32 hex chars), "
-                         f"got {dim}")
-    comps = []
-    for k2 in range(dim):
-        p1, p2 = 2 * k2 + 1, 2 * k2 + 2
-        if d == D.SPARK:
-            val = f"CAST(conv(substr({h}, {p1}, 2), 16, 10) AS DOUBLE)"
-        else:
-            val = (f"((instr('0123456789abcdef', substr({h}, {p1}, 1)) - 1) "
-                   f"* 16.0 + "
-                   f"(instr('0123456789abcdef', substr({h}, {p2}, 1)) - 1))")
-        comps.append(f"(({val}) - 127.5) / 127.5")
-    if d == D.SPARK:
-        return "array(" + ", ".join(comps) + ")"
-    return "[" + ", ".join(comps) + "]"
-
-
 # ---------------------------------------------------------------------------
 # semantic incremental admit against the materialized ANN index (round 8)
 # ---------------------------------------------------------------------------

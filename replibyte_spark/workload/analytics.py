@@ -293,41 +293,6 @@ register(Query("purchases_asof_recent_click", purchases_asof_recent_click,
                ASOF_TOL_ORACLE, tags=("join", "asof")))
 
 
-# --- banded range join --------------------------------------------------------
-
-def purchases_clicks_last_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per purchase: how many clicks the user made in the preceding hour.
-    Banded range join (see operators/rangejoin.py); the oracle is DuckDB's
-    plain inequality join — independent implementation, same semantics."""
-    from ..operators.rangejoin import trailing_window_count
-
-    ev = load_table(spark, sf_dir, "events")
-    purchases = ev.filter("event_type = 'purchase'").select("event_id", "user_id", "ts")
-    clicks = ev.filter("event_type = 'click'").select("user_id", "ts")
-    return (trailing_window_count(purchases, clicks, on="user_id",
-                                  window_seconds=3600,
-                                  count_alias="n_clicks_1h")
-            .select("event_id", "user_id", "n_clicks_1h")
-            .orderBy("event_id"))
-
-
-RANGE_ORACLE = """
-WITH p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
-     c AS (SELECT user_id, ts FROM events WHERE event_type = 'click')
-SELECT p.event_id, p.user_id, count(c.ts) AS n_clicks_1h
-FROM p LEFT JOIN c
-  ON p.user_id = c.user_id
- AND c.ts <= p.ts AND c.ts >= p.ts - INTERVAL 1 HOUR
-GROUP BY p.event_id, p.user_id ORDER BY p.event_id
-"""
-
-# EXTRA since r10 (slot went to bm25_doc_topk): the trailing-window range
-# join stays covered by the purchases_asof_* gates — this is the low-risk
-# sibling of that family, still oracle-checked in pytest
-register(Query("purchases_clicks_last_hour", purchases_clicks_last_hour,
-               RANGE_ORACLE, tags=("join", "range")), extra=True)
-
-
 # --- statistical aggregates --------------------------------------------------
 
 def order_price_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -301,199 +301,6 @@ register(Query("benchmark_decontamination", benchmark_decontamination,
                _decon_oracle(), tags=("dedup", "text")), extra=True)
 
 
-# --- boilerplate removal (repeated-chunk suppression) -----------------------
-
-BOILER_W, BOILER_K = 10, 2
-
-
-def boilerplate_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc token counts before/after CCNet-style repeated-chunk
-    suppression, for the docs the pass actually changed."""
-    from ..functions.text import token_count_sql
-
-    d = D.SPARK
-    docs = load_table(spark, sf_dir, "documents")
-    cleaned = DD.remove_boilerplate(docs, chunk_tokens=BOILER_W,
-                                    min_docs=BOILER_K)
-    before = docs.selectExpr(
-        "doc_id",
-        f"CAST({token_count_sql(d, 'text')} AS BIGINT) AS n_before")
-    after = cleaned.selectExpr(
-        "doc_id",
-        f"CAST({token_count_sql(d, 'text')} AS BIGINT) AS n_after")
-    return (before.join(after, on="doc_id")
-            .filter(F.col("n_after") != F.col("n_before"))
-            .orderBy("doc_id"))
-
-
-def _boilerplate_oracle() -> str:
-    from ..functions.text import token_count_sql
-
-    d = D.DUCK
-    w = BOILER_W
-    toks = D.split_ws(d, "text")
-    return f"""
-WITH toks AS (
-  SELECT doc_id, text, {toks} AS t FROM documents
-), chunks AS (
-  SELECT doc_id, u.idx AS idx, u.chunk AS chunk FROM (
-    SELECT doc_id, unnest(list_transform(
-      generate_series(0, CAST(floor((len(t) - 1) / {w}) AS INT)),
-      i -> {{'idx': i,
-            'chunk': array_to_string(t[i * {w} + 1 : i * {w} + {w}], ' ')}}
-    )) AS u
-    FROM toks
-  )
-), boiler AS (
-  SELECT chunk FROM chunks GROUP BY chunk
-  HAVING count(DISTINCT doc_id) >= {BOILER_K}
-), kept AS (
-  SELECT * FROM chunks WHERE chunk NOT IN (SELECT chunk FROM boiler)
-), rebuilt AS (
-  SELECT doc_id, array_to_string(list(chunk ORDER BY idx), ' ') AS clean
-  FROM kept GROUP BY doc_id
-), paired AS (
-  SELECT d.doc_id,
-         CAST({token_count_sql(d, 'd.text')} AS BIGINT) AS n_before,
-         CAST({token_count_sql(d, "coalesce(r.clean, '')")} AS BIGINT)
-           AS n_after
-  FROM documents d LEFT JOIN rebuilt r USING (doc_id)
-)
-SELECT doc_id, n_before, n_after FROM paired
-WHERE n_after <> n_before ORDER BY doc_id
-"""
-
-
-register(Query("boilerplate_removal", boilerplate_removal,
-               _boilerplate_oracle(), tags=("dedup", "text")), extra=True)
-
-
-# --- repetition metrics (Gopher-style quality signals) ----------------------
-
-REP_TOP_N, REP_DUP_N = 2, 5
-
-
-def doc_repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    return DD.repetition_metrics(docs, top_n=REP_TOP_N, dup_n=REP_DUP_N)
-
-
-def _repetition_oracle() -> str:
-    d = D.DUCK
-    g_top = DD.word_ngrams_sql(d, "text", REP_TOP_N)
-    g_dup = DD.word_ngrams_sql(d, "text", REP_DUP_N)
-    return f"""
-WITH tg AS (
-  SELECT doc_id, unnest({g_top}) AS gram FROM documents
-), tcnt AS (
-  SELECT doc_id, gram, count(*) AS c FROM tg GROUP BY doc_id, gram
-), top AS (
-  SELECT doc_id, c * length(gram) AS top_chars FROM (
-    SELECT doc_id, gram, c,
-           row_number() OVER (PARTITION BY doc_id
-                              ORDER BY c DESC, gram DESC) AS rn
-    FROM tcnt
-  ) WHERE rn = 1
-), dg AS (
-  SELECT doc_id, unnest({g_dup}) AS gram FROM documents
-), dcnt AS (
-  SELECT doc_id, gram, count(*) AS c FROM dg GROUP BY doc_id, gram
-), dup AS (
-  SELECT doc_id, sum(c * length(gram)) AS dup_chars
-  FROM dcnt WHERE c >= 2 GROUP BY doc_id
-)
-SELECT d.doc_id,
-       CASE WHEN length(d.text) > 0
-            THEN round(coalesce(t.top_chars, 0) * 1.0 / length(d.text), 6)
-            ELSE 0.0 END AS top_ngram_frac,
-       CASE WHEN length(d.text) > 0
-            THEN round(coalesce(u.dup_chars, 0) * 1.0 / length(d.text), 6)
-            ELSE 0.0 END AS dup_ngram_frac
-FROM documents d LEFT JOIN top t USING (doc_id) LEFT JOIN dup u USING (doc_id)
-ORDER BY doc_id
-"""
-
-
-register(Query("doc_repetition_metrics", doc_repetition_metrics,
-               _repetition_oracle(), tags=("dedup", "text")), extra=True)
-
-
-# --- exact duplicate-span removal (substring-granularity dedup) -------------
-
-SPAN_L = 8
-
-
-def duplicate_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc token counts before/after removing every token covered by
-    an 8-token window whose exact text occurs >= 2 times in the corpus,
-    for the docs the pass changed."""
-    from ..functions.text import token_count_sql
-
-    d = D.SPARK
-    docs = load_table(spark, sf_dir, "documents")
-    cleaned = DD.remove_duplicate_spans(docs, span_tokens=SPAN_L)
-    before = docs.selectExpr(
-        "doc_id",
-        f"CAST({token_count_sql(d, 'text')} AS BIGINT) AS n_before")
-    after = cleaned.selectExpr(
-        "doc_id",
-        f"CAST({token_count_sql(d, 'text')} AS BIGINT) AS n_after")
-    return (before.join(after, on="doc_id")
-            .filter(F.col("n_after") != F.col("n_before"))
-            .orderBy("doc_id"))
-
-
-def _span_oracle() -> str:
-    from ..functions.text import token_count_sql
-
-    d = D.DUCK
-    n = SPAN_L
-    toks = D.split_ws(d, "text")
-    return f"""
-WITH toks AS (
-  SELECT doc_id, text, {toks} AS t FROM documents
-), grams AS (
-  SELECT doc_id, u.pos AS pos, u.gram AS gram FROM (
-    SELECT doc_id, unnest(list_transform(
-      generate_series(1, len(t) - {n} + 1),
-      i -> {{'pos': i, 'gram': array_to_string(t[i : i + {n} - 1], ' ')}}
-    )) AS u
-    FROM toks WHERE len(t) >= {n}
-  )
-), dup AS (
-  SELECT gram FROM grams GROUP BY gram HAVING count(*) >= 2
-), covered AS (
-  SELECT DISTINCT doc_id, c.p AS pos
-  FROM grams g JOIN dup USING (gram),
-       unnest(generate_series(g.pos, g.pos + {n} - 1)) AS c(p)
-), positions AS (
-  SELECT doc_id, u.pos AS pos, u.tok AS tok FROM (
-    SELECT doc_id, unnest(list_transform(
-      generate_series(1, len(t)), i -> {{'pos': i, 'tok': t[i]}})) AS u
-    FROM toks
-  )
-), kept AS (
-  SELECT p.* FROM positions p LEFT JOIN covered c USING (doc_id, pos)
-  WHERE c.pos IS NULL
-), rebuilt AS (
-  SELECT doc_id, array_to_string(list(tok ORDER BY pos), ' ') AS clean
-  FROM kept GROUP BY doc_id
-), paired AS (
-  SELECT d.doc_id,
-         CAST({token_count_sql(d, 'd.text')} AS BIGINT) AS n_before,
-         CAST({token_count_sql(d, "coalesce(r.clean, '')")} AS BIGINT)
-           AS n_after
-  FROM documents d LEFT JOIN rebuilt r USING (doc_id)
-)
-SELECT doc_id, n_before, n_after FROM paired
-WHERE n_after <> n_before ORDER BY doc_id
-"""
-
-
-register(Query("duplicate_span_removal", duplicate_span_removal,
-               _span_oracle(), tags=("dedup", "text")), extra=True)
-
-
 # --- incremental dedup against a materialized MinHash index (round 7) -------
 
 # agreement = fraction of equal signature components; 9/12 = 0.75 is exact
@@ -599,8 +406,8 @@ ORDER BY id_new, id_corpus
 # outside the timing loop) instead of re-shingling the corpus; compare
 # minhash_near_dup, which recomputes the whole corpus every run.
 # Driver-visible (round 8): the scale-amortization flagship of the r7
-# incremental-ingest layer takes the REGISTRY slot of the redundant
-# frame_samples gate (sibling of image_decode_stats, now EXTRA).
+# incremental-ingest layer takes the REGISTRY slot of a redundant
+# multimodal gate (a sibling of image_decode_stats, since retired).
 register(Query("incremental_index_dedup", incremental_index_dedup,
                _mhi_oracle(), tags=("dedup", "index"), bench=True))
 

@@ -1,7 +1,7 @@
 """Gate queries for the multimodal plumbing.
 
 The binary payloads are derived deterministically from documents.text, so
-the Arrow-batched Python stages (mapInPandas decode / frame-sample) are
+the Arrow-batched Python stage (mapInPandas decode) is
 fully oracle-checkable: the fake decoder derives dimensions from md5 via the
 same translate() scheme the SQL dialect uses, and the fixture text is ASCII
 so DuckDB's md5(VARCHAR) equals the engine's md5-over-bytes.
@@ -68,112 +68,3 @@ FROM h ORDER BY doc_id
 register(Query("image_decode_stats", image_decode_stats, IMAGE_DECODE_ORACLE,
                tags=("multimodal",)))
 
-
-def frame_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """1→N frame-sampling stage (byte windows stand in for decoded frames)."""
-    docs = load_table(spark, sf_dir, "documents")
-    mm = MM.attach_binary_content(docs)
-    return MM.sample_frames(mm, every_n_bytes=64).orderBy("doc_id", "frame_idx")
-
-
-FRAME_ORACLE = """
-SELECT doc_id, CAST(i AS INTEGER) AS frame_idx,
-       md5(substr(text, i * 64 + 1, 64)) AS frame_md5
-FROM documents,
-     LATERAL unnest(generate_series(0,
-        CAST(least(8, greatest(1, octet_length(encode(text)) // 64)) AS BIGINT) - 1)) AS t(i)
-ORDER BY doc_id, frame_idx
-"""
-
-# EXTRA since round 8: still oracle-checked by pytest, but its REGISTRY
-# slot went to incremental_index_dedup (frame_samples is the low-risk
-# sibling of the driver-visible image_decode_stats gate)
-register(Query("frame_samples", frame_samples, FRAME_ORACLE,
-               tags=("multimodal",)), extra=True)
-
-
-def audio_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """mapInPandas audio decode: fixture bytes are not WAV, so every row
-    takes the deterministic fake path the oracle mirrors (the REAL stdlib
-    `wave` path is unit-tested with generated WAV payloads)."""
-    docs = load_table(spark, sf_dir, "documents")
-    mm = MM.attach_binary_content(docs)
-    return MM.decode_audio(mm).orderBy("doc_id")
-
-
-AUDIO_DECODE_ORACLE = """
-WITH h AS (
-  SELECT doc_id, md5(text) AS hx FROM documents
-), f AS (
-  SELECT doc_id,
-         8000 + CAST(translate(substr(hx, 1, 4), 'abcdef', '123456') AS BIGINT) % 40000 AS rate,
-         1 + CAST(translate(substr(hx, 5, 2), 'abcdef', '123456') AS BIGINT) % 2 AS channels,
-         1 + CAST(translate(substr(hx, 7, 6), 'abcdef', '123456') AS BIGINT) % 1000000 AS frames
-  FROM h
-)
-SELECT doc_id, 'audio/fake' AS codec,
-       CAST(rate AS INTEGER) AS sample_rate,
-       CAST(channels AS INTEGER) AS n_channels,
-       CAST(frames AS BIGINT) AS n_frames,
-       CAST(frames * 1000 // rate AS BIGINT) AS duration_ms
-FROM f ORDER BY doc_id
-"""
-
-# EXTRA since round 8 (still oracle-checked by pytest): its REGISTRY
-# slot went to embedding_index_admit — this gate is the low-risk sibling
-# of the driver-visible image_decode_stats (same mapInPandas plumbing)
-register(Query("audio_decode_stats", audio_decode_stats, AUDIO_DECODE_ORACLE,
-               tags=("multimodal",)), extra=True)
-
-
-def binary_payload_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Byte-level exact dedup over a binary payload column (the first
-    tier of every image/audio pipeline) proven on the events table,
-    whose props payloads are heavily duplicated (100 distinct among 10k
-    at sf0.01): per event_type, rows/bytes before and after keeping one
-    canonical row (min event_id) per distinct payload."""
-    ev = (load_table(spark, sf_dir, "events")
-          .select("event_id", "event_type",
-                  F.col("props").cast("binary").alias("content")))
-    kept = MM.dedup_binary_exact(ev, id_col="event_id")
-    size = F.octet_length(F.col("content"))
-    tot = ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum(size).cast("long").alias("bytes_total"))
-    k = kept.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_kept"),
-        F.sum(size).cast("long").alias("bytes_kept"))
-    return tot.join(k, "event_type").orderBy("event_type")
-
-
-BINARY_DEDUP_ORACLE = """
-WITH fp AS (
-  SELECT event_id, event_type, md5(props) AS h,
-         CAST(strlen(props) AS BIGINT) AS nb
-  FROM events
-), keep AS (
-  SELECT h, min(event_id) AS event_id FROM fp GROUP BY h
-), kept AS (
-  -- NULL payloads are kept unconditionally (nothing to duplicate);
-  -- mirrors dedup_binary_exact's filter+union around the semi-join
-  SELECT fp.event_type, fp.nb
-  FROM fp JOIN keep ON fp.h = keep.h AND fp.event_id = keep.event_id
-  UNION ALL
-  SELECT event_type, nb FROM fp WHERE h IS NULL
-), tot AS (
-  SELECT event_type, CAST(count(*) AS BIGINT) AS n_rows,
-         CAST(sum(nb) AS BIGINT) AS bytes_total
-  FROM fp GROUP BY event_type
-), k AS (
-  SELECT event_type, CAST(count(*) AS BIGINT) AS n_kept,
-         CAST(sum(nb) AS BIGINT) AS bytes_kept
-  FROM kept GROUP BY event_type
-)
-SELECT tot.event_type, n_rows, bytes_total, n_kept, bytes_kept
-FROM tot JOIN k ON tot.event_type = k.event_type
-ORDER BY tot.event_type
-"""
-
-register(Query("binary_payload_dedup", binary_payload_dedup,
-               BINARY_DEDUP_ORACLE, tags=("multimodal", "dedup")),
-         extra=True)

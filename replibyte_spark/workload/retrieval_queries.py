@@ -1,7 +1,5 @@
-"""Lexical + hybrid retrieval gates (operators/retrieval.py): BM25
-query-by-example over the documents table, and reciprocal-rank fusion of
-the lexical ranking with the semantic (embedding cosine) ranking — the
-standard hybrid-retrieval combiner, oracle-replayed end to end."""
+"""Lexical retrieval gate (operators/retrieval.py): BM25 query-by-example
+over the documents table, oracle-replayed end to end."""
 
 from __future__ import annotations
 
@@ -10,12 +8,10 @@ from pyspark.sql import functions as F
 
 from .. import dialect as D
 from ..catalog import load_table
-from ..operators import similarity as S
 from . import Query, register
 
 R_QUERY_MOD = 50    # doc_id % 50 == 0 -> query-by-example set
-R_DEPTH = 10        # per-list ranking depth fed into fusion
-R_K = 5             # fused top-k
+R_DEPTH = 10        # ranking depth
 # 0.9, not the library default 0.5: the synthetic fixture's vocabulary is
 # ~31 tokens over the whole corpus (median df 0.78), so a 0.5 cap leaves
 # some query docs with NO surviving term at larger SFs (empty gate).  A
@@ -24,10 +20,9 @@ R_K = 5             # fused top-k
 MAX_DF_RATIO = 0.9
 
 
-def _bm25_ctes() -> str:
-    """Shared oracle CTE chain ending in `lex(query_id, doc_id, score,
-    rank)` — the DuckDB replay of bm25_topk (postings, Zipf-head df cap,
-    sorted-fold scores, ranking)."""
+def _bm25_oracle() -> str:
+    """The DuckDB replay of bm25_topk: postings, Zipf-head df cap,
+    sorted-fold scores, ranking."""
     from ..operators.retrieval import BM25_B, BM25_K1
 
     d = D.DUCK
@@ -37,7 +32,8 @@ def _bm25_ctes() -> str:
     denom = (f"(p.tf + {k1} * ((1.0 - {b}) + {b} * "
              f"(CAST(l.dl AS DOUBLE) / (CAST(st.tot AS DOUBLE) / st.n))))")
     contrib = f"({idf}) * ((p.tf * ({k1} + 1.0)) / {denom})"
-    return f"""tk AS (
+    return f"""
+WITH tk AS (
   SELECT doc_id, unnest({toks}) AS token FROM documents
 ), post AS (
   SELECT doc_id, token, CAST(count(*) AS BIGINT) AS tf FROM tk
@@ -71,7 +67,10 @@ def _bm25_ctes() -> str:
          row_number() OVER (PARTITION BY query_id
                             ORDER BY score DESC, doc_id ASC) AS rank
   FROM bscore WHERE query_id <> doc_id
-)"""
+)
+SELECT query_id, doc_id, score, CAST(rank AS INTEGER) AS rank
+FROM lex WHERE rank <= {R_DEPTH} ORDER BY query_id, rank
+"""
 
 
 def bm25_doc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -84,78 +83,10 @@ def bm25_doc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("rank").cast("int").alias("rank")))
 
 
-def _bm25_oracle() -> str:
-    return f"""
-WITH {_bm25_ctes()}
-SELECT query_id, doc_id, score, CAST(rank AS INTEGER) AS rank
-FROM lex WHERE rank <= {R_DEPTH} ORDER BY query_id, rank
-"""
-
-
-# driver-visible since round 10 (took purchases_clicks_last_hour's
-# slot): the lexical-retrieval family's highest-risk surface — postings,
+# driver-visible since round 10 (took the range-join row's slot): the
+# lexical-retrieval family's highest-risk surface — postings,
 # df cap, idf/length normalization, sorted-fold scores — all replayed by
 # the oracle
 register(Query("bm25_doc_topk", bm25_doc_topk, _bm25_oracle(),
                tags=("retrieval", "text")))
 
-
-def hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RRF fusion of the BM25 lexical ranking and the embedding-cosine
-    semantic ranking for the same query-by-example set (vec_id aligns
-    with doc_id in the fixtures — the usual shared-key layout)."""
-    from ..operators.retrieval import bm25_topk, rrf_fuse
-
-    docs = load_table(spark, sf_dir, "documents")
-    qdocs = docs.filter(F.col("doc_id") % R_QUERY_MOD == 0)
-    lex = bm25_topk(docs, qdocs, k=R_DEPTH, max_df_ratio=MAX_DF_RATIO) \
-        .select("query_id", "doc_id", "rank")
-    emb = load_table(spark, sf_dir, "embeddings")
-    qv = emb.filter(F.col("vec_id") % R_QUERY_MOD == 0)
-    sem = (S.brute_force_topk(emb, qv, k=R_DEPTH)
-           .select("query_id", F.col("neighbor_id").alias("doc_id"),
-                   "rank"))
-    return (rrf_fuse([lex, sem], k=R_K)
-            .select("query_id", "doc_id", "rrf_score",
-                    F.col("rank").cast("int").alias("rank")))
-
-
-def _hybrid_oracle() -> str:
-    from ..operators.retrieval import RRF_K
-
-    d = D.DUCK
-    return f"""
-WITH {_bm25_ctes()}, sscored AS (
-  SELECT q.vec_id AS query_id, e.vec_id AS doc_id,
-         {S.cosine_sql(d, 'q.embedding', 'e.embedding')} AS cosine
-  FROM embeddings q JOIN embeddings e ON e.vec_id <> q.vec_id
-  WHERE q.vec_id % {R_QUERY_MOD} = 0
-), sem AS (
-  SELECT query_id, doc_id,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, doc_id ASC) AS rank
-  FROM sscored
-), contribs AS (
-  SELECT query_id, doc_id, 1.0 / ({RRF_K} + rank) AS c
-  FROM lex WHERE rank <= {R_DEPTH}
-  UNION ALL
-  SELECT query_id, doc_id, 1.0 / ({RRF_K} + rank)
-  FROM sem WHERE rank <= {R_DEPTH}
-), fused AS (
-  SELECT query_id, doc_id,
-         round(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-               list(c ORDER BY c)), (a, x) -> a + x), 6) AS rrf_score
-  FROM contribs GROUP BY query_id, doc_id
-), ranked AS (
-  SELECT query_id, doc_id, rrf_score,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY rrf_score DESC, doc_id ASC) AS rank
-  FROM fused
-)
-SELECT query_id, doc_id, rrf_score, CAST(rank AS INTEGER) AS rank
-FROM ranked WHERE rank <= {R_K} ORDER BY query_id, rank
-"""
-
-
-register(Query("hybrid_rrf_topk", hybrid_rrf_topk, _hybrid_oracle(),
-               tags=("retrieval", "similarity")), extra=True)

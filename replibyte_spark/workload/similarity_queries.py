@@ -744,87 +744,6 @@ def _prepare_ann_fixtures(spark: SparkSession, sf_dir: str) -> None:
     _ann_scale_fixture(spark, sf_dir)
 
 
-# --- RAG ingestion composition: chunk → embed → top-k (round 7) -------------
-
-RAG_CHUNK, RAG_OVERLAP, RAG_DIM, RAG_K = 32, 8, 16, 3
-RAG_ID_STRIDE = 1_000_000
-RAG_QMOD = 29
-
-
-def rag_chunk_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full retrieval-ingestion composition over real operators:
-    overlapping chunking → per-chunk embedding → exact cosine top-k, with
-    (doc, chunk)-derived vector ids addressing back to the source.  The
-    embedder is the deterministic md5 test-vector generator
-    (hash_embedding_from_md5_sql — a stand-in for the external model, so
-    the whole pipeline stays oracle-checkable); everything around it is
-    the production plumbing."""
-    from ..operators.grouped import chunk_documents
-
-    docs = load_table(spark, sf_dir, "documents")
-    ch = chunk_documents(docs, chunk_tokens=RAG_CHUNK, overlap=RAG_OVERLAP)
-    # vec_id packs (doc, chunk) into one long; the assert_true guard
-    # (riding a keep-everything filter, the lsh_topk pattern) makes a
-    # 1M+-chunk document fail loudly instead of silently colliding ids
-    # across documents
-    emb = (ch.withColumn("__h", F.md5("chunk_text"))
-           .select((F.col("doc_id") * RAG_ID_STRIDE + F.col("chunk_idx"))
-                   .alias("vec_id"),
-                   F.col("doc_id"), F.col("chunk_idx"),
-                   F.expr(S.hash_embedding_from_md5_sql(
-                       D.SPARK, "__h", RAG_DIM)).alias("embedding"))
-           .filter(F.coalesce(
-               F.assert_true(F.col("chunk_idx") < RAG_ID_STRIDE,
-                             F.lit("chunk_idx overflows the vec_id "
-                                   "packing stride")),
-               F.lit(True))))
-    # both top-k sides derive from `emb`; materialize the chunk+md5+embed
-    # pipeline ONCE (reclaimable cache-manager persist, eager noop fill —
-    # the corpus.py pattern) instead of running it per side
-    emb = emb.persist()
-    emb.write.mode("overwrite").format("noop").save()
-    queries = emb.filter((F.col("doc_id") % RAG_QMOD == 0)
-                         & (F.col("chunk_idx") == 0))
-    return S.brute_force_topk(emb.select("vec_id", "embedding"),
-                              queries.select("vec_id", "embedding"),
-                              k=RAG_K)
-
-
-def _rag_oracle() -> str:
-    from .text_queries import chunk_ctes
-
-    d = D.DUCK
-    embed = S.hash_embedding_from_md5_sql(d, "h", RAG_DIM)
-    return f"""
-WITH {chunk_ctes(d, RAG_CHUNK, RAG_OVERLAP)}, hashed AS (
-  SELECT doc_id, chunk_idx, md5(array_to_string(w, ' ')) AS h FROM ch
-), emb AS (
-  SELECT doc_id, chunk_idx, doc_id * {RAG_ID_STRIDE} + chunk_idx AS vec_id,
-         {embed} AS v
-  FROM hashed
-), q AS (
-  SELECT vec_id, v FROM emb WHERE doc_id % {RAG_QMOD} = 0 AND chunk_idx = 0
-), scored AS (
-  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-         round({S.dot_sql(d, 'q.v', 'e.v')} /
-               ({S.norm_sql(d, 'q.v')} * {S.norm_sql(d, 'e.v')}), 6)
-           AS cosine
-  FROM q CROSS JOIN emb e WHERE q.vec_id <> e.vec_id
-), ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-         CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY cosine DESC, neighbor_id ASC) AS INT) AS rank
-  FROM scored
-)
-SELECT query_id, neighbor_id, cosine, rank FROM ranked
-WHERE rank <= {RAG_K} ORDER BY query_id, rank
-"""
-
-
-register(Query("rag_chunk_ann_topk", rag_chunk_ann_topk, _rag_oracle(),
-               tags=("similarity", "text", "pipeline")), extra=True)
-
-
 # --- semantic incremental admit against the ANN index (round 8) --------------
 # The embedding sibling of incremental_index_dedup: corpus slice indexed
 # once (build_ann_index storage layout), the arriving batch probes the
@@ -922,7 +841,7 @@ ORDER BY id_new, id_corpus
 """
 
 
-# driver-visible since round 8 (took audio_decode_stats' slot): the
+# driver-visible since round 8 (took a multimodal sibling's slot): the
 # semantic third of the incremental-ingest modality trio
 # bench=True: the semantic sibling of incremental_index_dedup's headline —
 # batch probes the stored layout, corpus never re-hashed

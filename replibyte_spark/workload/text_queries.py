@@ -157,58 +157,6 @@ register(Query("gopher_quality_summary", gopher_quality_summary,
                _gopher_oracle(), tags=("text", "quality")))
 
 
-def segment_dedup_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FineWeb-style intra-document first-occurrence segment dedup
-    (functions/text.py::dedup_lines_sql) summarized per source — the
-    fixture text is single-line, so the gate exercises the TOKEN
-    separator (the newline default is the published line-dedup; same
-    algorithm, fuzz-locked across both separators).  All-integer
-    outputs: exact parity by construction."""
-    from ..util import fan_out
-
-    d = D.SPARK
-    dd = T.dedup_lines_sql(d, "text", " ")
-    seg = "size(split(coalesce(text, ''), ' '))"
-    seg_dd = f"size(split({dd}, ' '))"
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
-    return (docs.selectExpr(
-        "source",
-        f"CAST({seg} AS BIGINT) AS before",
-        f"CAST({seg_dd} AS BIGINT) AS after",
-        f"CASE WHEN {dd} <> coalesce(text, '') THEN 1 ELSE 0 END "
-        f"AS changed")
-        .groupBy("source")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_docs"),
-             F.sum("changed").cast("long").alias("docs_changed"),
-             F.sum("before").cast("long").alias("segs_before"),
-             F.sum("after").cast("long").alias("segs_after"))
-        .orderBy("source"))
-
-
-def _segment_dedup_oracle() -> str:
-    d = D.DUCK
-    dd = T.dedup_lines_sql(d, "text", " ")
-    return f"""
-WITH per AS (
-  SELECT source,
-         CAST(len(string_split(coalesce(text, ''), ' ')) AS BIGINT)
-           AS before,
-         CAST(len(string_split({dd}, ' ')) AS BIGINT) AS after,
-         CASE WHEN {dd} <> coalesce(text, '') THEN 1 ELSE 0 END AS changed
-  FROM documents
-)
-SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(changed) AS BIGINT) AS docs_changed,
-       CAST(sum(before) AS BIGINT) AS segs_before,
-       CAST(sum(after) AS BIGINT) AS segs_after
-FROM per GROUP BY source ORDER BY source
-"""
-
-
-register(Query("segment_dedup_summary", segment_dedup_summary,
-               _segment_dedup_oracle(), tags=("text", "dedup")), extra=True)
-
-
 def repetition_filter_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The published Gopher/MassiveText REPETITION rule set
     (operators/repetition.py — the 13 rules the gopher_quality gate's 7
@@ -217,11 +165,11 @@ def repetition_filter_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-multiplications — float-free parity.
 
     The fixture text is single-line, so the gate runs the line rules at
-    ``line_sep=' '`` (word segments — non-degenerate on this corpus; the
-    segment_dedup_summary precedent) while paragraphs keep the published
-    blank-line split.  Short fixture docs (~55 words) legitimately fail
-    the top-n-gram rules — published Gopher composes these with the
-    >= 50-word quality rule; the gate reports, not filters."""
+    ``line_sep=' '`` (word segments — non-degenerate on this corpus)
+    while paragraphs keep the published blank-line split.  Short fixture
+    docs (~55 words) legitimately fail the top-n-gram rules — published
+    Gopher composes these with the >= 50-word quality rule; the gate
+    reports, not filters."""
     from ..operators.repetition import (REPETITION_RULES, repetition_flags)
 
     docs = load_table(spark, sf_dir, "documents")
@@ -348,50 +296,6 @@ FROM flagged GROUP BY source ORDER BY source
 
 register(Query("c4_filter_summary", c4_filter_summary,
                _c4_oracle(), tags=("text", "quality")), extra=True)
-
-
-def multiscript_token_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Script-aware token counting (functions/text.py::
-    token_count_multiscript_sql) next to the plain whitespace count, per
-    source.  The fixture is pure-Latin, so the two counts must agree
-    exactly — the gate proves the strip/filter path is a no-op precisely
-    when it should be (CJK/Thai behavior is unit-tested on constructed
-    corpora in test_text_multiscript.py)."""
-    from ..util import fan_out
-
-    d = D.SPARK
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
-    per = docs.selectExpr(
-        "source",
-        f"CAST({T.token_count_sql(d, 'text')} AS BIGINT) AS ws",
-        f"CAST({T.token_count_multiscript_sql(d, 'text')} AS BIGINT)"
-        f" AS ms",
-        f"CAST({T.nospace_char_count_sql(d, 'text')} AS BIGINT) AS ns")
-    return (per.groupBy("source")
-            .agg(F.sum("ws").alias("ws_tokens"),
-                 F.sum("ms").alias("multiscript_tokens"),
-                 F.sum("ns").alias("nospace_chars"))
-            .orderBy("source"))
-
-
-def _multiscript_oracle() -> str:
-    d = D.DUCK
-    return f"""
-WITH per AS (
-  SELECT source,
-         CAST({T.token_count_sql(d, 'text')} AS BIGINT) AS ws,
-         CAST({T.token_count_multiscript_sql(d, 'text')} AS BIGINT) AS ms,
-         CAST({T.nospace_char_count_sql(d, 'text')} AS BIGINT) AS ns
-  FROM documents
-)
-SELECT source, sum(ws) AS ws_tokens, sum(ms) AS multiscript_tokens,
-       sum(ns) AS nospace_chars
-FROM per GROUP BY source ORDER BY source
-"""
-
-
-register(Query("multiscript_token_summary", multiscript_token_summary,
-               _multiscript_oracle(), tags=("text",)), extra=True)
 
 
 # --- DSIR importance resampling (r10) ---------------------------------------
@@ -564,8 +468,8 @@ def doc_pack_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pre-window projection is ONE token_count regex — cheap enough that
     # the added round-robin exchange costs more than the serial scan
     # saves (measured 0.51 s fanned vs 0.37 s plain, min-of-3
-    # interleaved); the heavy-projection rows (subword: 0.62x, metrics,
-    # fingerprints) keep the widen
+    # interleaved); the heavy-projection rows (metrics, fingerprints)
+    # keep the widen
     docs = load_table(spark, sf_dir, "documents")
     with_tokens = docs.select(
         "doc_id", "source",
@@ -601,46 +505,7 @@ register(Query("doc_pack_bins", doc_pack_bins, _pack_oracle(),
                tags=("text", "packing")))
 
 
-# --- training-order shuffle + corpus report (round 7) -----------------------
-
-N_SHARDS = 16
-SHUFFLE_SEED = "epoch0"
-
-
-def corpus_shard_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic sharded training-order shuffle over the documents
-    table: (shard, pos) addressing reproducible across engines and runs
-    (operators/sample.py shard_shuffle — one shuffle on the shard key,
-    per-shard rank windows in parallel; no global sort)."""
-    from ..operators.sample import shard_shuffle
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return (shard_shuffle(docs, "doc_id", seed=SHUFFLE_SEED,
-                          n_shards=N_SHARDS)
-            .select("doc_id", "shard", "pos")
-            .orderBy("shard", "pos"))
-
-
-def _shard_shuffle_oracle() -> str:
-    d = D.DUCK
-    shard = D.hash_uniform_mod(d, "doc_id", f"{SHUFFLE_SEED}-shard", N_SHARDS)
-    draw = D.hash_uniform_long(d, "doc_id", f"{SHUFFLE_SEED}-pos")
-    return f"""
-WITH keyed AS (
-  SELECT doc_id, CAST({shard} AS INT) AS shard, {draw} AS dr
-  FROM documents
-)
-SELECT doc_id, shard,
-       CAST(row_number() OVER (PARTITION BY shard ORDER BY dr, doc_id)
-            AS BIGINT) AS pos
-FROM keyed ORDER BY shard, pos
-"""
-
-
-register(Query("corpus_shard_shuffle", corpus_shard_shuffle,
-               _shard_shuffle_oracle(), tags=("text", "sample")),
-         extra=True)
-
+# --- corpus report (round 7) ----------------------------------------------
 
 # quarter percentiles on integer token counts are EXACT in both engines:
 # the interpolation fraction (0.25/0.5/0.75) is a dyadic rational, so
@@ -692,79 +557,6 @@ FROM t GROUP BY source ORDER BY source
 
 register(Query("corpus_report", corpus_report, _corpus_report_oracle(),
                tags=("text",)), extra=True)
-
-
-# --- sequence assembly (round 7) --------------------------------------------
-
-def packed_training_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per (source, bin): the ASSEMBLED training sequence — concatenated
-    member text (hashed for the compare), token totals, and per-doc token
-    offsets for attention masking at document boundaries
-    (operators/grouped.py assemble_packed_sequences)."""
-    from ..functions.text import token_count_sql
-    from ..operators.grouped import assemble_packed_sequences
-
-    # fan_out deliberately NOT applied: same single-token_count shape as
-    # doc_pack_bins above, which A/B'd SLOWER fanned (the exchange costs
-    # more than the one cheap regex saves)
-    docs = load_table(spark, sf_dir, "documents")
-    with_tokens = docs.select(
-        "doc_id", "source", "text",
-        F.expr(token_count_sql(D.SPARK, "text")).cast("long")
-        .alias("n_tokens"))
-    seqs = assemble_packed_sequences(with_tokens, "source", "doc_id",
-                                     "n_tokens", "text", PACK_BUDGET)
-    return (seqs.select(
-        "source", F.col("bin_id").cast("long").alias("bin_id"),
-        "n_docs", "seq_tokens",
-        F.md5("seq_text").alias("seq_md5"),
-        F.array_join(
-            F.transform(F.col("doc_offsets"),
-                        lambda o: F.concat(o["start"].cast("string"),
-                                           F.lit(":"),
-                                           o["end"].cast("string"))),
-            ",").alias("offsets"))
-        .orderBy("source", "bin_id"))
-
-
-def _packed_seq_oracle() -> str:
-    from ..functions.text import token_count_sql
-
-    d = D.DUCK
-    ntok = token_count_sql(d, "text")
-    off = D.to_str(d, "tok_offset")
-    end = D.to_str(d, "tok_offset + n_tokens")
-    return f"""
-WITH t AS (
-  SELECT doc_id, source, text, {ntok} AS n_tokens FROM documents
-), p AS (
-  SELECT doc_id, source, text, n_tokens,
-         coalesce(sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         AS prefix
-  FROM t
-), b AS (
-  SELECT doc_id, source, text, n_tokens,
-         CAST(floor(prefix / {PACK_BUDGET}.0) AS BIGINT) AS bin_id
-  FROM p
-), o AS (
-  SELECT doc_id, source, text, n_tokens, bin_id,
-         coalesce(sum(n_tokens) OVER (PARTITION BY source, bin_id
-                   ORDER BY doc_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         AS tok_offset
-  FROM b
-)
-SELECT source, bin_id, count(*) AS n_docs,
-       CAST(sum(n_tokens) AS BIGINT) AS seq_tokens,
-       md5(string_agg(text, chr(10) ORDER BY doc_id)) AS seq_md5,
-       string_agg({off} || ':' || {end}, ',' ORDER BY doc_id) AS offsets
-FROM o GROUP BY source, bin_id ORDER BY source, bin_id
-"""
-
-
-register(Query("packed_training_sequences", packed_training_sequences,
-               _packed_seq_oracle(), tags=("text", "packing")), extra=True)
 
 
 # --- unigram-LM perplexity (round 7) ----------------------------------------
@@ -932,14 +724,12 @@ def doc_retrieval_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("doc_id", "chunk_idx"))
 
 
-def chunk_ctes(d: str, chunk_tokens: int, overlap: int) -> str:
-    """Shared DuckDB CTE chain ending in `ch(doc_id, chunk_idx,
-    tok_start, w)` — the oracle rendering of chunk_documents, reused by
-    every chunk-consuming gate so the chunk semantics live in ONE place
-    (operator + this helper), not one copy per oracle."""
-    stride = chunk_tokens - overlap
-    toks = D.split_ws(d, "text")
-    return f"""t AS (
+def _chunks_oracle() -> str:
+    """The DuckDB rendering of chunk_documents."""
+    stride = CHUNK_TOKENS - CHUNK_OVERLAP
+    toks = D.split_ws(D.DUCK, "text")
+    return f"""
+WITH t AS (
   SELECT doc_id, {toks} AS toks FROM documents
 ), nz AS (
   SELECT doc_id, toks, len(toks) AS n FROM t
@@ -948,19 +738,15 @@ def chunk_ctes(d: str, chunk_tokens: int, overlap: int) -> str:
   -- cap at greatest(1, n - overlap): a start past that yields a window
   -- that is a strict subsequence of the previous one (operator docstring)
   SELECT doc_id, toks, n,
-         unnest(generate_series(1, greatest(1, n - {overlap}), {stride})) AS s
+         unnest(generate_series(1, greatest(1, n - {CHUNK_OVERLAP}),
+                                {stride})) AS s
   FROM nz
 ), ch AS (
   SELECT doc_id, CAST((s - 1) / {stride} AS BIGINT) AS chunk_idx,
          CAST(s AS BIGINT) AS tok_start,
-         toks[s : least(s + {chunk_tokens} - 1, n)] AS w
+         toks[s : least(s + {CHUNK_TOKENS} - 1, n)] AS w
   FROM starts
-)"""
-
-
-def _chunks_oracle() -> str:
-    return f"""
-WITH {chunk_ctes(D.DUCK, CHUNK_TOKENS, CHUNK_OVERLAP)}
+)
 SELECT doc_id, chunk_idx, tok_start,
        CAST(len(w) AS BIGINT) AS n_tokens,
        md5(array_to_string(w, ' ')) AS chunk_md5
@@ -997,7 +783,7 @@ def _language_id_oracle() -> str:
             f"FROM documents ORDER BY doc_id")
 
 
-# driver-visible since round 8 (took stratified_topn_docs' slot): the
+# driver-visible since round 8 (took a sampling sibling's slot): the
 # one first-class text-analysis operator the layer had been missing
 # bench=True: a pure whole-stage-codegen scan over the corpus — the
 # classifier's cost model IS the scan, and the bench row proves it
@@ -1047,47 +833,6 @@ def _language_margin_oracle() -> str:
 register(Query("doc_language_margin", doc_language_margin,
                _language_margin_oracle(), tags=("text", "lid")),
          extra=True)
-
-
-# --- subword (BPE-ish) token counting (round 8) ------------------------------
-
-def doc_subword_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Whitespace vs subword token counts per document plus their ratio —
-    the number a token-budget pipeline actually needs (budgets are
-    tokenizer tokens, not whitespace words)."""
-    from ..util import fan_out
-
-    # r13 fan_out sweep: five regex folds per row, zero shuffle — the
-    # canonical one-split serialization shape
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
-    d = D.SPARK
-    return (docs.selectExpr(
-        "doc_id",
-        f"{T.token_count_sql(d, 'text')} AS n_ws_tokens",
-        f"{T.subword_token_count_sql(d, 'text')} AS n_subword_tokens",
-        f"CASE WHEN {T.token_count_sql(d, 'text')} > 0 THEN "
-        f"round(CAST({T.subword_token_count_sql(d, 'text')} AS DOUBLE) / "
-        f"{T.token_count_sql(d, 'text')}, 6) ELSE CAST(0.0 AS DOUBLE) END "
-        f"AS subword_ratio")
-        .orderBy("doc_id"))
-
-
-def _subword_oracle() -> str:
-    d = D.DUCK
-    return f"""
-SELECT doc_id,
-       {T.token_count_sql(d, 'text')} AS n_ws_tokens,
-       {T.subword_token_count_sql(d, 'text')} AS n_subword_tokens,
-       CASE WHEN {T.token_count_sql(d, 'text')} > 0 THEN
-         round(CAST({T.subword_token_count_sql(d, 'text')} AS DOUBLE) /
-               {T.token_count_sql(d, 'text')}, 6)
-       ELSE CAST(0.0 AS DOUBLE) END AS subword_ratio
-FROM documents ORDER BY doc_id
-"""
-
-
-register(Query("doc_subword_tokens", doc_subword_tokens, _subword_oracle(),
-               tags=("text",)), extra=True)
 
 
 # --- LID feeding the mixing step (round 8 composition) -----------------------

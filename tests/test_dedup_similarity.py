@@ -566,59 +566,6 @@ def test_contamination_plan_broadcasts_benchmark_side(spark, sf_dir):
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
 
 
-def test_remove_boilerplate_drops_shared_chunks_keeps_unique(spark):
-    """A 10-token header shared by 3 docs is removed from each; unique
-    tails survive in order; a doc that is ONLY boilerplate becomes ''."""
-    header = " ".join(f"h{i}" for i in range(10))      # one aligned chunk
-    rows = [
-        (1, header + " " + "alpha beta gamma"),
-        (2, header + " " + "delta epsilon"),
-        (3, header),                                   # pure boilerplate
-        (4, "totally unique text here"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r.doc_id: r.text
-           for r in DD.remove_boilerplate(df, chunk_tokens=10,
-                                          min_docs=2).collect()}
-    assert out[1] == "alpha beta gamma"
-    assert out[2] == "delta epsilon"
-    assert out[3] == ""
-    assert out[4] == "totally unique text here"
-
-
-def test_repetition_metrics_rank_repetitive_docs(spark):
-    """A looping doc scores near 1.0 on both signals; a no-repeat doc
-    scores 0 on dup_ngram_frac and low on top_ngram_frac."""
-    rows = [(1, "spam ham " * 20), (2, "one two three four five six seven "
-                                       "eight nine ten eleven twelve")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r.doc_id: (r.top_ngram_frac, r.dup_ngram_frac)
-           for r in DD.repetition_metrics(df).collect()}
-    assert out[1][0] > 0.8 and out[1][1] > 0.8
-    assert out[2][1] == 0.0 and out[2][0] < 0.3
-
-
-def test_remove_duplicate_spans_unaligned_and_within_doc(spark):
-    """An exact 8-token span shared at DIFFERENT offsets in two docs is
-    removed from both (sliding windows — alignment-free, unlike
-    boilerplate chunks); a doc repeating a span WITHIN itself loses both
-    copies; unique docs are untouched."""
-    span = " ".join(f"s{i}" for i in range(8))
-    rows = [
-        (1, "pre1 " + span + " tail1 tail2"),          # span at offset 2
-        (2, span + " other"),                          # span at offset 1
-        (3, span + " mid " + span),                    # within-doc repeat
-        (4, "completely different words here now"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r.doc_id: r.text
-           for r in DD.remove_duplicate_spans(df, span_tokens=8).collect()}
-    assert out[1] == "pre1 tail1 tail2"
-    assert out[2] == "other"
-    assert out[3] == "mid"
-    assert out[4] == "completely different words here now"
-
-
 def test_ann_index_rebuild_refreshes_meta_cache(spark, sf_dir, tmp_path):
     """Rebuild an index AT THE SAME PATH with different (bits, seed) in one
     process: load_ann_index must stamp the NEW meta onto the bucket column

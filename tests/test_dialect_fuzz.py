@@ -73,28 +73,25 @@ def test_split_ws_strips_all_whitespace_classes(spark, duck):
     assert got[11] == (["xy"], 1)                 # ...and trims
 
 
-def test_fuzz_subword_and_lid_cross_dialect(spark):
-    """Round-8 builders under the same batch fuzz: subword token counts
-    and language-ID predictions/scores must agree between engines over
-    the mixed quotes/unicode/controls corpus (\\p{L}/\\p{N} category
-    semantics are the divergence surface — Java regex vs RE2)."""
+def test_fuzz_lid_cross_dialect(spark):
+    """Round-8 builder under the same batch fuzz: language-ID
+    predictions/scores must agree between engines over the mixed
+    quotes/unicode/controls corpus (\\p{L} category semantics are the
+    divergence surface — Java regex vs RE2)."""
     from replibyte_spark.functions.lid import language_id_sql
-    from replibyte_spark.functions.text import subword_token_count_sql
 
-    sp_n = subword_token_count_sql(D.SPARK, "v")
     sp_p, sp_s = language_id_sql(D.SPARK, "v")
     df = spark.createDataFrame([(i, v) for i, v in enumerate(CORPUS)],
                                "i long, v string")
-    got = {r.i: (r.n, r.p, r.s) for r in df.selectExpr(
-        "i", f"{sp_n} AS n", f"{sp_p} AS p", f"{sp_s} AS s").collect()}
+    got = {r.i: (r.p, r.s) for r in df.selectExpr(
+        "i", f"{sp_p} AS p", f"{sp_s} AS s").collect()}
     con = duckdb.connect()
     con.execute("CREATE TABLE t (i BIGINT, v VARCHAR)")
     con.executemany("INSERT INTO t VALUES (?, ?)",
                     [(i, v) for i, v in enumerate(CORPUS)])
-    du_n = subword_token_count_sql(D.DUCK, "v")
     du_p, du_s = language_id_sql(D.DUCK, "v")
-    want = {i: (n, p, s) for i, n, p, s in con.execute(
-        f"SELECT i, {du_n}, {du_p}, {du_s} FROM t").fetchall()}
+    want = {i: (p, s) for i, p, s in con.execute(
+        f"SELECT i, {du_p}, {du_s} FROM t").fetchall()}
     bad = {i: (got[i], want[i], CORPUS[i]) for i in got if got[i] != want[i]}
     assert not bad, (f"{len(bad)} divergent values, "
                      f"first: {next(iter(bad.items()))}")
@@ -136,30 +133,3 @@ def test_fuzz_quantize_builders_cross_dialect(spark):
         f"{int_dot_sql(D.DUCK, qd, qd)} FROM t").fetchall()}
     bad = {i: (got[i], want[i], vecs[i]) for i in got if got[i] != want[i]}
     assert not bad, f"{len(bad)} divergent, first: {next(iter(bad.items()))}"
-
-
-@pytest.mark.parametrize("sep", ["\n", " ", "'"])
-def test_fuzz_dedup_lines_cross_dialect(spark, sep):
-    """Intra-document first-occurrence segment dedup: identical output
-    for arbitrary strings in both engines, for the newline (published
-    line-dedup) and token separators."""
-    from replibyte_spark.functions.text import dedup_lines_sql
-
-    df = spark.createDataFrame([(i, v) for i, v in enumerate(CORPUS)],
-                               "i long, v string")
-    got = {r.i: r.out for r in df.selectExpr(
-        "i", f"{dedup_lines_sql(D.SPARK, 'v', sep)} AS out").collect()}
-    con = duckdb.connect()
-    con.execute("CREATE TABLE t (i BIGINT, v VARCHAR)")
-    con.executemany("INSERT INTO t VALUES (?, ?)",
-                    [(i, v) for i, v in enumerate(CORPUS)])
-    want = {i: o for i, o in con.execute(
-        f"SELECT i, {dedup_lines_sql(D.DUCK, 'v', sep)} FROM t").fetchall()}
-    bad = {i: (got[i], want[i]) for i in got if got[i] != want[i]}
-    assert not bad, f"{len(bad)} divergent, first: {next(iter(bad.items()))}"
-    # and the semantics: no segment appears twice, order preserved
-    for i, v in enumerate(CORPUS):
-        segs = got[i].split(sep)
-        assert len(segs) == len(dict.fromkeys(segs))
-        orig = (CORPUS[i] or "").split(sep)
-        assert segs == list(dict.fromkeys(orig))

@@ -171,38 +171,6 @@ def test_readme_query_count_matches_registry():
     assert total == len(REGISTRY) + len(EXTRA)
 
 
-def test_assemble_packed_sequences_offsets_and_order(spark):
-    """Sequence assembly invariants: docs concatenate in order within
-    each bin, offsets are contiguous ([0, n0), [n0, n0+n1), ...), the
-    separator count equals n_docs - 1, and every bin's seq_tokens equals
-    the sum of member token counts."""
-    from replibyte_spark.operators.grouped import assemble_packed_sequences
-
-    rows = [(i, "g", f"doc{i} " * (i % 3 + 1), (i % 3 + 1) * 2)
-            for i in range(10)]
-    df = spark.createDataFrame(
-        rows, "doc_id long, source string, text string, n_tokens long")
-    out = assemble_packed_sequences(df, "source", "doc_id", "n_tokens",
-                                    "text", budget=6, sep="|").collect()
-    assert out
-    texts = {(r.source, r.bin_id): r for r in out}
-    seen_docs = 0
-    for r in out:
-        parts = r.seq_text.split("|")
-        assert len(parts) == r.n_docs
-        seen_docs += r.n_docs
-        # offsets contiguous and consistent with seq_tokens
-        assert r.doc_offsets[0]["start"] == 0
-        for a, b in zip(r.doc_offsets, r.doc_offsets[1:]):
-            assert b["start"] == a["end"]
-        assert r.doc_offsets[-1]["end"] == r.seq_tokens
-        # in-order: doc ids ascend within the bin -> texts ascend too
-        ids = [int(p.split()[0][3:]) for p in parts]
-        assert ids == sorted(ids)
-    assert seen_docs == len(rows)
-    _ = texts
-
-
 def test_perplexity_ranks_gibberish_above_fluent(spark):
     """The unigram LM must separate in-distribution text (all familiar
     tokens) from gibberish (all unseen tokens): strictly higher
@@ -296,24 +264,6 @@ def test_chunk_documents_coverage_and_overlap(spark):
     import pytest as _pt
     with _pt.raises(ValueError, match="overlap"):
         chunk_documents(df, chunk_tokens=4, overlap=4)
-
-
-def test_subword_token_count_semantics(spark):
-    """BPE-ish pre-tokenization: contractions, digit runs, punctuation
-    runs, unicode letters; NULL/empty contract matches token_count_sql."""
-    from replibyte_spark import dialect as D
-    from replibyte_spark.functions.text import subword_token_count_sql
-
-    df = spark.createDataFrame(
-        [(1, "don't stop me now!"), (2, "3.14 is pi"), (3, "naïve café"),
-         (4, ""), (5, None), (6, "   ")],
-        "doc_id long, text string")
-    rows = {r.doc_id: r.n for r in df.selectExpr(
-        "doc_id",
-        f"{subword_token_count_sql(D.SPARK, 'text')} AS n").collect()}
-    # don / 't / stop / me / now / !   |   3 / . / 14 / is / pi
-    assert rows[1] == 6 and rows[2] == 5 and rows[3] == 2
-    assert rows[4] == 0 and rows[5] is None and rows[6] == 0
 
 
 def test_bigram_perplexity_ranks_transition_scramble(spark):

@@ -1,5 +1,5 @@
-"""Multimodal operator tests: decode-stage plumbing (both codec branches),
-byte-budget partitioning, frame-sampling fan-out."""
+"""Multimodal operator tests: decode-stage plumbing (both codec branches)
+and byte-budget partitioning."""
 
 from __future__ import annotations
 
@@ -67,86 +67,3 @@ def test_repartition_for_binary_targets_byte_budget(spark):
     # ~1 MB total / 100 KB budget → ~10 partitions (sampling slack allowed)
     assert 5 <= out.rdd.getNumPartitions() <= 20
     assert out.count() == 1000
-
-
-def test_sample_frames_fan_out(spark):
-    df = spark.createDataFrame([(1, bytearray(b"a" * 200)),
-                                (2, bytearray(b"b" * 10))],
-                               "doc_id long, content binary")
-    out = MM.sample_frames(df, every_n_bytes=64, max_frames=8).collect()
-    per_doc = {}
-    for r in out:
-        per_doc.setdefault(r.doc_id, []).append(r.frame_idx)
-    assert sorted(per_doc[1]) == [0, 1, 2]   # 200 // 64 = 3 windows
-    assert sorted(per_doc[2]) == [0]         # short payload → 1 window
-
-
-def test_decode_audio_real_wav_via_stdlib(spark):
-    """REAL audio branch: a genuine WAV payload decodes through the stdlib
-    wave module — correct rate/channels/frames/duration."""
-    import io
-    import wave
-
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(2)
-        w.setsampwidth(2)
-        w.setframerate(16000)
-        w.writeframes(b"\x00\x01" * 2 * 8000)  # 8000 frames = 500 ms
-    payload = buf.getvalue()
-    df = spark.createDataFrame([(1, bytearray(payload)),
-                                (2, bytearray(b"not a wav"))],
-                               "doc_id long, content binary")
-    rows = {r.doc_id: r for r in MM.decode_audio(df).collect()}
-    real = rows[1]
-    assert (real.codec, real.sample_rate, real.n_channels,
-            real.n_frames, real.duration_ms) == ("audio/wav", 16000, 2,
-                                                 8000, 500)
-    assert rows[2].codec == "audio/fake"
-
-
-def test_payload_fingerprints_match_hashlib(spark):
-    import hashlib
-
-    payloads = [b"", b"abc", b"\x00\xff\x10" * 40, "unicode 🙂".encode()]
-    df = spark.createDataFrame(
-        [(i, bytearray(p)) for i, p in enumerate(payloads)],
-        "doc_id long, content binary")
-    rows = {r.doc_id: r for r in MM.payload_fingerprints(df).collect()}
-    for i, p in enumerate(payloads):
-        assert rows[i].payload_md5 == hashlib.md5(p).hexdigest()
-        assert rows[i].payload_bytes == len(p)
-
-
-def test_dedup_binary_exact_keeps_min_id_per_payload(spark):
-    rows = [(5, b"dup"), (2, b"dup"), (9, b"dup"),
-            (3, b"unique"), (7, b"\x00\x00"), (8, b"\x00\x00")]
-    df = spark.createDataFrame(
-        [(i, bytearray(p)) for i, p in rows],
-        "doc_id long, content binary")
-    kept = sorted(r.doc_id for r in MM.dedup_binary_exact(df).collect())
-    assert kept == [2, 3, 7]
-    out = MM.dedup_binary_exact(df)
-    assert out.columns == ["doc_id", "content"]
-
-
-def test_dedup_binary_exact_keeps_null_payloads(spark):
-    """r11 ADVICE fix: md5(NULL) is NULL, and the null-unsafe semi-join
-    used to silently DROP every NULL-payload row — they must all be
-    kept (no content means nothing to be a duplicate of), while the
-    non-null dedup is unaffected."""
-    df = spark.createDataFrame(
-        [(1, bytearray(b"dup")), (2, bytearray(b"dup")),
-         (3, None), (4, None)],
-        "doc_id long, content binary")
-    kept = sorted(r.doc_id for r in MM.dedup_binary_exact(df).collect())
-    assert kept == [1, 3, 4]
-
-
-def test_dedup_binary_plan_has_no_nested_loop(spark):
-    df = spark.createDataFrame([(1, bytearray(b"x"))],
-                               "doc_id long, content binary")
-    plan = MM.dedup_binary_exact(df)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "Python" not in plan and "BatchEval" not in plan

@@ -376,29 +376,27 @@ def test_late_r10_gates_prune_scans_and_avoid_nested_loops(spark, sf_dir):
                 assert col not in line, (name, col, line)
 
 
-def test_gopher_and_segment_gates_prune_scan_columns(spark, sf_dir):
-    """The r10 text gates derive everything from (source, text): the scan
-    must prune lang/n_chars (and doc_id), and neither plan may contain a
-    Python stage or an Exchange before its single aggregation."""
-    from replibyte_spark.workload import all_queries
+def test_gopher_gate_prunes_scan_columns(spark, sf_dir):
+    """The gopher_quality_summary gate derives everything from (source,
+    text): the scan must prune lang/n_chars (and doc_id), and the plan
+    may contain no Python stage and no Exchange before its single
+    aggregation."""
+    from replibyte_spark.workload import REGISTRY
 
-    qs = all_queries()
-    for name in ("gopher_quality_summary", "segment_dedup_summary"):
-        plan = _plan(qs[name].spark_fn(spark, sf_dir))
-        read_schema = plan.split("ReadSchema:")[1].splitlines()[0]
-        assert "text" in read_schema and "source" in read_schema, name
-        assert "lang" not in read_schema, (name, read_schema)
-        assert "n_chars" not in read_schema, (name, read_schema)
-        assert "Python" not in plan and "BatchEval" not in plan, name
-        # scan -> projection -> partial agg -> ONE exchange -> final agg
-        # -> ordering exchange, plus at most the deliberate fan_out
-        # round-robin (parallelism repair on the compute-heavy small
-        # scan) — any OTHER extra exchange means a shuffle crept into
-        # the projection chain
-        extra = (plan.count("Exchange")
-                 - plan.count("RoundRobinPartitioning"))
-        assert extra <= 2, (name, plan.count("Exchange"))
-        assert plan.count("RoundRobinPartitioning") <= 1, name
+    plan = _plan(REGISTRY["gopher_quality_summary"].spark_fn(spark, sf_dir))
+    read_schema = plan.split("ReadSchema:")[1].splitlines()[0]
+    assert "text" in read_schema and "source" in read_schema
+    assert "lang" not in read_schema, read_schema
+    assert "n_chars" not in read_schema, read_schema
+    assert "Python" not in plan and "BatchEval" not in plan
+    # scan -> projection -> partial agg -> ONE exchange -> final agg
+    # -> ordering exchange, plus at most the deliberate fan_out
+    # round-robin (parallelism repair on the compute-heavy small
+    # scan) — any OTHER extra exchange means a shuffle crept into
+    # the projection chain
+    extra = plan.count("Exchange") - plan.count("RoundRobinPartitioning")
+    assert extra <= 2, plan.count("Exchange")
+    assert plan.count("RoundRobinPartitioning") <= 1
 
 
 def test_bucketed_join_is_exchange_free_on_the_key(spark, sf_dir):

@@ -396,128 +396,6 @@ def test_token_budget_mix_monotone_in_budget(spark, seed, budget_lo,
     assert all(langs[i] in weights for i in hi)   # unlisted strata dropped
 
 
-@given(seed=st.integers(0, 2**30), w=st.integers(2, 4))
-@settings(max_examples=6, deadline=None)
-def test_remove_boilerplate_only_deletes_aligned_chunks(spark, seed, w):
-    """Every cleaned text is the original with some aligned w-token chunks
-    deleted (token subsequence at chunk granularity), and a corpus of
-    all-distinct chunks comes back byte-identical."""
-    import random
-
-    from replibyte_spark.operators.dedup import remove_boilerplate
-
-    rng = random.Random(seed)
-    vocab = [f"w{i}" for i in range(6)]
-    rows = [(i, " ".join(rng.choices(vocab, k=rng.randrange(1, 13))))
-            for i in range(12)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r.doc_id: r.text
-           for r in remove_boilerplate(df, chunk_tokens=w,
-                                       min_docs=2).collect()}
-    for i, text in rows:
-        toks = text.split()
-        chunks = [" ".join(toks[j:j + w]) for j in range(0, len(toks), w)]
-        got = out[i]
-        # cleaned text must be a subsequence of the doc's aligned chunks
-        remaining = got.split(" ") if got else []
-        rebuilt_chunks = []
-        while remaining:
-            take = min(w, len(remaining))
-            # chunks are joined back with single spaces in original order;
-            # peel them off greedily against the original chunk list
-            rebuilt_chunks.append(" ".join(remaining[:take]))
-            remaining = remaining[take:]
-        it = iter(chunks)
-        assert all(any(c == x for x in it) for c in rebuilt_chunks), (
-            f"doc {i}: {got!r} is not chunk-subsequence of {text!r}")
-
-    # all-unique corpus: untouched
-    uniq = [(i, " ".join(f"u{i}_{j}" for j in range(2 * w)))
-            for i in range(5)]
-    udf = spark.createDataFrame(uniq, "doc_id long, text string")
-    uout = {r.doc_id: r.text
-            for r in remove_boilerplate(udf, chunk_tokens=w,
-                                        min_docs=2).collect()}
-    assert uout == dict(uniq)
-
-
-def _span_dedup_model(rows, n, min_count=2):
-    """Python reference model for remove_duplicate_spans: count every
-    sliding n-token window across the corpus (within-doc repeats count),
-    mark every position covered by a >= min_count window, rebuild from
-    the surviving tokens."""
-    from collections import Counter
-
-    toks = {i: t.split() for i, t in rows}
-    grams: Counter = Counter()
-    for ts in toks.values():
-        for j in range(len(ts) - n + 1):
-            grams[tuple(ts[j:j + n])] += 1
-    out = {}
-    for i, ts in toks.items():
-        covered: set = set()
-        for j in range(len(ts) - n + 1):
-            if grams[tuple(ts[j:j + n])] >= min_count:
-                covered.update(range(j, j + n))
-        out[i] = " ".join(t for k, t in enumerate(ts) if k not in covered)
-    return out
-
-
-@given(seed=st.integers(0, 2**30), n=st.integers(2, 3))
-@settings(max_examples=6, deadline=None)
-def test_remove_duplicate_spans_matches_python_model(spark, seed, n):
-    """Random corpora over a tiny vocabulary (dense window collisions,
-    within-doc repeats included): the Spark plan must agree with the
-    direct Python restatement of the Lee-et-al rule on every doc — which
-    also implies every output is a token-subsequence of its input and
-    that exactly the covered positions were deleted, nothing else."""
-    import random
-
-    from replibyte_spark.operators.dedup import remove_duplicate_spans
-
-    rng = random.Random(seed)
-    vocab = [f"w{i}" for i in range(4)]
-    rows = [(i, " ".join(rng.choices(vocab, k=rng.randrange(0, 11))))
-            for i in range(14)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r.doc_id: r.text
-           for r in remove_duplicate_spans(df, span_tokens=n,
-                                           min_count=2).collect()}
-    want = _span_dedup_model(rows, n)
-    assert got == want
-    # subsequence invariant, asserted directly as well
-    for i, text in rows:
-        it = iter(text.split())
-        assert all(tok in it for tok in got[i].split()), (
-            f"doc {i}: {got[i]!r} not a subsequence of {text!r}")
-
-
-def test_remove_duplicate_spans_second_pass_not_idempotent_by_design(spark):
-    """Documented semantics: removal can make previously NON-adjacent
-    tokens adjacent, forming new windows that collide with other docs —
-    so a second pass may remove more (matching the one-pass suffix-array
-    dedup, which also only removes spans duplicated in the ORIGINAL
-    corpus).  Pin that behavior so a future 'fix' has to argue with this
-    test: doc 10's 'a q q b' loses the doubled 'q q', the rebuilt 'a b'
-    now equals doc 11, and only a SECOND pass would remove that pair."""
-    from replibyte_spark.operators.dedup import remove_duplicate_spans
-
-    rows = [(10, "a q q b"), (11, "a b"), (12, "q q")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    p1 = {r.doc_id: r.text
-          for r in remove_duplicate_spans(df, span_tokens=2,
-                                          min_count=2).collect()}
-    # 'q q' occurs in doc 10 and doc 12 -> both occurrences deleted;
-    # 'a b' (doc 11) occurred ONCE in the original corpus -> kept
-    assert p1 == {10: "a b", 11: "a b", 12: ""}
-    df2 = spark.createDataFrame(sorted(p1.items()),
-                                "doc_id long, text string")
-    p2 = {r.doc_id: r.text
-          for r in remove_duplicate_spans(df2, span_tokens=2,
-                                          min_count=2).collect()}
-    assert p2 == {10: "", 11: "", 12: ""}   # second pass removes the new dup
-
-
 @given(seed=st.integers(0, 2**30))
 @settings(max_examples=5, deadline=None)
 def test_minhash_index_path_equals_from_scratch(spark, tmp_path_factory,

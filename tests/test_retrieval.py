@@ -1,13 +1,11 @@
-"""BM25 + RRF (operators/retrieval.py): ranking semantics, the Zipf-head
-df cap, fusion preference, and error edges."""
+"""BM25 (operators/retrieval.py): ranking semantics, the Zipf-head df
+cap, and error edges."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
-from replibyte_spark.operators.retrieval import (bm25_scores, bm25_topk,
-                                                 rrf_fuse)
+from replibyte_spark.operators.retrieval import bm25_scores, bm25_topk
 
 
 def _docs(spark, rows):
@@ -55,24 +53,6 @@ def test_bm25_empty_corpus_raises(spark):
     q = _docs(spark, [(100, "term")])
     with pytest.raises(ValueError, match="corpus is empty"):
         bm25_scores(docs, q)
-
-
-def test_rrf_prefers_docs_in_both_lists(spark):
-    """A doc ranked 3rd in BOTH lists must beat a doc ranked 1st in only
-    one (1/63+1/63 > 1/61) — the fusion property RRF exists for."""
-    lex = spark.createDataFrame(
-        [(1, 10, 1), (1, 30, 3)], "query_id long, doc_id long, rank int")
-    sem = spark.createDataFrame(
-        [(1, 20, 1), (1, 30, 3)], "query_id long, doc_id long, rank int")
-    fused = rrf_fuse([lex, sem], k=3).collect()
-    assert [r["doc_id"] for r in fused] == [30, 10, 20]
-    # 10 and 20 tie at 1/61 -> ascending-id tie-break
-    assert fused[1]["rrf_score"] == fused[2]["rrf_score"]
-
-
-def test_rrf_requires_input(spark):
-    with pytest.raises(ValueError, match="at least one ranking"):
-        rrf_fuse([])
 
 
 def test_bm25_deterministic_under_partitioning(spark):

@@ -127,24 +127,6 @@ def test_stratified_rates_apply_per_stratum(spark):
     assert abs(rates["small"] / 20_000 - 0.80) < 0.01
 
 
-def test_stratified_sample_n_exact_and_deterministic(spark):
-    from pyspark.sql import functions as F
-
-    from replibyte_spark.operators.sample import stratified_sample_n
-
-    df = spark.range(1000).select(
-        F.col("id").alias("k"), (F.col("id") % 7).cast("string").alias("s"))
-    a = stratified_sample_n(df, "s", "k", 10)
-    counts = {r.s: r.n for r in
-              a.groupBy("s").agg(F.count(F.lit(1)).alias("n")).collect()}
-    assert all(v == 10 for v in counts.values()) and len(counts) == 7
-    b = stratified_sample_n(df, "s", "k", 10)
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-    # short stratum keeps everything
-    tiny = df.filter(F.col("k") < 3)
-    assert stratified_sample_n(tiny, "s", "k", 10).count() == 3
-
-
 def test_parent_referenced_via_two_different_columns(spark):
     """A parent table referenced through TWO different columns (users.id
     AND users.email) must be semi-joined once per column — the old
@@ -237,39 +219,6 @@ def test_cyclic_closure_frees_superseded_checkpoints(spark):
     free_persistent_rdds(spark)
 
 
-def test_shard_shuffle_invariants_and_parallel_plan(spark, sf_dir):
-    """(shard, pos) must be a bijection onto the corpus: every shard's pos
-    runs 1..len(shard) contiguously, the mapping is deterministic across
-    calls, a different seed yields a different permutation, and the plan
-    contains NO single-partition window (the rank is per-shard parallel,
-    not a global sort)."""
-    import re
-
-    from replibyte_spark.catalog import load_table
-    from replibyte_spark.operators.sample import shard_shuffle
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    n = docs.count()
-    a = shard_shuffle(docs, "doc_id", seed="e0", n_shards=8)
-    rows = [(r.doc_id, r.shard, r.pos) for r in a.collect()]
-    assert len(rows) == n
-    by_shard: dict = {}
-    for _, s, p in rows:
-        by_shard.setdefault(s, []).append(p)
-    for s, ps in by_shard.items():
-        assert sorted(ps) == list(range(1, len(ps) + 1)), f"shard {s}"
-    # deterministic
-    again = [(r.doc_id, r.shard, r.pos) for r in shard_shuffle(
-        docs, "doc_id", seed="e0", n_shards=8).collect()]
-    assert sorted(rows) == sorted(again)
-    # new seed = new permutation (overwhelmingly; fixture has 500+ docs)
-    other = {(r.doc_id, r.shard, r.pos) for r in shard_shuffle(
-        docs, "doc_id", seed="e1", n_shards=8).collect()}
-    assert other != set(rows)
-    plan = a._jdf.queryExecution().executedPlan().toString()
-    assert not re.search(r"Window .*SinglePartition", plan)
-
-
 def test_corpus_quality_report_approx_close_to_exact(spark, sf_dir):
     """approx_percentile (the mergeable 100 TB sketch path) must land
     within a small relative tolerance of the exact interpolated
@@ -297,34 +246,6 @@ def test_corpus_quality_report_approx_close_to_exact(spark, sf_dir):
         assert e["avg_quality"] == a["avg_quality"]
         for k in ("p25_tokens", "p50_tokens", "p90_tokens", "p99_tokens"):
             assert abs(a[k] - e[k]) <= max(2.0, 0.05 * e[k]), (src, k, e, a)
-
-
-def test_leakage_free_split_demotes_cross_split_near_dups(spark):
-    """Planted near-dup pairs spanning the split boundary: the val-side
-    member must be demoted to train; non-leaky val docs keep their hash
-    assignment; the result is deterministic."""
-    from replibyte_spark.operators.sample import leakage_free_splits
-
-    base = ("the quick brown fox jumps over the lazy dog and then runs "
-            "far away into the woods tonight")
-    rows = [(i, base) for i in range(40)]                  # one dup cluster
-    rows += [(100 + i, f"unique text number {i} with totally distinct "
-              f"words nobody else uses {i * 7}") for i in range(40)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r.doc_id: r.split for r in leakage_free_splits(
-        df, val_permille=300, seed="t").collect()}
-    assert len(out) == 80
-    dup_ids = [i for i in range(40)]
-    dup_splits = {out[i] for i in dup_ids}
-    # the dup cluster spans the hash split with overwhelming probability
-    # (p(all-one-side) ~ 2 * 0.7^40); every cross-split near-dup val doc
-    # must have been demoted -> the whole cluster reads train
-    assert dup_splits == {"train"}
-    # sanity: some unique docs did land in val (hash at 30%)
-    assert any(out[100 + i] == "val" for i in range(40))
-    again = {r.doc_id: r.split for r in leakage_free_splits(
-        df, val_permille=300, seed="t").collect()}
-    assert again == out
 
 
 def test_temperature_mix_flattens_the_head(spark):
