@@ -25,6 +25,7 @@ from ..operators.sample import hash_percent_filter, systematic_percent
 from ..operators.subset import FkEdge, subset_closure
 from ..sinks.datastore import Datastore, DumpInfo
 from ..sources.sqldump import DumpTables
+from ..util import concurrently
 
 
 def _parse_uri(uri: str) -> tuple[str, str]:
@@ -183,26 +184,29 @@ class RestorePipeline:
         )
         scheme, path = _parse_uri(self.config.destination.connection_uri)
         mode = "overwrite" if self.config.destination.wipe_database else "append"
+        root = path.rstrip("/")
+        # the file destinations write their tables concurrently
         if scheme == "parquet":
-            for t, df in tables.items():
-                df.write.mode(mode).parquet(f"{path.rstrip('/')}/{t}")
+            concurrently(spark, lambda t, df: df.write.mode(mode).parquet(
+                f"{root}/{t}"), tables.items())
         elif scheme in ("postgres", "postgresql", "mysql", "jdbc"):
             from ..sources.jdbc import write_jdbc_tables
 
+            # serial: a live database may enforce FK order between tables
             write_jdbc_tables(tables, self.config.destination.connection_uri,
                               mode, driver=self.config.destination.jdbc_driver)
         elif scheme == "sqltext":
             from ..sinks.sqldump_sink import write_sql_dump
 
-            for t, df in tables.items():
-                # honor wipe_database=false like every other destination
-                write_sql_dump(df, t, f"{path.rstrip('/')}/{t}", mode=mode)
+            # honor wipe_database=false like every other destination
+            concurrently(spark, lambda t, df: write_sql_dump(
+                df, t, f"{root}/{t}", mode=mode), tables.items())
         elif scheme == "jsonl":
             # MongoDB-shaped destination (reference K3): JSON-lines per table
             # (mongoimport-compatible), gzip-compressed part files
-            for t, df in tables.items():
-                (df.write.mode(mode).option("compression", "gzip")
-                 .json(f"{path.rstrip('/')}/{t}"))
+            concurrently(spark, lambda t, df: (
+                df.write.mode(mode).option("compression", "gzip")
+                .json(f"{root}/{t}")), tables.items())
         elif scheme == "console":
             # reference stdout sink (destination/generic_stdout.rs:98-104)
             for t, df in tables.items():
@@ -231,6 +235,7 @@ class RestorePipeline:
                             f"expected {scheme}://[tag[:host_port]] with a "
                             f"numeric port, got '{bits[1]}'") from None
             dest = DK.destination_for(engine, port, tag)
+            # serial: one ordered stream into a live database (FK order)
             if engine == "mongodb":
                 DK.restore_archive_into_container(tables, dest)
             else:

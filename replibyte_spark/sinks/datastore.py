@@ -40,7 +40,7 @@ from dataclasses import asdict, dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..util import hadoop_read_bytes
+from ..util import concurrently, hadoop_read_bytes
 
 MANIFEST_VERSION = 2
 MANIFEST_NAME = "metadata.json"
@@ -220,7 +220,6 @@ class Datastore:
         max_records_per_file: int = 1_000_000,
         partition_by: dict[str, list[str]] | None = None,
         watermark_cols: dict[str, str] | None = None,
-        parallel: int = 1,
         _parent: str | None = None,
         _full_tables: list[str] | None = None,
     ) -> DumpInfo:
@@ -235,29 +234,39 @@ class Datastore:
         `watermark_cols` maps table → a monotonically-increasing column;
         the manifest records each table's max value so later
         :meth:`dump_incremental` calls write only newer rows.
-        `parallel` > 1 submits up to that many table writes concurrently —
-        Spark's scheduler interleaves the jobs, so small tables no longer
-        serialize behind big ones (a many-table dump is otherwise
-        driver-submission-bound).
+        The table writes run concurrently (:func:`~replibyte_spark.util.concurrently`);
+        every option is validated on the calling thread first, so a bad
+        one fails before the store is touched.
         """
-        self.init()
         name = name or f"dump-{int(time.time())}"
         dump_dir = self._join(name)
         key = _normalize_key(encryption_key) if encryption_key else None
         enc_types: dict[str, dict[str, str]] = {}
+        planned = dict(tables)
+        for t, cols in (encrypt_columns or {}).items():
+            if t not in tables:
+                continue
+            if not key:
+                raise ValueError("encrypt_columns given without encryption_key")
+            df = tables[t]
+            for c in cols:
+                if c not in df.columns:
+                    raise ValueError(
+                        f"encrypt_columns: table {t} has no column {c}")
+                enc_types.setdefault(t, {})[c] = df.schema[c].dataType.simpleString()
+                # Column-arg form (not f-string SQL): keys with quotes are
+                # safe, and the key never rides inside a SQL text fragment.
+                df = df.withColumn(
+                    c, F.base64(F.aes_encrypt(
+                        F.col(c).cast("string"), F.lit(key), F.lit("GCM"))))
+            planned[t] = df
+        for t, wc in (watermark_cols or {}).items():
+            if t in tables and wc in (encrypt_columns or {}).get(t, []):
+                raise ValueError(
+                    f"watermark column {t}.{wc} cannot be encrypted")
+        self.init()
 
         def write_one(t: str, df: DataFrame) -> None:
-            if encrypt_columns and t in encrypt_columns:
-                if not key:
-                    raise ValueError("encrypt_columns given without encryption_key")
-                for c in encrypt_columns[t]:
-                    # Column-arg form (not f-string SQL): keys with quotes are
-                    # safe, and the key never rides inside a SQL text fragment.
-                    enc_types.setdefault(t, {})[c] = df.schema[c].dataType.simpleString()
-                    df = df.withColumn(
-                        c, F.base64(F.aes_encrypt(
-                            F.col(c).cast("string"), F.lit(key), F.lit("GCM")))
-                    )
             writer = (df.write.mode("overwrite")
                       .option("compression",
                               compression if compression != "none" else "uncompressed")
@@ -266,25 +275,12 @@ class Datastore:
                 writer = writer.partitionBy(*partition_by[t])
             writer.parquet(f"{dump_dir}/{t}")
 
-        if parallel > 1 and len(tables) > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=parallel) as pool:
-                futures = [pool.submit(write_one, t, df)
-                           for t, df in tables.items()]
-                for f in futures:
-                    f.result()
-        else:
-            for t, df in tables.items():
-                write_one(t, df)
+        concurrently(self.spark, write_one, planned.items())
         watermarks = {}
         if watermark_cols:
             for t, wc in watermark_cols.items():
                 if t not in tables:
                     continue
-                if wc in (encrypt_columns or {}).get(t, []):
-                    raise ValueError(
-                        f"watermark column {t}.{wc} cannot be encrypted")
                 # Read the max back from the Parquet actually WRITTEN, not by
                 # re-evaluating the lazy source: against a live source, rows
                 # arriving between the write job and a source-side max() would
@@ -391,8 +387,9 @@ class Datastore:
         (base rows + every delta — exact under the insert-only contract)."""
         info = self.find_dump(which)
         key = _normalize_key(encryption_key) if encryption_key else None
-        out = {}
-        for t in info.tables:
+
+        def read_one(t: str) -> DataFrame:
+            # the reader opens the parquet footers: one small job per table
             df = self.spark.read.parquet(self._join(info.directory_name, t))
             if decrypt_columns and t in decrypt_columns:
                 if not key:
@@ -404,7 +401,10 @@ class Datastore:
                                          F.lit(key), F.lit("GCM"))
                         .cast("string").cast(orig)
                     )
-            out[t] = df
+            return df
+
+        out = dict(zip(info.tables, concurrently(
+            self.spark, read_one, [(t,) for t in info.tables])))
         if info.parent:
             base = self.restore(info.parent, decrypt_columns=decrypt_columns,
                                 encryption_key=encryption_key)

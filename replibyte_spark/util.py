@@ -56,6 +56,34 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     return df.repartition(target)
 
 
+def concurrently(spark: SparkSession, fn, items) -> list:
+    """``[fn(*item) for item in items]``, with the calls run on at most
+    ``sc.defaultParallelism`` threads; results come back in input order.
+
+    For independent per-table work (a dump's table writes, a restore's
+    reads and file writes): on a small dump each job is a few tasks, so
+    run one after another they leave most cores idle while the driver
+    waits on the JVM.  A single item runs inline on the caller's thread.  Every
+    call is wrapped with ``inheritable_thread_target(spark)`` on the
+    caller's thread, so its jobs keep the caller's job group, description
+    and tags, each call on its own copy of the local properties.  All
+    submitted calls finish before the first exception (in input order) is
+    re-raised.  Keep work that must follow an order out of it: a live
+    database may enforce FK order between tables, so JDBC and container
+    restores stay one serial stream."""
+    items = list(items)
+    if len(items) <= 1:
+        return [fn(*item) for item in items]
+    from concurrent.futures import ThreadPoolExecutor
+    from pyspark import inheritable_thread_target
+
+    workers = min(len(items), spark.sparkContext.defaultParallelism)
+    with ThreadPoolExecutor(max_workers=workers) as pool:   # exit waits for all
+        futures = [pool.submit(inheritable_thread_target(spark)(fn), *item)
+                   for item in items]
+    return [f.result() for f in futures]
+
+
 def hadoop_exists(spark: SparkSession, path: str) -> bool:
     """Hadoop-FS existence check — the shared idiom for anything that must
     work on s3a:// / gs:// / hdfs:// paths, where os.path.isdir is always

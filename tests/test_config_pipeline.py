@@ -328,3 +328,51 @@ def test_dump_run_releases_only_what_it_persisted(spark, sf_dir, tmp_path):
             assert cache_manager.isEmpty(), name
     finally:
         pinned.unpersist()
+
+
+def test_pipeline_jobs_stay_in_caller_job_group(spark, sf_dir, tmp_path):
+    """A 3-table sqltext dump and restore under the caller's job group:
+    every job they start, on whichever thread, belongs to that group, and
+    no thread loses the session's tags."""
+    import warnings
+
+    from replibyte_spark.catalog import load_table
+    from replibyte_spark.sinks.sqldump_sink import to_insert_statements
+
+    names = ["region", "nation", "supplier"]
+    stmts = [to_insert_statements(load_table(spark, sf_dir, t), t)
+             for t in names]
+    stmts[0].unionByName(stmts[1]).unionByName(stmts[2]) \
+        .write.text(str(tmp_path / "sql"))
+    cfg = Config.from_dict({
+        "source": {"connection_uri": f"sqltext://{tmp_path / 'sql'}"},
+        "datastore": {"dir": str(tmp_path / "store")},
+        "destination": {"connection_uri":
+                        f"sqltext://{tmp_path / 'restored'}"},
+    })
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def last_job(group: str) -> int:
+        sc.setJobGroup(group, group)
+        sc.parallelize([1]).count()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return max(tracker.getJobIdsForGroup(group))
+
+    try:
+        lo = last_job("attribution-before")
+        sc.setJobGroup("g", "dump and restore")
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            DumpPipeline(cfg).run(spark, "a")
+            restored = RestorePipeline(cfg).run(spark, "a")
+        hi = last_job("attribution-after")
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert sorted(restored) == sorted(names)
+    in_group = set(tracker.getJobIdsForGroup("g"))
+    assert in_group and set(range(lo + 1, hi)) == in_group
+    assert not [w for w in caught
+                if "Tags will not be inherited" in str(w.message)]

@@ -206,17 +206,44 @@ def test_incremental_dump_chain(spark, sf_dir, tmp_path):
     assert store.restore("d3")["events"].count() == n_total
 
 
-def test_parallel_dump_writes_equal_serial(spark, sf_dir, tmp_path):
+def test_concurrent_dump_restore_roundtrip(spark, sf_dir, tmp_path):
+    """The table writes of a dump and the table reads of its restore run
+    concurrently; every table still comes back as the same row multiset."""
+    from collections import Counter
+
     from replibyte_spark.catalog import load_tables
-    from replibyte_spark.sinks.datastore import Datastore
 
     tables = load_tables(spark, sf_dir, ["region", "nation", "supplier"])
-    store = Datastore(spark, str(tmp_path / "par"))
-    info = store.dump(tables, "p1", parallel=3)
-    assert sorted(info.tables) == ["nation", "region", "supplier"]
-    back = store.restore("p1")
+    store = Datastore(spark, str(tmp_path / "conc"))
+    info = store.dump(tables, "c1")
+    assert info.tables == ["nation", "region", "supplier"]
+    assert store.find_dump("c1").tables == info.tables
+    back = store.restore("c1")
     for t, df in tables.items():
-        assert back[t].count() == df.count()
+        assert Counter(map(tuple, back[t].collect())) == \
+            Counter(map(tuple, df.collect())), t
+
+
+def test_missing_encrypt_column_fails_before_any_write(spark, sf_dir, store):
+    """An encrypted column absent from its table raises ValueError naming
+    both, before the store is touched: a fresh root is not created, and
+    an existing store gets no table directory and no manifest change."""
+    tables = {"region": load_table(spark, sf_dir, "region"),
+              "nation": load_table(spark, sf_dir, "nation")}
+    bad = {"encrypt_columns": {"nation": ["n_name", "n_nope"]},
+           "encryption_key": "secret"}
+    with pytest.raises(ValueError, match="nation.*n_nope"):
+        store.dump(tables, "bad", **bad)
+    assert not os.path.exists(store.root)
+    store.dump({"region": tables["region"]}, "ok")
+    manifest = os.path.join(store.root, "metadata.json")
+    with open(manifest) as f:
+        before = f.read()
+    with pytest.raises(ValueError, match="nation.*n_nope"):
+        store.dump(tables, "bad", **bad)
+    assert not os.path.exists(os.path.join(store.root, "bad"))
+    with open(manifest) as f:
+        assert f.read() == before
 
 
 def test_incremental_full_redump_does_not_duplicate_on_restore(
