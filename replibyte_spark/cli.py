@@ -770,19 +770,8 @@ def _cmd_corpus(spark, args) -> int:
             if args.order == 1 else
             (train_bigram_lm, bigram_perplexity_scores, "n_transitions"))
         lm = trainer(train, id_col=args.id_col, text_col=args.text_col)
-        try:
-            scored = scorer(docs, lm, id_col=args.id_col,
-                            text_col=args.text_col)
-            scored.write.mode("overwrite").parquet(args.output)
-        except ValueError as exc:
-            print(f"error: {exc}", file=sys.stderr)
-            return 2
-        finally:
-            # both scorers persist the LM frame (keyed on the logical
-            # plan, so this reference reaches the same cache entry);
-            # without the sweep, N successive `corpus score` calls in
-            # one session pin N vocab-sized cache entries
-            lm.unpersist()
+        scored = scorer(docs, lm, id_col=args.id_col, text_col=args.text_col)
+        scored.write.mode("overwrite").parquet(args.output)
         n = spark.read.parquet(args.output).count()
         print(f"scored {n} docs -> {args.output} "
               f"(columns: {args.id_col}, {count_col}, cross_entropy, "
@@ -1188,19 +1177,9 @@ def _cmd_corpus(spark, args) -> int:
                                   id_col=args.id_col,
                                   text_col=args.text_col)
         priors = class_priors(train, label_col=args.label_col)
-        try:
-            pred = nb_classify(docs, model, priors, k=args.k,
-                               id_col=args.id_col, text_col=args.text_col)
-            pred.write.mode("overwrite").parquet(args.output)
-        except ValueError as exc:
-            print(f"error: {exc}", file=sys.stderr)
-            return 2
-        finally:
-            # nb_class_scores persists the model frame (keyed on the
-            # logical plan — this reference reaches the same cache
-            # entry); sweep it or N classify calls pin N vocab-sized
-            # entries (the corpus score convention)
-            model.unpersist()
+        pred = nb_classify(docs, model, priors, k=args.k,
+                           id_col=args.id_col, text_col=args.text_col)
+        pred.write.mode("overwrite").parquet(args.output)
         n = spark.read.parquet(args.output).count()
         print(f"classified {n} docs -> {args.output} "
               f"(columns: {args.id_col}, pred_label, score; trained on "
@@ -1288,6 +1267,14 @@ def main(argv: list[str] | None = None, spark=None) -> int:
 
         spark = get_spark("replibyte-spark-cli", cpus=args.cpus)
 
+    # what a command caches or checkpoints is freed when it returns
+    from .util import released
+
+    with released():
+        return _run(spark, args, config)
+
+
+def _run(spark, args, config) -> int:
     if args.cmd == "corpus":
         # operator-level validation errors (negative --overlap, empty LM
         # vocabulary, mismatched index meta, ...) surface the same way the

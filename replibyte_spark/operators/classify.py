@@ -44,6 +44,7 @@ from pyspark.sql.window import Window
 
 from .. import dialect as D
 from ..functions import text as T
+from ..util import CACHED, materialize
 from .lm import _tokens
 
 
@@ -91,15 +92,13 @@ def nb_class_scores(docs: DataFrame, model: DataFrame, priors: DataFrame,
     stays under `broadcast_vocab_limit` (the :mod:`~.lm` guard); beyond
     that AQE plans a shuffled token-key join.
 
-    CALLER CONTRACT (persist lifecycle, same as perplexity_scores): the
-    model frame is persisted here because the stats collect below and the
-    scoring join share it; unpersist via the frame you passed in once the
-    result is materialized, or sweep with spark.catalog.clearCache().
+    The model frame is persisted here because the stats collect below
+    and the scoring join share it (as in perplexity_scores).
 
     A document with NO tokens (empty/whitespace/NULL text) still gets a
     row per class: its score is the prior term alone — argmax degrades to
     the majority class instead of silently dropping the document."""
-    model = model.persist()
+    model = materialize(model, CACHED)
     stats = {r["label"]: int(r["t"])
              for r in model.groupBy("label")
              .agg(F.sum("n").alias("t")).collect()}

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..util import materialize
 from .similarity import ivf_assign
 
 
@@ -102,14 +103,13 @@ def semantic_cluster_dup_pairs(vectors: DataFrame, threshold: float,
     # costs ONE fold (the dot), not three — round(dot/(na·nb), d) is the
     # same expression tree as cosine_sql, so the DuckDB oracle's inline
     # cosine stays bit-identical.
-    assigned = (ivf_assign(vectors, n_clusters, id_col, vec_col,
-                           centroids=centroids)
-                .select(F.col(id_col).alias("_id"),
-                        F.col(vec_col).alias("_v"),
-                        F.col("centroid_id"),
-                        F.md5(F.col(id_col).cast("string")).alias("_m"),
-                        F.expr(norm_sql(D.SPARK, vec_col)).alias("_n"))
-                .localCheckpoint(eager=True))
+    assigned = materialize(
+        ivf_assign(vectors, n_clusters, id_col, vec_col, centroids=centroids)
+        .select(F.col(id_col).alias("_id"),
+                F.col(vec_col).alias("_v"),
+                F.col("centroid_id"),
+                F.md5(F.col(id_col).cast("string")).alias("_m"),
+                F.expr(norm_sql(D.SPARK, vec_col)).alias("_n")))
     a = assigned.select(F.col("_id").alias("_id_a"),
                         F.col("_v").alias("_v_a"), F.col("centroid_id"),
                         F.col("_m").alias("_m_a"), F.col("_n").alias("_n_a"))

@@ -27,7 +27,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T_
 
 from .. import dialect as D
-from ..util import fan_out, hadoop_exists
+from ..util import (CACHED, fan_out, hadoop_exists, materialize,
+                    reads_cached, release)
 
 # ---------------------------------------------------------------------------
 # shared cross-dialect expression fragments
@@ -285,8 +286,7 @@ def jaccard_for_pairs(pairs: DataFrame, sh: DataFrame, id_col: str) -> DataFrame
 
 def minhash_near_dup_pairs(df: DataFrame, id_col: str, text_col: str,
                            threshold: float = 0.8, n_hashes: int = 12,
-                           bands: int = 4, n: int = 3,
-                           checkpoint_candidates: bool = False) -> DataFrame:
+                           bands: int = 4, n: int = 3) -> DataFrame:
     """LSH candidates filtered by true Jaccard ≥ threshold.
 
     Two-phase design sized for scale:
@@ -296,35 +296,25 @@ def minhash_near_dup_pairs(df: DataFrame, id_col: str, text_col: str,
        a candidate pair (candidates ≪ corpus), via a semi-join before the
        distinct — the expensive distinct shuffle touches a sliver of data.
 
-    `checkpoint_candidates` (r15, verdict #5): jaccard_for_pairs references
-    the candidate-gram subtree once per join side.  When `df` reads straight
-    from parquet, AQE's stage cache dedups the two copies at runtime (one
-    partial-aggregate map stage, two cheap final aggs — verified in the
-    standalone gate's attribution), so the default leaves the subtree lazy.
-    When `df` reads through an InMemoryRelation (a caller-persisted corpus,
-    e.g. the training pipeline's scored frame), that reuse BREAKS — the
-    re-aliased cache reference stops the two branches being canonically
-    equal (isolated repro: same query, 1 ReusedExchange over parquet, 0
-    over a persisted base) — and the corpus-sized semi-join probe runs
-    twice (the twin ~400 ms 32-task stages in the pipeline attribution).
-    Such callers pass True to materialize the candidates-only (id, text)
-    sliver once behind an eager checkpoint; both gram aggregates then
-    re-read megabytes instead of re-probing the corpus."""
+    jaccard_for_pairs references the candidate-gram subtree once per join
+    side.  Over parquet, AQE's stage cache runs it once; when `df` reads
+    through a cache (:func:`~replibyte_spark.util.reads_cached`, e.g. the
+    training pipeline's scored frame) that reuse breaks and the
+    corpus-sized semi-join probe would run twice, so the candidates-only
+    (id, text) sliver is checkpointed once instead."""
     # eager localCheckpoint, not a bare persist: the pair frame feeds BOTH
     # the candidate-id semi-join and the Jaccard join, and a lazily
-    # persisted frame would (a) race its own fill from two consumer stages
-    # and (b) leak — the returned plan references it, so there is no safe
-    # place to unpersist.  Checkpoint blocks are swept by
-    # util.free_persistent_rdds (bench hygiene) / session teardown.
-    pairs = (minhash_candidate_pairs(df, id_col, text_col, n_hashes, bands, n)
-             .localCheckpoint(eager=True))
+    # persisted frame would race its own fill from two consumer stages.
+    # The returned plan references it, so the caller's released() scope
+    # frees it.
+    pairs = materialize(minhash_candidate_pairs(df, id_col, text_col,
+                                                n_hashes, bands, n))
     cand_ids = (pairs.select(F.col("id_a").alias(id_col))
                 .unionAll(pairs.select(F.col("id_b").alias(id_col)))
                 .distinct())
     cand_docs = df.join(cand_ids, on=id_col, how="leftsemi")
-    if checkpoint_candidates:
-        cand_docs = (cand_docs.select(id_col, text_col)
-                     .localCheckpoint(eager=True))
+    if reads_cached(df):
+        cand_docs = materialize(cand_docs.select(id_col, text_col))
     # raw exploded grams, NOT shingles(): jaccard_for_pairs aggregates
     # with collect_set, which dedups for free — the separate distinct
     # shuffle (and its AQE-coalesced single-task reduce, 0.7 s in the
@@ -332,7 +322,7 @@ def minhash_near_dup_pairs(df: DataFrame, id_col: str, text_col: str,
     # subtree jaccard_for_pairs evaluates twice.  An eager checkpoint of
     # the exploded-gram subtree was also tried (r14) and measured SLOWER
     # at sf0.1 (the barrier outweighs a candidates-only recompute) — left
-    # lazy; see checkpoint_candidates above for the narrower r15 knob.
+    # lazy; the cached-input sliver checkpoint above is the narrower cut.
     sh = _exploded_grams(cand_docs, id_col, text_col, n)
     return (jaccard_for_pairs(pairs, sh, id_col)
             .filter(F.col("jaccard") >= threshold)
@@ -616,7 +606,8 @@ def star_components(pairs: DataFrame, max_iterations: int = 20) -> DataFrame:
     :func:`near_dup_clusters`.
 
     Each round is two bounded-shuffle aggregations over the current edge
-    set; `localCheckpoint` per round caps lineage.  Convergence = the
+    set; a checkpoint per round caps lineage, and the round it supersedes
+    is released at once.  Convergence = the
     (count, xxhash64-sum) fingerprint of the oriented edge set repeats,
     at which point every edge is (node, component-min) — a star.  If the
     fingerprint never repeats within `max_iterations`, raises rather than
@@ -631,17 +622,17 @@ def star_components(pairs: DataFrame, max_iterations: int = 20) -> DataFrame:
     selfs = (pairs.filter(F.col("id_a") == F.col("id_b"))
              .select(F.col("id_a").alias("node"))
              .withColumn("cluster_id", F.col("node")))
-    edges = (pairs.select(
+    edges = materialize(pairs.select(
         F.greatest(F.col("id_a"), F.col("id_b")).alias("a"),
         F.least(F.col("id_a"), F.col("id_b")).alias("b"))
         .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True))
+        .distinct())
     prev = None
     converged = False
     for _ in range(max_iterations):
-        edges = (_small_star(_large_star(edges))
-                 .localCheckpoint(eager=True))
+        # the new round is computed, so nothing reads the superseded one
+        done, edges = edges, materialize(_small_star(_large_star(edges)))
+        release(done)
         fp = edges.agg(F.count(F.lit(1)).alias("n"),
                        F.sum(F.xxhash64("a", "b")).alias("h")).collect()[0]
         cur = (fp["n"], fp["h"])
@@ -688,7 +679,7 @@ def near_dup_clusters(pairs: DataFrame, max_iterations: int = 20) -> DataFrame:
     calling this runs Spark jobs (count(), plus collect() on the driver
     path).  Callers building plans speculatively should defer the call.
     """
-    raw = pairs.select("id_a", "id_b").persist()
+    raw = materialize(pairs.select("id_a", "id_b"), CACHED)
     try:
         n_pairs = raw.count()
         if n_pairs <= DRIVER_CC_MAX_PAIRS:
@@ -709,7 +700,7 @@ def near_dup_clusters(pairs: DataFrame, max_iterations: int = 20) -> DataFrame:
             return F.broadcast(spark.createDataFrame(labels, schema))
         return star_components(raw, max_iterations)
     finally:
-        raw.unpersist()
+        release(raw)
 
 
 def keep_canonical(df: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:

@@ -49,7 +49,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import dialect as D
-from ..util import fan_out
+from ..util import CACHED, fan_out, materialize, reads_cached
 from .dedup import MERSENNE31, base_hash_sql, word_ngrams_from_tokens_sql
 
 DEFAULT_BUCKETS = 10_000
@@ -97,31 +97,28 @@ def bucket_model(docs: DataFrame, id_col: str = "doc_id",
 def dsir_weights(raw_docs: DataFrame, target_docs: DataFrame,
                  id_col: str = "doc_id", text_col: str = "text",
                  m: int = DEFAULT_BUCKETS,
-                 broadcast_bucket_limit: int = BROADCAST_BUCKET_LIMIT,
-                 cache_features: bool = True) -> DataFrame:
+                 broadcast_bucket_limit: int = BROADCAST_BUCKET_LIMIT
+                 ) -> DataFrame:
     """(id, n_feats, logw) per raw document — the importance log-weight
     of the raw doc under target vs raw hashed-n-gram models, rounded to
     6dp after the deterministic fold.  Documents with zero features
     (empty text) carry no evidence and are omitted — they have no
     feature rows, hence no weight (log w would be exactly 0).
 
-    ``cache_features`` persists the per-doc (id, bucket, cnt) frame so
-    the raw corpus is featurized ONCE (the raw bucket model and the
-    scoring join both read the cache) instead of twice.  Callers whose
-    ``raw_docs`` is already a cached frame should pass False: stacking a
-    second persist on a cached-input lineage measured 6.3 → 8.5-12.2 s
-    on the composite curation pipeline at sf0.1/32 cores (cache fill +
-    columnar decode cost more than recomputing from the upstream
-    cache), while the standalone gate — whose raw side is a real scan —
-    measured 3.5 → 3.0 s (32c) and 2.43 → 1.66 s (8c) WITH the cache."""
-    tgt = bucket_model(target_docs, id_col, text_col, m).persist()
+    The per-doc (id, bucket, cnt) frame is persisted so the raw corpus
+    is featurized once, unless ``raw_docs`` already reads through a cache
+    (:func:`~replibyte_spark.util.reads_cached`): a second persist over a
+    cached input measured 6.3 → 8.5-12.2 s on the curation pipeline
+    (sf0.1, 32 cores), while a parquet-reading gate measured 3.5 → 3.0 s
+    with it."""
+    tgt = materialize(bucket_model(target_docs, id_col, text_col, m), CACHED)
     tf = _doc_features(raw_docs, id_col, text_col, m)
-    if cache_features:
+    if not reads_cached(raw_docs):
         # totals collect below fills the cache before the scoring join
         # reads it — no concurrent-fill race
-        tf = tf.persist()
-    raw = (tf.groupBy("bucket")
-           .agg(F.sum("cnt").cast("long").alias("n")).persist())
+        tf = materialize(tf, CACHED)
+    raw = materialize(tf.groupBy("bucket")
+                      .agg(F.sum("cnt").cast("long").alias("n")), CACHED)
     totals_t = tgt.agg(F.sum("n")).collect()[0][0]
     totals_r = raw.agg(F.sum("n")).collect()[0][0]
     if not totals_t or not totals_r:
@@ -326,14 +323,14 @@ dsir_w AS (
 def dsir_select(raw_docs: DataFrame, target_docs: DataFrame, k: int,
                 id_col: str = "doc_id", text_col: str = "text",
                 m: int = DEFAULT_BUCKETS, seed: str = "dsir",
-                broadcast_bucket_limit: int = BROADCAST_BUCKET_LIMIT,
-                cache_features: bool = True) -> DataFrame:
+                broadcast_bucket_limit: int = BROADCAST_BUCKET_LIMIT
+                ) -> DataFrame:
     """Top-k raw documents by Gumbel-perturbed importance weight —
     sampling without replacement ∝ softmax(log w), deterministically.
     Returns (id, n_feats, logw, key) — join back on the id for payload
     columns (keeps the scored frame narrow for the TakeOrdered)."""
     w = dsir_weights(raw_docs, target_docs, id_col, text_col, m,
-                     broadcast_bucket_limit, cache_features)
+                     broadcast_bucket_limit)
     key = F.round(
         F.col("logw") + F.expr(gumbel_sql(D.SPARK, id_col, seed)), 6)
     return (w.withColumn("key", key)

@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..util import materialize
 from .dedup import exact_index_flagged_ids, minhash_index_flagged_pairs
 from .similarity import embedding_index_flagged_pairs
 
@@ -66,26 +67,22 @@ def full_incremental_admit_decisions(
     for a parquet-backed batch those are plain scans, while
     materializing a 1 TB crawl snapshot to executor storage is not
     obviously cheaper — checkpoint an expensive batch lineage yourself
-    before calling.  Checkpoint blocks are freed by
-    util.free_persistent_rdds / session teardown (the same lifecycle as
-    embedding_near_dup_pairs_bucketed)."""
+    before calling.  The caller's released() scope frees the checkpoints
+    (util.materialize)."""
     flag = lambda df, d: df.select(F.col(id_col),  # noqa: E731
                                    F.lit(d).alias("decision"))
-    exact = flag(exact_index_flagged_ids(new_docs, mh_index_path,
-                                         id_col, text_col),
-                 "exact").localCheckpoint(eager=True)
+    exact = materialize(flag(exact_index_flagged_ids(
+        new_docs, mh_index_path, id_col, text_col), "exact"))
     surv1 = new_docs.join(exact.select(id_col), on=id_col, how="left_anti")
-    lex = flag(minhash_index_flagged_pairs(surv1, mh_index_path, id_col,
-                                           text_col, lexical_threshold)
-               .select(F.col("id_new").alias(id_col)).distinct(),
-               "lexical").localCheckpoint(eager=True)
+    lex = materialize(flag(minhash_index_flagged_pairs(
+        surv1, mh_index_path, id_col, text_col, lexical_threshold)
+        .select(F.col("id_new").alias(id_col)).distinct(), "lexical"))
     surv2 = surv1.join(lex.select(id_col), on=id_col, how="left_anti")
-    sem = flag(embedding_index_flagged_pairs(
+    sem = materialize(flag(embedding_index_flagged_pairs(
         surv2.select(F.col(id_col), F.col(vec_col)), ann_index_path,
         semantic_threshold, id_col, vec_col, multi_probe,
         broadcast_batch_limit)
-        .select(F.col("id_new").alias(id_col)).distinct(),
-        "semantic").localCheckpoint(eager=True)
+        .select(F.col("id_new").alias(id_col)).distinct(), "semantic"))
     surv3 = surv2.join(sem.select(id_col), on=id_col, how="left_anti")
     return (exact.unionByName(lex).unionByName(sem)
             .unionByName(flag(surv3, "admitted")))

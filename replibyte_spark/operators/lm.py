@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import dialect as D
-from ..util import fan_out
+from ..util import CACHED, fan_out, materialize
 
 
 def _tokens(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -64,22 +64,16 @@ def perplexity_scores(docs: DataFrame, lm: DataFrame,
     Rounded to 6dp AFTER the deterministic per-doc fold so the DuckDB
     oracle reproduces the values.
 
-    CALLER CONTRACT (persist lifecycle): the model frame is persisted
-    here (cache-manager persist, bounded by vocabulary size) — the stats
-    collect below fills the cache, so the scoring join reuses it instead
-    of re-running the training word-count a second time.  The persisted
-    blocks outlive this call because the returned lazy frame's plan
-    references them: once you have materialized the result, release them
-    with `lm.unpersist()` on the frame you passed in (persist is keyed on
-    the logical plan, so the caller's reference reaches the same entry)
-    or sweep with `spark.catalog.clearCache()`.  A long-lived session
-    scoring many batches without this accumulates one vocab-sized cache
-    entry per call (the CLI `corpus score` path does the unpersist in a
-    `finally`).  The frequency table gets an explicit broadcast hint only
-    while `vocab <= broadcast_vocab_limit`; beyond that the join is left
-    to the planner — a forced broadcast of a web-scale vocabulary would
-    fail outright instead of falling back to a shuffle join."""
-    lm = lm.persist()
+    The model frame is persisted here (cache-manager persist, bounded by
+    vocabulary size) — the stats collect below fills the cache, so the
+    scoring join reuses it instead of re-running the training word-count
+    a second time.  The returned plan reads the cache, so the caller's
+    released() scope frees it (util.materialize).  The frequency table
+    gets an explicit broadcast hint only while `vocab <=
+    broadcast_vocab_limit`; beyond that the join is left to the planner —
+    a forced broadcast of a web-scale vocabulary would fail outright
+    instead of falling back to a shuffle join."""
+    lm = materialize(lm, CACHED)
     stats = lm.agg(F.sum("n").alias("total"),
                    F.count(F.lit(1)).alias("vocab")).collect()[0]
     if stats["total"] is None:
@@ -167,11 +161,10 @@ def bigram_perplexity_scores(docs: DataFrame, lm: DataFrame,
     to k/denom.  Documents with fewer than two tokens have no transitions
     and report NULL entropy (undefined, not 0).  Same determinism
     contract as :func:`perplexity_scores` (sorted fold, rounded after);
-    same persist-lifecycle CALLER CONTRACT (the model frame is persisted
-    here — unpersist the frame you passed in once the result is
-    materialized); same guarded broadcast (model and context tables are
-    vocabulary-bounded, hinted only under `broadcast_vocab_limit`)."""
-    lm = lm.persist()
+    same persisted model frame; same guarded broadcast (model and context
+    tables are vocabulary-bounded, hinted only under
+    `broadcast_vocab_limit`)."""
+    lm = materialize(lm, CACHED)
     ctx = (lm.groupBy("prev").agg(F.sum("n").alias("c")))
     stats = lm.agg(
         F.count(F.lit(1)).alias("pairs"),

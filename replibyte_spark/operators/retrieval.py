@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..util import CACHED, materialize
 from .lm import _tokens
 
 BM25_K1 = 1.2
@@ -53,10 +54,10 @@ def bm25_scores(docs: DataFrame, queries: DataFrame, k1: float = BM25_K1,
     # and the doc-keyed score side) would otherwise each re-run the
     # tokenize + explode + count subtree (r14: three identical 831K-read
     # map+agg stage pairs in the job history)
-    postings = (_tokens(docs, id_col, text_col)
-                .groupBy(id_col, "token")
-                .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-                .persist())
+    postings = materialize(_tokens(docs, id_col, text_col)
+                           .groupBy(id_col, "token")
+                           .agg(F.count(F.lit(1)).cast("long").alias("tf")),
+                           CACHED)
     # one aggregation pass yields every corpus scalar the plan needs:
     # N and avgdl for the formula, and the VOCABULARY size for the
     # broadcast guard — the broadcast side is dfreq (one row per distinct

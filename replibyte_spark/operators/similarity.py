@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .. import dialect as D
-from ..util import fan_out
+from ..util import fan_out, materialize, release
 
 
 def dot_sql(d: str, a: str, b: str) -> str:
@@ -419,7 +419,7 @@ def refine_centroids(vectors: DataFrame, centroids: DataFrame,
     fixture builds; the default `F.avg` path (partial aggregation,
     ulp-nondeterministic summation order) is the 100 TB path.
     """
-    for _ in range(iterations):
+    for i in range(iterations):
         assigned = ivf_assign(vectors, id_col=id_col, vec_col=vec_col,
                               centroids=centroids)
         dims = (assigned.select("centroid_id",
@@ -444,16 +444,18 @@ def refine_centroids(vectors: DataFrame, centroids: DataFrame,
         if normalize:
             rebuilt = rebuilt.withColumn(
                 "cv", F.expr(f"transform(cv, x -> x / {norm_sql(D.SPARK, 'cv')})"))
-        centroids = (centroids.select("centroid_id").join(
-            rebuilt, on="centroid_id", how="left")
+        done, centroids = centroids, materialize(
+            centroids.select("centroid_id").join(
+                rebuilt, on="centroid_id", how="left")
             .join(centroids.select("centroid_id",
                                    F.col("cv").alias("__old")),
                   on="centroid_id")
             .select("centroid_id",
                     F.coalesce(F.col("cv"),
                                F.col("__old").cast("array<double>"))
-                    .alias("cv"))
-            .localCheckpoint(eager=True))
+                    .alias("cv")))
+        if i:       # the superseded round is dead; round 0 read the caller's
+            release(done)
     return centroids
 
 
@@ -847,10 +849,9 @@ def embedding_near_dup_pairs_bucketed(vectors: DataFrame,
     # far worse — both join-side stages race to fill the same cache blocks
     # (measured 138 s vs 8 s at sf0.1).  localCheckpoint computes it exactly
     # once, before the join stages launch.
-    bk = (rp_multi_table_buckets(vectors, bits, tables, seed, id_col, vec_col,
-                                 dim)
-          .withColumn("nrm", F.expr(norm_sql(D.SPARK, vec_col)))
-          .localCheckpoint(eager=True))
+    bk = materialize(rp_multi_table_buckets(vectors, bits, tables, seed,
+                                            id_col, vec_col, dim)
+                     .withColumn("nrm", F.expr(norm_sql(D.SPARK, vec_col))))
     a = bk.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"),
                   F.col("nrm").alias("na"), "tbl", "bucket")
     b = bk.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"),

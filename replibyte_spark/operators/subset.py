@@ -40,6 +40,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..util import materialize, release
+
 
 @dataclass(frozen=True)
 class FkEdge:
@@ -121,63 +123,32 @@ def subset_closure(
     # itself, which also makes a separate every-N-rounds lineage cut
     # unnecessary.  A batched one-action-per-round variant was also tried
     # and is SLOWER: within one action the probe subtrees share
-    # unmaterialized frames and race to recompute them.  Checkpointed RDDs
-    # are swept by util.free_persistent_rdds / GC (bench.py runs both), the
-    # r4 hygiene contract.  Two further optimizations: an edge whose child
-    # set did not grow since it last ran is skipped (its contribution is
-    # already folded in), and FK key projections feed the left-semi join
-    # WITHOUT a distinct — semi-join semantics dedupe for free, and the
-    # distinct was a whole extra shuffle per edge per round.
+    # unmaterialized frames and race to recompute them.  Two further
+    # optimizations: an edge whose child set did not grow since it last
+    # ran is skipped (its contribution is already folded in), and FK key
+    # projections feed the left-semi join WITHOUT a distinct — semi-join
+    # semantics dedupe for free, and the distinct was a whole extra
+    # shuffle per edge per round.
 
-    sc = seed_df.sparkSession.sparkContext
-
-    def _pinned_ids() -> set:
-        return set(sc._jsc.getPersistentRDDs().keys())
-
-    def _free_ids(ids: set) -> None:
-        jmap = sc._jsc.getPersistentRDDs()
-        for i in ids:
-            jrdd = jmap.get(i)
-            if jrdd is not None:
-                jrdd.unpersist(False)
-
-    # (store_name, table) -> the checkpoint-RDD ids the CURRENT frame pins.
-    # Long fixpoints over graphs with many stagnant edges otherwise
-    # accumulate one orphaned checkpoint per no-growth merge (and one per
-    # superseded frame) in executor storage until JVM GC — which round 4
-    # showed may never run while the session lives.  Freeing is safe only
-    # for frames nothing else references: discarded candidates and
-    # superseded per-(store, table) frames qualify; the seed checkpoint is
-    # SHARED between kept[] and expand[] and is deliberately registered in
-    # neither, so supersession never frees it.  The FINAL kept frames stay
-    # pinned for the caller (bench/tests sweep them via
-    # util.free_persistent_rdds afterwards).
-    owned: dict[tuple[str, str], set] = {}
-
-    def _merge(store, szs, table, new_rows, store_name) -> bool:
+    def _merge(store, szs, table, new_rows) -> bool:
         """Eagerly union new_rows into store[table]; True if it grew.
-        Discarded candidate checkpoints and superseded frames are
-        unpersisted immediately instead of waiting for JVM GC."""
-        before = _pinned_ids()
-        if table not in store:
-            m = new_rows.localCheckpoint(eager=True)
-            n = m.count()
-            if n == 0:
-                _free_ids(_pinned_ids() - before)
-                return False
-        else:
-            m = (store[table].unionByName(new_rows).distinct()
-                 .localCheckpoint(eager=True))
-            n = m.count()
-            if n <= szs[table]:
-                _free_ids(_pinned_ids() - before)
-                return False
-        _free_ids(owned.pop((store_name, table), set()))
-        owned[(store_name, table)] = _pinned_ids() - before
+        A discarded candidate and the frame it supersedes are released at
+        once: a long fixpoint over stagnant edges would otherwise park one
+        orphaned checkpoint per merge in executor storage.  The seed is
+        shared by kept[] and expand[], so supersession never frees it."""
+        if table in store:
+            new_rows = store[table].unionByName(new_rows).distinct()
+        m = materialize(new_rows)
+        n = m.count()
+        if n <= szs.get(table, 0):
+            release(m)
+            return False
+        if table in store and store[table] is not seed_df:
+            release(store[table])
         store[table], szs[table] = m, n
         return True
 
-    seed_df = seed_df.localCheckpoint(eager=True)
+    seed_df = materialize(seed_df)
     kept: dict[str, DataFrame] = {seed_table: seed_df}
     expand: dict[str, DataFrame] = {seed_table: seed_df}
     sizes: dict[str, int] = {seed_table: seed_df.count()}
@@ -199,7 +170,7 @@ def subset_closure(
                        .select(F.col(e.fk_col).alias(e.parent_col)).na.drop())
             rows = tables[e.parent].join(fk_keys, on=e.parent_col,
                                          how="leftsemi")
-            if _merge(kept, sizes, e.parent, rows, "kept"):
+            if _merge(kept, sizes, e.parent, rows):
                 grew_k.add(e.parent)
         # ---- child direction (optional): children of the seed subtree only
         if include_children:
@@ -211,11 +182,11 @@ def subset_closure(
                 pk = expand[e.parent].select(
                     F.col(e.parent_col).alias(e.fk_col))
                 rows = tables[e.child].join(pk, on=e.fk_col, how="leftsemi")
-                if _merge(kept, sizes, e.child, rows, "kept"):
+                if _merge(kept, sizes, e.child, rows):
                     grew_k.add(e.child)
                 # child-derived rows expand further; tracked separately from
                 # kept so RI-derived rows of the same table never re-expand
-                if _merge(expand, esizes, e.child, rows, "expand"):
+                if _merge(expand, esizes, e.child, rows):
                     grew_e.add(e.child)
         if not grew_k and not grew_e:
             break

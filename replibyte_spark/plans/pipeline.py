@@ -24,8 +24,7 @@ from ..functions.transformers import apply_transformers
 from ..operators.sample import hash_percent_filter, systematic_percent
 from ..operators.subset import FkEdge, subset_closure
 from ..sinks.datastore import Datastore, DumpInfo
-from ..sources.sqldump import DumpTables
-from ..util import concurrently
+from ..util import concurrently, released
 
 
 def _parse_uri(uri: str) -> tuple[str, str]:
@@ -100,23 +99,16 @@ class DumpPipeline:
         else:
             raise ValueError(f"unsupported source scheme: {scheme}")
         # the non-listing sources (jdbc/sqltext/mongodump) surface their
-        # own table dicts — apply the same only/skip filter to those, in
-        # place, so the sqltext reader's dict keeps its cache handle
-        for n in [n for n in tables if not _wanted(n)]:
-            del tables[n]
-        return tables
+        # own table dicts — apply the same only/skip filter to those
+        return {n: df for n, df in tables.items() if _wanted(n)}
 
     def run(self, spark: SparkSession, name: str | None = None) -> DumpInfo:
         # the sqltext reader caches its parse and the subset closure
         # checkpoints its frames; nothing reads them once the datastore
-        # write has returned or raised, so release exactly what this run
-        # made persistent
-        jsc = spark.sparkContext._jsc
-        before = set(jsc.getPersistentRDDs().keys())
-        source = None
-        try:
+        # write has returned or raised
+        with released():
             cfg = self.config
-            tables = source = self.load_source_tables(spark)
+            tables = self.load_source_tables(spark)
             # ---- subset (reference: source/postgres.rs:156-165 → subset())
             ss = cfg.source.database_subset
             if ss:
@@ -161,12 +153,6 @@ class DumpPipeline:
                 encrypt_columns=enc,
                 encryption_key=cfg.encryption_key,
             )
-        finally:
-            if isinstance(source, DumpTables):
-                source.unpersist()
-            for rdd_id, jrdd in jsc.getPersistentRDDs().items():
-                if rdd_id not in before:
-                    jrdd.unpersist(False)
 
 
 class RestorePipeline:

@@ -445,6 +445,8 @@ def read_mongo_archive(spark: SparkSession, path: str,
     """
     from pyspark import StorageLevel
 
+    from ..util import materialize
+
     sc = spark.sparkContext
     target = min_partitions or sc.defaultParallelism
 
@@ -458,9 +460,9 @@ def read_mongo_archive(spark: SparkSession, path: str,
     pairs = sc.binaryFiles(path).flatMap(emit)
     if pairs.getNumPartitions() < target:
         pairs = pairs.repartition(target)
-    decoded = (pairs
-               .map(lambda t: (t[0], doc_to_json(decode_document(t[1])[0])))
-               .persist(StorageLevel.MEMORY_AND_DISK))
+    decoded = materialize(
+        pairs.map(lambda t: (t[0], doc_to_json(decode_document(t[1])[0]))),
+        StorageLevel.MEMORY_AND_DISK)
     counts = decoded.countByKey()  # one job; also materializes the cache
     # keys stay (db, collection) end to end; the OUTPUT key is the bare
     # collection name when unambiguous, 'db.collection' when the same

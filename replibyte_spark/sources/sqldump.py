@@ -31,6 +31,8 @@ from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..util import CACHED, materialize, release
+
 
 # ---------------------------------------------------------------------------
 # statement splitter (P1)
@@ -454,20 +456,8 @@ class _LayoutMasks(AccumulatorParam):
         return acc
 
 
-class DumpTables(dict):
-    """``{table: DataFrame}`` of one dump read.  Every frame projects the
-    same cached relation; :meth:`unpersist` releases it."""
-
-    def __init__(self, frames: dict[str, DataFrame], cached: DataFrame):
-        super().__init__(frames)
-        self.cached = cached
-
-    def unpersist(self) -> None:
-        self.cached.unpersist()
-
-
 def _frames_from_rows(spark: SparkSession, rows, tables: list[str] | None,
-                      description: str) -> DumpTables:
+                      description: str) -> dict[str, DataFrame]:
     """RDD of (table, cols_tuple, values_list) → {table: DataFrame}, from one
     job named ``description``.  A table dumped with several column lists
     selects by name, columns in first-seen order, nulls where absent."""
@@ -488,16 +478,16 @@ def _frames_from_rows(spark: SparkSession, rows, tables: list[str] | None,
             yield t, cols, texts
         layouts.add(seen)
 
-    cached = spark.createDataFrame(
+    cached = materialize(spark.createDataFrame(
         rows.mapPartitionsWithIndex(encode),
         "t string, cols array<string>, vals array<string>",
-        verifySchema=False).cache()
+        verifySchema=False), CACHED)
     prev = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(description)
     try:
         cached.write.format("noop").mode("overwrite").save()
     except BaseException:
-        cached.unpersist()
+        release(cached)
         raise
     finally:
         sc.setLocalProperty("spark.job.description", prev)
@@ -509,9 +499,9 @@ def _frames_from_rows(spark: SparkSession, rows, tables: list[str] | None,
         for c, m in zip(cols, masks):
             ty[c] = ty.get(c, 0) | m
     by_name = F.map_from_arrays("cols", "vals")
-    return DumpTables({t: cached.where(F.col("t") == t).select(*[
+    return {t: cached.where(F.col("t") == t).select(*[
         by_name[c].cast(_mask_to_type(m)).alias(c) for c, m in ty.items()])
-        for t, ty in sorted(types.items())}, cached)
+        for t, ty in sorted(types.items())}
 
 
 # ---------------------------------------------------------------------------
@@ -520,14 +510,14 @@ def _frames_from_rows(spark: SparkSession, rows, tables: list[str] | None,
 
 def read_sql_dump(spark: SparkSession, path: str,
                   tables: list[str] | None = None,
-                  dialect: str = "postgres") -> DumpTables:
+                  dialect: str = "postgres") -> dict[str, DataFrame]:
     """Parse .sql dump file(s) into per-table DataFrames.
 
     Tasks get whole files: ``wholeTextFiles``' default ``minPartitions`` is
     2, so a 12-file dump parses in 2 tasks.  The read's one job parses each
-    file once into a cache that every returned frame projects; the caller
-    releases it with ``unpersist()`` on the returned :class:`DumpTables`
-    (``DumpPipeline.run`` does so once its write returns or raises).
+    file once into a cache that every returned frame projects; the
+    enclosing :func:`~replibyte_spark.util.released` scope frees it
+    (``DumpPipeline.run`` opens one around its read and write).
     """
     files = spark.sparkContext.wholeTextFiles(path)
     n_files = sum(p.serializableHadoopSplit().value().getNumPaths()
@@ -548,7 +538,7 @@ def read_sql_dump(spark: SparkSession, path: str,
 
 def read_copy_dump_parallel(spark: SparkSession, path: str,
                             tables: list[str] | None = None,
-                            min_partitions: int = 32) -> DumpTables:
+                            min_partitions: int = 32) -> dict[str, DataFrame]:
     """Parse a MONOLITHIC COPY-format dump with full parallelism.
 
     `read_sql_dump` gives each task whole files, which serializes on one

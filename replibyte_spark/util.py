@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import contextlib
+from contextvars import ContextVar, copy_context
+
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -24,6 +28,75 @@ def free_persistent_rdds(spark: SparkSession, blocking: bool = True) -> int:
     for jrdd in rdds:
         jrdd.unpersist(blocking)
     return len(rdds)
+
+
+#: the storage level of ``DataFrame.persist()`` and ``.cache()``
+CACHED = StorageLevel.MEMORY_AND_DISK_DESER
+
+# the open released() scopes, innermost last; each maps id -> frame or RDD
+_scopes: ContextVar[tuple] = ContextVar("released_scopes", default=())
+
+
+def materialize(df, level: StorageLevel | None = None):
+    """The package's only persist and checkpoint call: an eager
+    ``localCheckpoint`` by default, else ``df.persist(level)`` (an RDD
+    works too).  The result is registered with the innermost open
+    :func:`released` scope; outside any scope the caller owns it.  A
+    frame the cache manager already holds stays its owner's: persisting
+    it again is a no-op and is not registered."""
+    scopes = _scopes.get()
+    if level is None:
+        out = df.localCheckpoint(eager=True)
+    else:
+        if (scopes and isinstance(df, DataFrame)
+                and df.storageLevel != StorageLevel.NONE):
+            scopes = ()
+        out = df.persist(level)
+    if scopes:
+        scopes[-1][id(out)] = out
+    return out
+
+
+def release(df) -> None:
+    """Free one :func:`materialize` result now (a checkpoint's RDD or a
+    persist's cache entry) and drop it from any open scope.  Only for
+    frames nothing will read again."""
+    for scope in _scopes.get():
+        scope.pop(id(df), None)
+    if isinstance(df, DataFrame):
+        plan = df._jdf.logicalPlan()
+        if plan.nodeName() == "LogicalRDD" and plan.rdd().isCheckpointed():
+            plan.rdd().unpersist(False)
+            return
+    df.unpersist()
+
+
+@contextlib.contextmanager
+def released():
+    """On exit, normally or by exception, free exactly what
+    :func:`materialize` registered inside this scope, on this thread and
+    in the :func:`concurrently` calls it starts; frames reading that
+    state are dead after it.  Another thread's scope on the same session
+    is never touched.  Open scopes only at entry points (pipelines, CLI
+    commands, test harnesses): an operator's result must stay readable.
+    Yields a live view of what is registered and not yet released."""
+    scope: dict = {}
+    token = _scopes.set(_scopes.get() + (scope,))
+    try:
+        yield scope.values()
+    finally:
+        _scopes.reset(token)
+        for df in reversed(list(scope.values())):
+            release(df)
+
+
+def reads_cached(df: DataFrame) -> bool:
+    """True when ``df``'s plan reads through an InMemoryRelation, i.e. a
+    frame the cache manager holds.  Inspects the plan; runs no job."""
+    cm = df.sparkSession._jsparkSession.sharedState().cacheManager()
+    leaves = cm.useCachedData(df._jdf.logicalPlan()).collectLeaves()
+    return any(leaves.apply(i).nodeName() == "InMemoryRelation"
+               for i in range(leaves.size()))
 
 
 def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -68,9 +141,11 @@ def concurrently(spark: SparkSession, fn, items) -> list:
     caller's thread, so its jobs keep the caller's job group, description
     and tags, each call on its own copy of the local properties.  All
     submitted calls finish before the first exception (in input order) is
-    re-raised.  Keep work that must follow an order out of it: a live
-    database may enforce FK order between tables, so JDBC and container
-    restores stay one serial stream."""
+    re-raised.  Each call runs in a copy of the caller's context, so what
+    it materializes joins the caller's :func:`released` scope.  Keep work
+    that must follow an order out of it: a live database may enforce FK
+    order between tables, so JDBC and container restores stay one serial
+    stream."""
     items = list(items)
     if len(items) <= 1:
         return [fn(*item) for item in items]
@@ -79,7 +154,8 @@ def concurrently(spark: SparkSession, fn, items) -> list:
 
     workers = min(len(items), spark.sparkContext.defaultParallelism)
     with ThreadPoolExecutor(max_workers=workers) as pool:   # exit waits for all
-        futures = [pool.submit(inheritable_thread_target(spark)(fn), *item)
+        futures = [pool.submit(copy_context().run,
+                               inheritable_thread_target(spark)(fn), *item)
                    for item in items]
     return [f.result() for f in futures]
 

@@ -21,7 +21,7 @@ from ..catalog import load_table
 from ..functions import text as T
 from ..operators import dedup as DD
 from ..operators.grouped import pack_token_budget
-from ..util import fan_out
+from ..util import CACHED, fan_out, materialize
 from . import Query, register
 from .dedup_queries import BANDS, JACCARD_T, N_HASHES, NGRAM, _minhash_ctes
 from .text_queries import PACK_BUDGET
@@ -61,16 +61,12 @@ def training_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fill via noop WRITE, not count(): the write streams each cached
     # batch straight to the null sink with no aggregation plan on top
     # (r6 A/B, SCALE.md).
-    scored = scored.persist()
+    scored = materialize(scored, CACHED)
     scored.write.mode("overwrite").format("noop").save()
     kept = scored.filter(F.col("quality") >= QUALITY_FLOOR)
-    # checkpoint_candidates=True (r15): kept reads through the persisted
-    # scored frame, which breaks AQE's dedup of the twin verification
-    # gram aggregates (see minhash_near_dup_pairs docstring)
     pairs = DD.minhash_near_dup_pairs(kept, "doc_id", "text",
                                       threshold=JACCARD_T,
-                                      n_hashes=N_HASHES, bands=BANDS, n=NGRAM,
-                                      checkpoint_candidates=True)
+                                      n_hashes=N_HASHES, bands=BANDS, n=NGRAM)
     survivors = DD.keep_canonical(kept, pairs, "doc_id").drop("text")
     packed = pack_token_budget(survivors, "source", "doc_id",
                                "n_tokens", PACK_BUDGET)
@@ -158,18 +154,13 @@ def curation_pipeline_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is a cached-boolean scan.  (r10 persisted the filtered survivors
     # for the same four-reads reason; the flagged frame is the same
     # corpus plus booleans.)
-    flagged = (both.select("doc_id", "source", "text",
-                           "repetition_pass", "c4_pass").persist())
+    flagged = materialize(both.select("doc_id", "source", "text",
+                                      "repetition_pass", "c4_pass"), CACHED)
     flagged.write.mode("overwrite").format("noop").save()
     surv = (flagged.filter(F.col("repetition_pass") & F.col("c4_pass"))
             .select("doc_id", "source", "text"))
     target = surv.filter(F.col("source") == V4_TARGET)
-    # cache_features=False (r14): surv derives from the persisted
-    # flagged frame, so DSIR's feature recompute is a cached-column
-    # scan; stacking a second persist on top measured 6.3 → 8.5-12.2 s
-    # at sf0.1/32c (see dsir_weights docstring)
-    sel = dsir_select(surv, target, k=V4_K, m=V4_M, seed=V4_SEED,
-                      cache_features=False)
+    sel = dsir_select(surv, target, k=V4_K, m=V4_M, seed=V4_SEED)
     return (sel.join(surv.select("doc_id", "source"), "doc_id")
             .select("doc_id", "source", "n_feats", "logw", "key")
             .orderBy(F.col("key").desc(), "doc_id"))

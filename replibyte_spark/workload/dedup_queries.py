@@ -559,6 +559,7 @@ def full_incremental_admit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     rejected it, or 'admitted'.  The oracle recomputes every tier AND the
     tier precedence from the raw tables."""
     from ..operators.ingest import full_incremental_admit_decisions
+    from ..util import materialize
 
     mh = _minhash_index_fixture(spark, sf_dir)
     ann = _fa_ann_index(spark, sf_dir)
@@ -566,7 +567,7 @@ def full_incremental_admit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exactly the "expensive batch lineage — checkpoint it yourself"
     # case the operator documents: unpinned it re-evaluates once per
     # tier (measured 3.3 s → 2.0 s at sf0.1)
-    batch = _fa_batch(spark, sf_dir).localCheckpoint(eager=True)
+    batch = materialize(_fa_batch(spark, sf_dir))
     return (full_incremental_admit_decisions(
         batch, mh, ann,
         lexical_threshold=MHI_THRESHOLD, semantic_threshold=FA_SEM_T,

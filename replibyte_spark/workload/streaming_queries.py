@@ -388,6 +388,7 @@ def streaming_full_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from ..operators.ingest import full_incremental_admit
+    from ..util import released
     from .dedup_queries import (FA_EXACT_SHIFT, FA_LEX_SHIFT, FA_PROBE,
                                 FA_SEM_SHIFT, FA_SEM_T, MHI_MOD,
                                 MHI_THRESHOLD, _fa_ann_index,
@@ -430,11 +431,13 @@ def streaming_full_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the original id (the embedding key) is doc_id % 1M
         joined = (mb_df.withColumn("__orig", F.col("doc_id") % 1_000_000)
                   .join(emb, "__orig").drop("__orig"))
-        (full_incremental_admit(joined, mh, ann,
-                                lexical_threshold=MHI_THRESHOLD,
-                                semantic_threshold=FA_SEM_T,
-                                multi_probe=FA_PROBE)
-         .select("doc_id").write.mode("append").parquet(out_dir))
+        # Spark calls the handler on its own thread, outside any scope
+        with released():
+            (full_incremental_admit(joined, mh, ann,
+                                    lexical_threshold=MHI_THRESHOLD,
+                                    semantic_threshold=FA_SEM_T,
+                                    multi_probe=FA_PROBE)
+             .select("doc_id").write.mode("append").parquet(out_dir))
 
     q = (batch_stream.writeStream.foreachBatch(admit)
          .option("checkpointLocation", ckpt)
@@ -561,10 +564,11 @@ def streaming_quota_full_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
                                 FA_SEM_SHIFT, FA_SEM_T, MHI_MOD,
                                 MHI_THRESHOLD, _fa_ann_index, _fa_batch,
                                 _minhash_index_fixture)
+    from ..util import materialize, released
 
     mh = _minhash_index_fixture(spark, sf_dir)
     ann = _fa_ann_index(spark, sf_dir)
-    fab_static = _fa_batch(spark, sf_dir).localCheckpoint(eager=True)
+    fab_static = materialize(_fa_batch(spark, sf_dir))
     schema = ("doc_id long, text string, lang string, source string, "
               "n_chars long")
     p = os.path.join(sf_dir, "documents.parquet")
@@ -595,12 +599,13 @@ def streaming_quota_full_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def admit(mb_df, _epoch_id: int) -> None:
         survivors = mb_df.join(fab_static, "doc_id")
-        (full_incremental_admit(survivors, mh, ann,
-                                lexical_threshold=MHI_THRESHOLD,
-                                semantic_threshold=FA_SEM_T,
-                                multi_probe=FA_PROBE)
-         .select("lang", "doc_id")
-         .write.mode("append").parquet(out_dir))
+        with released():        # as in streaming_full_admit
+            (full_incremental_admit(survivors, mh, ann,
+                                    lexical_threshold=MHI_THRESHOLD,
+                                    semantic_threshold=FA_SEM_T,
+                                    multi_probe=FA_PROBE)
+             .select("lang", "doc_id")
+             .write.mode("append").parquet(out_dir))
 
     q = (quota_out.writeStream.foreachBatch(admit)
          .outputMode("append")

@@ -849,6 +849,7 @@ LMIX_BUDGET = 6000
 def language_mix_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.lid import identify_language
     from ..operators.sample import token_budget_mix
+    from ..util import CACHED, materialize
 
     # persist the LID projection (r15): pred_lang is referenced by the
     # threshold aggregate, twice in the mix predicate (hash draw + rate
@@ -860,7 +861,8 @@ def language_mix_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     # doc_language_id gate).  Same pathology/fix as the corpus pipeline's
     # scored-frame persist (corpus.py, r12).  token_budget_mix's eager
     # threshold aggregate fills the cache, so no extra fill action.
-    docs = identify_language(load_table(spark, sf_dir, "documents")).persist()
+    docs = materialize(identify_language(load_table(spark, sf_dir,
+                                                    "documents")), CACHED)
     kept = token_budget_mix(docs, LMIX_WEIGHTS, LMIX_BUDGET,
                             stratum_col="pred_lang", salt="lmix")
     tok = T.token_count_sql(D.SPARK, "text")

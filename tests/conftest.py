@@ -56,3 +56,16 @@ def duck():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def empty_registry(spark):
+    """Start from an empty cache manager and persistent-RDD registry, so a
+    count taken later is this test's own; returns that count function."""
+    from replibyte_spark.util import free_persistent_rdds
+
+    spark.catalog.clearCache()
+    free_persistent_rdds(spark)
+    jsc = spark.sparkContext._jsc
+    assert jsc.getPersistentRDDs().size() == 0
+    return lambda: jsc.getPersistentRDDs().size()

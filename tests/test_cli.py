@@ -469,12 +469,12 @@ def test_cli_corpus_compact(spark, tmp_path, capsys):
     assert "centroid drift: mean assignment cosine" in out
 
 
-def test_cli_corpus_score_persist_lifecycle(spark, tmp_path, capsys):
+def test_cli_corpus_score_persist_lifecycle(spark, tmp_path, capsys,
+                                            empty_registry):
     """N successive `corpus score` calls leave the persistent-RDD
-    registry flat: the CLI unpersists the LM frame in a finally
-    (perplexity_scores documents this caller contract — its persisted
-    model blocks outlive the call because the returned plan references
-    them)."""
+    registry flat: both scorers persist the LM frame, and the released()
+    scope cli.main runs each command in frees it when the command
+    returns."""
     train = str(tmp_path / "lc_train.parquet")
     docs = str(tmp_path / "lc_docs.parquet")
     spark.createDataFrame(
@@ -483,19 +483,11 @@ def test_cli_corpus_score_persist_lifecycle(spark, tmp_path, capsys):
     spark.createDataFrame(
         [(1, "common words repeated"), (2, "zyx qwv unseen gibberish")],
         "doc_id long, text string").write.parquet(docs)
-    # full sweep so the baseline is 0 — a nonzero baseline from earlier
-    # tests is unstable under Spark's ContextCleaner
-    from replibyte_spark.util import free_persistent_rdds
-
-    spark.catalog.clearCache()
-    free_persistent_rdds(spark)
-    jsc = spark.sparkContext._jsc
-    assert jsc.getPersistentRDDs().size() == 0
     for i in range(3):
         out = str(tmp_path / f"lc_scored_{i}.parquet")
         assert main(["corpus", "score", "-i", docs, "--train", train,
                      "-o", out], spark=spark) == 0
-        assert jsc.getPersistentRDDs().size() == 0
+        assert empty_registry() == 0
 
 
 def test_cli_corpus_operator_errors_exit_2(spark, tmp_path, capsys):
@@ -625,10 +617,11 @@ def test_cli_corpus_cluster(spark, tmp_path, capsys):
                  "--vec-col", "nope"], spark=spark) == 2
 
 
-def test_cli_corpus_classify(spark, tmp_path, capsys):
+def test_cli_corpus_classify(spark, tmp_path, capsys, empty_registry):
     """`corpus classify` trains NB on a labeled corpus and predicts
-    labels for the input; persist lifecycle swept; error convention on a
-    missing label column and an all-NULL label corpus."""
+    labels for the input; the persisted model frame is freed when the
+    command returns; error convention on a missing label column and an
+    all-NULL label corpus."""
     train = str(tmp_path / "nbtrain.parquet")
     spark.createDataFrame(
         [(i, "the cat sat on the mat and the dog ran", "en")
@@ -641,19 +634,13 @@ def test_cli_corpus_classify(spark, tmp_path, capsys):
         [(100, "the cat and the dog sat"), (101, "le chat et le chien")],
         "doc_id long, text string").write.parquet(docs)
     out = str(tmp_path / "nbpred.parquet")
-    # full sweep so the baseline is 0 — a nonzero baseline from earlier
-    # tests in the shared session is unstable under the ContextCleaner
-    from replibyte_spark.util import free_persistent_rdds
-
-    spark.catalog.clearCache()
-    free_persistent_rdds(spark)
     assert main(["corpus", "classify", "-i", docs, "--train", train,
                  "-o", out], spark=spark) == 0
     assert "classified 2 docs" in capsys.readouterr().out
     rows = {r.doc_id: r.pred_label
             for r in spark.read.parquet(out).collect()}
     assert rows == {100: "en", 101: "fr"}
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
+    assert empty_registry() == 0
     assert main(["corpus", "classify", "-i", docs, "--train", train,
                  "-o", out, "--label-col", "nope"], spark=spark) == 2
     assert "error:" in capsys.readouterr().err

@@ -430,6 +430,30 @@ def test_star_components_tricky_graphs_match_union_find(spark):
         assert got == want, f"{name}: {got} != {want}"
 
 
+def test_per_round_checkpoints_free_superseded_rounds(spark, empty_registry):
+    """star_components and refine_centroids checkpoint every round and
+    release the round it supersedes: after a multi-round call inside a
+    scope only the returned frame's checkpoint stays pinned, and the
+    scope frees that."""
+    from replibyte_spark.util import released
+
+    chain = spark.createDataFrame([(i, i + 1) for i in range(1, 64)],
+                                  "id_a long, id_b long")
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 4), float(i // 4)]) for i in range(16)],
+        "vec_id long, embedding array<double>")
+    init = S.default_centroids(vecs, n_centroids=2)
+    with released():
+        labels = DD.star_components(chain)
+        assert empty_registry() == 1
+        assert {r.cluster_id for r in labels.collect()} == {1}
+    with released():
+        refined = S.refine_centroids(vecs, init, iterations=4)
+        assert empty_registry() == 1
+        assert refined.count() == 2
+    assert empty_registry() == 0
+
+
 def test_lloyd_refinement_improves_quantization(spark):
     """On normalized clustered vectors, two Lloyd iterations must improve
     mean best-dot over the hash-sampled init (centroids move to cluster
@@ -725,7 +749,8 @@ def test_exact_fingerprint_tier(spark, tmp_path):
     assert lsh_only == {10, 11, 12}
 
 
-def test_minhash_index_admit_persist_lifecycle(spark, tmp_path):
+def test_minhash_index_admit_persist_lifecycle(spark, tmp_path,
+                                              empty_registry):
     """N successive admit calls leave the persistent-RDD registry flat:
     the batch signature subtree rides the band explode (lsh_band_keys
     `carry`) instead of a per-call persist, so a long-lived ingest
@@ -736,22 +761,14 @@ def test_minhash_index_admit_persist_lifecycle(spark, tmp_path):
         "doc_id long, text string")
     path = str(tmp_path / "mh_lc")
     DD.build_minhash_index(corpus, path, n_hashes=12, bands=4, n=3)
-    # full sweep (clearCache + checkpoint-RDD free) so the baseline is 0:
-    # a nonzero baseline from earlier tests is unstable under Spark's
-    # ContextCleaner, which reaps driver-GC'd persistent RDDs mid-test
-    from replibyte_spark.util import free_persistent_rdds
-
-    spark.catalog.clearCache()
-    free_persistent_rdds(spark)
-    jsc = spark.sparkContext._jsc
-    assert jsc.getPersistentRDDs().size() == 0
+    assert empty_registry() == 0
     batch = spark.createDataFrame(
         [(10, "the quick brown fox jumps over the lazy dog today"),
          (11, "novel content that shares no shingles with anything")],
         "doc_id long, text string")
     for _ in range(3):
         DD.dedup_batch_against_index(batch, path, threshold=0.75).count()
-        assert jsc.getPersistentRDDs().size() == 0
+        assert empty_registry() == 0
 
 
 def test_lsh_scurve_and_param_picker():

@@ -11,6 +11,7 @@ import math
 
 import pytest
 
+from replibyte_spark.util import released
 from replibyte_spark.workload import REGISTRY, all_queries
 
 ALL = all_queries()  # driver-gated (REGISTRY) + pytest-only (EXTRA)
@@ -52,9 +53,17 @@ def _rows(seq):
 @pytest.mark.parametrize("name", sorted(ALL))
 def test_query_matches_oracle(spark, duck, sf_dir, name):
     q = ALL[name]
-    df = q.spark_fn(spark, sf_dir)
-    got_cols = df.columns
-    got = _rows(tuple(r) for r in df.collect())
+    jsc = spark.sparkContext._jsc
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    pinned = set(jsc.getPersistentRDDs().keys())
+    entries = cache.numCachedEntries()
+    with released():
+        df = q.spark_fn(spark, sf_dir)
+        got_cols = df.columns
+        got = _rows(tuple(r) for r in df.collect())
+    # the row's scope freed everything the row cached or checkpointed
+    assert not set(jsc.getPersistentRDDs().keys()) - pinned, name
+    assert cache.numCachedEntries() <= entries, name
     assert len(got) > 0, f"{name}: empty result"
     sql = q.oracle_text()
     if sql is None:

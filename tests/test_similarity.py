@@ -26,7 +26,7 @@ def test_fixture_embedding_dim_matches_constant(spark, sf_dir):
     assert len(emb.first().embedding) == EMB_DIM
 
 
-def test_embedding_index_admit(spark, tmp_path):
+def test_embedding_index_admit(spark, tmp_path, empty_registry):
     """Semantic incremental admit (r8): an exact embedding copy of an
     indexed vector always flags at cosine 1.0 (Hamming-0 bucket hit); an
     orthogonal vector survives; the batch-time plan reads only the stored
@@ -35,7 +35,6 @@ def test_embedding_index_admit(spark, tmp_path):
     import re
 
     from replibyte_spark.operators import similarity as S
-    from replibyte_spark.util import free_persistent_rdds
 
     dim = 8
     corpus = spark.createDataFrame(
@@ -59,15 +58,11 @@ def test_embedding_index_admit(spark, tmp_path):
         r"Location: InMemoryFileIndex\(\d+ paths?\)\[([^\]]*)", plan)
     assert scans and all("/ann_adm" in s for s in scans), scans
     # admit drops the copy, keeps the novel vector; registry stays flat
-    spark.catalog.clearCache()
-    free_persistent_rdds(spark)
-    jsc = spark.sparkContext._jsc
-    assert jsc.getPersistentRDDs().size() == 0
     for _ in range(2):
         surv = {r.vec_id for r in
                 S.embedding_index_admit(batch, path, threshold=0.9).collect()}
         assert surv == {11}
-        assert jsc.getPersistentRDDs().size() == 0
+        assert empty_registry() == 0
 
 
 def test_embedding_index_admit_multiprobe_recall(spark, tmp_path):

@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 
 from replibyte_spark.sources.sqldump import parse_insert, split_statements
+from replibyte_spark.util import released
 
 
 def test_split_basic():
@@ -277,39 +278,39 @@ def test_read_sql_dump_is_single_pass(spark, sf_dir, tmp_path):
     nation = load_table(spark, sf_dir, "nation")
     path = str(tmp_path / "dump1")
     write_sql_dump(nation, "nation", path)
-    sc = spark.sparkContext
-    sc.setJobGroup("sqldump-single-pass", "read_sql_dump")
-    try:
-        out = read_sql_dump(spark, path)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = sc.statusTracker().getJobIdsForGroup("sqldump-single-pass")
-    assert len(jobs) == 1, f"expected 1 job during read, got {len(jobs)}"
-    assert out["nation"].count() == nation.count()
+    with released():
+        sc = spark.sparkContext
+        sc.setJobGroup("sqldump-single-pass", "read_sql_dump")
+        try:
+            out = read_sql_dump(spark, path)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = sc.statusTracker().getJobIdsForGroup("sqldump-single-pass")
+        assert len(jobs) == 1, f"expected 1 job during read, got {len(jobs)}"
+        assert out["nation"].count() == nation.count()
 
-    # the job is named after the reader and its file count, and the
-    # caller's own description comes back after the read
-    files = [f for f in (tmp_path / "dump1").iterdir()
-             if not f.name.startswith(("_", "."))]
-    job = sc._jsc.sc().statusStore().job(jobs[0])
-    assert job.description().get() == f"read_sql_dump: {len(files)} files"
-    assert sc.getLocalProperty("spark.job.description") == "read_sql_dump"
+        # the job is named after the reader and its file count, and the
+        # caller's own description comes back after the read
+        files = [f for f in (tmp_path / "dump1").iterdir()
+                 if not f.name.startswith(("_", "."))]
+        job = sc._jsc.sc().statusStore().job(jobs[0])
+        assert job.description().get() == f"read_sql_dump: {len(files)} files"
+        assert sc.getLocalProperty("spark.job.description") == "read_sql_dump"
 
-    # later plans read the parse from the JVM cache: every executed plan's
-    # only leaf is InMemoryTableScan and no node evaluates Python
-    def nodes(plan):
-        yield plan
-        kids = plan.children()
-        for i in range(kids.size()):
-            yield from nodes(kids.apply(i))
+        # later plans read the parse from the JVM cache: every executed plan's
+        # only leaf is InMemoryTableScan and no node evaluates Python
+        def nodes(plan):
+            yield plan
+            kids = plan.children()
+            for i in range(kids.size()):
+                yield from nodes(kids.apply(i))
 
-    for t, df in out.items():
-        plan = list(nodes(df._jdf.queryExecution().executedPlan()))
-        assert {p.nodeName() for p in plan if p.children().isEmpty()} \
-            == {"InMemoryTableScan"}, t
-        assert not [p for p in plan if p.getClass().getName().startswith(
-            "org.apache.spark.sql.execution.python.")], t
-    out.unpersist()
+        for t, df in out.items():
+            plan = list(nodes(df._jdf.queryExecution().executedPlan()))
+            assert {p.nodeName() for p in plan if p.children().isEmpty()} \
+                == {"InMemoryTableScan"}, t
+            assert not [p for p in plan if p.getClass().getName().startswith(
+                "org.apache.spark.sql.execution.python.")], t
 
 
 def test_duplicate_column_names_raise(spark, tmp_path):
@@ -408,8 +409,8 @@ def test_read_sql_dump_matches_row_model(spark, tmp_path):
     d.mkdir()
     (d / "dump.sql").write_text("\n".join(sql) + "\n")
 
-    out = read_sql_dump(spark, str(d))
-    try:
+    with released():
+        out = read_sql_dump(spark, str(d))
         assert sorted(out) == ["cp", "mix", "two"]
         for t, df in out.items():
             order, masks = [], {}
@@ -425,5 +426,3 @@ def test_read_sql_dump_matches_row_model(spark, tmp_path):
                     for rt, cols, vals in records if rt == t]
             got = [tuple(r) for r in df.collect()]
             assert sorted(got, key=repr) == sorted(want, key=repr), t
-    finally:
-        out.unpersist()

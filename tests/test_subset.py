@@ -192,31 +192,32 @@ def test_token_budget_mix_hits_weighted_budgets(spark, sf_dir):
                                                              kept.collect()))
 
 
-def test_cyclic_closure_frees_superseded_checkpoints(spark):
+def test_cyclic_closure_frees_superseded_checkpoints(spark, empty_registry):
     """The cyclic fixpoint localCheckpoints every merge; superseded and
-    discarded frames must be unpersisted as the loop runs, not parked in
-    executor storage until JVM GC.  After the closure, the registry may
-    hold only the LIVE frames (seed + current kept/expand per table) —
-    a multi-round cycle would otherwise leave one orphan per round."""
+    discarded frames must be released as the loop runs, not parked in
+    executor storage until the scope ends.  After the closure, the
+    registry may hold only the LIVE frames (seed + current kept/expand
+    per table) — a multi-round cycle would otherwise leave one orphan per
+    round — and the scope frees those."""
     from replibyte_spark.operators.subset import FkEdge
-    from replibyte_spark.util import free_persistent_rdds
+    from replibyte_spark.util import released
 
-    free_persistent_rdds(spark)
     a = spark.createDataFrame([(1, 2), (2, 1), (3, 3)], "id long, ref long")
     b = spark.createDataFrame([(1, 1), (2, 3), (3, 2)], "id long, ref long")
     edges = [FkEdge("a", "ref", "b", "id"), FkEdge("b", "ref", "a", "id")]
     seed = a.filter("id = 1")
-    res = subset_closure({"a": a, "b": b}, edges, "a", seed,
-                         include_children=True)
-    assert res.iterations >= 3          # genuinely multi-round
-    pinned = spark.sparkContext._jsc.getPersistentRDDs().size()
-    # live frames: seed + kept[a] + kept[b] + expand[a] + expand[b] — each
-    # pins one checkpoint RDD; anything above that is a leak
-    assert pinned <= 5, f"{pinned} persistent RDDs after cyclic closure"
-    # results are still consumable (no live frame was freed)
-    assert res.tables["a"].count() == 3
-    assert res.tables["b"].count() == 3
-    free_persistent_rdds(spark)
+    with released():
+        res = subset_closure({"a": a, "b": b}, edges, "a", seed,
+                             include_children=True)
+        assert res.iterations >= 3          # genuinely multi-round
+        # live frames: seed + kept[a] + kept[b] + expand[a] + expand[b] —
+        # each pins one checkpoint RDD; anything above that is a leak
+        pinned = empty_registry()
+        assert pinned <= 5, f"{pinned} persistent RDDs after cyclic closure"
+        # results are still consumable (no live frame was freed)
+        assert res.tables["a"].count() == 3
+        assert res.tables["b"].count() == 3
+    assert empty_registry() == 0
 
 
 def test_corpus_quality_report_approx_close_to_exact(spark, sf_dir):
