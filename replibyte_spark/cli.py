@@ -505,30 +505,20 @@ def _cmd_dump_create(spark, config, args) -> int:
 
 
 def _cmd_dump_restore_remote(spark, config, args) -> int:
-    if args.output:
-        # `-o`: stream the dump as SQL text on stdout
-        # (cli.rs:70-72 `output`; destination/generic_stdout.rs) — restore
-        # from the datastore and print INSERT statements per table,
-        # through toLocalIterator so the driver never holds a full table
-        from .sinks.datastore import Datastore
-        from .sinks.sqldump_sink import to_insert_statements
-
-        if not config.datastore:
-            print("error: restore requires datastore config", file=sys.stderr)
-            return 2
-        store = Datastore(spark, config.datastore.dir)
-        tables = store.restore(
-            args.value,
-            decrypt_columns=config.datastore.encrypted_columns,
-            encryption_key=config.encryption_key)
-        for t in sorted(tables):
-            for row in to_insert_statements(tables[t], t).toLocalIterator():
-                print(row[0])
-        return 0
     from .plans.pipeline import RestorePipeline
 
+    if args.output:
+        # `-o` (cli.rs:70-72): restore to the stdout sink instead of the
+        # configured destination; stdout then carries only SQL
+        from dataclasses import replace
+
+        from .config import DestinationConfig
+
+        config = replace(config,
+                         destination=DestinationConfig("console://"))
     tables = RestorePipeline(config).run(spark, args.value)
-    print(f"restored {len(tables)} tables from {args.value}")
+    if not args.output:
+        print(f"restored {len(tables)} tables from {args.value}")
     return 0
 
 
@@ -537,42 +527,25 @@ def _cmd_dump_restore_local(spark, config, args) -> int:
     spawn a Docker container of the requested engine and pipe the dump
     into it — K4, sinks/docker_dest.py.  The container is left running
     for the developer unless -r/--remove is given."""
+    from .plans.pipeline import print_inserts, read_dump
     from .sinks import docker_dest as DK
-    from .sinks.datastore import Datastore
 
-    if not config.datastore:
-        print("error: restore requires datastore config", file=sys.stderr)
-        return 2
-    store = Datastore(spark, config.datastore.dir)
-    tables = store.restore(
-        args.value,
-        decrypt_columns=config.datastore.encrypted_columns,
-        encryption_key=config.encryption_key)
+    tables = read_dump(spark, config, args.value)
     if args.output:
-        from .sinks.sqldump_sink import to_insert_statements
-
-        for t in sorted(tables):
-            for row in to_insert_statements(tables[t], t).toLocalIterator():
-                print(row[0])
+        print_inserts(tables)
     dest = DK.destination_for(args.image, args.port, args.tag)
-    port = dest.host_port
     try:
-        if args.image == "mongodb":
-            cid = DK.restore_archive_into_container(
-                tables, dest, keep_container=not args.remove)
-        else:
-            cid = DK.restore_into_container(
-                tables, dest,
-                dialect="postgres" if args.image == "postgresql"
-                else "mysql",
-                keep_container=not args.remove)
+        cid = DK.restore_into_container(tables, dest, dialect=args.image,
+                                        keep_container=not args.remove)
     except (RuntimeError, TimeoutError) as exc:
         print(f"error: {exc}", file=sys.stderr)
         return 2
     state = "removed after restore" if args.remove else \
-        f"listening on localhost:{port}"
+        f"listening on localhost:{dest.host_port}"
+    # with -o stdout carries only the SQL stream
     print(f"restored {len(tables)} tables from {args.value} into "
-          f"{args.image} container {cid} ({state})")
+          f"{args.image} container {cid} ({state})",
+          file=sys.stderr if args.output else sys.stdout)
     return 0
 
 
@@ -603,6 +576,25 @@ def _cmd_dump_delete(spark, config, args) -> int:
     return 0
 
 
+def _read(spark, path: str, *cols: str):
+    """The parquet input at `path`; raises ValueError (exit 2 through
+    `_run`) naming each of `cols` the input lacks."""
+    df = spark.read.parquet(path)
+    missing = [c for c in cols if c not in df.columns]
+    if missing:
+        raise ValueError(f"column(s) not in input: {', '.join(missing)}")
+    return df
+
+
+def _weights(text: str) -> dict[str, float]:
+    """`corpus mix --weights`: 'en=0.5,fr=0.3' -> {'en': 0.5, 'fr': 0.3}."""
+    try:
+        return {k: float(v) for k, v in
+                (pair.split("=", 1) for pair in text.split(","))}
+    except ValueError:
+        raise ValueError("--weights must look like en=0.5,fr=0.3") from None
+
+
 def _cmd_corpus(spark, args) -> int:
     """Curation subcommands over plain parquet — the same operators the
     library gates, driven from the shell (no conf.yaml: these act on
@@ -613,7 +605,8 @@ def _cmd_corpus(spark, args) -> int:
         from .operators.sample import corpus_quality_report
 
         d = D.SPARK
-        docs = spark.read.parquet(args.input).selectExpr(
+        docs = _read(spark, args.input, args.group_col,
+                     args.text_col).selectExpr(
             args.group_col,
             f"CAST({T.token_count_sql(d, args.text_col)} AS BIGINT) "
             f"AS n_tokens",
@@ -623,11 +616,7 @@ def _cmd_corpus(spark, args) -> int:
     if args.corpus_cmd == "cap":
         from .operators.sample import per_group_cap
 
-        df = spark.read.parquet(args.input)
-        for c in (args.group_col, args.id_col):
-            if c not in df.columns:
-                print(f"error: column not in input: {c}", file=sys.stderr)
-                return 2
+        df = _read(spark, args.input, args.group_col, args.id_col)
         kept = per_group_cap(df, args.group_col, args.id_col, args.cap,
                              head_prefilter_margin=args.prefilter_margin)
         kept.write.mode("overwrite").parquet(args.output)
@@ -638,11 +627,7 @@ def _cmd_corpus(spark, args) -> int:
     if args.corpus_cmd == "quota":
         from .streaming.quota import streaming_group_quota
 
-        schema = spark.read.parquet(args.input).schema
-        for c in (args.group_col, args.id_col):
-            if c not in schema.names:
-                print(f"error: column not in input: {c}", file=sys.stderr)
-                return 2
+        schema = _read(spark, args.input, args.group_col, args.id_col).schema
         stream = spark.readStream.schema(schema).parquet(args.input)
         admitted = streaming_group_quota(stream, args.cap,
                                          group_col=args.group_col,
@@ -660,22 +645,13 @@ def _cmd_corpus(spark, args) -> int:
         return 0
     if args.corpus_cmd == "weighted":
         from . import dialect as D
-        from .operators.sample import score_weighted_filter
-        from .workload.subset_queries import _quality_score_sql
+        from .operators.sample import (score_weighted_filter,
+                                       stopword_score_sql)
 
-        df = spark.read.parquet(args.input)
-        if args.score_col is not None:
-            if args.score_col not in df.columns:
-                print(f"error: column not in input: {args.score_col}",
-                      file=sys.stderr)
-                return 2
-            score = f"CAST({args.score_col} AS BIGINT)"
-        elif args.text_col in df.columns:
-            score = _quality_score_sql(D.SPARK, args.text_col)
-        else:
-            print(f"error: column not in input: {args.text_col}",
-                  file=sys.stderr)
-            return 2
+        df = _read(spark, args.input, args.id_col,
+                   args.score_col or args.text_col)
+        score = (f"CAST({args.score_col} AS BIGINT)" if args.score_col
+                 else stopword_score_sql(D.SPARK, args.text_col))
         kept = score_weighted_filter(df, args.id_col, score)
         kept.write.mode("overwrite").parquet(args.output)
         n_in, n_out = df.count(), spark.read.parquet(args.output).count()
@@ -684,12 +660,7 @@ def _cmd_corpus(spark, args) -> int:
     if args.corpus_cmd == "scrub":
         from .functions.pii import scrub_pii
 
-        df = spark.read.parquet(args.input)
-        missing = [c for c in args.columns if c not in df.columns]
-        if missing:
-            print(f"error: column(s) not in input: {', '.join(missing)}",
-                  file=sys.stderr)
-            return 2
+        df = _read(spark, args.input, *args.columns)
         scrub_pii(df, *args.columns).write.mode("overwrite") \
             .parquet(args.output)
         n = spark.read.parquet(args.output).count()
@@ -699,7 +670,7 @@ def _cmd_corpus(spark, args) -> int:
     if args.corpus_cmd == "dedup":
         from .operators.dedup import keep_canonical, minhash_near_dup_pairs
 
-        df = spark.read.parquet(args.input)
+        df = _read(spark, args.input, args.id_col, args.text_col)
         pairs = minhash_near_dup_pairs(df, args.id_col, args.text_col,
                                        threshold=args.threshold)
         kept = keep_canonical(df, pairs, args.id_col)
@@ -713,7 +684,7 @@ def _cmd_corpus(spark, args) -> int:
     if args.corpus_cmd == "index":
         from .operators.dedup import build_minhash_index, pick_lsh_params
 
-        df = spark.read.parquet(args.input)
+        df = _read(spark, args.input, args.id_col, args.text_col)
         kw = {}
         if args.threshold is not None:
             from .operators.dedup import flagged_recall
@@ -738,7 +709,7 @@ def _cmd_corpus(spark, args) -> int:
         from .operators.dedup import (append_minhash_index,
                                       dedup_batch_against_index)
 
-        batch = spark.read.parquet(args.input)
+        batch = _read(spark, args.input, args.id_col, args.text_col)
         kept = dedup_batch_against_index(batch, args.index,
                                          id_col=args.id_col,
                                          text_col=args.text_col,
@@ -763,8 +734,9 @@ def _cmd_corpus(spark, args) -> int:
                                    perplexity_scores, train_bigram_lm,
                                    train_unigram_lm)
 
-        docs = spark.read.parquet(args.input)
-        train = (spark.read.parquet(args.train) if args.train else docs)
+        docs = _read(spark, args.input, args.id_col, args.text_col)
+        train = (_read(spark, args.train, args.id_col, args.text_col)
+                 if args.train else docs)
         trainer, scorer, count_col = (
             (train_unigram_lm, perplexity_scores, "n_tokens")
             if args.order == 1 else
@@ -781,7 +753,7 @@ def _cmd_corpus(spark, args) -> int:
         from .functions.gopher import (MIN_WORDS, gopher_filter,
                                        gopher_flags)
 
-        docs = spark.read.parquet(args.input)
+        docs = _read(spark, args.input, args.text_col)
         min_words = (args.min_words if args.min_words is not None
                      else MIN_WORDS)
         if args.flags:
@@ -805,7 +777,7 @@ def _cmd_corpus(spark, args) -> int:
         from .operators.dsir import (build_dsir_model, dsir_select,
                                      dsir_select_from_model)
 
-        raw = spark.read.parquet(args.input)
+        raw = _read(spark, args.input, args.id_col, args.text_col)
         if bool(args.model) == bool(args.target):
             print("error: corpus dsir needs exactly one of --target "
                   "(fit) or --model (score stored)", file=sys.stderr)
@@ -816,7 +788,7 @@ def _cmd_corpus(spark, args) -> int:
                 text_col=args.text_col, seed=args.seed)
             fitted = "stored model"
         else:
-            target = spark.read.parquet(args.target)
+            target = _read(spark, args.target, args.id_col, args.text_col)
             if args.save_model:
                 build_dsir_model(target, raw, args.save_model,
                                  id_col=args.id_col,
@@ -842,7 +814,7 @@ def _cmd_corpus(spark, args) -> int:
     if args.corpus_cmd == "c4":
         from .functions.c4 import c4_filter, c4_flags
 
-        docs = spark.read.parquet(args.input)
+        docs = _read(spark, args.input, args.text_col)
         bad = tuple(w for w in args.bad_words.split(",") if w)
         if args.flags:
             out = c4_flags(docs, text_col=args.text_col, bad_words=bad)
@@ -863,7 +835,7 @@ def _cmd_corpus(spark, args) -> int:
         from .operators.repetition import (repetition_filter,
                                            repetition_flags)
 
-        docs = spark.read.parquet(args.input)
+        docs = _read(spark, args.input, args.id_col, args.text_col)
         if args.flags:
             out = repetition_flags(docs, text_col=args.text_col,
                                    id_col=args.id_col)
@@ -884,7 +856,7 @@ def _cmd_corpus(spark, args) -> int:
     if args.corpus_cmd == "chunk":
         from .operators.grouped import chunk_documents
 
-        df = spark.read.parquet(args.input)
+        df = _read(spark, args.input, args.id_col, args.text_col)
         ch = chunk_documents(df, id_col=args.id_col, text_col=args.text_col,
                              chunk_tokens=args.chunk_tokens,
                              overlap=args.overlap)
@@ -896,7 +868,7 @@ def _cmd_corpus(spark, args) -> int:
     if args.corpus_cmd == "eindex":
         from .operators.similarity import build_ann_index
 
-        df = spark.read.parquet(args.input)
+        df = _read(spark, args.input, args.id_col, args.vec_col)
         build_ann_index(df, args.output, bits=args.bits, id_col=args.id_col,
                         vec_col=args.vec_col, dim=args.dim,
                         quantize=args.quantize,
@@ -916,7 +888,7 @@ def _cmd_corpus(spark, args) -> int:
         from .operators.similarity import (append_ann_index,
                                            embedding_index_admit)
 
-        batch = spark.read.parquet(args.input)
+        batch = _read(spark, args.input, args.id_col, args.vec_col)
         kept = embedding_index_admit(batch, args.index, id_col=args.id_col,
                                      vec_col=args.vec_col,
                                      threshold=args.threshold)
@@ -940,13 +912,8 @@ def _cmd_corpus(spark, args) -> int:
         from .operators.ingest import full_incremental_admit_decisions
         from .operators.similarity import append_ann_index
 
-        batch = spark.read.parquet(args.input)
-        missing = [c for c in (args.id_col, args.text_col, args.vec_col)
-                   if c not in batch.columns]
-        if missing:
-            print(f"error: column(s) not in input: {', '.join(missing)}",
-                  file=sys.stderr)
-            return 2
+        batch = _read(spark, args.input, args.id_col, args.text_col,
+                      args.vec_col)
         dec = full_incremental_admit_decisions(
             batch, args.mh_index, args.ann_index, id_col=args.id_col,
             text_col=args.text_col, vec_col=args.vec_col,
@@ -1056,13 +1023,7 @@ def _cmd_corpus(spark, args) -> int:
                                            sidecar_n_probe)
 
         corpus, cents = load_ann_index(spark, args.index)
-        queries = spark.read.parquet(args.queries)
-        missing = [c for c in (args.id_col, args.vec_col)
-                   if c not in queries.columns]
-        if missing:
-            print(f"error: column(s) not in queries: {', '.join(missing)}",
-                  file=sys.stderr)
-            return 2
+        queries = _read(spark, args.queries, args.id_col, args.vec_col)
         if args.method in ("ivf", "qivf"):
             n_probe = (args.n_probe if args.n_probe is not None
                        else sidecar_n_probe(spark, args.index, 2))
@@ -1102,11 +1063,7 @@ def _cmd_corpus(spark, args) -> int:
     if args.corpus_cmd == "partition":
         from .sinks.partitioned import partition_files, write_time_partitioned
 
-        df = spark.read.parquet(args.input)
-        if args.ts_col not in df.columns:
-            print(f"error: column not in input: {args.ts_col}",
-                  file=sys.stderr)
-            return 2
+        df = _read(spark, args.input, args.ts_col)
         write_time_partitioned(df, args.output, ts_col=args.ts_col,
                                date_col=args.date_col)
         parts = partition_files(spark, args.output)
@@ -1116,11 +1073,7 @@ def _cmd_corpus(spark, args) -> int:
     if args.corpus_cmd == "lid":
         from .functions.lid import identify_language
 
-        df = spark.read.parquet(args.input)
-        if args.text_col not in df.columns:
-            print(f"error: column not in input: {args.text_col}",
-                  file=sys.stderr)
-            return 2
+        df = _read(spark, args.input, args.text_col)
         out = identify_language(df, text_col=args.text_col)
         out.write.mode("overwrite").parquet(args.output)
         langs = (spark.read.parquet(args.output).groupBy("pred_lang")
@@ -1131,11 +1084,7 @@ def _cmd_corpus(spark, args) -> int:
     if args.corpus_cmd == "cluster":
         from .operators import clustering as CL
 
-        df = spark.read.parquet(args.input)
-        for c in (args.id_col, args.vec_col):
-            if c not in df.columns:
-                print(f"error: column not in input: {c}", file=sys.stderr)
-                return 2
+        df = _read(spark, args.input, args.id_col, args.vec_col)
         if args.mode == "profile":
             _show(CL.cluster_profile(df, args.clusters,
                                      args.id_col, args.vec_col))
@@ -1167,12 +1116,9 @@ def _cmd_corpus(spark, args) -> int:
         from .operators.classify import (class_priors, nb_classify,
                                          train_naive_bayes)
 
-        docs = spark.read.parquet(args.input)
-        train = (spark.read.parquet(args.train) if args.train else docs)
-        if args.label_col not in train.columns:
-            print(f"error: label column not in training corpus: "
-                  f"{args.label_col}", file=sys.stderr)
-            return 2
+        docs = _read(spark, args.input, args.id_col, args.text_col)
+        train = _read(spark, args.train or args.input, args.id_col,
+                      args.text_col, args.label_col)
         model = train_naive_bayes(train, label_col=args.label_col,
                                   id_col=args.id_col,
                                   text_col=args.text_col)
@@ -1188,35 +1134,20 @@ def _cmd_corpus(spark, args) -> int:
     if args.corpus_cmd == "mix":
         from .operators.sample import temperature_mix, token_budget_mix
 
-        docs = spark.read.parquet(args.input)
-        for c in (args.stratum_col, args.text_col, args.id_col):
-            if c not in docs.columns:
-                print(f"error: column not in input: {c}", file=sys.stderr)
-                return 2
-        try:
-            if args.temperature is not None:
-                kept = temperature_mix(docs, args.budget,
-                                       temperature=args.temperature,
-                                       stratum_col=args.stratum_col,
-                                       key_col=args.id_col,
-                                       text_col=args.text_col)
-            else:
-                try:
-                    weights = {k: float(v) for k, v in
-                               (pair.split("=", 1)
-                                for pair in args.weights.split(","))}
-                except ValueError:
-                    print("error: --weights must look like en=0.5,fr=0.3",
-                          file=sys.stderr)
-                    return 2
-                kept = token_budget_mix(docs, weights, args.budget,
-                                        stratum_col=args.stratum_col,
-                                        key_col=args.id_col,
-                                        text_col=args.text_col)
-            kept.write.mode("overwrite").parquet(args.output)
-        except ValueError as exc:
-            print(f"error: {exc}", file=sys.stderr)
-            return 2
+        docs = _read(spark, args.input, args.stratum_col, args.text_col,
+                     args.id_col)
+        if args.temperature is not None:
+            kept = temperature_mix(docs, args.budget,
+                                   temperature=args.temperature,
+                                   stratum_col=args.stratum_col,
+                                   key_col=args.id_col,
+                                   text_col=args.text_col)
+        else:
+            kept = token_budget_mix(docs, _weights(args.weights), args.budget,
+                                    stratum_col=args.stratum_col,
+                                    key_col=args.id_col,
+                                    text_col=args.text_col)
+        kept.write.mode("overwrite").parquet(args.output)
         n_in, n_out = docs.count(), spark.read.parquet(args.output).count()
         knob = (f"temperature={args.temperature}"
                 if args.temperature is not None else "explicit weights")
@@ -1227,18 +1158,9 @@ def _cmd_corpus(spark, args) -> int:
     if args.corpus_cmd == "overlap":
         from .operators.sketch import group_overlap_matrix
 
-        df = spark.read.parquet(args.input)
-        for c in (args.group_col, args.text_col):
-            if c not in df.columns:
-                print(f"error: column not in input: {c}", file=sys.stderr)
-                return 2
-        try:
-            _show(group_overlap_matrix(df, args.group_col, args.text_col,
-                                       n_hashes=args.n_hashes,
-                                       exact=args.exact))
-        except ValueError as exc:
-            print(f"error: {exc}", file=sys.stderr)
-            return 2
+        df = _read(spark, args.input, args.group_col, args.text_col)
+        _show(group_overlap_matrix(df, args.group_col, args.text_col,
+                                   n_hashes=args.n_hashes, exact=args.exact))
         return 0
     print(f"error: unknown corpus command {args.corpus_cmd}",
           file=sys.stderr)
@@ -1276,10 +1198,9 @@ def main(argv: list[str] | None = None, spark=None) -> int:
 
 def _run(spark, args, config) -> int:
     if args.cmd == "corpus":
-        # operator-level validation errors (negative --overlap, empty LM
-        # vocabulary, mismatched index meta, ...) surface the same way the
-        # scrub missing-column path does: message to stderr, exit 2 — not
-        # a raw traceback
+        # missing input columns (`_read`) and operator-level validation
+        # errors (negative --overlap, empty LM vocabulary, mismatched
+        # index meta, ...): message to stderr, exit 2 — not a traceback
         try:
             return _cmd_corpus(spark, args)
         except ValueError as exc:
@@ -1292,9 +1213,13 @@ def _run(spark, args, config) -> int:
         _show(transformer_list(spark))
         return 0
     if args.cmd == "source":
-        from .plans.pipeline import DumpPipeline
+        from .plans.pipeline import load_source_tables
 
-        tables = DumpPipeline(config).load_source_tables(spark)
+        if config.source is None:
+            print("error: source commands require source config",
+                  file=sys.stderr)
+            return 2
+        tables = load_source_tables(spark, config.source)
         if getattr(args, "source_cmd", None) == "stats":
             from .introspect import table_stats
 
@@ -1352,7 +1277,9 @@ def _run(spark, args, config) -> int:
 
         try:
             out = Datastore(spark, config.datastore.dir).diff(
-                args.dump_a, args.dump_b)
+                args.dump_a, args.dump_b,
+                decrypt_columns=config.datastore.encrypted_columns,
+                encryption_key=config.encryption_key)
         except (ValueError, LookupError) as exc:
             print(f"error: {exc}", file=sys.stderr)
             return 2

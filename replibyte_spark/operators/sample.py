@@ -331,6 +331,23 @@ def score_weighted_sql(d: str, key_expr: str, score_millionths_expr: str,
     return f"{draw} < ({score_millionths_expr})"
 
 
+def stopword_score_sql(d: str, text_col: str = "text") -> str:
+    """Integer quality score in millionths: stopword density × 8 capped
+    at 1e6 — i.e. a doc whose words are >= 12.5% Gopher stopwords is
+    always kept, a 3% doc survives at ~0.24.  Built once for both
+    dialects (the drift-proof convention); the default score of
+    :func:`score_weighted_filter`'s callers."""
+    from ..functions.gopher import REQUIRED_STOPWORDS, words_sql
+
+    w = words_sql(d, text_col)
+    stop_pred = f"x -> {D.array_contains_lit(d, list(REQUIRED_STOPWORDS), 'x')}"
+    n_stop = D.array_len(d, D.array_filter(d, w, stop_pred))
+    n_words = D.array_len(d, w)
+    density = D.int_div(d, f"CAST({n_stop} AS BIGINT) * 8000000",
+                        f"greatest({n_words}, 1)")
+    return f"least(1000000, {density})"
+
+
 def score_weighted_filter(df: DataFrame, key_col: str,
                           score_millionths_expr: str,
                           salt: str = "score-w") -> DataFrame:

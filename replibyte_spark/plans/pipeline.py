@@ -15,16 +15,20 @@ disappear: Catalyst fuses transform+write into one stage per table.
 
 from __future__ import annotations
 
+import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..config import Config
+from ..config import Config, SourceConfig
 from ..functions.transformers import apply_transformers
-from ..operators.sample import hash_percent_filter, systematic_percent
+from ..operators.sample import hash_percent_filter
 from ..operators.subset import FkEdge, subset_closure
 from ..sinks.datastore import Datastore, DumpInfo
 from ..util import concurrently, released
+
+# the schemes read and written over JDBC (a live database)
+JDBC_SCHEMES = ("postgres", "postgresql", "mysql", "jdbc")
 
 
 def _parse_uri(uri: str) -> tuple[str, str]:
@@ -38,6 +42,65 @@ def _parse_uri(uri: str) -> tuple[str, str]:
     return m.group(1), m.group(2)
 
 
+def load_source_tables(spark: SparkSession,
+                       source: SourceConfig) -> dict[str, DataFrame]:
+    """The configured source's tables, pruned by only_tables/skip.  Needs
+    only the source config, so `source schema`/`stats` work without a
+    datastore."""
+    scheme, path = _parse_uri(source.connection_uri)
+    # skip/only pushdown belongs BEFORE the readers for file-listing
+    # sources: building a reader already costs real work there (JSON
+    # schema inference is a full-data job; parquet opens footers), so
+    # a skipped table must never get one
+    only = {t.table for t in source.only_tables}
+    skip = {t.table for t in source.skip}
+
+    def _wanted(n: str) -> bool:
+        return (not only or n in only) and n not in skip
+
+    if scheme == "parquet":
+        from ..catalog import load_table
+
+        names = [f[:-8] for f in sorted(os.listdir(path))
+                 if f.endswith(".parquet") and _wanted(f[:-8])]
+        tables = {n: load_table(spark, path, n) for n in names}
+    elif scheme in JDBC_SCHEMES:
+        from ..sources.jdbc import read_jdbc_tables
+
+        tables = read_jdbc_tables(spark, source.connection_uri,
+                                  tables=sorted(only) or None,
+                                  driver=source.jdbc_driver)
+    elif scheme == "sqltext":
+        # .sql dump files (INSERT and/or COPY statements)
+        from ..sources.sqldump import read_sql_dump
+
+        tables = read_sql_dump(spark, path)
+    elif scheme in ("mongodump", "mongodb-archive"):
+        # a mongodump --archive file: the reference's S3 entry point
+        # (source/mongodb.rs:66-101), minus the live `mongodump` spawn —
+        # the archive bytes are the interchange format either way
+        from ..sources.mongo_archive import read_mongo_archive
+
+        tables = read_mongo_archive(spark, path)
+    elif scheme == "jsonl":
+        # symmetric with the jsonl destination: one subdirectory per
+        # table of JSON-lines part files (gzip or plain — Spark's json
+        # reader decompresses by extension); schema via Spark's own
+        # inference (the I2 probabilistic-schema story).  Inference is
+        # a full-data job per table, which is exactly why _wanted
+        # filters the listing BEFORE any reader is built.
+        names = sorted(d for d in os.listdir(path)
+                       if os.path.isdir(os.path.join(path, d))
+                       and _wanted(d))
+        tables = {n: spark.read.json(os.path.join(path, n))
+                  for n in names}
+    else:
+        raise ValueError(f"unsupported source scheme: {scheme}")
+    # the non-listing sources (jdbc/sqltext/mongodump) surface their
+    # own table dicts — apply the same only/skip filter to those
+    return {n: df for n, df in tables.items() if _wanted(n)}
+
+
 class DumpPipeline:
     def __init__(self, config: Config, fk_edges: list[FkEdge] | None = None):
         if not config.source or not config.datastore:
@@ -45,70 +108,13 @@ class DumpPipeline:
         self.config = config
         self.fk_edges = fk_edges or []
 
-    def load_source_tables(self, spark: SparkSession) -> dict[str, DataFrame]:
-        scheme, path = _parse_uri(self.config.source.connection_uri)
-        # skip/only pushdown belongs BEFORE the readers for file-listing
-        # sources: building a reader already costs real work there (JSON
-        # schema inference is a full-data job; parquet opens footers), so
-        # a skipped table must never get one
-        only = {t.table for t in self.config.source.only_tables}
-        skip = {t.table for t in self.config.source.skip}
-
-        def _wanted(n: str) -> bool:
-            return (not only or n in only) and n not in skip
-
-        if scheme == "parquet":
-            from ..catalog import load_table
-            import os
-
-            names = [f[:-8] for f in sorted(os.listdir(path))
-                     if f.endswith(".parquet") and _wanted(f[:-8])]
-            tables = {n: load_table(spark, path, n) for n in names}
-        elif scheme in ("postgres", "postgresql", "mysql", "jdbc"):
-            from ..sources.jdbc import read_jdbc_tables
-
-            tables = read_jdbc_tables(spark, self.config.source.connection_uri,
-                                      tables=sorted(only) or None,
-                                      driver=self.config.source.jdbc_driver)
-        elif scheme == "sqltext":
-            # .sql dump files (INSERT and/or COPY statements)
-            from ..sources.sqldump import read_sql_dump
-
-            tables = read_sql_dump(spark, path)
-        elif scheme in ("mongodump", "mongodb-archive"):
-            # a mongodump --archive file: the reference's S3 entry point
-            # (source/mongodb.rs:66-101), minus the live `mongodump` spawn —
-            # the archive bytes are the interchange format either way
-            from ..sources.mongo_archive import read_mongo_archive
-
-            tables = read_mongo_archive(spark, path)
-        elif scheme == "jsonl":
-            # symmetric with the jsonl destination: one subdirectory per
-            # table of JSON-lines part files (gzip or plain — Spark's json
-            # reader decompresses by extension); schema via Spark's own
-            # inference (the I2 probabilistic-schema story).  Inference is
-            # a full-data job per table, which is exactly why _wanted
-            # filters the listing BEFORE any reader is built.
-            import os
-
-            names = sorted(d for d in os.listdir(path)
-                           if os.path.isdir(os.path.join(path, d))
-                           and _wanted(d))
-            tables = {n: spark.read.json(os.path.join(path, n))
-                      for n in names}
-        else:
-            raise ValueError(f"unsupported source scheme: {scheme}")
-        # the non-listing sources (jdbc/sqltext/mongodump) surface their
-        # own table dicts — apply the same only/skip filter to those
-        return {n: df for n, df in tables.items() if _wanted(n)}
-
     def run(self, spark: SparkSession, name: str | None = None) -> DumpInfo:
         # the sqltext reader caches its parse and the subset closure
         # checkpoints its frames; nothing reads them once the datastore
         # write has returned or raised
         with released():
             cfg = self.config
-            tables = self.load_source_tables(spark)
+            tables = load_source_tables(spark, cfg.source)
             # ---- subset (reference: source/postgres.rs:156-165 → subset())
             ss = cfg.source.database_subset
             if ss:
@@ -117,7 +123,7 @@ class DumpPipeline:
                         f"subset table not in source: {ss.table}")
                 pct = int(ss.strategy_options.get("percent", 50))
                 seed = hash_percent_filter(
-                    tables[ss.table], _first_column(tables[ss.table]), pct)
+                    tables[ss.table], tables[ss.table].columns[0], pct)
                 edges = self.fk_edges
                 if not edges:
                     # live-database sources carry their own FK graph: extract
@@ -125,7 +131,7 @@ class DumpPipeline:
                     # the dump DDL, subset/src/postgres.rs:583-734) instead of
                     # silently subsetting with no referential closure
                     scheme, _path = _parse_uri(cfg.source.connection_uri)
-                    if scheme in ("postgres", "postgresql", "mysql", "jdbc"):
+                    if scheme in JDBC_SCHEMES:
                         from ..sources.jdbc import fk_edges_from_jdbc
 
                         edges = fk_edges_from_jdbc(
@@ -155,6 +161,28 @@ class DumpPipeline:
             )
 
 
+def read_dump(spark: SparkSession, config: Config,
+              which: str = "latest") -> dict[str, DataFrame]:
+    """The tables of dump `which` (a name or 'latest') in the configured
+    datastore, with the configured encrypted columns decrypted."""
+    return Datastore(spark, config.datastore.dir).restore(
+        which,
+        decrypt_columns=config.datastore.encrypted_columns,
+        encryption_key=config.encryption_key,
+    )
+
+
+def print_inserts(tables: dict[str, DataFrame]) -> None:
+    """The stdout sink (reference destination/generic_stdout.rs:98-104):
+    every row as one SQL INSERT line, tables in name order, streamed
+    through toLocalIterator so the driver never holds a whole table."""
+    from ..sinks.sqldump_sink import to_insert_statements
+
+    for t in sorted(tables):
+        for row in to_insert_statements(tables[t], t).toLocalIterator():
+            print(row[0])
+
+
 class RestorePipeline:
     def __init__(self, config: Config):
         if not config.datastore or not config.destination:
@@ -162,12 +190,7 @@ class RestorePipeline:
         self.config = config
 
     def run(self, spark: SparkSession, which: str = "latest") -> dict[str, DataFrame]:
-        store = Datastore(spark, self.config.datastore.dir)
-        tables = store.restore(
-            which,
-            decrypt_columns=self.config.datastore.encrypted_columns,
-            encryption_key=self.config.encryption_key,
-        )
+        tables = read_dump(spark, self.config, which)
         scheme, path = _parse_uri(self.config.destination.connection_uri)
         mode = "overwrite" if self.config.destination.wipe_database else "append"
         root = path.rstrip("/")
@@ -175,7 +198,7 @@ class RestorePipeline:
         if scheme == "parquet":
             concurrently(spark, lambda t, df: df.write.mode(mode).parquet(
                 f"{root}/{t}"), tables.items())
-        elif scheme in ("postgres", "postgresql", "mysql", "jdbc"):
+        elif scheme in JDBC_SCHEMES:
             from ..sources.jdbc import write_jdbc_tables
 
             # serial: a live database may enforce FK order between tables
@@ -194,10 +217,7 @@ class RestorePipeline:
                 df.write.mode(mode).option("compression", "gzip")
                 .json(f"{root}/{t}")), tables.items())
         elif scheme == "console":
-            # reference stdout sink (destination/generic_stdout.rs:98-104)
-            for t, df in tables.items():
-                print(f"-- {t}")
-                df.show(20, truncate=False)
+            print_inserts(tables)
         elif scheme in ("docker+postgres", "docker+mysql",
                         "docker+mongodb"):
             # reference K4 (postgres_docker.rs / mysql_docker.rs /
@@ -220,18 +240,10 @@ class RestorePipeline:
                             f"'{self.config.destination.connection_uri}': "
                             f"expected {scheme}://[tag[:host_port]] with a "
                             f"numeric port, got '{bits[1]}'") from None
-            dest = DK.destination_for(engine, port, tag)
             # serial: one ordered stream into a live database (FK order)
-            if engine == "mongodb":
-                DK.restore_archive_into_container(tables, dest)
-            else:
-                DK.restore_into_container(
-                    tables, dest, dialect=engine,
-                    wipe=self.config.destination.wipe_database)
+            DK.restore_into_container(
+                tables, DK.destination_for(engine, port, tag),
+                dialect=engine, wipe=self.config.destination.wipe_database)
         else:
             raise ValueError(f"unsupported destination scheme: {scheme}")
         return tables
-
-
-def _first_column(df: DataFrame) -> str:
-    return df.columns[0]

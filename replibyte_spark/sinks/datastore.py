@@ -40,7 +40,8 @@ from dataclasses import asdict, dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..util import concurrently, hadoop_read_bytes
+from ..util import (concurrently, hadoop_read_bytes, hadoop_write_bytes,
+                    swap_directory)
 
 MANIFEST_VERSION = 2
 MANIFEST_NAME = "metadata.json"
@@ -92,35 +93,6 @@ class Datastore:
     def _read_bytes(self, path: str) -> bytes:
         return hadoop_read_bytes(self.spark, path)
 
-    def _write_bytes(self, path: str, payload: bytes) -> None:
-        """Write via temp file + rename, keeping the old file as `.bak`
-        until the new one is in place — there is never a moment with NO
-        manifest on disk, and every rename's boolean result is checked
-        (Hadoop FS rename signals failure by returning false, not raising)."""
-        fs = self._fs(path)
-        tmp, final = self._jpath(path + ".tmp"), self._jpath(path)
-        bak = self._jpath(path + ".bak")
-        out = fs.create(tmp, True)
-        try:
-            out.write(bytearray(payload))
-        finally:
-            out.close()
-        had_old = fs.exists(final)
-        if had_old:
-            if fs.exists(bak):
-                fs.delete(bak, False)
-            if not fs.rename(final, bak):
-                raise IOError(f"rename {final} -> {bak} failed")
-        if not fs.rename(tmp, final):
-            if had_old:
-                fs.rename(bak, final)  # roll back: old manifest restored
-            raise IOError(f"rename {tmp} -> {final} failed")
-        # unconditional: a .bak left by a CRASHED earlier swap (no old
-        # final this time) must not outlive a successful write — a stale
-        # .bak is exactly what the missing-final fallback would wrongly
-        # serve after a later manifest loss
-        fs.delete(bak, False)
-
     def _dir_size(self, path: str) -> int:
         return int(self._fs(path).getContentSummary(self._jpath(path))
                    .getLength())
@@ -157,7 +129,7 @@ class Datastore:
         try:
             return json.loads(self._read_bytes(self._manifest_path))
         except Exception as first:
-            # _write_bytes has an unavoidable instant between
+            # _write_manifest has an unavoidable instant between
             # rename(final→bak) and rename(tmp→final) with no final file.
             # Retry the FINAL path once first (by then the swap has almost
             # always completed), and only fall back to .bak when the final
@@ -185,8 +157,14 @@ class Datastore:
             return m
 
     def _write_manifest(self, m: dict) -> None:
+        """Replace the manifest through `swap_directory` (tmp → .bak →
+        rename, rolled back on a failed rename): there is never a moment
+        with NO manifest on disk — only the rename window that
+        `_read_manifest` serves from .bak."""
         payload = json.dumps(m, indent=2, sort_keys=True).encode()
-        self._write_bytes(self._manifest_path, payload)
+        swap_directory(self.spark, self._manifest_path,
+                       lambda tmp: hadoop_write_bytes(self.spark, tmp,
+                                                      payload))
 
     def _migrate(self, force_write: bool = False) -> None:
         """Versioned manifest migrations (reference: migration/mod.rs:48-106;

@@ -318,27 +318,6 @@ def render_sql_payload(tables: "dict[str, DataFrame]",
     return ("\n".join(out) + "\n").encode()
 
 
-def restore_into_container(tables: "dict[str, DataFrame]",
-                           dest: DockerDestination,
-                           dialect: str = "postgres",
-                           wipe: bool = True,
-                           keep_container: bool = True) -> str:
-    """End-to-end K4: start the container, pipe the rendered dump, leave
-    it running for the developer (or stop+rm with
-    ``keep_container=False``).  Returns the container id."""
-    cid = dest.start()
-    try:
-        dest.write(render_sql_payload(tables, dialect=dialect, wipe=wipe))
-    except Exception:
-        dest.stop()
-        dest.rm()
-        raise
-    if not keep_container:
-        dest.stop()
-        dest.rm()
-    return cid
-
-
 # engine name → (image tag default, container/host port default) — ONE
 # place for the reference constants; both CLI spellings accepted
 ENGINE_DEFAULTS = {"postgres": ("13", 5432), "postgresql": ("13", 5432),
@@ -363,20 +342,33 @@ def destination_for(engine: str, host_port: "int | None" = None,
     return mongo_docker(host_port, tag, runner, **kw)
 
 
-def restore_archive_into_container(tables: "dict[str, DataFrame]",
-                                   dest: DockerDestination,
-                                   keep_container: bool = True) -> str:
-    """The mongo twin of :func:`restore_into_container`: serialize the
-    tables as a mongodump archive (sources/mongo_archive — the
-    byte-exact re-serializer the archive gates prove) and pipe it
-    through mongorestore.  Same container lifecycle contract."""
-    from ..sources.mongo_archive import build_archive
+def restore_into_container(tables: "dict[str, DataFrame]",
+                           dest: DockerDestination,
+                           dialect: str = "postgres",
+                           wipe: bool = True,
+                           keep_container: bool = True) -> str:
+    """End-to-end K4: start the container, pipe the dump through the
+    engine client, and leave the container running for the developer
+    (or stop+rm it with ``keep_container=False``).  A failed pipe always
+    stops and removes it.  Returns the container id.
 
+    `dialect` is the engine ('postgres' | 'postgresql' | 'mysql' |
+    'mongodb') and picks the payload: DDL + INSERTs for the SQL engines
+    (``wipe`` drops each table first), a mongodump archive
+    (sources/mongo_archive's byte-exact re-serializer) for mongodb."""
+    if dialect == "mongodb":
+        from ..sources.mongo_archive import build_archive
+
+        payload = build_archive(
+            {t: [r.asDict(recursive=True) for r in df.collect()]
+             for t, df in tables.items()})
+    else:
+        payload = render_sql_payload(
+            tables, dialect="mysql" if dialect == "mysql" else "postgres",
+            wipe=wipe)
     cid = dest.start()
     try:
-        dest.write(build_archive(
-            {t: [r.asDict(recursive=True) for r in df.collect()]
-             for t, df in tables.items()}))
+        dest.write(payload)
     except Exception:
         dest.stop()
         dest.rm()

@@ -185,10 +185,10 @@ def hadoop_read_bytes(spark: SparkSession, path: str) -> bytes:
 def hadoop_write_bytes(spark: SparkSession, path: str,
                        payload: bytes) -> None:
     """Overwrite-write a small driver-side file via the Hadoop FS (the
-    read twin above).  For multi-writer/atomic-replace semantics use the
-    datastore's tmp/bak manifest dance; layout sidecars are written once
-    with their layout, so plain create(overwrite) is the honest
-    contract."""
+    read twin above).  For atomic replace wrap it in
+    :func:`swap_directory` (the datastore manifest does); layout sidecars
+    are written once with their layout, so plain create(overwrite) is
+    the honest contract."""
     jvm = spark._jvm
     p = jvm.org.apache.hadoop.fs.Path(path)
     fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -202,9 +202,9 @@ def hadoop_write_bytes(spark: SparkSession, path: str,
 def swap_directory(spark: SparkSession, final: str, write_fn) -> None:
     """Replace directory `final` with freshly-written content, single
     writer assumed: `write_fn(tmp_path)` builds the replacement beside
-    it, then final → .bak, tmp → final, delete .bak — the same
-    tmp/bak/rollback dance the datastore manifest writer uses
-    (sinks/datastore.py _write_bytes).  A failed rename rolls the old
+    it, then final → .bak, tmp → final, delete .bak.  Hadoop FS rename
+    and delete act the same on a file, so the datastore manifest is
+    swapped through here too.  A failed rename rolls the old
     directory back, and a crash mid-swap leaves either the .bak or the
     .tmp recoverable — content is never lost.  NOT seamless for readers:
     between rename(final → .bak) and rename(.tmp → final) the final path

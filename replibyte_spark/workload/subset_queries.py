@@ -13,7 +13,8 @@ from pyspark.sql import functions as F
 
 from .. import dialect as D
 from ..catalog import load_tables
-from ..operators.sample import hash_percent_filter, hash_percent_sql
+from ..operators.sample import (hash_percent_filter, hash_percent_sql,
+                                stopword_score_sql)
 from ..operators.subset import FIXTURE_FK_EDGES, subset_closure
 from . import Query, register
 
@@ -346,29 +347,13 @@ register(Query("per_group_doc_cap", per_group_doc_cap, _doc_cap_oracle(),
 QW_SALT = "quality-w"
 
 
-def _quality_score_sql(d: str, text_col: str = "text") -> str:
-    """Integer quality score in millionths: stopword density × 8 capped
-    at 1e6 — i.e. a doc whose words are >= 12.5% Gopher stopwords is
-    always kept, a 3% doc survives at ~0.24.  Built once for both
-    dialects (the drift-proof convention)."""
-    from ..functions.gopher import REQUIRED_STOPWORDS, words_sql
-
-    w = words_sql(d, text_col)
-    stop_pred = f"x -> {D.array_contains_lit(d, list(REQUIRED_STOPWORDS), 'x')}"
-    n_stop = D.array_len(d, D.array_filter(d, w, stop_pred))
-    n_words = D.array_len(d, w)
-    density = D.int_div(d, f"CAST({n_stop} AS BIGINT) * 8000000",
-                        f"greatest({n_words}, 1)")
-    return f"least(1000000, {density})"
-
-
 def quality_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import load_table
     from ..operators.sample import score_weighted_filter
 
     docs = load_table(spark, sf_dir, "documents")
     kept = score_weighted_filter(docs, "doc_id",
-                                 _quality_score_sql(D.SPARK), salt=QW_SALT)
+                                 stopword_score_sql(D.SPARK), salt=QW_SALT)
     return (kept.groupBy("source")
             .agg(F.count(F.lit(1)).alias("n_kept"),
                  F.sum("doc_id").alias("id_sum"))
@@ -378,7 +363,7 @@ def quality_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _quality_weighted_oracle() -> str:
     from ..operators.sample import score_weighted_sql
 
-    pred = score_weighted_sql(D.DUCK, "doc_id", _quality_score_sql(D.DUCK),
+    pred = score_weighted_sql(D.DUCK, "doc_id", stopword_score_sql(D.DUCK),
                               salt=QW_SALT)
     return f"""
 SELECT source, CAST(count(*) AS BIGINT) AS n_kept,

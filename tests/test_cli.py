@@ -67,6 +67,17 @@ def test_cli_restore_output_streams_inserts(spark, conf, capsys):
     assert out.count("INSERT INTO region") == 5
     assert out.count("INSERT INTO nation") == 25
 
+    # the console:// destination is the same sink: every row, SQL only
+    from replibyte_spark.config import Config
+    from replibyte_spark.plans.pipeline import RestorePipeline
+
+    cfg = Config.from_file(conf)
+    cfg.destination.connection_uri = "console://"
+    RestorePipeline(cfg).run(spark, "d2")
+    out = capsys.readouterr().out
+    assert out.count("INSERT INTO nation") == 25
+    assert all(line.startswith("INSERT INTO ") for line in out.splitlines())
+
 
 def test_cli_dump_create_from_sql_file(spark, tmp_path, capsys):
     dump_file = tmp_path / "mini.sql"
@@ -505,6 +516,62 @@ def test_cli_corpus_operator_errors_exit_2(spark, tmp_path, capsys):
     assert err.startswith("error:") and "overlap" in err
 
 
+@pytest.fixture(scope="module")
+def docs_parquet(spark, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("colcheck") / "docs.parquet")
+    spark.createDataFrame([(1, "a b c", "s")],
+                          "doc_id long, text string, source string") \
+        .write.parquet(path)
+    return path
+
+
+@pytest.mark.parametrize("cmd, extra", [
+    ("report", ["--text-col", "nope"]),
+    ("dedup", ["-o", "{out}", "--text-col", "nope"]),
+    ("index", ["-o", "{out}", "--text-col", "nope"]),
+    ("admit", ["--index", "{out}", "-o", "{out}", "--text-col", "nope"]),
+    ("score", ["-o", "{out}", "--text-col", "nope"]),
+    ("gopher", ["-o", "{out}", "--text-col", "nope"]),
+    ("dsir", ["--target", "{src}", "-k", "1", "-o", "{out}",
+              "--text-col", "nope"]),
+    ("c4", ["-o", "{out}", "--text-col", "nope"]),
+    ("repetition", ["-o", "{out}", "--text-col", "nope"]),
+    ("chunk", ["-o", "{out}", "--text-col", "nope"]),
+    ("eindex", ["-o", "{out}", "--id-col", "doc_id", "--vec-col", "nope"]),
+    ("eadmit", ["--index", "{out}", "-o", "{out}", "--id-col", "doc_id",
+                "--vec-col", "nope"]),
+])
+def test_cli_corpus_missing_column_exits_2_before_any_job(
+        spark, docs_parquet, tmp_path, capsys, cmd, extra):
+    """A corpus command naming a column its input lacks exits 2 with
+    `column(s) not in input` and runs no Spark job beyond the one that
+    reads the parquet schema."""
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description",
+                        "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    read_jobs = jobs(f"read-{cmd}",
+                     lambda: spark.read.parquet(docs_parquet).columns)
+    argv = ["corpus", cmd, "-i", docs_parquet] + [
+        a.format(src=docs_parquet, out=str(tmp_path / "out"))
+        for a in extra]
+    rc = []
+    assert jobs(f"cmd-{cmd}", lambda: rc.append(main(argv, spark=spark))) \
+        == read_jobs
+    assert rc == [2]
+    err = capsys.readouterr().err
+    assert err.startswith("error: column(s) not in input:") and "nope" in err
+
+
 def test_cli_corpus_fulladmit(spark, tmp_path, capsys):
     """r9: `corpus fulladmit` runs the composed three-tier admit against
     both indexes, writes admitted rows + optional decisions, reports
@@ -877,6 +944,54 @@ def test_cli_dump_diff(spark, conf, capsys):
     assert main(["-c", conf, "dump", "diff", "da", "nope"],
                 spark=spark) == 2
     assert "error:" in capsys.readouterr().err
+
+
+def test_cli_dump_diff_decrypts_encrypted_columns(spark, tmp_path, sf_dir,
+                                                  capsys):
+    """Two dumps of the same table with an encrypted column diff to
+    0 added / 0 removed: the config's key decrypts before comparing
+    (AES-GCM re-ciphers identical plaintext with a fresh IV)."""
+    conf = tmp_path / "enc.yaml"
+    conf.write_text(f"""
+encryption_key: diff-test-key
+source:
+  connection_uri: parquet://{sf_dir}
+  only_tables:
+    - table: nation
+datastore:
+  dir: {tmp_path}/encstore
+  encrypted_columns:
+    nation: [n_name]
+""")
+    for name in ("ea", "eb"):
+        assert main(["-c", str(conf), "dump", "create", "-n", name],
+                    spark=spark) == 0
+    capsys.readouterr()
+    assert main(["-c", str(conf), "dump", "diff", "ea", "eb"],
+                spark=spark) == 0
+    row = next(line for line in capsys.readouterr().out.splitlines()
+               if "nation" in line)
+    assert [c.strip() for c in row.strip("|").split("|")] == \
+        ["nation", "25", "25", "0", "0", "false"]
+
+
+def test_cli_source_commands_need_only_a_source(spark, tmp_path, sf_dir,
+                                                capsys):
+    """`source schema`/`stats` read the source config alone; a config
+    without a source exits 2 instead of raising."""
+    only_src = tmp_path / "src.yaml"
+    only_src.write_text(f"""
+source:
+  connection_uri: parquet://{sf_dir}
+  only_tables:
+    - table: region
+""")
+    assert main(["-c", str(only_src), "source", "schema"], spark=spark) == 0
+    assert "r_regionkey" in capsys.readouterr().out
+    no_src = tmp_path / "nosrc.yaml"
+    no_src.write_text(f"datastore:\n  dir: {tmp_path}/store\n")
+    assert main(["-c", str(no_src), "source", "stats"], spark=spark) == 2
+    assert "require source config" in capsys.readouterr().err
 
 
 def test_cli_source_stats(spark, conf, capsys):
