@@ -1193,19 +1193,20 @@ def main(argv: list[str] | None = None, spark=None) -> int:
     from .util import released
 
     with released():
-        return _run(spark, args, config)
+        try:
+            return _run(spark, args, config)
+        except (ValueError, LookupError) as exc:
+            # a config without the section a command needs, missing input
+            # columns (`_read`), an unknown dump, operator-level validation
+            # (negative --overlap, mismatched index meta, ...): message to
+            # stderr, exit 2 — not a traceback
+            print(f"error: {exc}", file=sys.stderr)
+            return 2
 
 
 def _run(spark, args, config) -> int:
     if args.cmd == "corpus":
-        # missing input columns (`_read`) and operator-level validation
-        # errors (negative --overlap, empty LM vocabulary, mismatched
-        # index meta, ...): message to stderr, exit 2 — not a traceback
-        try:
-            return _cmd_corpus(spark, args)
-        except ValueError as exc:
-            print(f"error: {exc}", file=sys.stderr)
-            return 2
+        return _cmd_corpus(spark, args)
 
     if args.cmd == "transformer":
         from .introspect import transformer_list
@@ -1216,9 +1217,7 @@ def _run(spark, args, config) -> int:
         from .plans.pipeline import load_source_tables
 
         if config.source is None:
-            print("error: source commands require source config",
-                  file=sys.stderr)
-            return 2
+            raise ValueError("source commands require source config")
         tables = load_source_tables(spark, config.source)
         if getattr(args, "source_cmd", None) == "stats":
             from .introspect import table_stats
@@ -1256,9 +1255,7 @@ def _run(spark, args, config) -> int:
         return 0
     # dump subtree
     if config.datastore is None:
-        print("error: dump commands require datastore config",
-              file=sys.stderr)
-        return 2
+        raise ValueError("dump commands require datastore config")
     if args.dump_cmd == "list":
         from .introspect import dump_list
 
@@ -1275,14 +1272,10 @@ def _run(spark, args, config) -> int:
     if args.dump_cmd == "diff":
         from .sinks.datastore import Datastore
 
-        try:
-            out = Datastore(spark, config.datastore.dir).diff(
-                args.dump_a, args.dump_b,
-                decrypt_columns=config.datastore.encrypted_columns,
-                encryption_key=config.encryption_key)
-        except (ValueError, LookupError) as exc:
-            print(f"error: {exc}", file=sys.stderr)
-            return 2
+        out = Datastore(spark, config.datastore.dir).diff(
+            args.dump_a, args.dump_b,
+            decrypt_columns=config.datastore.encrypted_columns,
+            encryption_key=config.encryption_key)
         _show(out.orderBy("table_name"))
         return 0
     raise AssertionError(f"unhandled command {args.cmd}")

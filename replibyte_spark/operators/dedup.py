@@ -141,11 +141,6 @@ def _exploded_grams(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFr
     return with_toks.select(F.col(id_col), F.explode(grams).alias("gram"))
 
 
-def shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
-    """(id, gram) distinct shingle pairs."""
-    return _exploded_grams(df, id_col, text_col, n).distinct()
-
-
 def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
                        n_hashes: int = 12, n: int = 3) -> DataFrame:
     """id → h0..h{n_hashes-1} minhash signature columns.
@@ -315,7 +310,7 @@ def minhash_near_dup_pairs(df: DataFrame, id_col: str, text_col: str,
     cand_docs = df.join(cand_ids, on=id_col, how="leftsemi")
     if reads_cached(df):
         cand_docs = materialize(cand_docs.select(id_col, text_col))
-    # raw exploded grams, NOT shingles(): jaccard_for_pairs aggregates
+    # raw exploded grams, NOT a distinct set: jaccard_for_pairs aggregates
     # with collect_set, which dedups for free — the separate distinct
     # shuffle (and its AQE-coalesced single-task reduce, 0.7 s in the
     # sf0.1 pipeline attribution) would be pure overhead inside a
@@ -788,34 +783,6 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
             .filter(F.col("jaccard") >= threshold)
             .select("id_a", "id_b", "jaccard")
             .orderBy("id_a", "id_b"))
-
-
-# ---------------------------------------------------------------------------
-# benchmark decontamination
-# ---------------------------------------------------------------------------
-
-
-def contamination_hits(train: DataFrame, benchmark: DataFrame,
-                       id_col: str = "doc_id", text_col: str = "text",
-                       n: int = 8) -> DataFrame:
-    """Per-training-doc contamination summary against a benchmark set:
-    (id, n_shared_grams, n_bench_docs) for every training doc sharing at
-    least one distinct word n-gram with any benchmark doc — the standard
-    eval-decontamination check (the GPT-3/Llama-style 13-gram overlap
-    rule; `n` is the dial).
-
-    Scale shape: the benchmark side is an eval suite — tiny next to a
-    100 TB corpus — so its distinct gram set BROADCASTS; the train side is
-    one scan + explode, and the only shuffle is the final per-doc
-    aggregation.  No pairwise anything."""
-    tg = shingles(train, id_col, text_col, n)
-    bg = (shingles(benchmark, id_col, text_col, n)
-          .select(F.col(id_col).alias("__bench_id"), "gram"))
-    return (tg.join(F.broadcast(bg), on="gram")
-            .groupBy(id_col)
-            .agg(F.countDistinct("gram").alias("n_shared_grams"),
-                 F.countDistinct("__bench_id").alias("n_bench_docs"))
-            .orderBy(id_col))
 
 
 # ---------------------------------------------------------------------------

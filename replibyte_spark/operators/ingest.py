@@ -87,21 +87,3 @@ def full_incremental_admit_decisions(
     return (exact.unionByName(lex).unionByName(sem)
             .unionByName(flag(surv3, "admitted")))
 
-
-def full_incremental_admit(
-        new_docs: DataFrame, mh_index_path: str, ann_index_path: str,
-        id_col: str = "doc_id", text_col: str = "text",
-        vec_col: str = "embedding",
-        lexical_threshold: float = 0.8,
-        semantic_threshold: float = 0.9,
-        multi_probe: int = 1,
-        broadcast_batch_limit: int = 256 * 1024 * 1024) -> DataFrame:
-    """The batch rows that survive ALL three tiers (the set to append to
-    the corpus and to both indexes: dedup.append_minhash_index +
-    similarity.append_ann_index close the loop)."""
-    dec = full_incremental_admit_decisions(
-        new_docs, mh_index_path, ann_index_path, id_col, text_col, vec_col,
-        lexical_threshold, semantic_threshold, multi_probe,
-        broadcast_batch_limit)
-    return new_docs.join(dec.filter(F.col("decision") == "admitted")
-                         .select(id_col), on=id_col, how="left_semi")

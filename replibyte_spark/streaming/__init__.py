@@ -1,6 +1,2 @@
-from .events import (  # noqa: F401
-    read_event_stream,
-    sessionized_stats,
-    streaming_hourly_counts,
-    windowed_event_counts,
-)
+from .events import dedup_event_stream, sessionized_stats  # noqa: F401
+from .runner import read_table_stream, run_available_now  # noqa: F401

@@ -1,87 +1,25 @@
 """Structured Streaming surface over the events table.
 
 The reference is strictly batch (no watermarks/windows/state anywhere —
-SURVEY.md §1.2), so this module is pure superset capability: the same event
-analytics exposed as an incremental stream with event-time semantics.
+SURVEY.md §1.2), so this module is pure superset capability: event
+operators with event-time semantics that work on a stream as well as on
+a batch frame.
 
-Design: every aggregation is written once against a DataFrame and works in
-BOTH batch and streaming mode (Spark's unified API) — the batch rendering is
-what the DuckDB oracle checks; the streaming rendering is exercised in tests
-with a file source + availableNow trigger and must produce identical results.
+Design: every operator is written once against a DataFrame and works in
+BOTH batch and streaming mode (Spark's unified API).
+`streaming_dedup_counts` runs the dedup as a stream (streaming/runner.py);
+`session_stats` runs the session windows in batch.  The DuckDB oracle
+checks both.
 
-- tumbling windows + watermark for late data
+- watermark-bounded dedup (`dropDuplicatesWithinWatermark`)
 - session windows (`session_window`) — the gaps-and-islands computation the
   oracle expresses with lag()/cumulative-sum
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..catalog import load_table
-
-EVENT_SCHEMA = ("event_id long, ts timestamp, user_id long, "
-                "event_type string, value double, props string")
-
-
-def read_event_stream(spark: SparkSession, path: str,
-                      max_files_per_trigger: int | None = None) -> DataFrame:
-    """File-source stream over parquet events.
-
-    The streaming file source only accepts directories; when `path` is a
-    single parquet file, stream its parent directory with a glob filter.
-    """
-    import os
-
-    from ..catalog import _nanos_timestamp_columns
-
-    # fixture parquet stores ts as TIMESTAMP(NANOS) → read as int64 + convert
-    # (same truncation the batch catalog applies)
-    nanos = _nanos_timestamp_columns(path)
-    schema = EVENT_SCHEMA.replace("ts timestamp", "ts long") if "ts" in nanos else EVENT_SCHEMA
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    if os.path.isfile(path):
-        reader = reader.option("pathGlobFilter", os.path.basename(path))
-        path = os.path.dirname(path)
-    df = reader.parquet(path)
-    if "ts" in nanos:
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return df
-
-
-def windowed_event_counts(events: DataFrame, window: str = "1 hour",
-                          watermark: str = "2 hours") -> DataFrame:
-    """Tumbling-window counts per event type; watermark bounds state for
-    late data when `events` is a stream (no-op semantics in batch)."""
-    src = events.withWatermark("ts", watermark) if events.isStreaming else events
-    return (
-        src.groupBy(F.window("ts", window).alias("w"), F.col("event_type"))
-        .agg(F.count(F.lit(1)).alias("n_events"),
-             F.round(F.sum("value"), 2).alias("sum_value"))
-        .select(F.col("w.start").alias("window_start"), "event_type",
-                "n_events", "sum_value")
-    )
-
-
-def sliding_window_counts(events: DataFrame, window: str = "1 hour",
-                          slide: str = "15 minutes",
-                          watermark: str = "2 hours") -> DataFrame:
-    """Sliding-window counts per event type (each event lands in
-    window/slide overlapping windows — 4 for 1h/15m).  Same unified
-    batch/stream contract as the tumbling variant."""
-    src = events.withWatermark("ts", watermark) if events.isStreaming else events
-    return (
-        src.groupBy(F.window("ts", window, slide).alias("w"),
-                    F.col("event_type"))
-        .agg(F.count(F.lit(1)).alias("n_events"),
-             F.round(F.sum("value"), 2).alias("sum_value"))
-        .select(F.col("w.start").alias("window_start"), "event_type",
-                "n_events", "sum_value")
-    )
 
 
 def dedup_event_stream(events: DataFrame, keys: list[str],
@@ -111,36 +49,3 @@ def sessionized_stats(events: DataFrame, gap: str = "6 hours") -> DataFrame:
         .select("user_id", F.col("w.start").alias("session_start"),
                 "n_events", "sum_value")
     )
-
-
-def streaming_hourly_counts(spark: SparkSession, sf_dir: str,
-                            checkpoint_dir: str) -> DataFrame:
-    """Run the hourly aggregation as an actual stream (availableNow: process
-    everything currently in the directory, then stop) into a memory sink;
-    returns the materialized result.  Used by tests to prove the streaming
-    rendering equals the batch/oracle rendering."""
-    import os
-    import uuid
-
-    stream = read_event_stream(spark, os.path.join(sf_dir, "events.parquet"))
-    agg = windowed_event_counts(stream)
-    name = f"mem_{uuid.uuid4().hex[:8]}"
-    q = (agg.writeStream.format("memory").queryName(name)
-         .outputMode("complete")
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True)
-         .start())
-    # awaitTermination(timeout) returns False on timeout — in that case the
-    # memory table is only PARTIALLY populated and the query is still
-    # running against the shared session; stop it and fail instead of
-    # silently returning incomplete counts
-    if not q.awaitTermination(120):
-        q.stop()
-        raise TimeoutError(
-            "streaming_hourly_counts: availableNow run did not finish "
-            "within 120s; partial results discarded")
-    return spark.table(name)
-
-
-def batch_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return windowed_event_counts(load_table(spark, sf_dir, "events"))

@@ -24,10 +24,9 @@ how the source chopped the data into batches, which is what the DuckDB
 oracle checks; the in-batch sort additionally pins the admitted SET for
 any fixed batch partitioning.
 
-Production shape: the quota stream runs in front of the incremental
-dedup index (operators/ingest.py) so a runaway domain can't flood the
-admit tier no matter how many batches it spans (gated end-to-end by
-workload/streaming_queries.py's quota→admit composition).
+Run it with ``corpus quota`` (a caller-owned checkpoint, so a re-run
+resumes the per-group counts) or through streaming/runner.py
+(``streaming_quota_admit``).
 """
 
 from __future__ import annotations

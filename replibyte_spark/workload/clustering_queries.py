@@ -87,9 +87,7 @@ FROM best WHERE rn = 1 ORDER BY vec_id
 """
 
 
-# driver-visible (r9): the SemDeDup gate takes the REGISTRY slot of the
-# redundant sliding_window_counts (sibling of the still-gated
-# tumbling/session/stateful streaming trio, now EXTRA)
+# driver-visible (r9): the SemDeDup gate
 register(Query("semantic_cluster_dedup", semantic_cluster_dedup,
                _semdedup_oracle(), tags=("clustering", "dedup"),
                bench=True))

@@ -263,44 +263,6 @@ register(Query("ngram_jaccard_pairs", ngram_jaccard, _ngram_oracle(),
                tags=("dedup",)), extra=True)
 
 
-# --- benchmark decontamination ----------------------------------------------
-# doc_id % DECON_MOD == 0 plays the benchmark set; the rest is the training
-# corpus.  Flagged = shares ≥1 distinct 8-gram with any benchmark doc.
-
-DECON_N, DECON_MOD = 8, 10
-
-
-def benchmark_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    bench = docs.filter(F.col("doc_id") % DECON_MOD == 0)
-    train = docs.filter(F.col("doc_id") % DECON_MOD != 0)
-    return DD.contamination_hits(train, bench, n=DECON_N)
-
-
-def _decon_oracle() -> str:
-    d = D.DUCK
-    grams = DD.word_ngrams_sql(d, "text", DECON_N)
-    return f"""
-WITH ex AS (
-  SELECT doc_id, unnest({grams}) AS gram FROM documents
-), tg AS (
-  SELECT DISTINCT doc_id, gram FROM ex WHERE doc_id % {DECON_MOD} <> 0
-), bg AS (
-  SELECT DISTINCT doc_id AS bench_id, gram FROM ex
-  WHERE doc_id % {DECON_MOD} = 0
-)
-SELECT t.doc_id,
-       CAST(count(DISTINCT t.gram) AS BIGINT) AS n_shared_grams,
-       CAST(count(DISTINCT b.bench_id) AS BIGINT) AS n_bench_docs
-FROM tg t JOIN bg b USING (gram)
-GROUP BY t.doc_id ORDER BY doc_id
-"""
-
-
-register(Query("benchmark_decontamination", benchmark_decontamination,
-               _decon_oracle(), tags=("dedup", "text")), extra=True)
-
-
 # --- incremental dedup against a materialized MinHash index (round 7) -------
 
 # agreement = fraction of equal signature components; 9/12 = 0.75 is exact

@@ -977,8 +977,9 @@ datastore:
 
 def test_cli_source_commands_need_only_a_source(spark, tmp_path, sf_dir,
                                                 capsys):
-    """`source schema`/`stats` read the source config alone; a config
-    without a source exits 2 instead of raising."""
+    """`source schema`/`stats` read the source config alone; a
+    datastore-only config makes every command that needs a source or a
+    destination exit 2 instead of raising."""
     only_src = tmp_path / "src.yaml"
     only_src.write_text(f"""
 source:
@@ -990,8 +991,12 @@ source:
     assert "r_regionkey" in capsys.readouterr().out
     no_src = tmp_path / "nosrc.yaml"
     no_src.write_text(f"datastore:\n  dir: {tmp_path}/store\n")
-    assert main(["-c", str(no_src), "source", "stats"], spark=spark) == 2
-    assert "require source config" in capsys.readouterr().err
+    for argv, err in ((["source", "stats"], "require source config"),
+                      (["dump", "create"], "requires source and datastore"),
+                      (["dump", "restore", "remote", "-v", "latest"],
+                       "requires datastore and destination")):
+        assert main(["-c", str(no_src), *argv], spark=spark) == 2, argv
+        assert err in capsys.readouterr().err
 
 
 def test_cli_source_stats(spark, conf, capsys):

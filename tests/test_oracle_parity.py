@@ -50,6 +50,10 @@ def _rows(seq):
     return sorted(rows, key=lambda r: tuple((v is None, str(v)) for v in r))
 
 
+def _temp_views(spark):
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
 @pytest.mark.parametrize("name", sorted(ALL))
 def test_query_matches_oracle(spark, duck, sf_dir, name):
     q = ALL[name]
@@ -57,6 +61,7 @@ def test_query_matches_oracle(spark, duck, sf_dir, name):
     cache = spark._jsparkSession.sharedState().cacheManager()
     pinned = set(jsc.getPersistentRDDs().keys())
     entries = cache.numCachedEntries()
+    views = _temp_views(spark)
     with released():
         df = q.spark_fn(spark, sf_dir)
         got_cols = df.columns
@@ -64,6 +69,9 @@ def test_query_matches_oracle(spark, duck, sf_dir, name):
     # the row's scope freed everything the row cached or checkpointed
     assert not set(jsc.getPersistentRDDs().keys()) - pinned, name
     assert cache.numCachedEntries() <= entries, name
+    # ... and left no stream running and no temp view registered
+    assert not spark.streams.active, name
+    assert _temp_views(spark) == views, name
     assert len(got) > 0, f"{name}: empty result"
     sql = q.oracle_text()
     if sql is None:

@@ -3,9 +3,9 @@ final emission must equal the batch aggregate."""
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import functions as F
+
+from replibyte_spark.streaming import run_available_now
 
 
 def test_stateful_running_totals_across_batches(spark, sf_dir, tmp_path):
@@ -23,16 +23,7 @@ def test_stateful_running_totals_across_batches(spark, sf_dir, tmp_path):
 
     stream = (spark.readStream.schema("user_id long, value double, event_id long")
               .option("maxFilesPerTrigger", 1).parquet(src))
-    out = running_user_totals(stream)
-    name = f"stateful_{uuid.uuid4().hex[:8]}"
-    q = (out.writeStream.format("memory").queryName(name)
-         .outputMode("append")
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination(180)
-
-    emitted = spark.table(name)
+    emitted = run_available_now(running_user_totals(stream))
     assert emitted.count() > 0
     # more than one micro-batch ran: some user must have been emitted twice
     multi = (emitted.groupBy("user_id").count().filter("count > 1").count())
@@ -136,8 +127,6 @@ def test_quota_schema_follows_input_types(spark, tmp_path):
     column types; the output/state row must derive from the input schema
     (int group + string id used to die in Arrow conversion against the
     hardcoded string/long pair)."""
-    import uuid as _uuid
-
     from replibyte_spark.streaming.quota import streaming_group_quota
 
     src = str(tmp_path / "quota_typed_src")
@@ -150,13 +139,7 @@ def test_quota_schema_follows_input_types(spark, tmp_path):
                                 id_col="doc")
     assert [f.dataType.simpleString() for f in out.schema.fields] == \
         ["int", "string"]
-    name = f"quota_typed_{_uuid.uuid4().hex[:8]}"
-    q = (out.writeStream.format("memory").queryName(name)
-         .outputMode("append")
-         .option("checkpointLocation", str(tmp_path / "ckpt_qt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(180)
-    got = spark.table(name)
+    got = run_available_now(out)
     counts = {r.grp: r["count"] for r in got.groupBy("grp").count().collect()}
     assert counts == {0: 4, 1: 4, 2: 4}
     # cap applies to the id-sorted head: group 0 has d0,d12,d15,d18,d21...
@@ -177,10 +160,6 @@ def test_dedup_stream_multibatch_rocksdb_matches_batch(spark, sf_dir,
     HDFSBacked; see OPTIMIZATION_r15.md.  RocksDB is the 100 TB lever once
     state stops fitting executor heaps, and this test keeps the switch a
     one-conf change.)"""
-    import uuid as _uuid
-
-    from pyspark.sql import functions as F
-
     from replibyte_spark.catalog import load_table
     from replibyte_spark.streaming.events import dedup_event_stream
 
@@ -196,21 +175,17 @@ def test_dedup_stream_multibatch_rocksdb_matches_batch(spark, sf_dir,
               .option("maxFilesPerTrigger", 1).parquet(src))
     dd = dedup_event_stream(stream, ["user_id", "event_type"],
                             watermark="3650 days")
-    name = f"rocks_{_uuid.uuid4().hex[:8]}"
     key = "spark.sql.streaming.stateStore.providerClass"
     prev = spark.conf.get(key, None)
     spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state."
                         "RocksDBStateStoreProvider")
+    batches = []        # fn runs on the driver, once per micro-batch
     try:
-        q = (dd.writeStream.format("memory").queryName(name)
-             .outputMode("append")
-             .option("checkpointLocation", str(tmp_path / "ckpt_rocks"))
-             .trigger(availableNow=True).start())
-        assert q.awaitTermination(180)
-        assert q.lastProgress["batchId"] >= 2, "expected >= 3 micro-batches"
-        got = (spark.table(name).groupBy("event_type")
+        got = (run_available_now(dd, lambda mb: batches.append(1) or mb)
+               .groupBy("event_type")
                .agg(F.count(F.lit(1)).alias("n")).orderBy("event_type")
                .collect())
+        assert len(batches) >= 3, "expected >= 3 micro-batches"
     finally:
         if prev is None:
             spark.conf.unset(key)
